@@ -981,6 +981,10 @@ UNION ALL SELECT 'semantic', CAST(COUNT(*) AS BIGINT) FROM s3
 """
 
 
+# mm_e2e_dedup overlaps its three tiers only at >= ~2 task slots per tier
+_E2E_OVERLAP_MIN_SLOTS = 6
+
+
 @register("mm_e2e_dedup", oracle=_mm_e2e_oracle(), category="MM")
 def mm_e2e_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEDIA DEDUP FUNNEL — the three-tier chain the mm_* dedup ops
@@ -1038,19 +1042,14 @@ def mm_e2e_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     24-of-32-core induced load the threaded wall stays within 2x of
     sequential (1.57x) — the r14 degraded-window 12.6x blowup was vs
     the CLEAN wall, and the same window inflated sequential heavies
-    3-5x too. GDXPS_E2E_WORKERS overrides the worker count (the
-    threaded-vs-sequential pin test forces 3 on the local[4] test
-    session so the concurrent path stays exercised)."""
-    import os as _os
+    3-5x too. The threshold is _E2E_OVERLAP_MIN_SLOTS; tests patch it
+    to force either schedule whatever the session's width."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    env_workers = _os.environ.get("GDXPS_E2E_WORKERS")
-    if env_workers:
-        n_workers = max(1, int(env_workers))
-    else:
-        n_workers = 3 if spark.sparkContext.defaultParallelism >= 6 else 1
+    overlap = spark.sparkContext.defaultParallelism >= _E2E_OVERLAP_MIN_SLOTS
+    n_workers = 3 if overlap else 1
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     media = media_table(spark, sf_dir)

@@ -24,13 +24,23 @@ def _default_driver_mem() -> str:
     return f"{max(2, min(16, int(host_gib // 2)))}g"
 
 
+def _default_cpus() -> int:
+    """SPARK_GRAFT_CPUS when it is a positive integer, else the host's
+    core count (so a malformed value such as "auto" cannot crash)."""
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
+    except ValueError:
+        cpus = 0
+    return cpus if cpus > 0 else (os.cpu_count() or 4)
+
+
 def get_spark(
     app: str = "gdxpy_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        cpus = _default_cpus()
     if shuffle_partitions is None:
         # local mode: ~cores; a 1000-executor cluster would size this to
         # ~2-3× total cores (or let AQE coalesce from a higher initial).
@@ -54,10 +64,7 @@ def get_spark(
         # construction at any data size; the local A/B was inside box
         # noise except the large-build-side shapes (tpch_q18 class) —
         # see OPTIMIZATION_r14.md.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python DataSource filter pushdown (gdx chunk pruning) — 4.1

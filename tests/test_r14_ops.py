@@ -386,10 +386,12 @@ def test_mm_e2e_threaded_tiers_match_sequential(spark, monkeypatch):
     must be schedule-independent — pin the registered (threaded)
     funnel against a strictly SEQUENTIAL recomposition of the same
     tier engine bodies. r15: the overlap is adaptive (sequential below
-    6 task slots), so force the CONCURRENT path on the local[4] test
-    session via GDXPS_E2E_WORKERS — the pin must keep exercising the
-    threads, not compare sequential against sequential."""
-    monkeypatch.setenv("GDXPS_E2E_WORKERS", "3")
+    _E2E_OVERLAP_MIN_SLOTS task slots), so force the CONCURRENT path
+    through that threshold — the pin must keep exercising the threads,
+    not compare sequential against sequential."""
+    import gdxpy_spark.operators.multimodal as mm
+
+    monkeypatch.setattr(mm, "_E2E_OVERLAP_MIN_SLOTS", 0)
     from pyspark.sql import functions as F
 
     from gdxpy_spark.operators.llm import _semdedup_pairs

@@ -1,6 +1,6 @@
 """Round-9 hardening tests: the oracle result-type guard (the r7/r8
 HUGEINT driver-fail class), declared-length WARC framing, and the
-host-clamped driver-memory default."""
+session defaults (host-clamped driver memory, SPARK_GRAFT_CPUS)."""
 
 from __future__ import annotations
 
@@ -155,6 +155,21 @@ def test_default_driver_mem_clamps(monkeypatch):
     assert got.endswith("g")
     gib = int(got[:-1])
     assert 2 <= gib <= 16
+
+
+def test_malformed_cpus_env_falls_back(spark, monkeypatch):
+    """A non-integer SPARK_GRAFT_CPUS (e.g. "auto") must fall back to the
+    host's core count instead of crashing get_spark."""
+    import os
+
+    import gdxpy_spark.session as sess
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "auto")
+    assert sess._default_cpus() == (os.cpu_count() or 4)
+    # same app name and partitions as the test session, so the shared
+    # session's runtime conf is left as it was
+    got = sess.get_spark(app="gdxpy_spark_tests", shuffle_partitions=4)
+    assert got.sparkContext is spark.sparkContext
 
 
 # ---- r9 operator semantics --------------------------------------------------

@@ -6,10 +6,14 @@ the mount was empty, SURVEY §0):
     gdxpy                          gdxpy_spark
     -----------------------------  -------------------------------------
     GdxFile(path)            (R1)  GdxEngine(spark).open(path)
-    get_symbols_list()       (R2)  .symbols() → DataFrame (catalog scan)
-    query/get_symbol(name)   (R3)  .symbol(name) → DataFrame (case-insens.)
+    get_symbols_list()       (R2)  .symbols() → DataFrame (driver catalog)
+    query/get_symbol(name)   (R3)  .symbol(name) → DataFrame (case-insens.;
+                                   eager ≤ CHUNK records, else lazy scan)
     gload('x*')              (R4)  .gload('x*') → {name: DataFrame}
-    per-record read loop     (R5)  Arrow-batch partition scan (datasource)
+    per-record read loop     (R5)  one Arrow table decoded on the driver
+                                   for ≤ gdx_codec.CHUNK records in all
+                                   files; above that a chunk-partitioned
+                                   Arrow-batch scan (datasource)
     UEL decode               (R6)  .uel_dictionary() → DataFrame
     special-value mapping    (R7)  scan-time: NA/UNDEF→NaN, ±INF→±inf,
                                    EPS→0.0 + is_eps/eps_mask (lossless)
@@ -30,11 +34,17 @@ the mount was empty, SURVEY §0):
 from __future__ import annotations
 
 import fnmatch
+import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from gdxpy_spark.sources import gdx_datasource
-from gdxpy_spark.sources.gdx_codec import VALUE_FIELDS
+from gdxpy_spark.sources.gdx_codec import CHUNK
+
+log = logging.getLogger(__name__)
 
 
 class GdxEngine:
@@ -58,9 +68,39 @@ class GdxEngine:
 
     # -- R2: catalog ----------------------------------------------------------
     def symbols(self, path: str | None = None) -> DataFrame:
-        return (
-            self.spark.read.format("gdx").option("symbol", "*").load(self._path(path))
+        """The catalog (one row per symbol per file), read on the driver."""
+        ddl = gdx_datasource.CATALOG_SCHEMA
+        schema = to_arrow_schema(StructType.fromDDL(ddl))
+        rows = gdx_datasource.catalog_rows(self._path(path))
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
         )
+        return self.spark.createDataFrame(table, ddl)
+
+    # -- R3/R5: read path -----------------------------------------------------
+    def _read(self, name: str, path: str) -> DataFrame:
+        """One symbol from the file(s) at `path`. At most one codec chunk
+        of records in total is decoded here and handed to Spark as one
+        Arrow table, as gdxpy reads a symbol in one call; a larger symbol
+        is a lazy chunk-partitioned DataSource scan."""
+        found = []
+        for p, scen in gdx_datasource.scenario_files(path):
+            f = gdx_datasource.open_gdx(p)
+            found.append((f, f.find(name), scen))
+        nrecs = sum(f.symbols[i].nrecs for f, i, _ in found)
+        route = "driver" if nrecs <= CHUNK else "datasource"
+        log.debug("read %s: %d records, %s path", name, nrecs, route)
+        if route == "datasource":
+            return self.spark.read.format("gdx").option("symbol", name).load(path)
+        f, i, scen = found[0]
+        ddl = gdx_datasource._symbol_schema(f.symbols[i], scen is not None)
+        table = pa.Table.from_batches(
+            [
+                gdx_datasource.record_batch(f.symbols[i], f.read_records(i), scen)
+                for f, i, scen in found
+            ]
+        )
+        return self.spark.createDataFrame(table, ddl)
 
     # -- R3/R8: one symbol ----------------------------------------------------
     def symbol(
@@ -70,14 +110,13 @@ class GdxEngine:
         field: str | None = None,
         squeeze: bool = False,
     ) -> DataFrame:
-        """Load one symbol as a DataFrame. `field` picks a single value
-        column of a variable/equation (gdxpy's default is level); sets and
-        parameters ignore it."""
-        df = (
-            self.spark.read.format("gdx")
-            .option("symbol", name)
-            .load(self._path(path))
-        )
+        """Load one symbol as a DataFrame. A symbol of at most
+        gdx_codec.CHUNK records (summed over a scenario directory's files)
+        is decoded at this call, as in gdxpy; a larger one stays a lazy
+        DataSource scan. `field` picks a single value column of a
+        variable/equation (gdxpy's default is level); sets and parameters
+        ignore it."""
+        df = self._read(name, self._path(path))
         if field:
             if field not in df.columns:
                 raise ValueError(f"{name} has no value field {field!r}")
@@ -92,7 +131,7 @@ class GdxEngine:
         """Expand a comma-separated, fnmatch-style symbol spec against the
         catalog; load each match and register it as temp view
         `gdx_<name>`. Returns {name: DataFrame}."""
-        cat = [r["name"] for r in self.symbols(path).select("name").collect()]
+        cat = [r[0] for r in gdx_datasource.catalog_rows(self._path(path))]
         wanted: list[str] = []
         for part in pattern.split(","):
             part = part.strip()
@@ -149,8 +188,12 @@ class GdxEngine:
         keys = [c for c in df.columns if c.startswith("k")]
         if not keys:
             return df
-        probe = df.agg(*[F.countDistinct(c).alias(c) for c in keys]).first()
-        keep = [c for c in df.columns if not c.startswith("k") or probe[c] > 1]
+        # min == max (or min null) ⇔ at most one distinct non-null label;
+        # one aggregate pass, no per-key distinct shuffle
+        probe = df.agg(*[F.min(c) for c in keys], *[F.max(c) for c in keys]).first()
+        lo, hi = probe[: len(keys)], probe[len(keys) :]
+        varying = {c for c, a, b in zip(keys, lo, hi) if a is not None and a != b}
+        keep = [c for c in df.columns if not c.startswith("k") or c in varying]
         return df.select(*keep)
 
     # -- R12: scenario concat -------------------------------------------------
@@ -217,47 +260,19 @@ class GdxEngine:
         driver holds one Arrow partition at a time, never a whole symbol,
         so a symbol larger than driver memory still writes. UELs intern
         across all symbols, like a real writer."""
-        from gdxpy_spark.sources.gdx_codec import (
-            DT_PAR,
-            DT_SET,
-            VALUE_FIELDS,
-            GdxWriter,
-            SymbolMeta,
-        )
-        from gdxpy_spark.sources.gdx_datasource import _TYPE_BY_NAME
-
-        def records(df: DataFrame, t: int, keys: list[str]):
-            cols = df.columns
-            has_text = "text" in cols
-            has_eps = "is_eps" in cols
-            has_mask = "eps_mask" in cols
-            src = df.sort(*keys) if keys else df
-            for r in src.toLocalIterator(prefetchPartitions=True):
-                key = tuple(r[k] for k in keys)
-                if t == DT_SET:
-                    yield key, (0.0,), 0, (r["text"] if has_text else "") or ""
-                elif t == DT_PAR:
-                    is_eps = bool(r["is_eps"]) if has_eps else False
-                    yield (
-                        key,
-                        (0.0 if is_eps else float(r["value"]),),
-                        1 if is_eps else 0,
-                        "",
-                    )
-                else:
-                    yield (
-                        key,
-                        tuple(float(r[f]) for f in VALUE_FIELDS),
-                        int(r["eps_mask"]) if has_mask else 0,
-                        "",
-                    )
+        from gdxpy_spark.sources.gdx_codec import GdxWriter, SymbolMeta
+        from gdxpy_spark.sources.gdx_datasource import _TYPE_BY_NAME, codec_records
 
         w = GdxWriter(path, compress=compress)
         for name, (df, symtype) in symbols.items():
             t = _TYPE_BY_NAME[symtype]
             keys = [c for c in df.columns if c.startswith("k")]
+            src = df.select(*keys, *[c for c in df.columns if c not in keys])
+            if keys:
+                src = src.sort(*keys)
+            rows = src.toLocalIterator(prefetchPartitions=True)
             meta = SymbolMeta(name=name, dim=len(keys), type=t)
-            w.add_symbol_streaming(meta, records(df, t, keys))
+            w.add_symbol_streaming(meta, codec_records(rows, t, src.columns, len(keys)))
         w.close()
 
     def write_symbol(

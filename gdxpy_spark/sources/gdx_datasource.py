@@ -104,15 +104,19 @@ CATALOG_SCHEMA = (
 )
 
 
-def _symbol_schema(meta: SymbolMeta) -> str:
+def _symbol_schema(meta: SymbolMeta, multi: bool) -> str:
+    """DDL of one symbol's long frame; `multi` appends the `scenario`
+    column of a multi-file read."""
     keys = ", ".join(f"k{i + 1} STRING" for i in range(meta.dim))
     sep = ", " if keys else ""
     if meta.type == DT_SET:
-        return f"{keys}{sep}text STRING"
-    if meta.type == DT_PAR:
-        return f"{keys}{sep}value DOUBLE, is_eps BOOLEAN"
-    vals = ", ".join(f"{f} DOUBLE" for f in VALUE_FIELDS)
-    return f"{keys}{sep}{vals}, eps_mask INT"
+        ddl = f"{keys}{sep}text STRING"
+    elif meta.type == DT_PAR:
+        ddl = f"{keys}{sep}value DOUBLE, is_eps BOOLEAN"
+    else:
+        vals = ", ".join(f"{f} DOUBLE" for f in VALUE_FIELDS)
+        ddl = f"{keys}{sep}{vals}, eps_mask INT"
+    return ddl + (", scenario STRING" if multi else "")
 
 
 def _expand_paths(path: str) -> list[str]:
@@ -131,6 +135,84 @@ def _expand_paths(path: str) -> list[str]:
     if not files:
         raise ValueError(f"gdx: no .gdx files at {path!r}")
     return files
+
+
+def scenario_files(path: str) -> list[tuple[str, str | None]]:
+    """(file, scenario) for every file at `path`. The scenario is the
+    file stem when `path` names several files, else None (no column)."""
+    files = _expand_paths(path)
+    multi = len(files) > 1
+    return [
+        (p, os.path.splitext(os.path.basename(p))[0] if multi else None)
+        for p in files
+    ]
+
+
+def catalog_rows(path: str) -> list[tuple]:
+    """One CATALOG_SCHEMA row per symbol of every file at `path`."""
+    return [
+        (s.name, s.dim, s.type_name, s.subtype, s.nrecs, s.expl_text,
+         list(s.domains), s.alias_of)
+        for p in _expand_paths(path)
+        for s in open_gdx(p).symbols
+    ]
+
+
+def record_batch(meta: SymbolMeta, data: SymbolData, scenario: str | None):
+    """Decoded records → one Arrow RecordBatch in the _symbol_schema
+    column order (plus `scenario` when given)."""
+    import pyarrow as pa
+
+    cols: dict[str, pa.Array] = {}
+    for d in range(meta.dim):
+        cols[f"k{d + 1}"] = pa.array([k[d] for k in data.keys], type=pa.string())
+    if meta.type == DT_SET:
+        cols["text"] = pa.array(data.text, type=pa.string())
+    elif meta.type == DT_PAR:
+        cols["value"] = pa.array([v[0] for v in data.values], type=pa.float64())
+        cols["is_eps"] = pa.array(
+            [bool(e & 1) for e in data.eps_mask], type=pa.bool_()
+        )
+    else:
+        for j, fname in enumerate(VALUE_FIELDS):
+            cols[fname] = pa.array([v[j] for v in data.values], type=pa.float64())
+        cols["eps_mask"] = pa.array(data.eps_mask, type=pa.int32())
+    if scenario is not None:
+        cols["scenario"] = pa.array([scenario] * len(data.keys), type=pa.string())
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def codec_records(rows, symtype: int, field_names: list[str], dim: int):
+    """Row tuples whose first `dim` fields are k1..kdim → codec
+    (key, values, eps_mask, text) records. A null value is written as NaN
+    (GDX NA), a missing or null is_eps / eps_mask as 0, a null set text
+    as ""."""
+    idx = {n: i for i, n in enumerate(field_names)}
+    if symtype == DT_SET:
+        ti = idx.get("text")
+        for r in rows:
+            yield r[:dim], (0.0,), 0, (r[ti] if ti is not None else "") or ""
+    elif symtype == DT_PAR:
+        vi, ei = idx["value"], idx.get("is_eps")
+        for r in rows:
+            is_eps = bool(r[ei]) if ei is not None else False
+            v = r[vi]
+            yield (
+                r[:dim],
+                (0.0 if is_eps else float(v if v is not None else math.nan),),
+                1 if is_eps else 0,
+                "",
+            )
+    else:
+        vis = [idx[f] for f in VALUE_FIELDS]
+        mi = idx.get("eps_mask")
+        for r in rows:
+            yield (
+                r[:dim],
+                tuple(float(r[i]) if r[i] is not None else math.nan for i in vis),
+                int(r[mi]) if mi is not None and r[mi] is not None else 0,
+                "",
+            )
 
 
 def _range_may_match(lo: str, hi: str, flt: Filter) -> bool:
@@ -171,22 +253,10 @@ class GdxPartition(InputPartition):
 
 class GdxCatalogReader(DataSourceReader):
     def __init__(self, path: str):
-        self.paths = _expand_paths(path)
+        self.path = path
 
     def read(self, partition):
-        for p in self.paths:
-            f = open_gdx(p)
-            for s in f.symbols:
-                yield (
-                    s.name,
-                    s.dim,
-                    s.type_name,
-                    s.subtype,
-                    s.nrecs,
-                    s.expl_text,
-                    list(s.domains),
-                    s.alias_of,
-                )
+        yield from catalog_rows(self.path)
 
 
 class GdxSymbolReader(DataSourceReader):
@@ -198,16 +268,14 @@ class GdxSymbolReader(DataSourceReader):
     docstring. PushdownGdxSymbolReader below opts in per-read."""
 
     def __init__(self, path: str, symbol: str):
-        self.paths = _expand_paths(path)
-        self.multi = len(self.paths) > 1
+        self.files = scenario_files(path)
         self.symbol = symbol
         # column name → pruning predicates on it ("k1".."kN", "scenario")
         self.pruning: dict[str, list[Filter]] = {}
 
     def partitions(self):
         parts = []
-        for p in self.paths:
-            scen = os.path.splitext(os.path.basename(p))[0] if self.multi else None
+        for p, scen in self.files:
             if scen is not None and any(
                 not _range_may_match(scen, scen, flt)
                 for flt in self.pruning.get("scenario", ())
@@ -230,8 +298,6 @@ class GdxSymbolReader(DataSourceReader):
         return parts
 
     def read(self, partition: GdxPartition):
-        import pyarrow as pa
-
         if partition is None:
             # every chunk was pruned: partitions() returned [], and Spark
             # then schedules one task with a None partition — emit nothing
@@ -240,32 +306,8 @@ class GdxSymbolReader(DataSourceReader):
         m = f.symbols[partition.sym_idx]
         chunk = partition.chunk if f.n_chunks(partition.sym_idx) > 1 else None
         data = f.read_records(partition.sym_idx, chunk=chunk)
-        cols: dict[str, pa.Array] = {}
-        for d in range(m.dim):
-            cols[f"k{d + 1}"] = pa.array(
-                [k[d] for k in data.keys], type=pa.string()
-            )
-        if m.type == DT_SET:
-            cols["text"] = pa.array(data.text, type=pa.string())
-        elif m.type == DT_PAR:
-            cols["value"] = pa.array(
-                [v[0] for v in data.values], type=pa.float64()
-            )
-            cols["is_eps"] = pa.array(
-                [bool(e & 1) for e in data.eps_mask], type=pa.bool_()
-            )
-        else:
-            for j, fname in enumerate(VALUE_FIELDS):
-                cols[fname] = pa.array(
-                    [v[j] for v in data.values], type=pa.float64()
-                )
-            cols["eps_mask"] = pa.array(data.eps_mask, type=pa.int32())
-        if partition.scenario is not None:
-            cols["scenario"] = pa.array(
-                [partition.scenario] * len(data.keys), type=pa.string()
-            )
         if data.keys:
-            yield pa.RecordBatch.from_pydict(cols)
+            yield record_batch(m, data, partition.scenario)
 
 
 class PushdownGdxSymbolReader(GdxSymbolReader):
@@ -278,7 +320,8 @@ class PushdownGdxSymbolReader(GdxSymbolReader):
     one plan. Across plans, see the module-docstring caveat: Spark 4.1
     replays a filtered plan's partition set for a later filter-less plan
     on the SAME DataFrame, so with pushdown enabled use one load() per
-    query shape (our facade and registered queries all do)."""
+    query shape (the registered queries do; the facade never sets
+    pushdown, and decodes symbols of ≤ CHUNK records on the driver)."""
 
     def pushFilters(self, filters):
         # a reused reader re-plans per action: rebuild pruning state from
@@ -385,37 +428,6 @@ class GdxSymbolWriter(DataSourceWriter):
                     return
                 yield from sl
 
-    def _records(self, merged, dim: int, field_names: list[str]):
-        """Merged row tuples → codec (key, values, eps_mask, text) records."""
-        idx = {n: i for i, n in enumerate(field_names)}
-        if self.symtype == DT_SET:
-            ti = idx.get("text")
-            for r in merged:
-                yield r[:dim], (0.0,), 0, (r[ti] if ti is not None else "") or ""
-        elif self.symtype == DT_PAR:
-            vi, ei = idx["value"], idx.get("is_eps")
-            for r in merged:
-                is_eps = bool(r[ei]) if ei is not None else False
-                v = r[vi]
-                yield (
-                    r[:dim],
-                    (0.0 if is_eps else float(v if v is not None else math.nan),),
-                    1 if is_eps else 0,
-                    "",
-                )
-        else:
-            vis = [idx[f] for f in VALUE_FIELDS]
-            mi = idx.get("eps_mask")
-            for r in merged:
-                yield (
-                    r[:dim],
-                    tuple(
-                        float(r[i]) if r[i] is not None else math.nan for i in vis
-                    ),
-                    int(r[mi]) if mi is not None and r[mi] is not None else 0,
-                    "",
-                )
-
     def commit(self, messages):
         dim = self._dim()
         field_names = [f.name for f in self.schema.fields]
@@ -437,7 +449,7 @@ class GdxSymbolWriter(DataSourceWriter):
         meta = SymbolMeta(
             name=self.symbol, dim=dim, type=self.symtype, expl_text=self.expl
         )
-        records = self._records(merged, dim, field_names)
+        records = codec_records(merged, self.symtype, field_names, dim)
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         try:
             if self.layout == "gams":
@@ -488,8 +500,7 @@ class GdxDataSource(DataSource):
             return CATALOG_SCHEMA
         paths = _expand_paths(self._path())
         f = open_gdx(paths[0])
-        base = _symbol_schema(f.symbols[f.find(sym)])
-        return base + (", scenario STRING" if len(paths) > 1 else "")
+        return _symbol_schema(f.symbols[f.find(sym)], len(paths) > 1)
 
     def reader(self, schema):
         sym = self.options.get("symbol", "*")

@@ -561,9 +561,13 @@ class GamsGdxFile:
     # -- GdxFile-compatible surface -----------------------------------
 
     def find(self, name: str) -> int:
+        """Case-insensitive lookup; aliases resolve to their target (as
+        gdx_codec.GdxFile.find)."""
         low = name.lower()
         for i, s in enumerate(self.symbols):
             if s.name.lower() == low:
+                if s.type == DT_ALIAS:
+                    return self.find(s.alias_of)
                 return i
         raise KeyError(f"symbol {name!r} not in {self.path}")
 

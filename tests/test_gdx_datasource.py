@@ -5,7 +5,9 @@ operations (gload, squeeze, scenario concat/diff, domain check)."""
 
 from __future__ import annotations
 
+import logging
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -117,6 +119,15 @@ def test_squeeze_drops_constant_key(engine):
     df = engine.symbol("monthly_sales").filter(F.col("k1") == "F")
     sq = engine.squeeze(df)
     assert "k1" not in sq.columns and "k2" in sq.columns
+    # squeeze keeps a key only with ≥ 2 distinct non-null labels
+    first = F.col("k2") == df.first()["k2"]
+    df = df.select(
+        "*",
+        F.when(first, F.lit(None)).otherwise(F.lit("x")).alias("k3"),
+        F.when(first, F.lit(None)).otherwise(F.col("k2")).alias("k4"),
+        F.lit(None).cast("string").alias("k5"),
+    )
+    assert [c for c in engine.squeeze(df).columns if c.startswith("k")] == ["k2", "k4"]
 
 
 def test_scenario_concat_and_diff(engine, spark, tmp_path):
@@ -435,3 +446,143 @@ def test_write_spills_runs_not_records(spark, tmp_path, monkeypatch):
     import shutil
 
     shutil.rmtree(w.run_dir, ignore_errors=True)
+
+
+def _exact_rows(df):
+    """Rows with every value as its repr: NaN, ±inf and -0.0 compare
+    exactly (NaN != NaN under ==)."""
+    return sorted(tuple(repr(v) for v in r) for r in df.collect())
+
+
+def _parity_symbols():
+    from gdxpy_spark.sources.gdx_codec import (
+        DT_ALIAS, DT_EQU, DT_PAR, DT_SET, DT_VAR, SymbolData, SymbolMeta,
+    )
+
+    inf, nan = math.inf, math.nan
+    return [
+        SymbolData(SymbolMeta("s", 2, DT_SET), keys=[("a", "x"), ("a", "y"), ("b", "x")],
+                   text=["first", "", "third"]),
+        SymbolData(SymbolMeta("ss", 2, DT_ALIAS, alias_of="s")),
+        SymbolData(SymbolMeta("p", 1, DT_PAR),
+                   keys=[(c,) for c in "abcdef"],
+                   values=[(1.5,), (nan,), (inf,), (-inf,), (0.0,), (0.0,)],
+                   eps_mask=[0, 0, 0, 0, 1, 0]),
+        SymbolData(SymbolMeta("v", 2, DT_VAR), keys=[("a", "x"), ("b", "y")],
+                   values=[(1.0, 0.0, 0.0, inf, 1.0), (nan, -2.5, -inf, 3.0, 1.0)],
+                   eps_mask=[0b10, 0]),
+        SymbolData(SymbolMeta("e", 1, DT_EQU), keys=[("a",), ("b",)],
+                   values=[(4.0, 0.0, 4.0, 4.0, 1.0), (2.0, 1.25, -inf, 5.0, 1.0)],
+                   eps_mask=[0b10, 0]),
+        SymbolData(SymbolMeta("sc", 0, DT_PAR), keys=[()], values=[(7.25,)], eps_mask=[0]),
+        SymbolData(SymbolMeta("empty", 1, DT_PAR)),
+    ]
+
+
+@pytest.fixture(scope="module")
+def parity_files(tmp_path_factory):
+    """One file per container layout holding every symbol kind, a
+    two-file scenario directory, the V7 fixture and the V7 golden."""
+    from gdxpy_spark.sources.fixtures import build_fixture_gdx_gams
+    from gdxpy_spark.sources.gdx_codec import GdxWriter
+    from gdxpy_spark.sources.gdx_gams import GamsGdxWriter
+    from tests.test_gdx_gams import build_golden
+
+    d = tmp_path_factory.mktemp("parity")
+    files = {"gdxpy": str(d / "kinds.gdx"), "v7": str(d / "kinds_v7.gdx"),
+             "scenarios": str(d / "scens"), "golden": str(d / "golden.gdx"),
+             "v7_fixture": build_fixture_gdx_gams(SF_DIR)}
+    for key, writer in (("gdxpy", GdxWriter), ("v7", GamsGdxWriter)):
+        w = writer(files[key])
+        for sym in _parity_symbols():
+            w.add_symbol(sym)
+        w.close()
+    os.mkdir(files["scenarios"])
+    for scen, shift in (("high", 1.0), ("low", 0.0)):
+        sym = _parity_symbols()[2]
+        sym.values = [(v + shift,) for (v,) in sym.values]
+        w = GdxWriter(os.path.join(files["scenarios"], f"{scen}.gdx"))
+        w.add_symbol(sym)
+        w.close()
+    with open(files["golden"], "wb") as f:
+        f.write(build_golden())
+    return files
+
+
+@pytest.mark.parametrize(
+    "layout,name",
+    [("gdxpy", n) for n in ("s", "ss", "p", "v", "e", "sc", "empty")]
+    + [("v7", n) for n in ("s", "ss", "p", "v", "e", "sc", "empty")]
+    + [("scenarios", "p"), ("v7_fixture", "specials"), ("v7_fixture", "monthly_sales"),
+       ("golden", "i"), ("golden", "d"), ("golden", "total")],
+)
+def test_facade_read_matches_datasource(spark, parity_files, layout, name, caplog):
+    """The facade's driver-side read of a chunk-sized symbol returns the
+    DataSource scan's schema, column order and rows, specials exact."""
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.api")
+    path = parity_files[layout]
+    got = GdxEngine(spark).symbol(name, path)
+    want = spark.read.format("gdx").option("symbol", name).load(path)
+    assert got.schema == want.schema
+    assert _exact_rows(got) == _exact_rows(want)
+    assert caplog.records[-1].getMessage().endswith("driver path")
+
+
+@pytest.mark.parametrize("layout", ["gdxpy", "v7", "scenarios"])
+def test_facade_catalog_matches_datasource(spark, parity_files, layout):
+    path = parity_files[layout]
+    got = GdxEngine(spark).symbols(path)
+    want = spark.read.format("gdx").option("symbol", "*").load(path)
+    assert got.schema == want.schema
+    assert _exact_rows(got) == _exact_rows(want)
+
+
+def test_facade_read_above_chunk_takes_datasource(spark, tmp_path, caplog):
+    """One record past gdx_codec.CHUNK: the facade hands the read to the
+    chunk-partitioned DataSource scan, with the same rows."""
+    from gdxpy_spark.sources.gdx_codec import CHUNK, DT_PAR, GdxWriter, SymbolMeta
+
+    path = str(tmp_path / "big.gdx")
+    w = GdxWriter(path)
+    w.add_symbol_streaming(
+        SymbolMeta("big", 1, DT_PAR),
+        (((f"r{i:06d}",), (i * 0.5,), int(i % 1000 == 0), "") for i in range(CHUNK + 1)),
+    )
+    w.close()
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.api")
+    got = GdxEngine(spark).symbol("big", path)
+    assert caplog.records[-1].getMessage() == (
+        f"read big: {CHUNK + 1} records, datasource path"
+    )
+    want = spark.read.format("gdx").option("symbol", "big").load(path)
+    assert got.schema == want.schema
+    assert got.rdd.getNumPartitions() == 2  # one scan task per codec chunk
+    assert _exact_rows(got) == _exact_rows(want)
+
+
+def test_write_paths_map_nulls_alike(engine, spark, tmp_path):
+    """write_file and the DataSource writer map a null value to NaN and
+    a missing or null is_eps / eps_mask to 0, record for record."""
+    from gdxpy_spark.sources.gdx_codec import GdxFile
+
+    par = spark.createDataFrame(
+        [("a", 1.5, False), ("b", None, False), ("c", None, None), ("d", 2.0, True)],
+        "k1 STRING, value DOUBLE, is_eps BOOLEAN",
+    )
+    var = spark.createDataFrame(
+        [("a", None, 0.5, 0.0, None, 1.0), ("b", 3.0, 0.0, -1.0, 9.0, 1.0)],
+        "k1 STRING, level DOUBLE, marginal DOUBLE, lower DOUBLE, upper DOUBLE,"
+        " scale DOUBLE",
+    )
+
+    def decoded(path):
+        f = GdxFile(path)
+        d = f.read_records(f.find("x"))
+        return [repr(r) for r in zip(d.keys, d.values, d.eps_mask)]
+
+    for df, symtype, null_row in ((par, "parameter", 1), (var, "variable", 0)):
+        a, b = str(tmp_path / f"file_{symtype}.gdx"), str(tmp_path / f"sym_{symtype}.gdx")
+        engine.write_file({"x": (df, symtype)}, a)
+        engine.write_symbol(df, b, "x", symtype)
+        assert decoded(a) == decoded(b)
+        assert "nan" in decoded(a)[null_row]

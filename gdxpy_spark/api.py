@@ -149,10 +149,9 @@ class GdxEngine:
     # -- R6: UEL dictionary ---------------------------------------------------
     def uel_dictionary(self, path: str | None = None) -> DataFrame:
         """The file-global label dictionary as (uel_id, label) — codes are
-        the file's insertion order, exactly what the codec stored."""
-        from gdxpy_spark.sources.gdx_codec import GdxFile
-
-        f = GdxFile(self._path(path))
+        the file's insertion order, exactly what the codec stored. Either
+        container layout (gdx_datasource.open_gdx)."""
+        f = gdx_datasource.open_gdx(self._path(path))
         return self.spark.createDataFrame(
             [(i + 1, u) for i, u in enumerate(f.uels)], "uel_id BIGINT, label STRING"
         )

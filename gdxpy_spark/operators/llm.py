@@ -9,6 +9,8 @@ engine-specific by nature).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from gdxpy_spark.operators._util import (
@@ -23,6 +25,8 @@ from gdxpy_spark.operators._util import (
 )
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import table
+
+log = logging.getLogger(__name__)
 
 
 @register(
@@ -1528,11 +1532,22 @@ def _ivf_target_cell() -> int | None:
     near-twins (the paper's production dedup regime) co-cell by
     construction (planted floor pytest-pinned). ORACLE CAVEAT: the
     registered DuckDB twins replay the DEFAULT k=√n spec — run
-    correctness gates with the knob unset."""
+    correctness gates with the knob unset. A value that is not a
+    positive integer is logged and ignored (the √n default)."""
     import os
 
     tc = os.environ.get("GDXPS_IVF_TARGET_CELL")
-    return int(tc) if tc else None
+    if not tc:
+        return None
+    try:
+        cell = int(tc)
+    except ValueError:
+        cell = 0
+    if cell > 0:
+        return cell
+    log.warning("GDXPS_IVF_TARGET_CELL=%r is not a positive integer; "
+                "using the sqrt(n) cell count", tc)
+    return None
 
 
 def _ivf_k(n: int, lo: int = _IVF_K_FLOOR, target_cell: int = None) -> int:

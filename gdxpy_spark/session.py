@@ -8,11 +8,14 @@ session time zone for deterministic timestamp semantics.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 from gdxpy_spark.tables import configure
+
+log = logging.getLogger(__name__)
 
 
 def _default_driver_mem() -> str:
@@ -26,12 +29,19 @@ def _default_driver_mem() -> str:
 
 def _default_cpus() -> int:
     """SPARK_GRAFT_CPUS when it is a positive integer, else the host's
-    core count (so a malformed value such as "auto" cannot crash)."""
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
-    except ValueError:
-        cpus = 0
-    return cpus if cpus > 0 else (os.cpu_count() or 4)
+    core count (so a malformed value such as "auto" cannot crash; it is
+    logged)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw:
+        try:
+            cpus = int(raw)
+        except ValueError:
+            cpus = 0
+        if cpus > 0:
+            return cpus
+        log.warning("SPARK_GRAFT_CPUS=%r is not a positive integer; "
+                    "using the host's core count", raw)
+    return os.cpu_count() or 4
 
 
 def get_spark(

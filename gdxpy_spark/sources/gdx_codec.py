@@ -8,9 +8,9 @@ Implements the GAMS GDX *data model* from the publicly documented format
   variable/equation/alias, subtype, explanatory text ≤255, per-dimension
   domain names, record count),
 - per-symbol sparse record blocks; record ORDER is path-dependent:
-  the in-memory path (add_symbol) re-sorts lexicographically by
-  UEL-code tuple (GDX mapped order), while the streaming path
-  (add_symbol_streaming) writes records in CALLER order — the
+  add_symbol re-sorts lexicographically by UEL-code tuple (GDX
+  mapped order) before feeding the one encoder, add_symbol_streaming,
+  which writes records in CALLER order — the
   DataSource commit streams label-sorted runs, and for dim≥2 symbols
   label order generally differs from first-appearance code order, so
   readers must NOT assume mapped code order across chunks (no current
@@ -68,7 +68,8 @@ MAGIC = b"GDXPY7\x00"
 # constant — files are self-describing, a reader never needs the writer's
 # compile-time constant — and (b) per-chunk per-dimension min/max
 # key-label statistics follow each catalog entry. Readers of v1 files
-# still work: both additions parse only when version >= 2.
+# still work: both additions parse only when version >= 2. A file of a
+# newer version is rejected, never parsed as this one.
 VERSION = 2
 
 # symbol types (codes follow the public GMS_DT_* numbering)
@@ -256,6 +257,9 @@ def _read_value(b) -> tuple[float, bool]:
 
 # --- writer -----------------------------------------------------------------
 
+_SPILL_FLUSH = 1 << 20  # raw bytes buffered per spill-file write
+
+
 class GdxWriter:
     """Streaming writer. Usage:
 
@@ -263,10 +267,14 @@ class GdxWriter:
         w.add_symbol(SymbolData(meta, keys, values, eps_mask, text))
         w.close()
 
-    Records are sorted here (by UEL code tuple, insertion order of first
-    appearance per dimension — the GDX convention of mapped ordering) —
-    callers may pass unsorted records. At cluster scale the DataSource
-    writer pre-sorts per partition and merges at commit.
+    There is one record encoder, add_symbol_streaming: every symbol's
+    block is encoded (and its UELs and set texts interned) when it is
+    added, into a spill file that close() splices into the output.
+    add_symbol sorts the records by UEL-code tuple (codes in order of
+    first appearance per dimension — the GDX convention of mapped
+    ordering) and streams them, so callers may pass unsorted records.
+    At cluster scale the DataSource writer pre-sorts per partition and
+    merges at commit.
     """
 
     def __init__(self, path: str, producer: str = "gdxpy_spark",
@@ -280,13 +288,10 @@ class GdxWriter:
         self.uel: dict[str, int] = {}  # label → 1-based code
         self.set_text: dict[str, int] = {}  # text → index (0 = none)
         self.acronyms: list[str] = []
-        self.symbols: list[SymbolData] = []  # in-memory symbols (add_symbol)
-        # streamed symbols: (meta, spill_path, encoded_len, chunk_offsets,
-        # chunk_stats); their record blocks live on disk, never in driver
-        # memory
-        self._streamed: list[tuple[SymbolMeta, str, int, list[int], list]] = []
-        # file order of symbols across both add paths: ("mem"|"stream", idx)
-        self._order: list[tuple[str, int]] = []
+        # per symbol, in file order: (meta, spill_path, encoded_len,
+        # chunk_offsets, chunk_stats); record blocks live on disk, never
+        # in driver memory
+        self._blocks: list[tuple[SymbolMeta, str, int, list[int], list]] = []
 
     def _code(self, label: str) -> int:
         c = self.uel.get(label)
@@ -307,29 +312,40 @@ class GdxWriter:
         return i
 
     def _check_dup(self, name: str) -> None:
-        existing = [s.meta.name for s in self.symbols] + [
-            m.name for m, _, _, _, _ in self._streamed
-        ]
-        if any(n.lower() == name.lower() for n in existing):
+        if any(m.name.lower() == name.lower() for m, *_ in self._blocks):
             raise ValueError(f"duplicate symbol {name}")
 
     def add_symbol(self, data: SymbolData) -> None:
+        """Intern every key, sort the records into mapped order (by
+        UEL-code tuple) and stream them to add_symbol_streaming."""
         self._check_dup(data.meta.name)
-        data.meta.nrecs = len(data.keys)
-        self._order.append(("mem", len(self.symbols)))
-        self.symbols.append(data)
+        order = sorted(
+            range(len(data.keys)),
+            key=lambda i: tuple(map(self._code, data.keys[i])),
+        )
+        self.add_symbol_streaming(
+            data.meta,
+            (
+                (data.keys[i],
+                 data.values[i] if data.values else (),
+                 data.eps_mask[i] if data.eps_mask else 0,
+                 data.text[i] if data.text else "")
+                for i in order
+            ),
+        )
 
     def add_symbol_streaming(self, meta: SymbolMeta, records) -> SymbolMeta:
         """Encode a symbol incrementally from an iterator of
         ``(key_tuple, values_tuple, eps_mask, text)`` without ever holding
-        the records in memory: each record is delta-encoded straight to a
-        spill file (zlib-streamed when compress=True), which close() then
-        splices into the output byte-for-byte. Callers stream records in
-        the order they should land in the file — the delta encoder is
-        order-agnostic, but sorted input maximizes key-prefix sharing and
-        is what the DataSource commit's k-way run merge provides. This is
-        the cluster-scale write path: a symbol bigger than driver memory
-        costs the driver one record at a time."""
+        the records in memory: records are delta-encoded into a buffer
+        flushed every _SPILL_FLUSH bytes to a spill file (zlib-streamed
+        when compress=True), which close() then splices into the output
+        byte-for-byte. Callers stream records in the order they should
+        land in the file — the delta encoder is order-agnostic, but
+        sorted input maximizes key-prefix sharing and is what the
+        DataSource commit's k-way run merge provides. This is the
+        cluster-scale write path: a symbol bigger than driver memory
+        costs the driver one buffer."""
         import tempfile
 
         self._check_dup(meta.name)
@@ -338,78 +354,65 @@ class GdxWriter:
             prefix="gdxpy_spark_block_", suffix=".spill", delete=False
         )
         comp = zlib.compressobj(6) if self.compress else None
-        raw_pos = 0  # offset in the *raw* (pre-compression) block
-        enc_len = 0  # bytes actually written (compressed if enabled)
+        raw_base = 0  # raw (pre-compression) bytes already flushed
         chunks = [0]
         stats = _ChunkStatsTracker(meta.dim)
         prev: tuple[int, ...] | None = None
         n = 0
-        rec = io.BytesIO()
+        b = io.BytesIO()
+
+        def flush() -> None:
+            nonlocal raw_base
+            raw = b.getvalue()
+            raw_base += len(raw)
+            tmp.write(comp.compress(raw) if comp else raw)
+            b.seek(0)
+            b.truncate()
+
         try:
             for key, vals, eps, txt in records:
                 if len(key) != meta.dim:
                     raise ValueError(
                         f"{meta.name}: key arity {len(key)} != dim {meta.dim}"
                     )
-                codes = tuple(self._code(k) for k in key)
+                codes = tuple(map(self._code, key))
                 if n and n % self.chunk_records == 0:
-                    chunks.append(raw_pos)
+                    chunks.append(raw_base + b.tell())
                     stats.next_chunk()
                     prev = None  # chunks are self-delimiting (restart delta)
                 stats.observe(key)
-                rec.seek(0)
-                rec.truncate()
                 shared = 0
                 if prev is not None:
                     while shared < meta.dim and codes[shared] == prev[shared]:
                         shared += 1
-                rec.write(bytes([shared]))
+                b.write(bytes([shared]))
                 for c in codes[shared:]:
-                    _wv(rec, c)
+                    _wv(b, c)
                 prev = codes
                 if meta.type == DT_SET:
-                    _wv(rec, self._text_idx(txt or ""))
+                    _wv(b, self._text_idx(txt or ""))
                 else:
                     for j in range(nv):
                         v = vals[j] if j < len(vals) else 0.0
-                        _write_value(rec, v, bool(eps >> j & 1))
-                raw = rec.getvalue()
-                raw_pos += len(raw)
-                out = comp.compress(raw) if comp else raw
-                tmp.write(out)
-                enc_len += len(out)
+                        _write_value(b, v, bool(eps >> j & 1))
                 n += 1
+                if b.tell() >= _SPILL_FLUSH:
+                    flush()
+            flush()
             if comp:
-                out = comp.flush()
-                tmp.write(out)
-                enc_len += len(out)
+                tmp.write(comp.flush())
+            enc_len = tmp.tell()
+        except BaseException:
+            os.unlink(tmp.name)
+            raise
         finally:
             tmp.close()
         meta.nrecs = n
-        self._order.append(("stream", len(self._streamed)))
-        self._streamed.append((meta, tmp.name, enc_len, chunks, stats.finish()))
+        self._blocks.append((meta, tmp.name, enc_len, chunks, stats.finish()))
         return meta
 
     def close(self) -> None:
         import shutil
-
-        # encode in-memory blocks first (they intern UELs/set text);
-        # streamed blocks were encoded (and interned) at add time
-        mem_blocks: list[tuple[bytes, list[int], list]] = []
-        for sym in self.symbols:
-            mem_blocks.append(self._encode_block(sym))
-        # resolve file order → (meta, block_len, chunks, stats, source)
-        entries: list[tuple[SymbolMeta, int, list[int], list, tuple]] = []
-        for kind, idx in self._order:
-            if kind == "mem":
-                block, chunks, stats = mem_blocks[idx]
-                entries.append(
-                    (self.symbols[idx].meta, len(block), chunks, stats,
-                     ("mem", block))
-                )
-            else:
-                meta, spill, enc_len, chunks, stats = self._streamed[idx]
-                entries.append((meta, enc_len, chunks, stats, ("file", spill)))
 
         with open(self.path, "wb") as out:
             out.write(MAGIC)
@@ -438,8 +441,8 @@ class GdxWriter:
             # section: symbol catalog — per-symbol metadata + block/chunk
             # lengths; absolute data-block offsets live in the trailer
             cat_off = out.tell()
-            _wv(out, len(entries))
-            for m, block_len, chunks, stats, _src in entries:
+            _wv(out, len(self._blocks))
+            for m, _spill, block_len, chunks, stats in self._blocks:
                 _ws(out, m.name)
                 out.write(bytes([m.dim, m.type]))
                 _wv(out, m.subtype)
@@ -460,17 +463,14 @@ class GdxWriter:
                         _ws(out, lo)
                         _ws(out, hi)
 
-            # section: data blocks (in-memory ones written, streamed ones
-            # spliced from their spill files — constant driver memory)
+            # section: data blocks, spliced from their spill files
+            # (constant driver memory)
             block_offs = []
-            for _m, _len, _chunks, _stats, src in entries:
+            for _m, spill, _len, _chunks, _stats in self._blocks:
                 block_offs.append(out.tell())
-                if src[0] == "mem":
-                    out.write(src[1])
-                else:
-                    with open(src[1], "rb") as spill:
-                        shutil.copyfileobj(spill, out, 1 << 20)
-                    os.unlink(src[1])
+                with open(spill, "rb") as f:
+                    shutil.copyfileobj(f, out, 1 << 20)
+                os.unlink(spill)
 
             # trailer: section offsets + per-symbol block offsets
             trailer_off = out.tell()
@@ -481,70 +481,55 @@ class GdxWriter:
                 out.write(struct.pack("<Q", off))
             out.write(struct.pack("<Q", trailer_off))
 
-    def _encode_block(self, sym: SymbolData) -> tuple[bytes, list[int], list]:
-        m = sym.meta
-        nv = m.n_values
-        # map labels → codes, sort records by code tuple (GDX mapped order)
-        recs = []
-        for i, key in enumerate(sym.keys):
-            if len(key) != m.dim:
-                raise ValueError(f"{m.name}: key arity {len(key)} != dim {m.dim}")
-            codes = tuple(self._code(k) for k in key)
-            vals = sym.values[i] if sym.values else ()
-            eps = sym.eps_mask[i] if sym.eps_mask else 0
-            txt = sym.text[i] if sym.text else ""
-            recs.append((codes, vals, eps, txt, key))
-        recs.sort(key=lambda r: r[0])
-
-        b = io.BytesIO()
-        prev: tuple[int, ...] | None = None
-        chunks = [0]
-        stats = _ChunkStatsTracker(m.dim)
-        for n, (codes, vals, eps, txt, key) in enumerate(recs):
-            if n and n % self.chunk_records == 0:
-                chunks.append(b.tell())
-                stats.next_chunk()
-                prev = None  # chunks are self-delimiting (restart delta)
-            stats.observe(key)
-            shared = 0
-            if prev is not None:
-                while shared < m.dim and codes[shared] == prev[shared]:
-                    shared += 1
-            b.write(bytes([shared]))
-            for c in codes[shared:]:
-                _wv(b, c)
-            prev = codes
-            if m.type == DT_SET:
-                _wv(b, self._text_idx(txt))
-            else:
-                for j in range(nv):
-                    v = vals[j] if j < len(vals) else 0.0
-                    _write_value(b, v, bool(eps >> j & 1))
-        raw = b.getvalue()
-        if self.compress:
-            raw = zlib.compress(raw, 6)
-        return raw, chunks, stats.finish()
-
 
 # --- reader -----------------------------------------------------------------
 
 @contextlib.contextmanager
-def _corrupt_guard(path: str, where: str):
+def corrupt_guard(path: str, where: str, error: type[ValueError], layout: str):
     """Re-raise low-level decode failures (index/struct/overflow/unicode/
-    zlib) as ValueError naming the file and section — corrupt bytes must
-    fail loudly and typed, never leak a raw IndexError to the caller
-    (found by the r6 byte-fuzz sweep in tests/test_gdx_codec.py)."""
+    zlib) as `error` naming the file, the container layout and the
+    section — corrupt bytes must fail loudly and typed, never leak a raw
+    IndexError to the caller (found by the r6 byte-fuzz sweep in
+    tests/test_gdx_codec.py). Shared by both container readers."""
     try:
         yield
     except (IndexError, struct.error, OverflowError, UnicodeDecodeError,
             zlib.error, MemoryError) as exc:
-        raise ValueError(
-            f"{path}: corrupt GDXPY7 container ({where}): "
+        raise error(
+            f"{path}: corrupt {layout} container ({where}): "
             f"{type(exc).__name__}: {exc}"
         ) from exc
 
 
-class GdxFile:
+class GdxReader:
+    """The reader surface both containers share (GdxFile here,
+    gdx_gams.GamsGdxFile): the symbol lookup and the guarded record
+    decode. Subclasses parse `symbols` and implement _read_records."""
+
+    path: str
+    symbols: list[SymbolMeta]
+    _error: type[ValueError] = ValueError
+    _layout = "GDXPY7"
+
+    def find(self, name: str) -> int:
+        """Case-insensitive symbol lookup (gdxFindSymbol semantics);
+        aliases resolve to their target."""
+        low = name.lower()
+        for i, s in enumerate(self.symbols):
+            if s.name.lower() == low:
+                if s.type == DT_ALIAS:
+                    return self.find(s.alias_of)
+                return i
+        raise KeyError(f"symbol {name!r} not in {self.path}")
+
+    def read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
+        """Decode one symbol's records (or one chunk of them)."""
+        with corrupt_guard(self.path, f"records[{idx}]", self._error,
+                           self._layout):
+            return self._read_records(idx, chunk)
+
+
+class GdxFile(GdxReader):
     """Random-access reader: catalog + UELs parsed eagerly (small), record
     blocks decoded on demand per symbol (and per chunk range — the unit a
     distributed scan parallelizes over)."""
@@ -570,12 +555,17 @@ class GdxFile:
                 f"{path}: not a gdxpy_spark GDX container — expected magic "
                 f"{MAGIC!r}, got {buf[:len(MAGIC)]!r}{hint}"
             )
-        with _corrupt_guard(path, "catalog"):
+        with corrupt_guard(path, "catalog", self._error, self._layout):
             self._parse_catalog(buf)
 
     def _parse_catalog(self, buf: bytes) -> None:
         off = len(MAGIC)
         self.version, flags = struct.unpack_from("<HB", buf, off)
+        if self.version > VERSION:
+            raise ValueError(
+                f"{self.path}: unsupported GDXPY7 container version "
+                f"{self.version} (this reader reads up to {VERSION})"
+            )
         self.compressed = bool(flags & 1)
         b = io.BytesIO(buf)
         b.seek(off + 3)
@@ -634,16 +624,6 @@ class GdxFile:
             self._block_len.append(blen)
             self._chunks.append(chunks)
 
-    def find(self, name: str) -> int:
-        """Case-insensitive symbol lookup (gdxFindSymbol semantics);
-        aliases resolve to their target."""
-        for i, s in enumerate(self.symbols):
-            if s.name.lower() == name.lower():
-                if s.type == DT_ALIAS:
-                    return self.find(s.alias_of)
-                return i
-        raise KeyError(f"symbol {name!r} not in {self.path}")
-
     def _block(self, idx: int) -> bytes:
         off = self.block_offsets[idx]
         raw = self._buf[off : off + self._block_len[idx]]
@@ -659,11 +639,6 @@ class GdxFile:
         the contract a distributed scan prunes partitions against."""
         stats = self._chunk_stats[idx]
         return stats or None
-
-    def read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
-        """Decode one symbol's records (or one chunk of them)."""
-        with _corrupt_guard(self.path, f"records[{idx}]"):
-            return self._read_records(idx, chunk)
 
     def _read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
         m = self.symbols[idx]

@@ -26,15 +26,17 @@ min/max key-label statistics (gdx_codec.GdxFile.chunk_stats) — chunks
 that cannot match are never scheduled, the parquet row-group-stats
 pattern. Pruning is partition-level only: every filter is returned to
 Spark for row-level re-evaluation, so row semantics never depend on
-stats. It is OPT-IN (not the default) because Spark 4.1.2 caches the
-pushed-down partition set on the JVM relation (PythonDataSourceV2
-.readInfo is replaced by each filtered plan and NOT invalidated by a
-later filter-less plan): reusing one pushdown-enabled DataFrame for a
+stats. It is OPT-IN on every Spark version (there is no version gate:
+the plain reader is chosen unless ``pushdown`` is ``true``/``1``)
+because Spark 4.1.2 caches the pushed-down partition set on the JVM
+relation (PythonDataSourceV2 .readInfo is replaced by each filtered
+plan and NOT invalidated by a later filter-less plan): reusing one pushdown-enabled DataFrame for a
 filtered action and then an unfiltered one replays the stale pruned
 partitions — an upstream bug affecting every pushFilters-capable Python
 DataSource (minimal doc-example repro pinned in
 tests/test_gdx_datasource.py::test_upstream_pushdown_cache_staleness).
-With pushdown on, use one load() per query shape.
+With pushdown on, use one load() per query shape. Flip the default only
+once that pinned repro fails.
 The writer sorts per partition and merges sorted runs at commit (the
 distributed-sort-then-merge pattern; the commit node only streams runs).
 
@@ -372,7 +374,6 @@ class GdxSymbolWriter(DataSourceWriter):
         self.symtype = _TYPE_BY_NAME[options.get("symtype", "parameter")]
         self.expl = options.get("expl_text", "")
         self.compress = (options.get("compress", "false") or "").lower() == "true"
-        self.chunk_records = int(options.get("chunk_records", "0")) or None
         self.layout = (options.get("layout", "gdxpy") or "gdxpy").lower()
         if self.layout not in ("gdxpy", "gams"):
             raise ValueError(f"gdx: unknown layout {self.layout!r}")
@@ -468,10 +469,7 @@ class GdxSymbolWriter(DataSourceWriter):
                 w.add_symbol(data)
                 w.close()
             else:
-                kw = {"compress": self.compress}
-                if self.chunk_records:
-                    kw["chunk_records"] = self.chunk_records
-                w = GdxWriter(self.path, **kw)
+                w = GdxWriter(self.path, compress=self.compress)
                 w.add_symbol_streaming(meta, records)
                 w.close()
         finally:
@@ -506,22 +504,10 @@ class GdxDataSource(DataSource):
         sym = self.options.get("symbol", "*")
         if sym == "*":
             return GdxCatalogReader(self._path())
+        # pruning is opt-in on every Spark version, with no version gate:
+        # see the module docstring for the upstream stale-partition bug
         opt = (self.options.get("pushdown", "") or "").lower()
         if opt in ("true", "1"):
-            return PushdownGdxSymbolReader(self._path(), sym)
-        if opt in ("false", "0"):
-            return GdxSymbolReader(self._path(), sym)
-        # Unset → version-gated default. Spark ≤ 4.1.x caches a filtered
-        # plan's pushed partition set on the relation and replays it for
-        # a later filter-less plan over the SAME DataFrame, silently
-        # dropping rows (repro pinned in tests/test_gdx_datasource.py::
-        # test_upstream_pushdown_cache_staleness) — so pruning stays
-        # opt-in there. On a future Spark where that is fixed, pushdown
-        # becomes the default; re-verify the pinned repro when bumping.
-        import pyspark
-
-        major, minor = (int(x) for x in pyspark.__version__.split(".")[:2])
-        if (major, minor) > (4, 1):
             return PushdownGdxSymbolReader(self._path(), sym)
         return GdxSymbolReader(self._path(), sym)
 
@@ -536,7 +522,7 @@ def register(spark) -> None:
     """Idempotently register the gdx format on a session.
 
     Also enables spark.sql.python.filterPushdown.enabled (default false
-    in Spark 4.1, runtime-settable): GdxSymbolReader implements
+    in Spark 4.1, runtime-settable): PushdownGdxSymbolReader implements
     pushFilters, and Spark refuses to plan a pushdown-capable Python
     reader while the flag is off — so any session that can read gdx at
     all gets chunk/scenario pruning with it."""

@@ -60,7 +60,6 @@ unit; the DataSource layer handles that (gdx_datasource).
 
 from __future__ import annotations
 
-import contextlib
 import io
 import math
 import struct
@@ -72,8 +71,10 @@ from gdxpy_spark.sources.gdx_codec import (
     DT_SET,
     DT_VAR,
     MAX_DIM,
+    GdxReader,
     SymbolData,
     SymbolMeta,
+    corrupt_guard,
 )
 
 GDX_HEADER_NR = 123
@@ -151,22 +152,6 @@ def _inflate_pages(buf: bytes, pos: int, path: str) -> bytes:
 
 class GamsGdxError(ValueError):
     pass
-
-
-@contextlib.contextmanager
-def _corrupt_guard(path: str, where: str):
-    """Re-raise low-level decode failures as GamsGdxError naming the file
-    and section — corrupt bytes must fail loudly and typed, never leak a
-    raw IndexError/struct.error (r6 byte-fuzz finding, mirrored from
-    gdx_codec)."""
-    try:
-        yield
-    except (IndexError, struct.error, OverflowError, UnicodeDecodeError,
-            zlib.error, MemoryError) as exc:
-        raise GamsGdxError(
-            f"{path}: corrupt GAMS-layout container ({where}): "
-            f"{type(exc).__name__}: {exc}"
-        ) from exc
 
 
 # --- Delphi-stream primitives (ShortString + little-endian ints) -----------
@@ -472,10 +457,15 @@ class GamsGdxWriter:
             f.write(blob)
 
 
-class GamsGdxFile:
-    """Read a V7-layout .gdx. Exposes the same reader surface as
+class GamsGdxFile(GdxReader):
+    """Read a V7-layout .gdx. Shares the reader surface of
     gdx_codec.GdxFile (symbols / find / n_chunks / read_records) so the
-    DataSource can serve either container behind format("gdx")."""
+    DataSource can serve either container behind format("gdx"); `find`
+    and the corrupt-bytes guard are the shared gdx_codec.GdxReader ones,
+    raising GamsGdxError here."""
+
+    _error = GamsGdxError
+    _layout = "GAMS-layout"
 
     def __init__(self, path: str):
         self.path = path
@@ -483,7 +473,7 @@ class GamsGdxFile:
             buf = f.read()
         if not buf or buf[0] != GDX_HEADER_NR or buf[2:9] != GDX_HEADER_ID:
             raise GamsGdxError(f"{path}: not a GAMS-layout GDX file")
-        with _corrupt_guard(path, "catalog"):
+        with corrupt_guard(path, "catalog", self._error, self._layout):
             self._parse(buf)
 
     def _parse(self, buf: bytes) -> None:
@@ -560,26 +550,11 @@ class GamsGdxFile:
 
     # -- GdxFile-compatible surface -----------------------------------
 
-    def find(self, name: str) -> int:
-        """Case-insensitive lookup; aliases resolve to their target (as
-        gdx_codec.GdxFile.find)."""
-        low = name.lower()
-        for i, s in enumerate(self.symbols):
-            if s.name.lower() == low:
-                if s.type == DT_ALIAS:
-                    return self.find(s.alias_of)
-                return i
-        raise KeyError(f"symbol {name!r} not in {self.path}")
-
     def n_chunks(self, idx: int) -> int:
         return 1  # GAMS layout has no chunk index; symbols are model-sized
 
     def chunk_stats(self, idx: int) -> None:
         return None  # no per-chunk key statistics in the GAMS layout
-
-    def read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
-        with _corrupt_guard(self.path, f"records[{idx}]"):
-            return self._read_records(idx, chunk)
 
     def _read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
         m = self.symbols[idx]

@@ -264,6 +264,71 @@ def test_streaming_writer_matches_in_memory():
         assert front.text == ["", "bee"]
 
 
+def test_add_symbol_is_sort_then_stream():
+    """add_symbol on unsorted records writes the same bytes as
+    add_symbol_streaming on the records pre-sorted by UEL-code tuple:
+    there is one encoder, and add_symbol only sorts into mapped order.
+    A leading set fixes the code of every label in both files."""
+    import random
+
+    labels = [f"j{i}" for i in range(300)] + [f"i{i}" for i in range(7)]
+    code = {lab: n for n, lab in enumerate(labels)}
+    recs = [
+        ((f"i{i % 7}", f"j{i}"), (float(i) * 1.5,), 0, "")
+        for i in range(300)
+    ] + [(("i0", "j5"), (0.0,), 1, "")]
+    random.Random(3).shuffle(recs)
+    in_code_order = sorted(recs, key=lambda r: tuple(code[k] for k in r[0]))
+    for compress in (False, True):
+        paths = []
+        for streamed in (False, True):
+            path = _tmp(f"d{compress}{streamed}.gdx")
+            w = GdxWriter(path, compress=compress, chunk_records=64)
+            w.add_symbol(
+                SymbolData(meta=SymbolMeta("u", 1, DT_SET),
+                           keys=[(lab,) for lab in labels])
+            )
+            meta = SymbolMeta("d", 2, DT_PAR)
+            if streamed:
+                w.add_symbol_streaming(meta, iter(in_code_order))
+            else:
+                w.add_symbol(
+                    SymbolData(
+                        meta=meta,
+                        keys=[r[0] for r in recs],
+                        values=[r[1] for r in recs],
+                        eps_mask=[r[2] for r in recs],
+                    )
+                )
+            w.close()
+            paths.append(path)
+        a, b = (open(p, "rb").read() for p in paths)
+        assert a == b
+        assert GdxFile(paths[0]).n_chunks(1) == 5
+
+
+def test_newer_container_version_rejected():
+    """A GDXPY7 file of a version newer than the reader's is rejected
+    with a ValueError naming the version, never parsed as this one."""
+    import struct
+
+    import pytest
+
+    from gdxpy_spark.sources.gdx_codec import MAGIC, VERSION
+
+    path = _tmp("v3.gdx")
+    w = GdxWriter(path)
+    w.add_symbol(SymbolData(meta=SymbolMeta("x", 1, DT_SET), keys=[("a",)]))
+    w.close()
+    raw = bytearray(open(path, "rb").read())
+    assert struct.unpack_from("<H", raw, len(MAGIC))[0] == VERSION
+    struct.pack_into("<H", raw, len(MAGIC), VERSION + 1)
+    with open(path, "wb") as f:
+        f.write(bytes(raw))
+    with pytest.raises(ValueError, match=f"version {VERSION + 1}"):
+        GdxFile(path)
+
+
 def test_streaming_writer_chunked_and_constant_memory():
     """A streamed symbol larger than one chunk splits into chunks exactly
     like the in-memory path and never materializes its records."""

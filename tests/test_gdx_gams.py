@@ -392,6 +392,17 @@ def test_facade_opens_gams_layout(spark, golden):
     assert set(loaded) == {"i", "total"}
 
 
+def test_facade_uel_dictionary_gams_layout(spark, golden):
+    """uel_dictionary (R6) opens a V7-layout file like every other facade
+    read and returns its labels in code order."""
+    from gdxpy_spark.api import GdxEngine
+
+    uel = GdxEngine(spark).open(golden).uel_dictionary()
+    assert [tuple(r) for r in uel.orderBy("uel_id").collect()] == [
+        (1, "seattle"), (2, "san-diego"),
+    ]
+
+
 def test_roundtrip_property_gams():
     """Same hypothesis property as the GDXPY7 codec, against the GAMS
     layout: random symbols (dim 0-5, specials, EPS masks, set text)

@@ -172,6 +172,66 @@ def test_malformed_cpus_env_falls_back(spark, monkeypatch):
     assert got.sparkContext is spark.sparkContext
 
 
+def test_malformed_env_values_log_one_warning(monkeypatch, caplog):
+    """A malformed SPARK_GRAFT_CPUS or GDXPS_IVF_TARGET_CELL falls back to
+    its default and logs one WARNING naming the variable; an unset or
+    valid value logs nothing."""
+    import logging
+    import os
+
+    import gdxpy_spark.session as sess
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.WARNING)
+    for bad in ("auto", "-2", "0"):
+        caplog.clear()
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        assert sess._default_cpus() == (os.cpu_count() or 4)
+        monkeypatch.setenv("GDXPS_IVF_TARGET_CELL", bad)
+        assert llm._ivf_target_cell() is None
+        got = [(r.name, r.levelname) for r in caplog.records]
+        assert got == [
+            ("gdxpy_spark.session", "WARNING"),
+            ("gdxpy_spark.operators.llm", "WARNING"),
+        ]
+        assert "SPARK_GRAFT_CPUS" in caplog.records[0].getMessage()
+        assert "GDXPS_IVF_TARGET_CELL" in caplog.records[1].getMessage()
+    # a malformed target cell must not change the cell count: √n default
+    assert llm._ivf_k(10_000, target_cell=llm._ivf_target_cell()) == llm._ivf_k(10_000)
+
+    caplog.clear()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("GDXPS_IVF_TARGET_CELL", "64")
+    assert sess._default_cpus() == 3 and llm._ivf_target_cell() == 64
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.delenv("GDXPS_IVF_TARGET_CELL")
+    assert sess._default_cpus() == (os.cpu_count() or 4)
+    assert llm._ivf_target_cell() is None
+    assert not caplog.records
+
+
+def test_engine_env_var_set_is_pinned():
+    """The engine reads exactly these env vars. A new knob must change
+    this test (and say why it cannot be an option or a constant)."""
+    import pathlib
+    import re
+
+    import gdxpy_spark
+
+    read = re.compile(
+        r"""os\.(?:environ\.get\(|environ\[|getenv\()\s*["']([^"']+)["']"""
+    )
+    root = pathlib.Path(gdxpy_spark.__file__).parent
+    found = {
+        m.group(1)
+        for path in root.rglob("*.py")
+        for m in read.finditer(path.read_text())
+    }
+    assert found == {
+        "GDXPS_IVF_TARGET_CELL", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
+    }
+
+
 # ---- r9 operator semantics --------------------------------------------------
 
 

@@ -116,11 +116,10 @@ def test_shuffle_partitions_fallback_on_non_numeric():
     assert shuffle_partitions(FakeSpark(None)) == 7
 
 
-def test_gdx_pushdown_version_gate(spark, tmp_path):
-    """Unset pushdown option → plain reader on Spark <= 4.1 (the pinned
-    upstream relation-cache bug), pushdown reader on anything newer;
-    explicit true/false always wins. Checked by driving the datasource's
-    reader() selection directly with a monkeypatched version."""
+def test_gdx_pushdown_opt_in(spark):
+    """Pushdown is opt-in with no Spark-version gate: with no `pushdown`
+    option (or `false`/`0`) the plain reader is chosen on every Spark
+    version; `true`/`1` select the pruning reader."""
     from unittest import mock
 
     from gdxpy_spark.sources import gdx_datasource as D
@@ -128,23 +127,14 @@ def test_gdx_pushdown_version_gate(spark, tmp_path):
 
     path = build_fixture_gdx(SF_DIR)
 
-    def reader_for(options, version):
-        src = D.GdxDataSource(dict(options, path=path))
-        with mock.patch.object(D.pyspark, "__version__", version) if hasattr(
-            D, "pyspark"
-        ) else mock.patch("pyspark.__version__", version):
+    def reader_for(version, **options):
+        src = D.GdxDataSource(dict(options, path=path, symbol="monthly_sales"))
+        with mock.patch("pyspark.__version__", version):
             return type(src.reader(src.schema())).__name__
 
-    assert reader_for({"symbol": "monthly_sales"}, "4.1.2") == "GdxSymbolReader"
-    assert (
-        reader_for({"symbol": "monthly_sales"}, "4.2.0")
-        == "PushdownGdxSymbolReader"
-    )
-    assert (
-        reader_for({"symbol": "monthly_sales", "pushdown": "true"}, "4.1.2")
-        == "PushdownGdxSymbolReader"
-    )
-    assert (
-        reader_for({"symbol": "monthly_sales", "pushdown": "false"}, "4.2.0")
-        == "GdxSymbolReader"
-    )
+    for version in ("4.1.2", "4.2.0", "5.0.0"):
+        assert reader_for(version) == "GdxSymbolReader"
+        assert reader_for(version, pushdown="false") == "GdxSymbolReader"
+        assert reader_for(version, pushdown="0") == "GdxSymbolReader"
+        assert reader_for(version, pushdown="true") == "PushdownGdxSymbolReader"
+        assert reader_for(version, pushdown="1") == "PushdownGdxSymbolReader"

@@ -222,18 +222,21 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     product-universe segmentation a recommender bootstraps from, and
     the same shape as web-crawl host-graph components at 100 TB.
 
-    Physical strategy: alternating large-star/small-star contraction
-    (connected_components — see its docstring for the Kiveris 2014
-    invariants and the structural fixpoint check); the edge derivation
-    shares _copurchase_edges with graph_triangles. The oracle resolves
-    the identical components with the same algorithm unrolled as CTEs —
-    star contraction (_cc_star_rounds_sql, the sparse-graph-safe
+    Physical strategy: connected_components — a driver union-find for
+    graphs up to its edge cut (this one at every oracle scale), else
+    alternating large-star/small-star contraction (see its docstring
+    for the Kiveris 2014 invariants and the structural fixpoint check);
+    the edge derivation shares _copurchase_edges with graph_triangles.
+    The oracle resolves the identical components with star contraction
+    unrolled as CTEs (_cc_star_rounds_sql, the sparse-graph-safe
     choice; NOT pointer-doubling label propagation, whose
-    label-of-label chase stalls on long thin paths) — so the whole
-    operator —
-    iterative driver loop and all — is value-hash-checked against
-    DuckDB. Singleton parts (never co-purchased in-window) are not
-    graph nodes and are excluded by both engines."""
+    label-of-label chase stalls on long thin paths), so this operator
+    is value-hash-checked against DuckDB. The Spark contraction loop
+    itself is oracle-checked at sf0.1 through llm_dedup_clusters,
+    whose graph is above the cut, and pinned on these co-purchase
+    edges by the CC parity tests, which run both paths. Singleton
+    parts (never co-purchased in-window) are not graph nodes and are
+    excluded by both engines."""
     from gdxpy_spark.operators.llm import connected_components
 
     edges = _copurchase_edges(spark, sf_dir).select(

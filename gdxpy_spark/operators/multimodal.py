@@ -923,9 +923,10 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, banded join) over the SHARED cached signature frame
     (r14: _phash_pairs, not a from-scratch rebuild of the registered
     op — the wrapper would release the managed caches mid-build); CC
-    adds 3-4 contraction rounds of two shuffles each over the
-    SHRINKING pair set — the dup-graph edge volume, orders of
-    magnitude below n."""
+    runs over the dup-graph edge set, orders of magnitude below n: one
+    driver union-find up to connected_components' edge cut, else 3-4
+    contraction rounds of two shuffles each over the SHRINKING pair
+    set."""
     return _phash_dups(spark, sf_dir)
 
 

@@ -170,6 +170,30 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
+def cc_on_both_paths(spark, monkeypatch, edges, **kw):
+    """{path: {doc_id: component_id}} from connected_components as
+    dispatched (every test graph is below the cut: driver union-find) and
+    with the cut patched below zero, which forces _star_contraction.
+    Also pins the path each took and one label row per node."""
+    from gdxpy_spark.operators import llm
+
+    out = {}
+    for path, cut in (("spark", -1), ("driver", llm._CC_DRIVER_MAX_EDGES)):
+        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cut)
+        cc = llm.connected_components(spark, edges, **kw)
+        assert _is_local_scan(cc) == (path == "driver")
+        rows = cc.collect()
+        assert len(rows) == len({r.doc_id for r in rows})
+        out[path] = {r.doc_id: r.component_id for r in rows}
+    return out
+
+
+def _is_local_scan(df):
+    from gdxpy_spark.plans.inspect import formatted_plan
+
+    return formatted_plan(df).startswith("== Physical Plan ==\nLocalTableScan")
+
+
 @pytest.mark.parametrize(
     "name,edges",
     [
@@ -185,27 +209,20 @@ def _uf_components(edges):
                  + [(900, 901), (901, 900)]),
     ],
 )
-def test_connected_components_star_vs_union_find(spark, name, edges):
-    """large-star/small-star CC must agree exactly with a driver-side
-    union-find on adversarial topologies (Kiveris 2014 invariant: the
-    fixpoint is a star forest rooted at each component minimum)."""
-    from gdxpy_spark.operators.llm import connected_components
-
+def test_connected_components_star_vs_union_find(spark, monkeypatch, name, edges):
+    """Both CC paths (driver union-find and large-star/small-star) must
+    agree exactly with the tests' own union-find on adversarial
+    topologies (Kiveris 2014 invariant: the fixpoint is a star forest
+    rooted at each component minimum)."""
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r.doc_id: r.component_id
-        for r in connected_components(spark, df).collect()
-    }
     want = _uf_components(edges)
-    assert got == want
+    assert cc_on_both_paths(spark, monkeypatch, df) == {"driver": want, "spark": want}
 
 
-def test_connected_components_star_deterministic_pseudorandom(spark):
+def test_connected_components_star_deterministic_pseudorandom(spark, monkeypatch):
     """A 500-node pseudo-random graph (LCG, fixed seed — no RNG stream)
-    must match union-find; also pins that every node gets exactly ONE
-    label row (the star-forest output can't duplicate a doc_id)."""
-    from gdxpy_spark.operators.llm import connected_components
-
+    must match union-find on both paths, with exactly ONE label row per
+    node (the star-forest output can't duplicate a doc_id)."""
     x, edges = 12345, []
     for _ in range(400):
         x = (x * 1103515245 + 12345) % (2**31)
@@ -215,10 +232,92 @@ def test_connected_components_star_deterministic_pseudorandom(spark):
         if a != b:
             edges.append((a, b))
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    rows = connected_components(spark, df).collect()
-    assert len(rows) == len({r.doc_id for r in rows})
-    got = {r.doc_id: r.component_id for r in rows}
-    assert got == _uf_components(edges)
+    want = _uf_components(edges)
+    assert cc_on_both_paths(spark, monkeypatch, df) == {"driver": want, "spark": want}
+
+
+def test_connected_components_copurchase_graph_both_paths(spark, monkeypatch):
+    """Real data: graph_components' co-purchase edges get identical
+    labels on both paths, equal to the union-find oracle."""
+    from gdxpy_spark.operators.graphs import _copurchase_edges
+
+    df = _copurchase_edges(spark, SF_DIR).select(
+        F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b")
+    )
+    want = _uf_components([(r.doc_a, r.doc_b) for r in df.collect()])
+    assert len(want) > 100
+    assert cc_on_both_paths(spark, monkeypatch, df) == {"driver": want, "spark": want}
+
+
+def test_connected_components_dispatch_boundary(spark, monkeypatch):
+    """The cut counts distinct oriented edges: exactly `cut` of them
+    (padded with reversed duplicates and self-loops) take the driver
+    path, one more takes star contraction, with the same labels."""
+    from gdxpy_spark.operators import llm
+
+    cut = 8
+    monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cut)
+    chain = [(i, i + 1) for i in range(cut)]
+    noise = [(b, a) for a, b in chain] + [(3, 3), (40, 40)]
+    at_cut = spark.createDataFrame(chain + noise, "doc_a INT, doc_b INT")
+    over = spark.createDataFrame(chain + noise + [(20, 21)], "doc_a INT, doc_b INT")
+    got = llm.connected_components(spark, at_cut)
+    assert _is_local_scan(got)
+    assert dict(got.collect()) == _uf_components(chain)
+    got = llm.connected_components(spark, over)
+    assert not _is_local_scan(got)
+    assert dict(got.collect()) == _uf_components(chain + [(20, 21)])
+
+
+@pytest.mark.parametrize("id_type", ["INT", "BIGINT", "STRING"])
+def test_connected_components_schema_follows_id_type(spark, monkeypatch, id_type):
+    """Both paths return (doc_id, component_id) of the input id type;
+    an empty edge list and one of only self-loops give an empty frame
+    of that schema."""
+    from gdxpy_spark.operators import llm
+
+    ddl = f"doc_a {id_type}, doc_b {id_type}"
+    t = spark.createDataFrame([], ddl).schema["doc_a"].dataType
+    cast = str if id_type == "STRING" else int
+    cases = {
+        "graph": [(cast(a), cast(b)) for a, b in [(1, 2), (3, 2), (7, 8)]],
+        "empty": [],
+        "self_loops": [(cast(5), cast(5)), (cast(6), cast(6))],
+    }
+    for cut in (llm._CC_DRIVER_MAX_EDGES, -1):
+        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cut)
+        for case, edges in cases.items():
+            cc = llm.connected_components(spark, spark.createDataFrame(edges, ddl))
+            assert cc.columns == ["doc_id", "component_id"], (cut, case)
+            assert [f.dataType for f in cc.schema] == [t, t], (cut, case)
+            loops_dropped = [(a, b) for a, b in edges if a != b]
+            assert dict(cc.collect()) == _uf_components(loops_dropped), (cut, case)
+
+
+def test_connected_components_logs_path(spark, monkeypatch, caplog):
+    """One DEBUG record per call on the engine's logger: the edge count
+    on the driver path, the rounds to the fixpoint on the Spark path."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.operators.llm")
+    df = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (4, 4), (10, 11)], "doc_a BIGINT, doc_b BIGINT"
+    )
+
+    def messages():
+        return [r.getMessage() for r in caplog.records if r.name == llm.log.name]
+
+    llm.connected_components(spark, df)
+    assert messages() == ["connected_components: 3 edges, driver path"]
+    caplog.clear()
+    monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", 2)
+    llm.connected_components(spark, df)
+    (msg,) = messages()
+    assert re.fullmatch(
+        r"connected_components: spark path, \d+ rounds, fixpoint reached", msg
+    ), msg
 
 
 # ---- sampled BPE training (r10 verdict directive #5) -------------------------

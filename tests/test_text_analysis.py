@@ -82,25 +82,28 @@ def test_decode_real_is_a_marked_stub():
         decode_real(b"\x00", "png")
 
 
-def test_connected_components_transitive_chain(spark):
-    """A~B, B~C, D~E (A≁C directly) → components {A,B,C} and {D,E}."""
-    from gdxpy_spark.operators.llm import connected_components
+def test_connected_components_transitive_chain(spark, monkeypatch):
+    """A~B, B~C, D~E (A≁C directly) → components {A,B,C} and {D,E}, on
+    both CC paths."""
+    from tests.test_r11_ops import cc_on_both_paths
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         "doc_a BIGINT, doc_b BIGINT",
     )
-    cc = {r["doc_id"]: r["component_id"] for r in connected_components(spark, edges).collect()}
-    assert cc == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 23: 20}
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 23: 20}
+    assert cc_on_both_paths(spark, monkeypatch, edges) == {"driver": want, "spark": want}
 
 
-def test_connected_components_long_chain_converges_log_rounds(spark):
+def test_connected_components_long_chain_converges_log_rounds(spark, monkeypatch):
     """Pointer doubling must converge a 120-node path graph within
-    max_iters=12 (≈ log₂ 120 + slack) — plain neighbor-min would need
-    ~120 rounds and previously warned + under-merged here."""
+    max_iters=12 (≈ log₂ 120 + slack) on the Spark path — plain
+    neighbor-min would need ~120 rounds and previously warned +
+    under-merged here. The driver path ignores max_iters and must
+    agree."""
     import warnings
 
-    from gdxpy_spark.operators.llm import connected_components
+    from tests.test_r11_ops import cc_on_both_paths
 
     n = 120
     edges = spark.createDataFrame(
@@ -108,12 +111,9 @@ def test_connected_components_long_chain_converges_log_rounds(spark):
     )
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any non-convergence warning fails
-        cc = {
-            r["doc_id"]: r["component_id"]
-            for r in connected_components(spark, edges, max_iters=12).collect()
-        }
-    assert set(cc.values()) == {0}
-    assert len(cc) == n
+        got = cc_on_both_paths(spark, monkeypatch, edges, max_iters=12)
+    want = {i: 0 for i in range(n)}
+    assert got == {"driver": want, "spark": want}
 
 
 @pytest.fixture(scope="module")

@@ -1582,37 +1582,6 @@ def _ivf_k(n: int, lo: int = _IVF_K_FLOOR, target_cell: int = None) -> int:
     return max(lo, math.ceil(math.sqrt(n)))
 
 
-def ivf_mllib_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pyspark.ml integration DEMO (not registered since r12): the IVF
-    pipeline with an MLlib KMeans coarse quantizer instead of the
-    deterministic Lloyd fit. Until r11 this WAS llm_ann_ivf, weak by
-    construction — MLlib's kmeans|| init and engine-specific float
-    paths make the fit unreproducible in DuckDB, so the driver could
-    only rows-check it. r11 verdict #6: the registered llm_ann_ivf now
-    rides _lloyd_ivf_fit (same k=_ivf_k(n), same two-level probe, FULL
-    value-hash oracle); this demo keeps the MLlib surface exercised
-    (tests/test_ann.py smoke) for users who want the battle-tested
-    kmeans|| quality on hostile distributions."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    e = table(spark, sf_dir, "embeddings").withColumn(
-        "fvec", array_to_vector(F.col("embedding").cast("array<double>"))
-    )
-    model = KMeans(
-        k=_ivf_k(e.count()), seed=42, featuresCol="fvec", predictionCol="cell"
-    ).fit(e)
-    indexed = managed_cache(_with_norm(
-        model.transform(e).select("vec_id", "embedding", "cell")
-    ))
-
-    centers = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell INT, center ARRAY<DOUBLE>",
-    )
-    return _ivf_candidates_top1(indexed, centers)
-
-
 def _ivf_index_dir(sf_dir: str) -> str:
     """Content-addressed location of the PERSISTED IVF index for one
     dataset (same discipline as the replay/WARC fixture caches: keyed
@@ -1670,14 +1639,8 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         )
 
     if not _complete(out):
-        asg, cents = _lloyd_ivf_fit(spark, sf_dir)
-        e = _with_norm(
-            table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        )
-        indexed = e.join(asg.select("vec_id", "cell"), "vec_id")
-        centers = spark.createDataFrame(
-            [(j, c) for j, c in enumerate(cents)],
-            "cell INT, center ARRAY<DOUBLE>",
+        indexed, centers = _ivf_index_frames(
+            spark, sf_dir, _lloyd_ivf_fit(spark, sf_dir)
         )
         build = f"{out}.build_{_uuid.uuid4().hex[:8]}"
         centers.coalesce(1).write.mode("overwrite").parquet(
@@ -1851,6 +1814,37 @@ def _ivf_candidates_top1(indexed: DataFrame, centers: DataFrame) -> DataFrame:
             (F.round("cos_sim", 4) + F.lit(0.0)).alias("cos_sim"),
         )
     )
+
+
+def _ivf_index_frames(
+    spark: SparkSession, sf_dir: str, fit
+) -> tuple[DataFrame, DataFrame]:
+    """A fitted quantizer's two IVF frames: ``indexed`` (vec_id,
+    embedding, norm, cell — every vector in its assigned cell) and
+    ``centers`` (cell, center). ``fit`` is a _kmeans_fit result
+    (assignment, centroid list). Shared by the persisted index build
+    (_ensure_ivf_index) and the fit-per-query ops (_ivf_fitted_top1)."""
+    asg, cents = fit
+    e = _with_norm(
+        table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
+    indexed = e.join(asg.select("vec_id", "cell"), "vec_id")
+    centers = spark.createDataFrame(
+        [(j, c) for j, c in enumerate(cents)],
+        "cell INT, center ARRAY<DOUBLE>",
+    )
+    return indexed, centers
+
+
+def _ivf_fitted_top1(spark: SparkSession, sf_dir: str, fit) -> DataFrame:
+    """The IVF query body over a quantizer fitted in this call —
+    llm_ann_ivf (k=√n, sampled fit) and llm_ann_ivf_checked (k=16):
+    the cached index frame, then the probe/candidate/top-1 tail shared
+    with the served op (test_ivf_served_equals_rebuild_variant pins
+    served and rebuild EQUAL; a divergent copy would break that
+    silently)."""
+    indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
+    return _ivf_candidates_top1(managed_cache(indexed), centers)
 
 
 # Distinct oriented edges up to which connected_components resolves the
@@ -4851,79 +4845,41 @@ _kmeans_assign.__doc__ = _kmeans_assign.__doc__.format(
 )
 
 
-def _kmeans_fit(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KMEANS_K,
-    sample_per_cell: int = None,
-):
-    """The Lloyd loop behind llm_kmeans_lloyd (see its docstring).
-    Returns (final assignment DataFrame (vec_id, cell, d2), the final
-    quantized centroid list) — shared with llm_ann_ivf_checked and,
-    since r12 at k=√n, with the production IVF quantizer
-    (_lloyd_ivf_fit).
+def _md5_head(df: DataFrame, n: int) -> DataFrame:
+    """The ``n`` rows of ``df`` with the smallest md5(vec_id): the Lloyd
+    seeds and the sampled-fit training set (a pure row function, so
+    the DuckDB twins reproduce it with ORDER BY md5 LIMIT)."""
+    return df.orderBy(F.md5(F.col("vec_id").cast("string"))).limit(n)
 
-    ``sample_per_cell``: when set, the UPDATE rounds fit on only the
-    k·sample_per_cell vectors with the smallest md5(vec_id) — the
-    FAISS train-on-sample discipline (a quantizer needs ~10²
-    points/cell to converge; fitting on all n is n·k·d work per round
-    for no quality gain). The FINAL assignment always covers the full
-    corpus (one n·k·d pass — the irreducible cost of inverted-file
-    indexing). The sample is md5-prefix-deterministic (the
-    llm_hash_sample discipline), so the DuckDB twin reproduces it with
-    ORDER BY md5 LIMIT; at test scales the cap exceeds n and the
-    sample IS the corpus — the oracle stays exact at every scale
-    because both engines apply the same cap."""
-    import os
 
-    from gdxpy_spark.operators._util import files_fingerprint
+def _md5_seeds(e: DataFrame, k: int) -> list:
+    """The k Lloyd seeds: the md5-smallest vectors as double lists (one
+    collect — k×d doubles of metadata)."""
+    rows = _md5_head(e, k).select(
+        F.transform("embedding", lambda v: v.cast("double")).alias("c")
+    ).collect()
+    return [list(r["c"]) for r in rows]
 
-    fp = files_fingerprint([os.path.join(sf_dir, "embeddings.parquet")])
-    memo_key = (fp, k, sample_per_cell)
-    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # the posexploded (vec_id, pos, v) frame feeds EVERY round's distance
-    # join and the final assignment — cache it once (n×64 skinny rows)
-    ve = managed_cache(
-        e.select(
-            "vec_id", F.posexplode("embedding").alias("pos", "v")
-        ).withColumn("v", F.col("v").cast("double"))
-    )
-    memo_ok, memo_hit = _memo_get(_KMEANS_MEMO, memo_key)
-    if memo_ok:
-        centroids = memo_hit
-        rounds = 0  # fit cached: serve-only (one final assignment job)
-        fit_ve, fit_rows = ve, e
-    else:
-        cap = k * sample_per_cell if sample_per_cell else None
-        if cap is None:
-            fit_ve, fit_rows = ve, e
-        else:
-            # repartition AFTER the sort-limit: Spark's GlobalLimit
-            # leaves ONE partition, which would run every fit round's
-            # join/agg at parallelism 1 (measured: a multi-minute stall
-            # at the 100× probe; invisible at test scale). Membership
-            # is fixed by the limit, so the reshuffle changes layout
-            # only.
-            samp = e.orderBy(F.md5(F.col("vec_id").cast("string"))).limit(
-                cap
-            ).repartition("vec_id")
-            fit_rows = managed_cache(samp)
-            fit_ve = managed_cache(
-                samp.select(
-                    "vec_id", F.posexplode("embedding").alias("pos", "v")
-                ).withColumn("v", F.col("v").cast("double"))
-            )
-        seeds = (
-            e.orderBy(F.md5(F.col("vec_id").cast("string")))
-            .limit(k)
-            .select(
-                F.transform("embedding", lambda v: v.cast("double")).alias("c")
-            )
-            .collect()
-        )
-        centroids = [list(r["c"]) for r in seeds]  # k x 64 doubles: metadata
-        rounds = _KMEANS_ROUNDS
 
+def _posexploded(df: DataFrame) -> DataFrame:
+    """(vec_id, pos, v DOUBLE) — one skinny row per embedding
+    coordinate: the frame every Lloyd distance join and update
+    aggregates over."""
+    return df.select(
+        "vec_id", F.posexplode("embedding").alias("pos", "v")
+    ).withColumn("v", F.col("v").cast("double"))
+
+
+def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows, rounds):
+    """The one Spark Lloyd loop, shared by the IVF/k-means quantizer
+    (_kmeans_fit) and the PQ sub-codebooks (_pq_codebooks): ``rounds``
+    times, assign (_kmeans_assign over ``fit_ve`` / ``fit_rows`` —
+    (vec_id, pos, v) and (vec_id, embedding) of the same training
+    vectors) and replace each cell's centroid by its member mean,
+    every coordinate quantized to 9 decimals (the cross-engine
+    discipline argued on _kmeans_rounds_sql). One collect per round:
+    the centroids are metadata. An empty cell keeps its previous
+    centroid. Updates ``centroids`` in place and returns it."""
     for _r in range(rounds):
         asg = _kmeans_assign(spark, centroids, fit_ve, fit_rows)
         upd = (
@@ -4939,8 +4895,63 @@ def _kmeans_fit(
             .select("cell", F.col("px.x").alias("c"))
             .collect()
         )
-        for row in upd:  # empty cells keep their previous centroid
+        for row in upd:
             centroids[row["cell"]] = list(row["c"])
+    return centroids
+
+
+def _kmeans_fit(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = _KMEANS_K,
+    sample_per_cell: int = None,
+):
+    """The quantizer behind llm_kmeans_lloyd (see its docstring): md5
+    seeds, _KMEANS_ROUNDS rounds of the shared loop (_lloyd_rounds),
+    then one full-corpus assignment. Returns (final assignment
+    DataFrame (vec_id, cell, d2), the final quantized centroid list) —
+    shared with llm_ann_ivf_checked and, since r12 at k=√n, with the
+    production IVF quantizer (_lloyd_ivf_fit).
+
+    ``sample_per_cell``: when set, the UPDATE rounds fit on only the
+    k·sample_per_cell vectors with the smallest md5(vec_id) — the
+    FAISS train-on-sample discipline (a quantizer needs ~10²
+    points/cell to converge; fitting on all n is n·k·d work per round
+    for no quality gain). The FINAL assignment always covers the full
+    corpus (one n·k·d pass — the irreducible cost of inverted-file
+    indexing). The sample is md5-prefix-deterministic (_md5_head), so
+    the DuckDB twin reproduces it with ORDER BY md5 LIMIT; at test
+    scales the cap exceeds n and the sample IS the corpus — the oracle
+    stays exact at every scale because both engines apply the same
+    cap."""
+    import os
+
+    from gdxpy_spark.operators._util import files_fingerprint
+
+    fp = files_fingerprint([os.path.join(sf_dir, "embeddings.parquet")])
+    memo_key = (fp, k, sample_per_cell)
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # the posexploded frame feeds EVERY round's distance join and the
+    # final assignment — cache it once (n×64 skinny rows)
+    ve = managed_cache(_posexploded(e))
+    memo_ok, memo_hit = _memo_get(_KMEANS_MEMO, memo_key)
+    if memo_ok:
+        centroids = memo_hit  # serve-only: one final assignment job
+    else:
+        if sample_per_cell is None:
+            fit_ve, fit_rows = ve, e
+        else:
+            # repartition AFTER the sort-limit: GlobalLimit's single
+            # partition would run every fit round's join/agg at
+            # parallelism 1 (measured: a multi-minute stall at the 100×
+            # probe; invisible at test scale). Membership is fixed by
+            # the limit, so the reshuffle changes layout only.
+            samp = _md5_head(e, k * sample_per_cell).repartition("vec_id")
+            fit_rows = managed_cache(samp)
+            fit_ve = managed_cache(_posexploded(samp))
+        centroids = _lloyd_rounds(
+            spark, _md5_seeds(e, k), fit_ve, fit_rows, _KMEANS_ROUNDS
+        )
     _memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)
     return _kmeans_assign(spark, centroids, ve, e), centroids
 
@@ -4951,11 +4962,9 @@ _IVF_SAMPLE_PER_CELL = 64
 def _lloyd_ivf_fit(spark: SparkSession, sf_dir: str):
     """The production IVF quantizer (r12): the deterministic Lloyd fit
     at corpus-sized k = _ivf_k(n) ≈ √n, update rounds on a
-    64-per-cell md5 sample, full-corpus final assignment. Replaces the
-    MLlib KMeans fit behind llm_ann_ivf/_served so the ENTIRE pipeline
-    — fit, assignment, two-level probe, serving — carries a value-hash
-    DuckDB oracle (_ivf_lloyd_oracle); ivf_mllib_demo keeps the
-    pyspark.ml integration surface."""
+    64-per-cell md5 sample, full-corpus final assignment, so the ENTIRE
+    llm_ann_ivf/_served pipeline — fit, assignment, two-level probe,
+    serving — carries a value-hash DuckDB oracle (_ivf_lloyd_oracle)."""
     e = table(spark, sf_dir, "embeddings")
     k = _ivf_k(e.count(), target_cell=_ivf_target_cell())
     return _kmeans_fit(
@@ -5176,76 +5185,20 @@ WHERE rn = 1
 @register("llm_ann_ivf_checked", oracle=_ivf_checked_oracle(), category="K")
 def llm_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbor on the DETERMINISTIC Lloyd
-    quantizer (_kmeans_fit) — the fully-checkable twin of llm_ann_ivf:
-    same inverted-file shape (index side = top-1 cell assignment, query
-    side probes its nprobe=2 nearest centroids, exact cosine within the
-    probed cells, top-1 per query), but with the md5-seeded quantized
-    k-means instead of MLlib, so candidates AND results carry a full
-    value-hash oracle. The MLlib variant remains the production
-    pyspark.ml integration surface (weak by its engine-specific fit);
-    this op pins the ENTIRE IVF serving logic — probe ranking, cell
-    equi-join, tie-breaks — against DuckDB every round.
+    quantizer at the fixed k=16 of llm_kmeans_lloyd (_kmeans_fit) — the
+    checkable twin of llm_ann_ivf: the same query body
+    (_ivf_fitted_top1 — index side = top-1 cell assignment, two-level
+    probe of each query's nprobe=2 nearest centroids, exact cosine
+    within the probed cells, top-1 per query) on the unsampled fit
+    whose rounds the DuckDB twin shares with llm_kmeans_lloyd's oracle,
+    so the probe ranking, super-group pruning, cell equi-join and
+    tie-breaks are value-hash-checked every round.
 
     Scale: identical to llm_ann_ivf's serving cost model — probe
     ranking is n·k distances against a kilobyte broadcast, candidates
     are nprobe·n·(n/k) exact cosines in cell-equi-joined blocks; the
     quantizer itself is llm_kmeans_lloyd's 6 driver-paced rounds."""
-    asg, cents = _kmeans_fit(spark, sf_dir)
-    e = _with_norm(table(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
-    cent_rows = [
-        (j, p, x) for j, c in enumerate(cents) for p, x in enumerate(c)
-    ]
-    cdf = spark.createDataFrame(cent_rows, "cell INT, pos INT, c DOUBLE")
-    ve = e.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    d2 = (
-        ve.join(F.broadcast(cdf), "pos")
-        .groupBy("vec_id", "cell")
-        .agg(F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).alias("d2"))
-    )
-    # r12 two-level coarse search (mirrors _ivf_probe_cells at k=√n and
-    # the oracle's vsd/vtop/probes CTEs): rank the g=√k super-centroids
-    # per vector, then rank only the top-2 groups' member cells. At
-    # k=16 the FLOP win is modest — the point of this twin is that the
-    # pruning SEMANTICS (group restriction before the (d2, cell) rank)
-    # are value-hash-checked against DuckDB every round.
-    # cell ids here ARE list positions (enumerate over _kmeans_fit's
-    # centroids), so the default contiguous cell_ids hash correctly.
-    grp_of, scents = _super_quantize(cents)
-    srows = [(j, p, x) for j, c in enumerate(scents) for p, x in enumerate(c)]
-    sdf = spark.createDataFrame(srows, "grp INT, pos INT, c DOUBLE")
-    vs = (
-        ve.join(F.broadcast(sdf), "pos")
-        .groupBy("vec_id", "grp")
-        .agg(F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).alias("sd2"))
-    )
-    ws = W.partitionBy("vec_id").orderBy(F.col("sd2").asc(), F.col("grp").asc())
-    vtop = (
-        vs.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= 2)
-        .select("vec_id", "grp")
-    )
-    memb = spark.createDataFrame(
-        [(c, gg) for c, gg in enumerate(grp_of)], "cell INT, grp INT"
-    )
-    w = W.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
-    probes = (
-        d2.join(F.broadcast(memb), "cell")
-        .join(vtop, ["vec_id", "grp"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("vec_id", "cell")
-    )
-    index_ids = asg.select("cell", "vec_id")
-    cand = (
-        probes.alias("q")
-        .join(index_ids.alias("x"), "cell")
-        .filter(F.col("q.vec_id") != F.col("x.vec_id"))
-        .select(F.col("q.vec_id").alias("vec_id"), F.col("x.vec_id").alias("nn_id"))
-        .distinct()
-    )
-    return _cosine_top1(e, cand)
+    return _ivf_fitted_top1(spark, sf_dir, _kmeans_fit(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -5395,8 +5348,7 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus final assignment), so the ENTIRE pipeline — fit,
     assignment, two-level coarse probe (_ivf_probe_cells), exact
     cosine, top-1 — carries a full value-hash DuckDB oracle
-    (_ivf_lloyd_oracle) instead of r11's weak rows-only check. The
-    MLlib variant survives as ivf_mllib_demo.
+    (_ivf_lloyd_oracle) instead of r11's weak rows-only check.
 
     This is the inverted-file layout at any scale: the index side is
     partitioned by cell (co-located, prunable), query fan-out is
@@ -5409,19 +5361,7 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild-per-query costs one final-assignment job after the first
     call; llm_ann_ivf_served never fits at all. Cache lifetime: the
     indexed frame rides _util.managed_cache."""
-    asg, cents = _lloyd_ivf_fit(spark, sf_dir)
-    e = _with_norm(
-        table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    indexed = managed_cache(e.join(asg.select("vec_id", "cell"), "vec_id"))
-    centers = spark.createDataFrame(
-        [(j, c) for j, c in enumerate(cents)],
-        "cell INT, center ARRAY<DOUBLE>",
-    )
-    # single probe/candidate/top-1 code path shared with the served op:
-    # test_ivf_served_equals_rebuild_variant pins the two EQUAL, and a
-    # divergent copy (tie-break, rounding) would break that silently
-    return _ivf_candidates_top1(indexed, centers)
+    return _ivf_fitted_top1(spark, sf_dir, _lloyd_ivf_fit(spark, sf_dir))
 
 
 @register("llm_ann_ivf_served", oracle=_ivf_lloyd_oracle(), category="K")
@@ -5824,11 +5764,12 @@ _PQ_MEMO_CAP = 4  # r13: its own cap (r12 borrowed _BPE_MERGE_MEMO_CAP,
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Train the _PQ_M sub-codebooks: an independent deterministic
-    Lloyd fit (md5 seeds, quantized means — _kmeans_fit's exact
-    disciplines) per 16-dim subspace, on the _PQ_SAMPLE md5-smallest
-    vectors (PQ codebooks are classically sample-trained; at sf0.01
-    the cap exceeds n so the sample IS the corpus, and the DuckDB twin
-    applies the same LIMIT, so engines agree at every scale). Returns
+    Lloyd fit per 16-dim subspace — _kmeans_fit's md5 seeds, sliced to
+    the subspace, then _PQ_ROUNDS rounds of the shared loop
+    (_lloyd_rounds) — on the _PQ_SAMPLE md5-smallest vectors (PQ
+    codebooks are classically sample-trained; at sf0.01 the cap
+    exceeds n so the sample IS the corpus, and the DuckDB twin applies
+    the same LIMIT, so engines agree at every scale). Returns
     [m][cell][dim] nested lists — metadata (4·16·16 doubles)."""
     import os
 
@@ -5841,54 +5782,20 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # repartition after the sort-limit (see _kmeans_fit: GlobalLimit's
     # single partition would single-thread every fit round)
-    samp = e.orderBy(F.md5(F.col("vec_id").cast("string"))).limit(
-        _PQ_SAMPLE
-    ).repartition("vec_id")
-    sve = managed_cache(
-        samp.select(
-            "vec_id", F.posexplode("embedding").alias("pos", "v")
-        ).withColumn("v", F.col("v").cast("double"))
-    )
-    seed_rows = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(_PQ_K)
-        .select(F.transform("embedding", lambda v: v.cast("double")).alias("c"))
-        .collect()
-    )
+    samp = _md5_head(e, _PQ_SAMPLE).repartition("vec_id")
+    sve = managed_cache(_posexploded(samp))
+    seeds = _md5_seeds(e, _PQ_K)
     books = []
     for m in range(_PQ_M):
         lo = m * _PQ_SUBDIM
-        cents = [list(r["c"])[lo:lo + _PQ_SUBDIM] for r in seed_rows]
-        frame = sve.filter(
+        sub_ve = sve.filter(
             (F.col("pos") >= lo) & (F.col("pos") < lo + _PQ_SUBDIM)
         ).select("vec_id", (F.col("pos") - lo).alias("pos"), "v")
-
-        def assign(cs):
-            rows = [(j, p, x) for j, c in enumerate(cs) for p, x in enumerate(c)]
-            cdf = spark.createDataFrame(rows, "cell INT, pos INT, c DOUBLE")
-            d2 = (
-                frame.join(F.broadcast(cdf), "pos")
-                .groupBy("vec_id", "cell")
-                .agg(F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).alias("d2"))
-            )
-            return d2.groupBy("vec_id").agg(
-                F.min(F.struct("d2", "cell")).alias("b")
-            ).select("vec_id", F.col("b.cell").alias("cell"))
-
-        for _r in range(_PQ_ROUNDS):
-            asg = assign(cents)
-            upd = (
-                asg.join(frame, "vec_id")
-                .groupBy("cell", "pos")
-                .agg(F.round(F.avg("v"), 9).alias("x"))
-                .groupBy("cell")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "x"))).alias("px"))
-                .select("cell", F.col("px.x").alias("c"))
-                .collect()
-            )
-            for row in upd:  # empty sub-cells keep their previous centroid
-                cents[row["cell"]] = list(row["c"])
-        books.append(cents)
+        sub_rows = samp.select(
+            "vec_id", F.slice("embedding", lo + 1, _PQ_SUBDIM).alias("embedding")
+        )
+        cents = [c[lo:lo + _PQ_SUBDIM] for c in seeds]
+        books.append(_lloyd_rounds(spark, cents, sub_ve, sub_rows, _PQ_ROUNDS))
     _memo_put(_PQ_MEMO, fp, books, _PQ_MEMO_CAP)
     return books
 
@@ -6051,11 +5958,7 @@ def _pq_tables(
     with the same tables."""
     books = _pq_codebooks(spark, sf_dir)
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ve = managed_cache(
-        e.select(
-            "vec_id", F.posexplode("embedding").alias("pos", "v")
-        ).withColumn("v", F.col("v").cast("double"))
-    )
+    ve = managed_cache(_posexploded(e))
     # one (m, cell, pos, c) frame for all four codebooks — broadcastable
     # metadata (4·16·16 rows)
     crows = [

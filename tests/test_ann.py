@@ -162,20 +162,6 @@ def test_ivf_recall_floor_on_real_corpus(spark):
     assert recall >= 0.35, f"IVF nprobe=2 recall {recall:.2f} below floor"
 
 
-def test_ivf_mllib_demo_recall_on_planted_pairs(spark, planted_dir):
-    """The unregistered pyspark.ml integration surface (ivf_mllib_demo
-    — llm_ann_ivf's pre-r12 MLlib quantizer) must keep working and hold
-    the same planted-pair recall floor as the Lloyd-quantized op."""
-    from gdxpy_spark.operators.llm import ivf_mllib_demo
-
-    nn = {
-        r["vec_id"]: r["nn_id"]
-        for r in ivf_mllib_demo(spark, planted_dir).collect()
-    }
-    hits = sum(1 for i in range(N_PLANT) if nn.get(100000 + i) == i)
-    assert hits >= N_PLANT - 2, f"MLlib IVF recall too low: {hits}/{N_PLANT}"
-
-
 def test_ivf_served_recall_on_planted_pairs(spark, planted_dir):
     """The persisted-index serving path must hold the same planted-pair
     recall floor as the rebuild-per-query op (it shares the k/seed/

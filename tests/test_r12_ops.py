@@ -225,6 +225,39 @@ def test_super_quantizer_sql_mirror(duck):
     assert len(set(asg)) > 1  # the grouping actually partitions
 
 
+@pytest.mark.slow
+def test_lloyd_fit_sql_mirror(spark, duck, monkeypatch):
+    """The shared Spark Lloyd loop (_lloyd_rounds) must reproduce its
+    DuckDB twins CENTROID for centroid, bit for bit: _kmeans_fit's final
+    centroids equal cent{R} of _kmeans_rounds_sql, and each
+    _pq_codebooks sub-codebook equals p{m}c{R} of _pq_rounds_sql over
+    the e/pqsamp CTEs of _ivf_pq_body. The query oracles only see the
+    fit through assignments; this pins the fitted values themselves —
+    the bar any other fit path (e.g. a driver-side one) must meet."""
+    from gdxpy_spark.operators import llm
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
+    monkeypatch.setattr(llm, "_PQ_MEMO", {})
+
+    def cents(sql, last):
+        rows = duck.execute(f"WITH {sql} SELECT cell, c FROM {last} ORDER BY cell")
+        return [list(c) for _cell, c in rows.fetchall()]
+
+    want = cents(llm._kmeans_rounds_sql(), f"cent{llm._KMEANS_ROUNDS}")
+    assert llm._kmeans_fit(spark, SF_DIR)[1] == want
+
+    books = llm._pq_codebooks(spark, SF_DIR)
+    pq_src = f"""
+e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
+pqsamp AS MATERIALIZED (
+  SELECT vec_id, embedding FROM e
+  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {llm._PQ_SAMPLE})"""
+    for m in range(llm._PQ_M):
+        sql = f"{pq_src},{llm._pq_rounds_sql(m)}"
+        assert books[m] == cents(sql, f"p{m}c{llm._PQ_ROUNDS}"), m
+
+
 def test_super_quantizer_sql_mirror_property(duck):
     """Property version of the fixed-seed mirror test: across many
     random centroid sets (sizes, dims, duplicate centroids, near-ties)

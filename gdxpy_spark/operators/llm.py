@@ -1621,6 +1621,11 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
                   serving probe that touches nprobe of k cells prunes
                   the untouched partitions at scan level.
 
+    When the fit runs on the driver (_lloyd_corpus: at most
+    _LLOYD_DRIVER_MAX_VECTORS vectors) both parts are written with
+    pyarrow (_write_ivf_index_local), else by two Spark writes. Either
+    way Spark reads back the same schema and rows.
+
     Idempotent and content-fingerprinted: every later call (any
     session) sees the _SUCCESS markers and returns without fitting —
     the production build-once/query-many contract that
@@ -1639,18 +1644,57 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         )
 
     if not _complete(out):
-        indexed, centers = _ivf_index_frames(
-            spark, sf_dir, _lloyd_ivf_fit(spark, sf_dir)
-        )
         build = f"{out}.build_{_uuid.uuid4().hex[:8]}"
-        centers.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(build, "centers")
-        )
-        indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(build, "cells")
-        )
+        corpus = _lloyd_corpus(spark, sf_dir)
+        fit = _lloyd_ivf_fit(spark, sf_dir, corpus)
+        if corpus[1] is not None:
+            _write_ivf_index_local(build, *corpus[1], fit)
+        else:
+            indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
+            centers.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(build, "centers")
+            )
+            indexed.write.mode("overwrite").partitionBy("cell").parquet(
+                os.path.join(build, "cells")
+            )
         atomic_publish(build, out, is_complete=_complete)
     return out
+
+
+def _write_ivf_index_local(build: str, head, x, fit) -> None:
+    """_ensure_ivf_index's driver-path write of the corpus ``head``
+    (Arrow vec_id, embedding; ``x`` its float64 matrix) under ``fit``:
+    the layout Spark writes, with pyarrow. norm is √Σv² folded in
+    coordinate order like _with_norm; cells/ is hive-partitioned by
+    cell; each part gets a _SUCCESS marker."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    asg, cents = fit
+    # the driver fit's assignment is a LocalTableScan: no Spark job
+    cell_of = dict(asg.select("vec_id", "cell").collect())
+    sq = np.zeros(len(x))
+    for p in range(x.shape[1]):
+        sq += x[:, p] * x[:, p]
+    cells = head.append_column("norm", pa.array(np.sqrt(sq))).append_column(
+        "cell",
+        pa.array([cell_of[v] for v in head.column("vec_id").to_pylist()],
+                 pa.int32()),
+    )
+    pq.write_to_dataset(cells, os.path.join(build, "cells"), partition_cols=["cell"])
+    os.makedirs(os.path.join(build, "centers"))
+    pq.write_table(
+        pa.table({
+            "cell": pa.array(range(len(cents)), pa.int32()),
+            "center": pa.array(cents, pa.list_(pa.float64())),
+        }),
+        os.path.join(build, "centers", "part-00000.parquet"),
+    )
+    for part in ("centers", "cells"):
+        open(os.path.join(build, part, "_SUCCESS"), "w").close()
 
 
 _SUPER_MEMO: dict = {}  # centers-fingerprint -> (grp_of, scents): the
@@ -4719,15 +4763,20 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED CTEs — the llm_bpe_train technique applied to an ML
     training loop.
 
-    Physical strategy per round: the assignment is a k-way broadcast
+    Physical strategy (_kmeans_fit): a corpus of at most
+    _LLOYD_DRIVER_MAX_VECTORS vectors is read once as Arrow and fitted
+    and assigned on the driver in numpy (_lloyd_local, the same
+    coordinate-order Σ(v−c)², lowest-cell argmin and _round9 means),
+    because six Spark rounds cost a fixed job floor that dwarfs the
+    data there; the assignment comes back as a LocalTableScan. Above
+    the cut each Spark round's assignment is a k-way broadcast
     (centroids are KILOBYTES — k×64 doubles — at any corpus size)
     against the vector table, argmin as a groupBy min-struct (no
     window, no sort); the update is one partial-aggregable
-    (cell, dim)-keyed average over a posexploded frame. localCheckpoint
-    per round bounds plan depth exactly as in connected_components /
-    BPE. At 100 TB: n·k distance work and one n-sized shuffle per
-    round — the textbook distributed Lloyd cost, with k chosen by the
-    caller (k≈√n for IVF, see _ivf_k)."""
+    (cell, dim)-keyed average over a posexploded frame. At 100 TB: n·k
+    distance work and one n-sized shuffle per round — the textbook
+    distributed Lloyd cost, with k chosen by the caller (k≈√n for IVF,
+    see _ivf_k)."""
     asg, _cents = _kmeans_fit(spark, sf_dir)
     return asg.select(
         "vec_id", "cell", (F.round("d2", 4) + F.lit(0.0)).alias("dist2")
@@ -4759,9 +4808,10 @@ def _kmeans_assign(spark: SparkSession, cents, frame_ve, frame_rows):
       × broadcast (cell,pos,c) on pos, partial-agg sum of squares,
       argmin as a groupBy min-struct. No window, no interpreted HOFs
       (a 16-fold zip_with variant measured 22.7 s at sf0.1 vs ~3 s for
-      this shape). Every REGISTERED oracle path runs here (k ≤ ~45 at
-      the driver's scales), so oracle-checked plans are byte-identical
-      to r12's.
+      this shape). The registered oracle scales fit below
+      _LLOYD_DRIVER_MAX_VECTORS, on the driver, whose _nearest_local
+      computes this path's Σ(v−c)² and argmin exactly; forced-path
+      tests keep both Spark strategies oracle-checked.
     - k > {max_k}: the join shape explodes n·k·64 rows — the measured
       fit wall at the 100× probe, and the blocker for the
       k ∝ n/target_cell regime (r12 verdict #1). Large k switches to
@@ -4870,9 +4920,10 @@ def _posexploded(df: DataFrame) -> DataFrame:
     ).withColumn("v", F.col("v").cast("double"))
 
 
-def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows, rounds):
-    """The one Spark Lloyd loop, shared by the IVF/k-means quantizer
-    (_kmeans_fit) and the PQ sub-codebooks (_pq_codebooks): ``rounds``
+def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows):
+    """The Spark Lloyd loop: _kmeans_fit's fit above
+    _LLOYD_DRIVER_MAX_VECTORS (below it, and for the PQ codebooks,
+    _lloyd_local runs the same rounds on the driver). _KMEANS_ROUNDS
     times, assign (_kmeans_assign over ``fit_ve`` / ``fit_rows`` —
     (vec_id, pos, v) and (vec_id, embedding) of the same training
     vectors) and replace each cell's centroid by its member mean,
@@ -4880,7 +4931,7 @@ def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows, rounds):
     discipline argued on _kmeans_rounds_sql). One collect per round:
     the centroids are metadata. An empty cell keeps its previous
     centroid. Updates ``centroids`` in place and returns it."""
-    for _r in range(rounds):
+    for _r in range(_KMEANS_ROUNDS):
         asg = _kmeans_assign(spark, centroids, fit_ve, fit_rows)
         upd = (
             asg.join(fit_ve, "vec_id")
@@ -4900,18 +4951,126 @@ def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows, rounds):
     return centroids
 
 
+# Vectors up to which _kmeans_fit reads the corpus once as Arrow and
+# fits and assigns on the driver (_lloyd_local, _nearest_local) instead
+# of running Spark Lloyd rounds: a broadcast distance join, an update
+# aggregate and a collect each, whose job floor, not the data, sets the
+# wall on small corpora (sf0.1's 2,000 vectors at k = 45: 0.8 s on the
+# driver vs 12 s for the Spark fit and assignment on a 4-vCPU box).
+# Like _CC_DRIVER_MAX_EDGES the cut bounds driver memory, not the local
+# winner: n·d·8 bytes is 32 MiB at d = 64.
+_LLOYD_DRIVER_MAX_VECTORS = 1 << 16
+
+
+def _embedding_matrix(col):
+    """An Arrow list column as a float64 (rows, d) matrix, or None when
+    it is empty, holds a null or has embeddings of different lengths
+    (which only the Spark loop's pos-keyed join handles)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    col = col.combine_chunks()
+    if not len(col) or col.null_count:
+        return None
+    lens = pc.list_value_length(col).to_numpy()
+    flat = col.flatten()
+    if lens.min() != lens.max() or not lens[0] or flat.null_count:
+        return None
+    return flat.to_numpy().astype(np.float64).reshape(len(col), -1)
+
+
+def _lloyd_corpus(spark: SparkSession, sf_dir: str):
+    """(e, local): the (vec_id, embedding) frame of the embeddings and,
+    when the corpus has at most _LLOYD_DRIVER_MAX_VECTORS rows that
+    _embedding_matrix accepts, the whole corpus from one bounded read:
+    (Arrow table, float64 matrix). ``local`` is None on the Spark
+    path."""
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    head = e.limit(_LLOYD_DRIVER_MAX_VECTORS + 1).toArrow()
+    if head.num_rows > _LLOYD_DRIVER_MAX_VECTORS:
+        return e, None
+    x = _embedding_matrix(head.column("embedding"))
+    return e, (None if x is None else (head, x))
+
+
+def _md5_order(ids) -> list:
+    """Row positions in md5(str(vec_id)) order: _md5_head's order,
+    computed on the driver."""
+    import hashlib
+
+    keys = [hashlib.md5(str(i).encode()).hexdigest() for i in ids]
+    return sorted(range(len(keys)), key=keys.__getitem__)
+
+
+def _nearest_local(x, cents):
+    """The driver twin of _kmeans_assign's join path: each row of ``x``
+    → (cell int32, d2 float64). d2 is Σ(v−c)² summed in coordinate
+    order, as the join's per-(vec_id, cell) sum sees the posexploded
+    rows, and the argmin takes the first, i.e. lowest, cell. Rows go in
+    blocks, coordinate-major, so the two (rows × k) temporaries stay
+    0.5 MiB (cache-resident) at any k."""
+    import numpy as np
+
+    ct = np.asarray(cents, dtype=np.float64).T.copy()
+    n, k = len(x), ct.shape[1]
+    cell = np.empty(n, dtype=np.int32)
+    d2 = np.empty(n)
+    step = max(1, (1 << 16) // k)
+    for lo in range(0, n, step):
+        xt = x[lo:lo + step].T.copy()
+        acc = np.zeros((xt.shape[1], k))
+        diff = np.empty_like(acc)
+        for xp, cp in zip(xt, ct):
+            np.subtract.outer(xp, cp, out=diff)
+            np.multiply(diff, diff, out=diff)
+            acc += diff
+        best = acc.argmin(axis=1)
+        cell[lo:lo + step] = best
+        d2[lo:lo + step] = acc[np.arange(len(acc)), best]
+    return cell, d2
+
+
+def _lloyd_local(x, seeds, rounds) -> list:
+    """The driver twin of _lloyd_rounds over the training matrix ``x``
+    from the ``seeds`` centroids: ``rounds`` times, assign
+    (_nearest_local) and replace each non-empty cell's centroid by its
+    member mean, sum/count per coordinate, then _round9 (Spark's
+    F.round). Returns the centroids as lists of floats."""
+    import numpy as np
+
+    c = np.array(seeds, dtype=np.float64)
+    for _r in range(rounds):
+        cell, _d2 = _nearest_local(x, c)
+        sums = np.zeros_like(c)
+        np.add.at(sums, cell, x)
+        counts = np.bincount(cell, minlength=len(c))
+        for j in np.flatnonzero(counts):
+            c[j] = [_round9(v) for v in (sums[j] / counts[j]).tolist()]
+    return c.tolist()
+
+
 def _kmeans_fit(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KMEANS_K,
     sample_per_cell: int = None,
+    corpus=None,
 ):
     """The quantizer behind llm_kmeans_lloyd (see its docstring): md5
-    seeds, _KMEANS_ROUNDS rounds of the shared loop (_lloyd_rounds),
-    then one full-corpus assignment. Returns (final assignment
-    DataFrame (vec_id, cell, d2), the final quantized centroid list) —
-    shared with llm_ann_ivf_checked and, since r12 at k=√n, with the
-    production IVF quantizer (_lloyd_ivf_fit).
+    seeds, _KMEANS_ROUNDS Lloyd rounds, then one full-corpus
+    assignment. Returns (final assignment DataFrame (vec_id, cell, d2),
+    the final quantized centroid list) — shared with
+    llm_ann_ivf_checked and, since r12 at k=√n, with the production
+    IVF quantizer (_lloyd_ivf_fit).
+
+    Two paths, split by _lloyd_corpus (``corpus`` is its result when
+    the caller already read it). A corpus of at most
+    _LLOYD_DRIVER_MAX_VECTORS vectors is fitted (_lloyd_local) and
+    assigned (_nearest_local) on the driver, and the assignment is one
+    Arrow table (a LocalTableScan). Larger corpora run the Spark loop
+    (_lloyd_rounds) and _kmeans_assign. Both paths give the same
+    centroids, cells and d2 (pinned in tests on both, and against the
+    DuckDB twin); the centroid memo is shared.
 
     ``sample_per_cell``: when set, the UPDATE rounds fit on only the
     k·sample_per_cell vectors with the smallest md5(vec_id) — the
@@ -4926,17 +5085,30 @@ def _kmeans_fit(
     cap."""
     import os
 
+    import pyarrow as pa
+
     from gdxpy_spark.operators._util import files_fingerprint
 
     fp = files_fingerprint([os.path.join(sf_dir, "embeddings.parquet")])
     memo_key = (fp, k, sample_per_cell)
-    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # the posexploded frame feeds EVERY round's distance join and the
-    # final assignment — cache it once (n×64 skinny rows)
-    ve = managed_cache(_posexploded(e))
+    e, local = corpus or _lloyd_corpus(spark, sf_dir)
     memo_ok, memo_hit = _memo_get(_KMEANS_MEMO, memo_key)
+    if local is not None:
+        head, x = local
+        log.debug("kmeans_fit: %d vectors, k=%d, driver path", len(x), k)
+    else:
+        log.debug("kmeans_fit: over %d vectors, k=%d, spark path",
+                  _LLOYD_DRIVER_MAX_VECTORS, k)
+        # the posexploded frame feeds EVERY round's distance join and
+        # the final assignment — cache it once (n×64 skinny rows)
+        ve = managed_cache(_posexploded(e))
     if memo_ok:
-        centroids = memo_hit  # serve-only: one final assignment job
+        centroids = memo_hit  # serve-only: one final assignment
+    elif local is not None:
+        order = _md5_order(head.column("vec_id").to_pylist())
+        if sample_per_cell is not None:
+            order = order[:k * sample_per_cell]
+        centroids = _lloyd_local(x[order], x[order[:k]], _KMEANS_ROUNDS)
     else:
         if sample_per_cell is None:
             fit_ve, fit_rows = ve, e
@@ -4949,26 +5121,35 @@ def _kmeans_fit(
             samp = _md5_head(e, k * sample_per_cell).repartition("vec_id")
             fit_rows = managed_cache(samp)
             fit_ve = managed_cache(_posexploded(samp))
-        centroids = _lloyd_rounds(
-            spark, _md5_seeds(e, k), fit_ve, fit_rows, _KMEANS_ROUNDS
-        )
+        centroids = _lloyd_rounds(spark, _md5_seeds(e, k), fit_ve, fit_rows)
     _memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)
-    return _kmeans_assign(spark, centroids, ve, e), centroids
+    if local is None:
+        return _kmeans_assign(spark, centroids, ve, e), centroids
+    cell, d2 = _nearest_local(x, centroids)
+    asg = pa.table({"vec_id": head.column("vec_id"), "cell": cell, "d2": d2})
+    vt = e.schema["vec_id"].dataType.simpleString()
+    ddl = f"vec_id {vt}, cell INT, d2 DOUBLE"
+    return spark.createDataFrame(asg, ddl), centroids
 
 
 _IVF_SAMPLE_PER_CELL = 64
 
 
-def _lloyd_ivf_fit(spark: SparkSession, sf_dir: str):
+def _lloyd_ivf_fit(spark: SparkSession, sf_dir: str, corpus=None):
     """The production IVF quantizer (r12): the deterministic Lloyd fit
     at corpus-sized k = _ivf_k(n) ≈ √n, update rounds on a
     64-per-cell md5 sample, full-corpus final assignment, so the ENTIRE
     llm_ann_ivf/_served pipeline — fit, assignment, two-level probe,
-    serving — carries a value-hash DuckDB oracle (_ivf_lloyd_oracle)."""
-    e = table(spark, sf_dir, "embeddings")
-    k = _ivf_k(e.count(), target_cell=_ivf_target_cell())
+    serving — carries a value-hash DuckDB oracle (_ivf_lloyd_oracle).
+    n is the driver path's row count, else one count job; ``corpus`` is
+    _lloyd_corpus's result when the caller already read it."""
+    corpus = corpus or _lloyd_corpus(spark, sf_dir)
+    e, local = corpus
+    n = e.count() if local is None else len(local[1])
+    k = _ivf_k(n, target_cell=_ivf_target_cell())
     return _kmeans_fit(
-        spark, sf_dir, k=k, sample_per_cell=_IVF_SAMPLE_PER_CELL
+        spark, sf_dir, k=k, sample_per_cell=_IVF_SAMPLE_PER_CELL,
+        corpus=corpus,
     )
 
 
@@ -5763,10 +5944,12 @@ _PQ_MEMO_CAP = 4  # r13: its own cap (r12 borrowed _BPE_MERGE_MEMO_CAP,
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
-    """Train the _PQ_M sub-codebooks: an independent deterministic
-    Lloyd fit per 16-dim subspace — _kmeans_fit's md5 seeds, sliced to
-    the subspace, then _PQ_ROUNDS rounds of the shared loop
-    (_lloyd_rounds) — on the _PQ_SAMPLE md5-smallest vectors (PQ
+    """Train the _PQ_M sub-codebooks on the driver: an independent
+    deterministic Lloyd fit per 16-dim subspace (_lloyd_local, the
+    numpy twin of the Spark loop) on the _PQ_SAMPLE md5-smallest
+    vectors, read once as Arrow, seeded by the first _PQ_K of them
+    sliced to the subspace (_kmeans_fit's md5 seeds). The sample is
+    capped at every scale, so it never needs the Spark loop (PQ
     codebooks are classically sample-trained; at sf0.01 the cap
     exceeds n so the sample IS the corpus, and the DuckDB twin applies
     the same LIMIT, so engines agree at every scale). Returns
@@ -5780,22 +5963,15 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     if ok:
         return hit
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # repartition after the sort-limit (see _kmeans_fit: GlobalLimit's
-    # single partition would single-thread every fit round)
-    samp = _md5_head(e, _PQ_SAMPLE).repartition("vec_id")
-    sve = managed_cache(_posexploded(samp))
-    seeds = _md5_seeds(e, _PQ_K)
+    samp = _md5_head(e, _PQ_SAMPLE).toArrow()
+    x = _embedding_matrix(samp.column("embedding"))
+    if x is None:
+        raise ValueError("IVF-PQ needs non-null embeddings of one length")
+    x = x[_md5_order(samp.column("vec_id").to_pylist())]
     books = []
     for m in range(_PQ_M):
-        lo = m * _PQ_SUBDIM
-        sub_ve = sve.filter(
-            (F.col("pos") >= lo) & (F.col("pos") < lo + _PQ_SUBDIM)
-        ).select("vec_id", (F.col("pos") - lo).alias("pos"), "v")
-        sub_rows = samp.select(
-            "vec_id", F.slice("embedding", lo + 1, _PQ_SUBDIM).alias("embedding")
-        )
-        cents = [c[lo:lo + _PQ_SUBDIM] for c in seeds]
-        books.append(_lloyd_rounds(spark, cents, sub_ve, sub_rows, _PQ_ROUNDS))
+        sub = x[:, m * _PQ_SUBDIM:(m + 1) * _PQ_SUBDIM]
+        books.append(_lloyd_local(sub, sub[:_PQ_K], _PQ_ROUNDS))
     _memo_put(_PQ_MEMO, fp, books, _PQ_MEMO_CAP)
     return books
 

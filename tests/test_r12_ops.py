@@ -4,8 +4,11 @@ artifact hygiene pins."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from tests.conftest import SF_DIR
 from tests.test_ann import planted_dir  # noqa: F401  (fixture reuse)
 
 
@@ -225,27 +228,66 @@ def test_super_quantizer_sql_mirror(duck):
     assert len(set(asg)) > 1  # the grouping actually partitions
 
 
-@pytest.mark.slow
-def test_lloyd_fit_sql_mirror(spark, duck, monkeypatch):
-    """The shared Spark Lloyd loop (_lloyd_rounds) must reproduce its
-    DuckDB twins CENTROID for centroid, bit for bit: _kmeans_fit's final
-    centroids equal cent{R} of _kmeans_rounds_sql, and each
-    _pq_codebooks sub-codebook equals p{m}c{R} of _pq_rounds_sql over
-    the e/pqsamp CTEs of _ivf_pq_body. The query oracles only see the
-    fit through assignments; this pins the fitted values themselves —
-    the bar any other fit path (e.g. a driver-side one) must meet."""
+def lloyd_on_both_paths(monkeypatch, tmp_path, fn):
+    """{path: fn()} with every Lloyd fit on the Spark path (the cut
+    patched below zero, which forces _lloyd_rounds) and on the driver
+    path. Each path starts from empty fit memos and builds its own IVF
+    index, so neither is served from the other's fit. Also pins the
+    path each fit took: the driver fit's assignment is a
+    LocalTableScan, the Spark fit's is not. ``fn`` must materialize
+    its result."""
     from gdxpy_spark.operators import llm
-    from tests.conftest import SF_DIR
+    from tests.test_r11_ops import _is_local_scan
+
+    fit = llm._kmeans_fit
+    out = {}
+    for path, cut in (("spark", -1), ("driver", llm._LLOYD_DRIVER_MAX_VECTORS)):
+        local = []
+
+        def spy(*a, **kw):
+            res = fit(*a, **kw)
+            local.append(_is_local_scan(res[0]))
+            return res
+
+        monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", cut)
+        monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
+        monkeypatch.setattr(llm, "_PQ_MEMO", {})
+        monkeypatch.setattr(llm, "_kmeans_fit", spy)
+        monkeypatch.setattr(
+            llm, "_ivf_index_dir", lambda sf_dir, p=path: str(tmp_path / p / "ivf")
+        )
+        out[path] = fn()
+        assert local and set(local) == {path == "driver"}, (path, local)
+    return out
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_lloyd_fit_sql_mirror(spark, duck, monkeypatch, path):
+    """Both Lloyd fits (_lloyd_local on the driver, _lloyd_rounds with
+    the cut forced below zero) must reproduce their DuckDB twins
+    CENTROID for centroid, bit for bit: _kmeans_fit's final centroids
+    equal cent{R} of _kmeans_rounds_sql, and each _pq_codebooks
+    sub-codebook (always a driver fit) equals p{m}c{R} of
+    _pq_rounds_sql over the e/pqsamp CTEs of _ivf_pq_body. The query
+    oracles only see the fit through assignments; this pins the fitted
+    values themselves."""
+    from gdxpy_spark.operators import llm
+    from tests.test_r11_ops import _is_local_scan
 
     monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
     monkeypatch.setattr(llm, "_PQ_MEMO", {})
+    if path == "spark":
+        monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", -1)
 
     def cents(sql, last):
         rows = duck.execute(f"WITH {sql} SELECT cell, c FROM {last} ORDER BY cell")
         return [list(c) for _cell, c in rows.fetchall()]
 
     want = cents(llm._kmeans_rounds_sql(), f"cent{llm._KMEANS_ROUNDS}")
-    assert llm._kmeans_fit(spark, SF_DIR)[1] == want
+    asg, got = llm._kmeans_fit(spark, SF_DIR)
+    assert _is_local_scan(asg) == (path == "driver")
+    assert got == want
 
     books = llm._pq_codebooks(spark, SF_DIR)
     pq_src = f"""
@@ -256,6 +298,154 @@ pqsamp AS MATERIALIZED (
     for m in range(llm._PQ_M):
         sql = f"{pq_src},{llm._pq_rounds_sql(m)}"
         assert books[m] == cents(sql, f"p{m}c{llm._PQ_ROUNDS}"), m
+
+
+# the small scale beside the suite's SF_DIR, where a forced-Spark fit
+# costs seconds rather than a minute
+SF_SMALL = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
+
+
+@pytest.fixture(scope="module")
+def duck_small():
+    import duckdb
+
+    from gdxpy_spark.tables import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMALL}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "name",
+    [
+        "llm_kmeans_lloyd",
+        "llm_ann_ivf",
+        "llm_ann_ivf_checked",
+        "llm_ivf_cell_stats",
+        "llm_ann_range_search",
+        "llm_semdedup",
+    ],
+)
+def test_lloyd_callers_match_oracle_on_both_paths(
+    spark, duck_small, monkeypatch, tmp_path, name
+):
+    """Every query over the Lloyd fit matches its DuckDB oracle with the
+    fit on the driver and with it forced onto the Spark loop (which no
+    registered query reaches at the oracle scales any more)."""
+    from gdxpy_spark.registry import all_queries
+    from tests.conftest import assert_frames_match
+
+    q = all_queries()[name]
+
+    def run():
+        assert_frames_match(
+            q.fn(spark, SF_SMALL), duck_small.execute(q.oracle), name=name
+        )
+
+    lloyd_on_both_paths(monkeypatch, tmp_path, run)
+
+
+@pytest.mark.slow
+def test_kmeans_large_k_cells_equal_on_both_paths(spark, monkeypatch, tmp_path):
+    """Above _KMEANS_JOIN_ASSIGN_MAX_K the Spark path assigns with
+    _kmeans_assign's GEMM (|v|²−2v·c+|c|²) while the driver keeps the
+    Σ(v−c)² form: d2 may differ in ulps, but on the fixture every cell
+    of every round agrees, so the centroids and final cells are
+    equal."""
+    from gdxpy_spark.operators import llm
+
+    k = llm._KMEANS_JOIN_ASSIGN_MAX_K + 16
+
+    def fit():
+        asg, cents = llm._kmeans_fit(spark, SF_SMALL, k=k)
+        return cents, dict(asg.select("vec_id", "cell").collect())
+
+    got = lloyd_on_both_paths(monkeypatch, tmp_path, fit)
+    assert len(got["driver"][0]) == k
+    assert got["driver"] == got["spark"]
+
+
+@pytest.mark.slow
+def test_ivf_index_layout_equal_on_both_paths(spark, monkeypatch, tmp_path):
+    """The pyarrow-written index (driver path) reads back in Spark
+    exactly as the Spark-written one: centers/ and cells/ have equal
+    schemas (cell the INT partition column) and equal rows, norm
+    included bit for bit, and both parts carry _SUCCESS."""
+    from gdxpy_spark.operators import llm
+
+    def build():
+        idx = llm._ensure_ivf_index(spark, SF_SMALL)
+        out = {}
+        for part in ("centers", "cells"):
+            assert os.path.exists(os.path.join(idx, part, "_SUCCESS")), part
+            df = spark.read.parquet(os.path.join(idx, part))
+            rows = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+            out[part] = (df.schema, rows)
+        return out
+
+    got = lloyd_on_both_paths(monkeypatch, tmp_path, build)
+    assert got["driver"] == got["spark"]
+    assert got["driver"]["cells"][0]["cell"].dataType.simpleString() == "int"
+
+
+def test_lloyd_dispatch_boundary(spark, monkeypatch):
+    """The cut counts vectors: a corpus of exactly `cut` of them is read
+    for the driver fit, one more takes the Spark path."""
+    from gdxpy_spark.operators import llm
+
+    n = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").count()
+    monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", n)
+    _e, local = llm._lloyd_corpus(spark, SF_SMALL)
+    head, x = local
+    assert head.num_rows == n and x.shape == (n, 64)
+    monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", n - 1)
+    assert llm._lloyd_corpus(spark, SF_SMALL)[1] is None
+
+
+def test_embedding_matrix_rejects_what_the_driver_cannot_fit():
+    """Only a non-empty list column of one positive length and no nulls
+    becomes a matrix; anything else leaves the fit on the Spark loop."""
+    import pyarrow as pa
+
+    from gdxpy_spark.operators.llm import _embedding_matrix
+
+    t = pa.list_(pa.float32())
+    m = _embedding_matrix(pa.chunked_array([pa.array([[1, 2], [3, 4]], t)]))
+    assert m.dtype == "float64" and m.tolist() == [[1, 2], [3, 4]]
+    for bad in ([], [[1, 2], [3]], [[1, 2], None], [[1, None]], [[], []]):
+        assert _embedding_matrix(pa.chunked_array([pa.array(bad, t)])) is None, bad
+
+
+def test_kmeans_fit_logs_path(spark, monkeypatch, caplog):
+    """One DEBUG record per fit on the engine's logger with n, k and the
+    path taken."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.operators.llm")
+    monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
+    n = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").count()
+
+    def messages():
+        return [
+            r.getMessage() for r in caplog.records
+            if r.name == llm.log.name and r.getMessage().startswith("kmeans_fit")
+        ]
+
+    llm._kmeans_fit(spark, SF_SMALL, k=4)
+    assert messages() == [f"kmeans_fit: {n} vectors, k=4, driver path"]
+    caplog.clear()
+    monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", 8)
+    monkeypatch.setattr(llm, "_lloyd_rounds", lambda spark, c, *a: c)
+    llm._kmeans_fit(spark, SF_SMALL, k=4)
+    assert messages() == ["kmeans_fit: over 8 vectors, k=4, spark path"]
 
 
 def test_super_quantizer_sql_mirror_property(duck):

@@ -1504,7 +1504,7 @@ def llm_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The small-corpus floor for the dynamic IVF cell count. Used by BOTH
-# _ivf_k's default `lo` and the oracle's kv CTE (_ivf_lloyd_rounds_sql)
+# _ivf_k and the oracle's kv CTE (_ivf_lloyd_rounds_sql)
 # — a dedicated constant so tuning the unrelated llm_kmeans_lloyd's
 # _KMEANS_K can never silently shift the oracle's k floor away from
 # the engine's (r12 advice; they coincided at 16 by accident).
@@ -1550,7 +1550,7 @@ def _ivf_target_cell() -> int | None:
     return None
 
 
-def _ivf_k(n: int, lo: int = _IVF_K_FLOOR, target_cell: int = None) -> int:
+def _ivf_k(n: int, target_cell: int = None) -> int:
     """Corpus-sized IVF cell count, k ≈ √n: the self-join/batch-query
     workload costs n·k rows in the coarse search (every vector ranks
     every centroid) plus nprobe·n·(n/k) exact cosines in the probed
@@ -1559,10 +1559,10 @@ def _ivf_k(n: int, lo: int = _IVF_K_FLOOR, target_cell: int = None) -> int:
     k=16 serving path read 39× at the 10× probe); k ∝ n fixes that
     term but re-creates the quadratic in the COARSE search (n·k =
     n²/256 — r10 review catch). Same family of scaling law as
-    _auto_n_bits for the LSH bucket space; `lo` keeps tiny corpora on
-    the historical 16 cells. The n·√n coarse-rank term this leaves was
-    the last measured scale cliff (×37.6 wall at the 100× posture
-    probe) — closed in r12 by the second-level quantizer over the
+    _auto_n_bits for the LSH bucket space; _IVF_K_FLOOR keeps tiny
+    corpora on the historical 16 cells. The n·√n coarse-rank term this
+    leaves was the last measured scale cliff (×37.6 wall at the 100×
+    posture probe) — closed in r12 by the second-level quantizer over the
     centroids (_super_quantize/_ivf_probe_cells: coarse cost
     n·n^0.25), the same move FAISS makes with a coarse index over the
     centroid set.
@@ -1578,8 +1578,8 @@ def _ivf_k(n: int, lo: int = _IVF_K_FLOOR, target_cell: int = None) -> int:
     import math
 
     if target_cell:
-        return max(lo, math.ceil(n / target_cell))
-    return max(lo, math.ceil(math.sqrt(n)))
+        return max(_IVF_K_FLOOR, math.ceil(n / target_cell))
+    return max(_IVF_K_FLOOR, math.ceil(math.sqrt(n)))
 
 
 def _ivf_index_dir(sf_dir: str) -> str:
@@ -1698,10 +1698,12 @@ def _write_ivf_index_local(build: str, head, x, fit) -> None:
 
 
 _SUPER_MEMO: dict = {}  # centers-fingerprint -> (grp_of, scents): the
-# driver-side Lloyd over centroid metadata is O(k·g·d·rounds) pure
-# Python — at the 10^9-vector posture (k≈31.6k, g≈178) that is >10^9
-# float ops PER QUERY if recomputed on every _ivf_probe_cells call
-# (r12 advice). Content-addressed like _KMEANS_MEMO; true-LRU capped.
+# driver-side Lloyd over centroid metadata (_super_quantize, numpy) is
+# O(k·g·d·rounds) = O(k·√k·d) — measured 0.18 s at k = 3,136, d = 64
+# on one core of a 4-vCPU VM, and k ≈ 31.6k at the 10^9-vector
+# posture — so it is not recomputed on every _ivf_probe_cells call
+# (r12 advice).
+# Content-addressed like _KMEANS_MEMO; true-LRU capped.
 _SUPER_MEMO_CAP = 4
 
 
@@ -1743,9 +1745,7 @@ def _ivf_probe_cells(
     once for the final output) — O(n) embedding rows per pass instead
     of O(n·g) through the rank. Approximation surface: a true nearest
     cell whose super-group is outside the query's top-``nprobe_super``
-    groups is not probed — recall floors pinned in tests/test_ann.py.
-    Centroids below 9 stay on the flat single-level rank (a hierarchy
-    over <3 groups prunes nothing)."""
+    groups is not probed — recall floors pinned in tests/test_ann.py."""
     spark = q.sparkSession
 
     def d2_against(center_col):
@@ -1762,19 +1762,6 @@ def _ivf_probe_cells(
     wq = W.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
     crows = sorted(centers.collect(), key=lambda r: r["cell"])
     k = len(crows)
-    if k < 9:
-        picked = (
-            q.select("vec_id", "embedding")
-            .crossJoin(F.broadcast(centers))
-            .withColumn("d2", d2_against(F.col("center")))
-            .select("vec_id", "cell", "d2")
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= nprobe)
-            .select("vec_id", "cell")
-        )
-        return picked.join(q, "vec_id").select(
-            "vec_id", "embedding", "norm", "cell"
-        )
     cents = [[float(x) for x in r["center"]] for r in crows]
     cell_ids = [int(r["cell"]) for r in crows]
     sfp = _centers_fingerprint(cell_ids, cents)
@@ -1784,6 +1771,8 @@ def _ivf_probe_cells(
     else:
         grp_of, scents = _super_quantize(cents, cell_ids=cell_ids)
         _memo_put(_SUPER_MEMO, sfp, (grp_of, scents), _SUPER_MEMO_CAP)
+    log.debug("super_quantize: k=%d, g=%d, memo %s",
+              k, len(scents), "hit" if memo_ok else "miss")
     supers = spark.createDataFrame(
         [(j, sc) for j, sc in enumerate(scents)],
         "grp INT, scenter ARRAY<DOUBLE>",
@@ -4680,7 +4669,7 @@ _KMEANS_K = 16
 _KMEANS_ROUNDS = 6
 
 
-def _kmeans_rounds_sql(k: int = _KMEANS_K, rounds: int = _KMEANS_ROUNDS) -> str:
+def _kmeans_rounds_sql() -> str:
     """CTE body (everything inside WITH) of the DuckDB twin of llm_kmeans_lloyd: the Lloyd rounds unrolled into
     MATERIALIZED CTEs (the _bpe_rounds_sql trick applied to clustering).
     Exactness comes from three disciplines: (1) seeds are the k vectors
@@ -4699,9 +4688,9 @@ cent0 AS MATERIALIZED (
   SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1
              AS cell,
          list_transform(embedding, v -> CAST(v AS DOUBLE)) AS c
-  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {k})"""]
-    for r in range(rounds + 1):
-        last = r == rounds
+  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {_KMEANS_K})"""]
+    for r in range(_KMEANS_ROUNDS + 1):
+        last = r == _KMEANS_ROUNDS
         parts.append(f"""
 dist{r} AS MATERIALIZED (
   SELECT e.vec_id, cent{r}.cell,
@@ -4737,13 +4726,13 @@ cent{r + 1} AS MATERIALIZED (
     return ",".join(parts)
 
 
-def _kmeans_oracle(k: int = _KMEANS_K, rounds: int = _KMEANS_ROUNDS) -> str:
+def _kmeans_oracle() -> str:
     """Full oracle for llm_kmeans_lloyd (rounds body + final select)."""
     return f"""
-WITH {_kmeans_rounds_sql(k, rounds)}
+WITH {_kmeans_rounds_sql()}
 SELECT vec_id, CAST(cell AS INT) AS cell,
        ROUND(d2, 4) + 0.0 AS dist2
-FROM asg{rounds}
+FROM asg{_KMEANS_ROUNDS}
 """
 
 
@@ -5008,7 +4997,8 @@ def _nearest_local(x, cents):
     order, as the join's per-(vec_id, cell) sum sees the posexploded
     rows, and the argmin takes the first, i.e. lowest, cell. Rows go in
     blocks, coordinate-major, so the two (rows × k) temporaries stay
-    0.5 MiB (cache-resident) at any k."""
+    0.5 MiB (cache-resident) at any k. Also the final assignment of
+    the super-quantizer (_super_quantize), with centroids as rows."""
     import numpy as np
 
     ct = np.asarray(cents, dtype=np.float64).T.copy()
@@ -5035,7 +5025,9 @@ def _lloyd_local(x, seeds, rounds) -> list:
     from the ``seeds`` centroids: ``rounds`` times, assign
     (_nearest_local) and replace each non-empty cell's centroid by its
     member mean, sum/count per coordinate, then _round9 (Spark's
-    F.round). Returns the centroids as lists of floats."""
+    F.round). Returns the centroids as lists of floats. Callers:
+    _kmeans_fit below the cut, _pq_codebooks, and _super_quantize over
+    the coarse centroids."""
     import numpy as np
 
     c = np.array(seeds, dtype=np.float64)
@@ -5181,83 +5173,55 @@ def _round9(x: float) -> float:
     return float(Decimal(repr(x)).quantize(Decimal("1E-9"), ROUND_HALF_UP))
 
 
-def _super_quantize(
-    cents: list, rounds: int = _SUPER_ROUNDS, cell_ids: list = None
-) -> tuple[list, list]:
+def _super_quantize(cents: list, cell_ids: list = None) -> tuple[list, list]:
     """Deterministic driver-side Lloyd over the CENTROIDS themselves:
     group the k coarse centroids into g = _super_g(k) super-groups.
     Returns (grp_of_cell, super_centers).
 
-    This runs on METADATA (k×64 doubles — kilobytes at any corpus
-    size), so plain Python is the honest engine: no job, no shuffle.
-    Every discipline mirrors _kmeans_rounds_sql so the DuckDB twin
-    (_super_rounds_sql) reproduces it CTE-for-CTE: seeds are the g
-    centroids with the smallest md5(str(cell)); rounds+1 assignments
-    with rounds quantized-mean updates between (means accumulate in
-    ascending-cell order, ROUND HALF_UP to 9 decimals via _round9);
-    argmin tie-break (d2, grp); an emptied group keeps its previous
-    center. Residual cross-engine float risk is the accepted
-    knife-edge class documented on _kmeans_rounds_sql.
+    The same driver loop as the corpus fit: seeds are the g centroids
+    first in md5(str(cell)) order (_md5_order), then _SUPER_ROUNDS
+    rounds of _lloyd_local and one final _nearest_local assignment.
+    Every discipline mirrors _kmeans_rounds_sql, so the DuckDB twin
+    (_super_rounds_sql) reproduces it CTE-for-CTE: coordinate-order
+    d², argmin tie-break (d2, grp), means accumulated in ascending-cell
+    order and rounded HALF_UP to 9 decimals (_round9), an emptied group
+    keeps its previous center. Residual cross-engine float risk is the
+    accepted knife-edge class documented on _kmeans_rounds_sql. Fewer
+    than g centroids give one group each. Input is metadata (k×d
+    doubles), no job: 4.5 ms at k = 20 and 0.18 s at k = 3,136
+    (d = 64, one core of a 4-vCPU VM).
 
     ``cell_ids`` (default 0..k-1) are the ACTUAL cell ids of the
     centroids: the seed order hashes these, mirroring the SQL twin's
     md5(CAST(cell AS VARCHAR)) — r12 advice fix: hashing list POSITION
     agreed with the oracle only while cell ids happened to be
     contiguous and sorted."""
-    import hashlib
+    import numpy as np
 
     k = len(cents)
-    ids = list(range(k)) if cell_ids is None else [int(c) for c in cell_ids]
+    ids = range(k) if cell_ids is None else [int(c) for c in cell_ids]
     assert len(ids) == k
-    g = _super_g(k)
-    order = sorted(
-        range(k), key=lambda c: hashlib.md5(str(ids[c]).encode()).hexdigest()
-    )
-    sc = [list(cents[c]) for c in order[:g]]
-    asg = [0] * k
-
-    def assign() -> None:
-        for cell in range(k):
-            asg[cell] = min(
-                (
-                    sum((a - b) * (a - b) for a, b in zip(cents[cell], sc[j])),
-                    j,
-                )
-                for j in range(g)
-            )[1]
-
-    for r in range(rounds + 1):
-        assign()
-        if r == rounds:
-            break
-        for j in range(g):
-            members = [c for c in range(k) if asg[c] == j]
-            if not members:
-                continue  # empty group keeps its previous center
-            dim = len(sc[j])
-            sc[j] = [
-                _round9(sum(cents[c][p] for c in members) / len(members))
-                for p in range(dim)
-            ]
-    return asg, sc
+    x = np.asarray(cents, dtype=np.float64)
+    sc = _lloyd_local(x, x[_md5_order(ids)[:_super_g(k)]], _SUPER_ROUNDS)
+    asg, _d2 = _nearest_local(x, sc)
+    return asg.tolist(), sc
 
 
-def _super_rounds_sql(
-    g: int, rounds: int = _SUPER_ROUNDS, cent: str = None
-) -> str:
+def _super_rounds_sql(g: int, cent: str = None) -> str:
     """SQL fragment: the DuckDB twin of _super_quantize, run over the
     centroid CTE ``cent`` (default cent{_KMEANS_ROUNDS}, i.e. the Lloyd
     quantizer's final centroids — (cell, c ARRAY<DOUBLE>)). Unrolls
-    rounds+1 assignments like _kmeans_rounds_sql; ends at sasg{rounds}
-    (cell → grp) and scent{rounds} (grp → center)."""
+    _SUPER_ROUNDS+1 assignments like _kmeans_rounds_sql; ends at
+    sasg{_SUPER_ROUNDS} (cell → grp) and scent{_SUPER_ROUNDS}
+    (grp → center)."""
     cent = cent or f"cent{_KMEANS_ROUNDS}"
     parts = [f"""
 scent0 AS MATERIALIZED (
   SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(cell AS VARCHAR))) - 1 AS grp,
          c
   FROM {cent} ORDER BY md5(CAST(cell AS VARCHAR)) LIMIT {g})"""]
-    for r in range(rounds + 1):
-        last = r == rounds
+    for r in range(_SUPER_ROUNDS + 1):
+        last = r == _SUPER_ROUNDS
         parts.append(f"""
 sdist{r} AS MATERIALIZED (
   SELECT p.cell, s.grp,

@@ -488,6 +488,131 @@ def test_super_quantizer_sql_mirror_property(duck):
         assert got == [(c, asg[c]) for c in range(k)], (seed, k, dim)
 
 
+def duck_super_quantize(duck, cents, cell_ids):
+    """The DuckDB twin (_super_rounds_sql) over ``cents`` carried in a
+    VALUES CTE under ``cell_ids``: ({cell: grp}, super-centers by grp).
+    Each double goes in as its repr string, cast, so DuckDB parses the
+    exact value (a bare literal would be typed DECIMAL first)."""
+    from gdxpy_spark.operators.llm import (
+        _SUPER_ROUNDS,
+        _super_g,
+        _super_rounds_sql,
+    )
+
+    vals = ", ".join(
+        "({}, [{}])".format(c, ", ".join(f"'{x!r}'::DOUBLE" for x in row))
+        for c, row in zip(cell_ids, cents)
+    )
+    head = (
+        f"WITH centx(cell, c) AS (VALUES {vals}), "
+        f"{_super_rounds_sql(_super_g(len(cents)), cent='centx')} "
+    )
+    grp_of = dict(
+        duck.execute(head + f"SELECT cell, grp FROM sasg{_SUPER_ROUNDS}").fetchall()
+    )
+    scents = [
+        list(c)
+        for _g, c in duck.execute(
+            head + f"SELECT grp, c FROM scent{_SUPER_ROUNDS} ORDER BY grp"
+        ).fetchall()
+    ]
+    return grp_of, scents
+
+
+def test_super_quantizer_sql_mirror_cell_ids(duck):
+    """Shuffled, non-contiguous cell ids (the seeds hash the ids, not
+    the list positions) on unrounded doubles up to k = 256: the
+    super-quantizer's groups and super-centers equal the DuckDB twin's
+    with the same ids in its VALUES."""
+    import random
+
+    from gdxpy_spark.operators.llm import _super_quantize
+
+    for seed in range(8):
+        rng = random.Random(500 + seed)
+        k = (9, 37, 100, 256)[seed % 4]
+        dim = rng.choice([4, 16, 64])
+        cents = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(k)]
+        ids = rng.sample(range(10 * k), k)
+        grp_of, scents = _super_quantize(cents, cell_ids=ids)
+        assert (dict(zip(ids, grp_of)), scents) == duck_super_quantize(
+            duck, cents, ids
+        ), (seed, k, dim)
+        assert len(set(grp_of)) > 1
+
+
+def test_super_quantizer_and_probe_at_small_k(spark, duck, monkeypatch):
+    """Fewer centroids than super-groups (k = 1 < g = _super_g(1) = 2)
+    give one group per centroid, as in the DuckDB twin, not an
+    IndexError. At k ≤ 4 there are 2 super-groups and both are probed,
+    so _ivf_probe_cells is exactly the flat rank: each vector's
+    min(2, k) nearest cells by (d2, cell)."""
+    import random
+
+    from gdxpy_spark.operators import llm
+
+    assert llm._super_quantize([[0.5, 1.0]]) == ([0], [[0.5, 1.0]])
+    pool = [[0.5, 1.0], [-2.0, 0.25], [0.5, 1.5]]
+    for k in (1, 2, 3):
+        grp_of, scents = llm._super_quantize(pool[:k])
+        assert (dict(enumerate(grp_of)), scents) == duck_super_quantize(
+            duck, pool[:k], range(k)
+        ), k
+
+    monkeypatch.setattr(llm, "_SUPER_MEMO", {})
+    rng = random.Random(3)
+    grid = [-1.0, -0.5, 0.0, 0.5, 1.0]  # coarse: many exactly tied d2
+    vecs = [[rng.choice(grid) for _ in range(4)] for _ in range(60)]
+    q = spark.createDataFrame(
+        [(v, e, 1.0) for v, e in enumerate(vecs)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, norm DOUBLE",
+    )
+    for k in (1, 2, 4):
+        cells = rng.sample(range(100), k)
+        cents = [[rng.choice(grid) for _ in range(4)] for _ in range(k)]
+        centers = spark.createDataFrame(
+            list(zip(cells, cents)), "cell INT, center ARRAY<DOUBLE>"
+        )
+        got = sorted(
+            (r.vec_id, r.cell) for r in llm._ivf_probe_cells(q, centers).collect()
+        )
+        want = sorted(
+            (v, c)
+            for v, e in enumerate(vecs)
+            for _d2, c in sorted(
+                (sum((a - b) * (a - b) for a, b in zip(e, ce)), c)
+                for c, ce in zip(cells, cents)
+            )[:2]
+        )
+        assert got == want, k
+
+
+def test_ivf_probe_cells_logs_super_memo(spark, monkeypatch, caplog):
+    """One DEBUG record per probe on the engine's logger with k, g and
+    whether the super-quantizer came from its memo."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.operators.llm")
+    monkeypatch.setattr(llm, "_SUPER_MEMO", {})
+    q = spark.createDataFrame(
+        [(1, [0.0, 1.0], 1.0)], "vec_id BIGINT, embedding ARRAY<DOUBLE>, norm DOUBLE"
+    )
+    centers = spark.createDataFrame(
+        [(c, [float(c), 0.0]) for c in range(16)], "cell INT, center ARRAY<DOUBLE>"
+    )
+    llm._ivf_probe_cells(q, centers)
+    llm._ivf_probe_cells(q, centers)
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == llm.log.name and r.getMessage().startswith("super_quantize")
+    ] == [
+        "super_quantize: k=16, g=4, memo miss",
+        "super_quantize: k=16, g=4, memo hit",
+    ]
+
+
 def test_two_level_probe_matches_flat_when_groups_agree(spark):
     """On the real corpus the two-level probe must return exactly
     nprobe cells per vector, every one of them a member of that

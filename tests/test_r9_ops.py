@@ -232,6 +232,44 @@ def test_engine_env_var_set_is_pinned():
     }
 
 
+def test_every_driver_cut_has_a_forced_path_test():
+    """Every module-level driver cut (``_*_DRIVER_MAX_*``) under
+    gdxpy_spark/ names the test that forces its Spark path and checks
+    it against the driver path. A new cut must add its entry here, and
+    renaming or deleting the named test fails this one."""
+    import ast
+    import pathlib
+    import re
+
+    import gdxpy_spark
+
+    forced_path_tests = {
+        "_CC_DRIVER_MAX_EDGES":
+            ("test_r11_ops.py", "test_connected_components_star_vs_union_find"),
+        "_LLOYD_DRIVER_MAX_VECTORS":
+            ("test_r12_ops.py", "test_lloyd_callers_match_oracle_on_both_paths"),
+    }
+    cut = re.compile(r"_\w+_DRIVER_MAX_\w+")
+    root = pathlib.Path(gdxpy_spark.__file__).parent
+    found = {
+        t.id
+        for path in root.rglob("*.py")
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and cut.fullmatch(t.id)
+    }
+    assert found == set(forced_path_tests)
+    tests_dir = pathlib.Path(__file__).parent
+    for const, (fname, test) in forced_path_tests.items():
+        defined = {
+            node.name
+            for node in ast.parse((tests_dir / fname).read_text()).body
+            if isinstance(node, ast.FunctionDef)
+        }
+        assert test in defined, (const, fname, test)
+
+
 # ---- r9 operator semantics --------------------------------------------------
 
 

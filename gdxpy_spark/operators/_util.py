@@ -18,10 +18,16 @@ at 100 TB.
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import shutil
+import tempfile
+import time
+import uuid
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+log = logging.getLogger(__name__)
 
 
 def files_fingerprint(paths) -> str:
@@ -29,9 +35,8 @@ def files_fingerprint(paths) -> str:
     files: sha256 over each file's ABSOLUTE path + size + mtime_ns.
     Embedding this in the directory name ties the cache to the bytes on
     disk — a regenerated dataset, or two datasets sharing a basename,
-    can never be served a stale build (the r6-advice hazard). Shared by
-    the replay fixture cache and the DPP layout builder; callers add
-    their own version tag for slicing/schema changes."""
+    can never be served a stale build (the r6-advice hazard). Also the
+    key of the driver-side memos (k-means, PQ codebooks, BPE merges)."""
     h = hashlib.sha256()
     for p in sorted(os.path.abspath(x) for x in paths):
         st = os.stat(p)
@@ -53,15 +58,13 @@ def atomic_publish(build_dir, final_dir, is_complete=None) -> None:
     stale dir is atomically moved aside and the publish retried once.
     A concurrent publisher winning at any step leaves a complete dir,
     which the check accepts."""
-    import uuid as _uuid
-
     try:
         os.rename(build_dir, final_dir)
         return
     except OSError:
         pass
     if is_complete is not None and not is_complete(final_dir):
-        trash = f"{final_dir}.stale_{_uuid.uuid4().hex[:8]}"
+        trash = f"{final_dir}.stale_{uuid.uuid4().hex[:8]}"
         try:
             os.rename(final_dir, trash)
         except OSError:
@@ -86,6 +89,56 @@ def atomic_publish(build_dir, final_dir, is_complete=None) -> None:
             "only complete copy (build dir left in place)"
         )
     shutil.rmtree(build_dir, ignore_errors=True)
+
+
+def artifact_dir(kind: str, sf_dir: str, sources, root: str = "gdxpy_spark_io") -> str:
+    """Content address of a persisted artifact derived from ``sources``:
+    ``<tmp>/<root>/<kind>_<basename(sf_dir)>_<files_fingerprint>``. The
+    parent is created; the artifact itself only ever appears through
+    build_once's rename."""
+    parent = os.path.join(tempfile.gettempdir(), root)
+    os.makedirs(parent, exist_ok=True)
+    base = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(parent, f"{kind}_{base}_{files_fingerprint(sources)}")
+
+
+def build_once(out: str, write) -> str:
+    """Build the artifact at ``out`` once; every later call, in any
+    process, serves it. The one discipline for every persisted artifact
+    (the IVF index, WARC containers, the z-order/DPP/bucketed layouts,
+    stream-replay and GDX fixtures):
+
+    - content address: ``out`` names the source bytes (artifact_dir),
+      so a regenerated dataset, or another one sharing its basename,
+      is never served a stale build;
+    - the kind carries a v-tag: bump it whenever the artifact's layout
+      changes, so a dir of the old layout is never read as the new;
+    - ``write(build)`` fills a private ``{out}.build_<uuid8>`` and one
+      rename publishes it (atomic_publish), so a concurrent reader
+      sees the whole artifact or a miss, never a half-written one; a
+      ``write`` that raises leaves no build dir behind;
+    - completeness is the ``_SUCCESS`` marker written after ``write``
+      returns: a dir without it is never served, and is replaced by the
+      next build (atomic_publish's repair path)."""
+    def complete(d: str) -> bool:
+        return os.path.exists(os.path.join(d, "_SUCCESS"))
+
+    name = os.path.basename(out)
+    if complete(out):
+        log.debug("build_once: %s hit", name)
+        return out
+    t0 = time.perf_counter()
+    build = f"{out}.build_{uuid.uuid4().hex[:8]}"
+    try:
+        write(build)
+        open(os.path.join(build, "_SUCCESS"), "a").close()
+    except BaseException:
+        shutil.rmtree(build, ignore_errors=True)
+        raise
+    atomic_publish(build, out, is_complete=complete)
+    log.debug("build_once: %s built in %.2f s", name, time.perf_counter() - t0)
+    return out
+
 
 # Decimal wide enough for sf0.1 sums with headroom; Long-backed (<=18 digits).
 _DEC = "decimal(18,6)"

@@ -12,7 +12,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from gdxpy_spark.operators._util import dsum
+from gdxpy_spark.operators._util import (
+    artifact_dir,
+    build_once,
+    dsum,
+    files_fingerprint,
+)
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import table
 
@@ -365,20 +370,6 @@ GROUP BY o_orderpriority
 _BUCKET_KEY, _BUCKET_N = "o_orderkey", 8
 
 
-def _bucket_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the two fact files backing the bucketed
-    tables, so a regenerated dataset can never be served stale buckets
-    (delegates to the shared _util.files_fingerprint — same discipline
-    as the streaming replay fixture cache)."""
-    import os
-
-    from gdxpy_spark.operators._util import files_fingerprint
-
-    return files_fingerprint(
-        [os.path.join(sf_dir, f"{t}.parquet") for t in ("orders", "lineitem")]
-    )
-
-
 @register("join_bucketed_colocated", oracle=_BUCKETED_ORACLE, category="C")
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CO-LOCATED bucketed join — the layout move that deletes the
@@ -395,9 +386,13 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The aggregate keeps the money column exact by summing 100-scaled
     BIGINT cents — partial-aggregable and bit-identical cross-engine."""
+    import os
+
     # v-tag: bump when the bucketed PROJECTION changes (the fingerprint
     # only tracks source data), so stale layouts can't be reused
-    fp = "v2_" + _bucket_fingerprint(sf_dir)
+    fp = "v2_" + files_fingerprint(
+        [os.path.join(sf_dir, f"{t}.parquet") for t in ("orders", "lineitem")]
+    )
     ob, lb = f"orders_bkt_{fp}", f"lineitem_bkt_{fp}"
 
     def _ensure(name: str, ddl_cols: str, build_df) -> None:
@@ -406,44 +401,31 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         session must re-ATTACH the existing files as an external
         bucketed table (the catalog-owns-layout pattern; bucket file
         layout is deterministic for a fixed spec, so attaching another
-        session's output is sound) instead of rewriting.
-
-        Completeness discipline (r8, matching the DPP layout path): the
-        attach requires the committer's _SUCCESS marker — a crashed
-        partial build leaves a non-_SUCCESS dir which must NOT be
-        attached (it would silently serve truncated buckets). Builds go
-        to a temp location as an external table and are published with
-        atomic_publish, so a concurrent reader sees either the whole
-        layout or a rebuild, never a partial one."""
-        import os
-        import uuid as _uuid
-
-        from gdxpy_spark.operators._util import atomic_publish
-
+        session's output is sound) instead of rewriting. The files are
+        one build_once artifact at the warehouse location: a crashed
+        partial build is never attached (it would silently serve
+        truncated buckets). Spark only writes bucketed files through a
+        table, so the build goes through a throwaway external table."""
         if spark.catalog.tableExists(name):
             return
         wh = spark.conf.get(
             "spark.sql.warehouse.dir", "spark-warehouse"
         ).removeprefix("file:")
-        loc = os.path.join(wh, name)
 
-        def complete(d: str) -> bool:
-            return os.path.exists(os.path.join(d, "_SUCCESS"))
-
-        if not complete(loc):
-            tmp_name = f"{name}_build_{_uuid.uuid4().hex[:8]}"
-            build_loc = os.path.join(wh, tmp_name)
+        def write(build: str) -> None:
+            tmp_name = os.path.basename(build).replace(".", "_")
             (
                 build_df()
                 .write.mode("overwrite")
                 .bucketBy(_BUCKET_N, _BUCKET_KEY)
                 .sortBy(_BUCKET_KEY)
                 .format("parquet")
-                .option("path", build_loc)
+                .option("path", build)
                 .saveAsTable(tmp_name)
             )
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
-            atomic_publish(build_loc, loc, is_complete=complete)
+
+        loc = build_once(os.path.join(wh, name), write)
         spark.sql(
             f"CREATE TABLE {name} ({ddl_cols}) USING PARQUET"
             f" CLUSTERED BY ({_BUCKET_KEY}) SORTED BY ({_BUCKET_KEY})"
@@ -827,48 +809,22 @@ def join_dynamic_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-fold into a static predicate and dodge the machinery the
     query exists to exercise)."""
     import os
-    import tempfile
-    import uuid
 
-    from gdxpy_spark.operators._util import atomic_publish, files_fingerprint
-
-    od = table(spark, sf_dir, "orders")
-    # layout dir is content-addressed on the source parquet and builds
-    # publish atomically — the shared replay-fixture discipline
-    # (_util.files_fingerprint / atomic_publish): a regenerated dataset
-    # can never serve stale partitions, a concurrent run never reads a
-    # half-written layout
-    fp = files_fingerprint([os.path.join(sf_dir, "orders.parquet")])
-    base = os.path.join(
-        tempfile.gettempdir(), "gdxpy_spark_io", "dpp",
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
-    )
-    fact_dir, dim_dir = base + "/fact", base + "/dim"
-    if not os.path.exists(fact_dir + "/_SUCCESS"):
-        build = f"{fact_dir}.build_{uuid.uuid4().hex[:8]}"
-        od.select(
+    def write(build: str) -> None:
+        table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
-        ).write.mode("overwrite").partitionBy("o_orderstatus").parquet(build)
-        atomic_publish(
-            build, fact_dir,
-            is_complete=lambda d: os.path.exists(
-                os.path.join(d, "_SUCCESS")
-            ),
-        )
-    if not os.path.exists(dim_dir + "/_SUCCESS"):
-        build = f"{dim_dir}.build_{uuid.uuid4().hex[:8]}"
+        ).write.partitionBy("o_orderstatus").parquet(f"{build}/fact")
         spark.createDataFrame(
             [("F", "finished"), ("O", "open"), ("P", "pending")],
             "status STRING, label STRING",
-        ).write.mode("overwrite").parquet(build)
-        atomic_publish(
-            build, dim_dir,
-            is_complete=lambda d: os.path.exists(
-                os.path.join(d, "_SUCCESS")
-            ),
-        )
-    fact = spark.read.parquet(fact_dir)
-    dim = spark.read.parquet(dim_dir).filter(F.col("label") == "finished")
+        ).write.parquet(f"{build}/dim")
+
+    base = build_once(
+        artifact_dir("dpp_v1", sf_dir, [os.path.join(sf_dir, "orders.parquet")]),
+        write,
+    )
+    fact = spark.read.parquet(f"{base}/fact")
+    dim = spark.read.parquet(f"{base}/dim").filter(F.col("label") == "finished")
     return (
         fact.join(
             F.broadcast(dim), fact.o_orderstatus == dim.status

@@ -14,6 +14,8 @@ import logging
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from gdxpy_spark.operators._util import (
+    artifact_dir,
+    build_once,
     davg,
     fan_out,
     global_row_number,
@@ -1584,18 +1586,9 @@ def _ivf_k(n: int, target_cell: int = None) -> int:
 
 def _ivf_index_dir(sf_dir: str) -> str:
     """Content-addressed location of the PERSISTED IVF index for one
-    dataset (same discipline as the replay/WARC fixture caches: keyed
-    to the source bytes so a regenerated embeddings table can never be
-    served a stale index; bump the v-tag when the index LAYOUT
-    changes)."""
+    dataset (_util.artifact_dir over embeddings.parquet)."""
     import os
-    import tempfile
 
-    from gdxpy_spark.operators._util import files_fingerprint
-
-    fp = files_fingerprint([os.path.join(sf_dir, "embeddings.parquet")])
-    parent = os.path.join(tempfile.gettempdir(), "gdxpy_spark_io")
-    os.makedirs(parent, exist_ok=True)
     # v4: deterministic Lloyd quantizer (sampled fit, md5 seeds) —
     # replaces v3's MLlib KMeans so the persisted index is
     # oracle-reproducible (v3: k = √n; v2: k = n/256, whose coarse
@@ -1605,16 +1598,15 @@ def _ivf_index_dir(sf_dir: str) -> str:
     # can never be served where the default-√n index is expected.
     tc = _ivf_target_cell()
     tag = f"_tc{tc}" if tc else ""
-    return os.path.join(
-        parent, f"ivf_v4_{os.path.basename(sf_dir.rstrip('/'))}_{fp}{tag}"
-    )
+    emb = os.path.join(sf_dir, "embeddings.parquet")
+    return artifact_dir("ivf_v4", sf_dir, [emb]) + tag
 
 
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once half of the IVF serving split: fit the coarse
     quantizer (deterministic Lloyd at k = _ivf_k(n) — _lloyd_ivf_fit,
     same spec as llm_ann_ivf) and PERSIST the index as two parquet
-    layouts under one atomically-published dir:
+    layouts under one build_once artifact:
 
       centers/  — the ~√n coarse centroids (k = _ivf_k(n)),
       cells/    — (vec_id, embedding, norm) PARTITIONED BY cell, so a
@@ -1626,39 +1618,27 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     pyarrow (_write_ivf_index_local), else by two Spark writes. Either
     way Spark reads back the same schema and rows.
 
-    Idempotent and content-fingerprinted: every later call (any
-    session) sees the _SUCCESS markers and returns without fitting —
-    the production build-once/query-many contract that
+    Every later call (any session) serves the published index without
+    fitting — the production build-once/query-many contract that
     tests/test_r10_ops.py pins by making the fit raise on the second
     call."""
     import os
-    import uuid as _uuid
 
-    from gdxpy_spark.operators._util import atomic_publish
-
-    out = _ivf_index_dir(sf_dir)
-
-    def _complete(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "centers", "_SUCCESS")) and (
-            os.path.exists(os.path.join(d, "cells", "_SUCCESS"))
-        )
-
-    if not _complete(out):
-        build = f"{out}.build_{_uuid.uuid4().hex[:8]}"
+    def write(build: str) -> None:
         corpus = _lloyd_corpus(spark, sf_dir)
         fit = _lloyd_ivf_fit(spark, sf_dir, corpus)
         if corpus[1] is not None:
             _write_ivf_index_local(build, *corpus[1], fit)
-        else:
-            indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
-            centers.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(build, "centers")
-            )
-            indexed.write.mode("overwrite").partitionBy("cell").parquet(
-                os.path.join(build, "cells")
-            )
-        atomic_publish(build, out, is_complete=_complete)
-    return out
+            return
+        indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
+        centers.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(build, "centers")
+        )
+        indexed.write.mode("overwrite").partitionBy("cell").parquet(
+            os.path.join(build, "cells")
+        )
+
+    return build_once(_ivf_index_dir(sf_dir), write)
 
 
 def _write_ivf_index_local(build: str, head, x, fit) -> None:
@@ -4498,6 +4478,8 @@ def llm_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one task per container file (bounded by container size, not
     corpus size), record fan-out via explode inside the task, then
     map-only parsing; no shuffle until whatever aggregation follows."""
+    import os
+
     docs = table(spark, sf_dir, "documents")
     rec = docs.select(
         F.concat(
@@ -4509,23 +4491,11 @@ def llm_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"),
         ).alias("value")
     )
-    out = _warc_dir(sf_dir)
-    import os as _os
-    import uuid as _uuid
-
-    def _complete(d: str) -> bool:
-        return _os.path.exists(_os.path.join(d, "_SUCCESS"))
-
-    if not _complete(out):
-        # same discipline as the replay fixtures: build privately,
-        # publish atomically — two concurrent sessions (bench +
-        # selfcheck run per round) must never overwrite each other
-        # mid-write or serve a half-populated container dir
-        from gdxpy_spark.operators._util import atomic_publish
-
-        build = f"{out}.build_{_uuid.uuid4().hex[:8]}"
-        rec.repartition(8).write.mode("overwrite").text(build)
-        atomic_publish(build, out, is_complete=_complete)
+    src = [os.path.join(sf_dir, "documents.parquet")]
+    out = build_once(
+        artifact_dir("warc_v2", sf_dir, src),
+        lambda build: rec.repartition(8).write.mode("overwrite").text(build),
+    )
     raw = spark.read.text(out, wholetext=True)
     return parse_warc_containers(raw)
 
@@ -4642,24 +4612,6 @@ aggregate(
   acc -> acc.recs
 )
 """
-
-
-def _warc_dir(sf_dir: str) -> str:
-    """Content-addressed fixture dir for the WARC container files (same
-    discipline as the replay fixtures: keyed to the source bytes so a
-    regenerated dataset can't serve a stale container set)."""
-    import os
-    import tempfile
-
-    from gdxpy_spark.operators._util import files_fingerprint
-
-    fp = files_fingerprint([os.path.join(sf_dir, "documents.parquet")])
-    parent = os.path.join(tempfile.gettempdir(), "gdxpy_spark_io")
-    os.makedirs(parent, exist_ok=True)
-    # the dir itself is created by atomic_publish's rename — never here
-    return os.path.join(
-        parent, f"warc_v2_{os.path.basename(sf_dir.rstrip('/'))}_{fp}"
-    )
 
 
 # ---------------------------------------------------------------------------

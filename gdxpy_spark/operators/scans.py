@@ -13,7 +13,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gdxpy_spark.operators._util import money4, sql_money4
+from gdxpy_spark.operators._util import artifact_dir, build_once, money4, sql_money4
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import table
 
@@ -415,29 +415,14 @@ def src_parquet_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     domains before interleaving (raw values with unequal bit widths
     degenerate the curve to a one-dimension sort — production z-order
     interleaves range-partition ids for the same reason).
-    The layout build is one-time and content-fingerprinted (the same
-    build-once discipline as the bucketed join tables and the IVF
-    index: atomic publish, _SUCCESS-gated); the registered query reads
-    the PERSISTED layout with a (user range × time range) predicate and
-    aggregates — its result is layout-invariant, so the oracle runs the
-    identical filter over the raw table. tests/test_r10_ops.py asserts
+    The layout is built once (_util.build_once); the registered query
+    reads the PERSISTED layout with a (user range × time range)
+    predicate and aggregates — its result is layout-invariant, so the
+    oracle runs the identical filter over the raw table. tests/test_r10_ops.py asserts
     both predicates reach the layout scan as PushedFilters and that
     the layout actually clusters (per-file user_id spans are narrow)."""
-    import uuid as _uuid
 
-    from gdxpy_spark.operators._util import atomic_publish, files_fingerprint
-
-    fp = files_fingerprint([os.path.join(sf_dir, "events.parquet")])
-    parent = os.path.join(tempfile.gettempdir(), "gdxpy_spark_io")
-    os.makedirs(parent, exist_ok=True)
-    out = os.path.join(
-        parent, f"zorder_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}"
-    )
-
-    def _complete(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    if not _complete(out):
+    def write(build: str) -> None:
         from gdxpy_spark.functions.scalar import morton_z_sql
 
         ev0 = table(spark, sf_dir, "events").select(
@@ -475,7 +460,6 @@ def src_parquet_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         z = ev.withColumn(
             "_z", F.expr(f"CAST({morton_z_sql('_ux', '_tb')} AS BIGINT)")
         )
-        build = f"{out}.build_{_uuid.uuid4().hex[:8]}"
         (
             z.repartitionByRange(8, "_z")
             .sortWithinPartitions("_z")
@@ -483,8 +467,11 @@ def src_parquet_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(build)
         )
-        atomic_publish(build, out, is_complete=_complete)
 
+    out = build_once(
+        artifact_dir("zorder_v1", sf_dir, [os.path.join(sf_dir, "events.parquet")]),
+        write,
+    )
     lay = spark.read.parquet(out)
     return (
         lay.filter(

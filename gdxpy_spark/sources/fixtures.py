@@ -9,10 +9,10 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 
 import duckdb
 
+from gdxpy_spark.operators._util import artifact_dir, build_once
 from gdxpy_spark.sources.gdx_codec import (
     DT_PAR,
     DT_SET,
@@ -22,28 +22,71 @@ from gdxpy_spark.sources.gdx_codec import (
     SymbolMeta,
 )
 
-_CACHE: dict[str, str] = {}
+_SOURCES = ("region", "nation", "customer", "orders")
 
 
-def build_fixture_gdx(sf_dir: str, compress: bool = True) -> str:
-    """One .gdx per sf_dir (cached): sets, parameters (incl. a scalar and
+def build_fixture_gdx(sf_dir: str) -> str:
+    """The GDXPY7 fixture of sf_dir: sets, parameters (incl. a scalar and
     a specials symbol with EPS/NA/±INF), a 5-value variable, an alias."""
-    if sf_dir in _CACHE and os.path.exists(_CACHE[sf_dir]):
-        return _CACHE[sf_dir]
-    out = os.path.join(
-        tempfile.gettempdir(), "gdxpy_spark_fixtures", os.path.basename(sf_dir.rstrip("/"))
-    )
-    os.makedirs(out, exist_ok=True)
-    path = os.path.join(out, "fixture.gdx")
+    return os.path.join(_fixture_dir(sf_dir), "fixture.gdx")
 
+
+def build_fixture_gdx_gams(sf_dir: str, compress: bool = False) -> str:
+    """GAMS-V7-layout fixture (gdx_gams.GamsGdxWriter): the monthly_sales
+    parameter + a specials symbol, for the native-layout read query.
+    ``compress=True`` selects the zlib stream-page variant (SURVEY App
+    B's second real-world container form)."""
+    return os.path.join(
+        _fixture_dir(sf_dir), f"fixture_gams{'_z' if compress else ''}.gdx"
+    )
+
+
+def _fixture_dir(sf_dir: str) -> str:
+    """All three fixtures of sf_dir as one build_once artifact, keyed on
+    the four tables they are derived from."""
+    sources = [os.path.join(sf_dir, f"{t}.parquet") for t in _SOURCES]
+    return build_once(
+        artifact_dir("gdx_fixtures_v1", sf_dir, sources),
+        lambda build: _write_fixtures(sf_dir, build),
+    )
+
+
+def _monthly_sales(ms) -> SymbolData:
+    return SymbolData(
+        meta=SymbolMeta("monthly_sales", 2, DT_PAR, expl_text="sales by status×month"),
+        keys=[(r[0], r[1]) for r in ms],
+        values=[(float(r[2]),) for r in ms],
+        eps_mask=[0] * len(ms),
+    )
+
+
+def _specials() -> SymbolData:
+    """Special-value showcase: EPS membership, NA, ±INF (SURVEY §1.1)."""
+    return SymbolData(
+        meta=SymbolMeta("specials", 1, DT_PAR, expl_text="GDX special values"),
+        keys=[("eps_member",), ("na_value",), ("pos_inf",), ("neg_inf",), ("plain",)],
+        values=[(0.0,), (math.nan,), (math.inf,), (-math.inf,), (42.5,)],
+        eps_mask=[1, 0, 0, 0, 0],
+    )
+
+
+def _write_fixtures(sf_dir: str, out: str) -> None:
+    from gdxpy_spark.sources.gdx_gams import GamsGdxWriter
+
+    os.makedirs(out)
     con = duckdb.connect()
-    for t in ("region", "nation", "customer", "orders"):
+    for t in _SOURCES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    ms = con.execute(
+        "SELECT o_orderstatus, 'm' || CAST(month(o_orderdate) AS VARCHAR),"
+        " CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 4) AS DOUBLE)"
+        " FROM orders GROUP BY 1, 2 ORDER BY 1, 2"
+    ).fetchall()
 
-    w = GdxWriter(path, producer=f"gdxpy_spark fixtures {sf_dir}", compress=compress)
-
+    w = GdxWriter(os.path.join(out, "fixture.gdx"),
+                  producer=f"gdxpy_spark fixtures {sf_dir}", compress=True)
     regions = [r[0] for r in con.execute("SELECT r_name FROM region ORDER BY r_regionkey").fetchall()]
     w.add_symbol(
         SymbolData(
@@ -78,19 +121,7 @@ def build_fixture_gdx(sf_dir: str, compress: bool = True) -> str:
         )
     )
 
-    ms = con.execute(
-        "SELECT o_orderstatus, 'm' || CAST(month(o_orderdate) AS VARCHAR),"
-        " CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 4) AS DOUBLE)"
-        " FROM orders GROUP BY 1, 2 ORDER BY 1, 2"
-    ).fetchall()
-    w.add_symbol(
-        SymbolData(
-            meta=SymbolMeta("monthly_sales", 2, DT_PAR, expl_text="sales by status×month"),
-            keys=[(r[0], r[1]) for r in ms],
-            values=[(float(r[2]),) for r in ms],
-            eps_mask=[0] * len(ms),
-        )
-    )
+    w.add_symbol(_monthly_sales(ms))
 
     flow = con.execute(
         "SELECT o_orderstatus, o_orderpriority, COUNT(*),"
@@ -116,65 +147,14 @@ def build_fixture_gdx(sf_dir: str, compress: bool = True) -> str:
         )
     )
 
-    # special-value showcase: EPS membership, NA, ±INF (SURVEY §1.1)
-    w.add_symbol(
-        SymbolData(
-            meta=SymbolMeta("specials", 1, DT_PAR, expl_text="GDX special values"),
-            keys=[("eps_member",), ("na_value",), ("pos_inf",), ("neg_inf",), ("plain",)],
-            values=[(0.0,), (math.nan,), (math.inf,), (-math.inf,), (42.5,)],
-            eps_mask=[1, 0, 0, 0, 0],
-        )
-    )
+    w.add_symbol(_specials())
     w.close()
-    _CACHE[sf_dir] = path
-    return path
 
-
-def build_fixture_gdx_gams(sf_dir: str, compress: bool = False) -> str:
-    """GAMS-V7-layout fixture (gdx_gams.GamsGdxWriter): the monthly_sales
-    parameter + a specials symbol, for the native-layout read query.
-    ``compress=True`` writes the zlib stream-page variant (SURVEY App B's
-    second real-world container form)."""
-    key = f"gams{'z' if compress else ''}:{sf_dir}"
-    if key in _CACHE and os.path.exists(_CACHE[key]):
-        return _CACHE[key]
-    from gdxpy_spark.sources.gdx_gams import GamsGdxWriter
-
-    out = os.path.join(
-        tempfile.gettempdir(), "gdxpy_spark_fixtures",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    os.makedirs(out, exist_ok=True)
-    path = os.path.join(out, f"fixture_gams{'_z' if compress else ''}.gdx")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf_dir}/orders.parquet')"
-    )
-    ms = con.execute(
-        "SELECT o_orderstatus, 'm' || CAST(month(o_orderdate) AS VARCHAR),"
-        " CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 4) AS DOUBLE)"
-        " FROM orders GROUP BY 1, 2 ORDER BY 1, 2"
-    ).fetchall()
-
-    w = GamsGdxWriter(path, producer=f"gdxpy_spark gams fixtures {sf_dir}",
-                      compress=compress)
-    w.add_symbol(
-        SymbolData(
-            meta=SymbolMeta("monthly_sales", 2, DT_PAR, expl_text="sales by status×month"),
-            keys=[(r[0], r[1]) for r in ms],
-            values=[(float(r[2]),) for r in ms],
-            eps_mask=[0] * len(ms),
+    for compress in (False, True):
+        w = GamsGdxWriter(
+            os.path.join(out, f"fixture_gams{'_z' if compress else ''}.gdx"),
+            producer=f"gdxpy_spark gams fixtures {sf_dir}", compress=compress,
         )
-    )
-    w.add_symbol(
-        SymbolData(
-            meta=SymbolMeta("specials", 1, DT_PAR, expl_text="GDX special values"),
-            keys=[("eps_member",), ("na_value",), ("pos_inf",), ("neg_inf",), ("plain",)],
-            values=[(0.0,), (math.nan,), (math.inf,), (-math.inf,), (42.5,)],
-            eps_mask=[1, 0, 0, 0, 0],
-        )
-    )
-    w.close()
-    _CACHE[key] = path
-    return path
+        w.add_symbol(_monthly_sales(ms))
+        w.add_symbol(_specials())
+        w.close()

@@ -28,7 +28,7 @@ _REPLAY_LOCK = threading.Lock()
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gdxpy_spark.operators._util import atomic_publish, files_fingerprint
+from gdxpy_spark.operators._util import artifact_dir, build_once
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import configure, events_ts_encoding, table
 
@@ -69,55 +69,25 @@ def _write_batch_files(dfs: list[DataFrame], out: str) -> None:
         os.utime(os.path.join(out, f"{i:03d}.parquet"), (1e9 + i, 1e9 + i))
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the replay's upstream data: identity +
-    (size, mtime_ns) of every source parquet the fixtures are sliced
-    from (all replay fixtures derive from events.parquet; the glob
-    keeps this honest if that ever widens). Regenerating the dataset in
-    place, or two datasets sharing a directory basename, therefore
-    produce DIFFERENT cache keys — the stale-replay-vs-live-oracle
-    hazard the r6 advice flagged. Delegates to the shared
-    _util.files_fingerprint (absolute paths carry the directory
-    identity)."""
-    return files_fingerprint(
-        glob.glob(os.path.join(sf_dir, "events*.parquet"))
-    )
-
-
 def _cached_fixture(name: str, sf_dir: str, n_files: int, build_dfs) -> str:
-    """Content-addressed fixture dir: (query name, fixture format version,
-    sf_dir basename, SOURCE-DATA FINGERPRINT) → a deterministic path
-    reused across calls, so a best-of-N bench or a repeated test run
-    replays without rewriting the batch files each time (the rebuild
-    used to cost more than the stream itself). The fingerprint ties the
-    cache to the bytes actually on disk at sf_dir, so a regenerated
-    dataset can never be served a stale replay. Bump the v-tag whenever
-    a query changes its slicing/schema so a renamed-but-same-source dir
-    can't poison a run. Builds are ATOMIC: files are written to a
-    private temp dir and published with a single os.rename, so a
-    concurrent run either sees the complete fixture or a cache miss —
-    never a partially-populated directory. `build_dfs()` is called only
-    on a cache miss and must return exactly `n_files` frames."""
-    src = os.path.join(
-        tempfile.gettempdir(), "gdxpy_spark_replay",
-        f"{name}_v1_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_source_fingerprint(sf_dir)}",
-    )
-    have = [os.path.join(src, f"{i:03d}.parquet") for i in range(n_files)]
-    if not all(os.path.exists(p) for p in have):
-        build = f"{src}.build_{uuid.uuid4().hex[:8]}"
-        os.makedirs(build, exist_ok=True)
+    """The replay fixture of query ``name`` as a build_once artifact
+    under gdxpy_spark_replay/, keyed on every source parquet the
+    fixtures are sliced from (all derive from events.parquet; the glob
+    keeps the key honest if that ever widens). A best-of-N bench or a
+    repeated test run replays without rewriting the batch files (the
+    rebuild used to cost more than the stream itself). `build_dfs()` is
+    called only on a miss and must return exactly `n_files` frames."""
+
+    def write(build: str) -> None:
         dfs = build_dfs()
         assert len(dfs) == n_files
         _write_batch_files(dfs, build)
-        atomic_publish(
-            build, src,
-            is_complete=lambda d: all(
-                os.path.exists(os.path.join(d, f"{i:03d}.parquet"))
-                for i in range(n_files)
-            ),
-        )
-    return src
+
+    sources = glob.glob(os.path.join(sf_dir, "events*.parquet"))
+    return build_once(
+        artifact_dir(f"{name}_v1", sf_dir, sources, root="gdxpy_spark_replay"),
+        write,
+    )
 
 
 def _read_stream(spark: SparkSession, src_dir: str):
@@ -432,9 +402,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-micro-batch stateful replay: join state persists across, and is
     watermark-evicted at, the batch boundary. RocksDB state store was
     probed and is not faster at this state size (SCALE.md r7), nor at
-    10× state (SCALE.md r11, scale_probe_streaming.py: the default
-    store widens its lead — RocksDB's per-trigger SST flush dominates
-    until state outgrows executor memory)."""
+    10× state (SCALE.md r11: the default store widens its lead —
+    RocksDB's per-trigger SST flush dominates until state outgrows
+    executor memory)."""
     # fixture = 4 ts-ordered slices of the two joining event types only
     # (other types never join — writing them would just tax the replay)
     n_files = 4

@@ -17,11 +17,13 @@ at 100 TB.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import logging
 import os
 import shutil
 import tempfile
+import threading
 import time
 import uuid
 
@@ -138,6 +140,27 @@ def build_once(out: str, write) -> str:
     atomic_publish(build, out, is_complete=complete)
     log.debug("build_once: %s built in %.2f s", name, time.perf_counter() - t0)
     return out
+
+
+_scratch_root: str | None = None
+_scratch_lock = threading.Lock()
+
+
+def scratch_dir(kind: str) -> str:
+    """A fresh private directory for one query call's scratch (a
+    round-trip scan's written files, a foreachBatch accumulator, a
+    stream checkpoint), unlike build_once's artifacts, which are shared
+    and kept. Every one lives under a per-process root made on first
+    use and removed when the interpreter exits: the frames read from
+    these dirs are lazy, so they must outlive the call that returns
+    them and cannot be removed at query cadence."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="gdxpy_spark_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+        root = _scratch_root
+    return tempfile.mkdtemp(prefix=f"{kind}_", dir=root)
 
 
 # Decimal wide enough for sf0.1 sums with headroom; Long-backed (<=18 digits).

@@ -4155,6 +4155,7 @@ def _bpe_train_merges(spark: SparkSession, sf_dir: str) -> list:
 
     memo_key = files_fingerprint([os.path.join(sf_dir, "documents.parquet")])
     ok, hit = _memo_get(_BPE_MERGE_MEMO, memo_key)
+    log.debug("bpe_train_merges: memo %s", "hit" if ok else "miss")
     if ok:
         return hit
     docs = table(spark, sf_dir, "documents")
@@ -5037,12 +5038,14 @@ def _kmeans_fit(
     memo_key = (fp, k, sample_per_cell)
     e, local = corpus or _lloyd_corpus(spark, sf_dir)
     memo_ok, memo_hit = _memo_get(_KMEANS_MEMO, memo_key)
+    memo = "hit" if memo_ok else "miss"
     if local is not None:
         head, x = local
-        log.debug("kmeans_fit: %d vectors, k=%d, driver path", len(x), k)
+        log.debug("kmeans_fit: %d vectors, k=%d, driver path, memo %s",
+                  len(x), k, memo)
     else:
-        log.debug("kmeans_fit: over %d vectors, k=%d, spark path",
-                  _LLOYD_DRIVER_MAX_VECTORS, k)
+        log.debug("kmeans_fit: over %d vectors, k=%d, spark path, memo %s",
+                  _LLOYD_DRIVER_MAX_VECTORS, k, memo)
         # the posexploded frame feeds EVERY round's distance join and
         # the final assignment — cache it once (n×64 skinny rows)
         ve = managed_cache(_posexploded(e))
@@ -5066,7 +5069,8 @@ def _kmeans_fit(
             fit_rows = managed_cache(samp)
             fit_ve = managed_cache(_posexploded(samp))
         centroids = _lloyd_rounds(spark, _md5_seeds(e, k), fit_ve, fit_rows)
-    _memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)
+    if not memo_ok:
+        _memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)
     if local is None:
         return _kmeans_assign(spark, centroids, ve, e), centroids
     cell, d2 = _nearest_local(x, centroids)
@@ -5876,6 +5880,8 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
 
     fp = files_fingerprint([os.path.join(sf_dir, "embeddings.parquet")])
     ok, hit = _memo_get(_PQ_MEMO, fp)
+    log.debug("pq_codebooks: m=%d, k=%d, memo %s",
+              _PQ_M, _PQ_K, "hit" if ok else "miss")
     if ok:
         return hit
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")

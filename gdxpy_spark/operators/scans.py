@@ -2,18 +2,20 @@
 
 GDX-format queries (src_gdx_*) live in gdxpy_spark.sources and register
 from there (M2); this module covers the generic source/sink surface.
-Round-trip queries write to a per-run temp dir — they are weak-checked
-(rows-only) by the driver and exactly-checked in tests/.
+Round-trip queries write to a per-call _util.scratch_dir (removed when
+the process exits) — they are weak-checked (rows-only) by the driver
+and exactly-checked in tests/.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gdxpy_spark.operators._util import artifact_dir, build_once, money4, sql_money4
+from gdxpy_spark.operators._util import (
+    artifact_dir, build_once, money4, scratch_dir, sql_money4,
+)
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import table
 
@@ -59,12 +61,6 @@ def src_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tmpdir(name: str) -> str:
-    d = os.path.join(tempfile.gettempdir(), "gdxpy_spark_io", name)
-    os.makedirs(d, exist_ok=True)
-    return tempfile.mkdtemp(dir=d)
-
-
 _CSV_RT_ORACLE = """
 SELECT CAST(n_nationkey AS INT) AS n_nationkey, n_name,
        CAST(n_regionkey AS INT) AS n_regionkey
@@ -80,7 +76,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless, so the read-back frame hash-matches a direct scan of the
     origin table."""
     nation = table(spark, sf_dir, "nation")
-    out = _tmpdir("csv")
+    out = scratch_dir("csv")
     nation.write.mode("overwrite").option("header", True).csv(out)
     schema = "n_nationkey INT, n_name STRING, n_regionkey INT"
     return spark.read.schema(schema).option("header", True).csv(out)
@@ -99,7 +95,7 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark writes shortest-roundtrip decimal repr), so losslessness is
     hash-checked, not just row-counted."""
     sup = table(spark, sf_dir, "supplier")
-    out = _tmpdir("json")
+    out = scratch_dir("json")
     sup.write.mode("overwrite").json(out)
     schema = "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
     return spark.read.schema(schema).json(out).select(
@@ -116,7 +112,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema travels in the file, so no explicit schema needed — unlike
     csv/json). Oracle = the source scan (r6 upgrade from weak)."""
     region = table(spark, sf_dir, "region")
-    out = _tmpdir("orc")
+    out = scratch_dir("orc")
     region.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -140,7 +136,7 @@ def src_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    out = _tmpdir("part_parquet")
+    out = scratch_dir("part_parquet")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     return (
         spark.read.parquet(out)
@@ -204,7 +200,7 @@ def src_parquet_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown still work on the merged schema: files lacking a selected
     column serve NULLs without reading anything extra."""
     docs = table(spark, sf_dir, "documents")
-    out = _tmpdir("mergeschema")
+    out = scratch_dir("mergeschema")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars").write.mode(
         "append"
     ).parquet(out)
@@ -250,7 +246,7 @@ def src_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars").cast("string")
         ),
     )
-    out = _tmpdir("csvmalformed")
+    out = scratch_dir("csvmalformed")
     docs.select(line.alias("value")).write.mode("overwrite").text(out)
     return (
         spark.read.schema("doc_id BIGINT, lang STRING, n_chars BIGINT")
@@ -289,7 +285,7 @@ def src_parquet_nested_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cust"),
         F.array("o_totalprice").alias("amounts"),
     )
-    out = _tmpdir("nested_parquet")
+    out = scratch_dir("nested_parquet")
     nested.write.mode("overwrite").parquet(out)
     return (
         spark.read.parquet(out)
@@ -329,7 +325,7 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
     rows = docs.select("doc_id", "text").collect()  # fixture build only:
     # bounded subset (1/20th), one-time write of the binary lake fixture
-    out = _tmpdir("binfiles")
+    out = scratch_dir("binfiles")
     for r in rows:
         with open(os.path.join(out, f"{r['doc_id']}.bin"), "wb") as f:
             f.write(r["text"].encode("utf-8"))
@@ -360,7 +356,7 @@ def src_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", F.col("p_size").cast("int").alias("p_size")
     )
-    out = _tmpdir("pq_zstd")
+    out = scratch_dir("pq_zstd")
     part.write.mode("overwrite").option("compression", "zstd").parquet(out)
     return spark.read.parquet(out)
 
@@ -383,7 +379,7 @@ def src_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = table(spark, sf_dir, "region").select(
         F.col("r_regionkey").cast("int").alias("r_regionkey"), "r_name"
     )
-    out = _tmpdir("csv_gz")
+    out = scratch_dir("csv_gz")
     region.write.mode("overwrite").option("header", True).option(
         "compression", "gzip"
     ).csv(out)

@@ -5,11 +5,10 @@ is asserted in tests/test_gdx_datasource.py)."""
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gdxpy_spark.operators._util import scratch_dir
 from gdxpy_spark.registry import register
 from gdxpy_spark.sources import gdx_datasource
 from gdxpy_spark.sources.fixtures import build_fixture_gdx, build_fixture_gdx_gams
@@ -145,9 +144,7 @@ def src_gdx_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("k1"), "value", F.lit(False).alias("is_eps")
         )
     )
-    out = os.path.join(
-        tempfile.gettempdir(), "gdxpy_spark_io", "gdx", f"{uuid.uuid4().hex}.gdx"
-    )
+    out = os.path.join(scratch_dir("gdx"), "cust_count.gdx")
     (
         counts.write.format("gdx")
         .option("symbol", "cust_count")

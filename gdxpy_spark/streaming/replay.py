@@ -1,10 +1,13 @@
-"""Structured Streaming replay operators (SURVEY §2.2 H, weak-checked).
+"""Structured Streaming replay operators (SURVEY §2.2 H).
 
-These genuinely run the streaming engine: events are written out as
-ordered batch files, replayed with Trigger.AvailableNow +
-maxFilesPerTrigger=1 (one micro-batch per file, so watermarks advance
-*between* batches — the only way late-data semantics are observable), and
-collected through a memory sink.
+These genuinely run the streaming engine. Events are written out once
+as ordered batch files (_cached_fixture), read back by one file-stream
+source (_read_stream: one micro-batch per file by default, so
+watermarks advance *between* batches — the only way late-data
+semantics are observable), and run under Trigger.AvailableNow by one
+drain (_drain) into a memory sink or a foreachBatch function. The
+drain serializes replays within the process, scopes the state
+partition count, and removes its checkpoint when the replay ends.
 
 Raw events on disk carry ts as either INT64 nanoseconds (older driver
 drops, surfaced as LONG via the nanosAsLong conf) or TIMESTAMP(MICROS)
@@ -18,17 +21,13 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
+import shutil
 import threading
 import uuid
 
-# serializes replays within this process: each drain scopes the
-# session-global shuffle-partition conf (see _drain_to_memory)
-_REPLAY_LOCK = threading.Lock()
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gdxpy_spark.operators._util import artifact_dir, build_once
+from gdxpy_spark.operators._util import artifact_dir, build_once, scratch_dir
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import configure, events_ts_encoding, table
 
@@ -42,12 +41,6 @@ def _ts_col() -> F.Column:
     # watermarks require TIMESTAMP (not NTZ); the session is pinned UTC so
     # wall-clock values still line up with the batch-side NTZ timestamps
     return F.timestamp_micros(F.expr("ts div 1000"))
-
-
-def _replay_dir(name: str) -> str:
-    d = os.path.join(tempfile.gettempdir(), "gdxpy_spark_replay", name, uuid.uuid4().hex)
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
 def _write_batch_files(dfs: list[DataFrame], out: str) -> None:
@@ -90,67 +83,77 @@ def _cached_fixture(name: str, sf_dir: str, n_files: int, build_dfs) -> str:
     )
 
 
-def _read_stream(spark: SparkSession, src_dir: str):
-    """One micro-batch per fixture file, ts rebuilt as TIMESTAMP."""
+def _read_stream(
+    spark: SparkSession, src_dir: str, files_per_trigger: int = 1
+) -> DataFrame:
+    """The replay fixture at ``src_dir`` as a file stream of
+    ``files_per_trigger`` files per micro-batch, ts rebuilt as
+    TIMESTAMP."""
+    configure(spark)
     return (
         spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
+        .option("maxFilesPerTrigger", str(files_per_trigger))
         .parquet(src_dir)
         .withColumn("ts", _ts_col())
     )
 
 
-def _drain_to_memory(
-    spark: SparkSession, out: DataFrame, name: str,
-    output_mode: str = "append", state_partitions: int | None = 4,
-) -> DataFrame:
-    """streaming df → memory sink under Trigger.AvailableNow; returns the
-    sink contents once the replay has drained.
+# Stateful operators keep (and checkpoint) one state store per shuffle
+# partition per micro-batch: at the batch engine's partition count (32
+# here) the replays spent seconds on tiny state-file I/O. Partitions are
+# the horizontal-scale knob for streaming STATE; right-sizing them to
+# the replay's volume is what a production job does.
+_STATE_PARTITIONS = 4
 
-    state_partitions: stateful operators keep (and checkpoint) one state
-    store per shuffle partition per micro-batch — at the batch engine's
-    partition count (32 here) the replays spent seconds on tiny
-    state-file I/O. Partitions are the horizontal-scale knob for
-    streaming STATE; right-sizing them to the replay's volume is what a
-    production job does. Scoped: the conf is set before the stream
-    starts (a stream pins its count at start) and restored after.
+# serializes replays within this process: each drain scopes the
+# session-global shuffle-partition conf (see _drain)
+_REPLAY_LOCK = threading.Lock()
+
+
+def _drain(
+    spark: SparkSession, out: DataFrame, name: str,
+    output_mode: str = "append", foreach_batch=None,
+) -> DataFrame | None:
+    """Run the streaming frame ``out`` under Trigger.AvailableNow until
+    the replay has drained. The sink is a memory table, whose contents
+    are returned, or, given ``foreach_batch(batch_df, batch_id)``,
+    foreachBatch (returns None: the function's output holds the result).
+
+    The checkpoint is a fresh scratch dir per run, removed once the
+    query has terminated: the sink already holds the result, and a
+    checkpoint reused against a fresh sink would silently skip
+    already-committed batches.
+
+    The shuffle partition count is set to _STATE_PARTITIONS before the
+    stream starts (a stream pins its count at start) and restored after.
 
     CONSTRAINT (r6 advice): spark.sql.shuffle.partitions is
     SESSION-global, so for the duration of the drain any batch query
     issued concurrently on the same SparkSession from another thread
-    would silently plan with `state_partitions` shuffles. _REPLAY_LOCK
+    would silently plan with _STATE_PARTITIONS shuffles. _REPLAY_LOCK
     serializes in-process replays (the exposure a parallelized
     bench/test harness actually has); a harness that interleaves its
     OWN batch queries with a replay must run them on a separate session
     (spark.newSession()) — a stream's lineage is bound to the session
     it was built on, so the override cannot be moved off this one."""
-    sink = f"gdxps_sink_{name}_{uuid.uuid4().hex[:8]}"
+    writer = out.writeStream.outputMode(output_mode)
+    if foreach_batch is None:
+        sink = f"gdxps_sink_{name}_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(sink)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    ckpt = scratch_dir(f"ckpt_{name}")
     with _REPLAY_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(state_partitions)
-            )
+        spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
         try:
-            q = (
-                out.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(sink)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", _replay_dir(f"ckpt_{name}"))
-                .start()
-            )
-            q.awaitTermination()
+            writer.trigger(availableNow=True).option(
+                "checkpointLocation", ckpt
+            ).start().awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
-
-
-def _run_stream(spark: SparkSession, src_dir: str, build, name: str) -> DataFrame:
-    """readStream(src_dir) → build(stream_df) → memory sink, AvailableNow
-    with one file per micro-batch; returns the sink contents."""
-    configure(spark)
-    return _drain_to_memory(spark, build(_read_stream(spark, src_dir)), name)
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return None if foreach_batch is not None else spark.table(sink)
 
 
 def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,21 +229,18 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             late,
         ]
 
-    src = _cached_fixture("late", sf_dir, 3, build_dfs)
-
-    def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type",
-                "n_events",
-            )
+    out = (
+        _read_stream(spark, _cached_fixture("late", sf_dir, 3, build_dfs))
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type",
+            "n_events",
         )
-
-    return _run_stream(spark, src, build, "late")
+    )
+    return _drain(spark, out, "late")
 
 
 _DEDUP_ORACLE = """
@@ -280,22 +280,37 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = _raw_events(spark, sf_dir)
         return [raw, raw.filter(F.col("event_id") % 53 == 0)]
 
-    src = _cached_fixture("dedup", sf_dir, 2, build_dfs)
-
-    def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "24 hours")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .groupBy(F.window("ts", "24 hours").alias("w"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type",
-                "n_events",
-            )
+    out = (
+        _read_stream(spark, _cached_fixture("dedup", sf_dir, 2, build_dfs))
+        .withWatermark("ts", "24 hours")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .groupBy(F.window("ts", "24 hours").alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type",
+            "n_events",
         )
+    )
+    return _drain(spark, out, "dedup")
 
-    return _run_stream(spark, src, build, "dedup")
+
+def _running_counts(spark: SparkSession, sf_dir: str, name: str, counter) -> DataFrame:
+    """The per-user running count both stateful replays compute:
+    ``counter(grouped)`` maps the replay grouped by user_id to an
+    update-mode stream of (user_id, running_count) emissions, over one
+    shared fixture (even event_ids, then odd). The per-batch emissions
+    accumulate in the sink; the final count is their max per user."""
+    def build_dfs():
+        raw = _raw_events(spark, sf_dir)
+        return [raw.filter(F.col("event_id") % 2 == k) for k in (0, 1)]
+
+    src = _cached_fixture("stateful", sf_dir, 2, build_dfs)
+    grouped = _read_stream(spark, src).groupBy("user_id")
+    sink = _drain(spark, counter(grouped), name, output_mode="update")
+    return sink.groupBy("user_id").agg(
+        F.max("running_count").alias("running_count")
+    )
 
 
 @register(
@@ -320,15 +335,6 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def build_dfs():
-        raw = _raw_events(spark, sf_dir)
-        return [
-            raw.filter(F.col("event_id") % 2 == 0),
-            raw.filter(F.col("event_id") % 2 == 1),
-        ]
-
-    src = _cached_fixture("stateful", sf_dir, 2, build_dfs)
-
     def update(key, pdf_iter, state: GroupState):
         count = state.get[0] if state.exists else 0
         for pdf in pdf_iter:
@@ -336,24 +342,15 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((count,))
         yield pd.DataFrame({"user_id": [key[0]], "running_count": [count]})
 
-    configure(spark)
-    stream = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id BIGINT, running_count BIGINT",
-        stateStructType="count BIGINT",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = _drain_to_memory(spark, out, "stateful", output_mode="update")
-    # keep the final (max) running count per user — the per-batch emissions
-    # accumulate in the sink
-    return sink.groupBy("user_id").agg(
-        F.max("running_count").alias("running_count")
+    return _running_counts(
+        spark, sf_dir, "stateful",
+        lambda grouped: grouped.applyInPandasWithState(
+            update,
+            outputStructType="user_id BIGINT, running_count BIGINT",
+            stateStructType="count BIGINT",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
     )
 
 
@@ -421,14 +418,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     src = _cached_fixture("ssjoin", sf_dir, n_files, build_dfs)
-    configure(spark)
-    ev = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-        .withColumn("ts", _ts_col())
-        .withWatermark("ts", "2 hours")
-    )
+    ev = _read_stream(spark, src, 2).withWatermark("ts", "2 hours")
     p = ev.filter(F.col("event_type") == "purchase").alias("p")
     s = ev.filter(F.col("event_type") == "signup").alias("s")
     joined = p.join(
@@ -441,10 +431,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s.event_id").alias("signup_id"),
         F.col("p.user_id").alias("user_id"),
     )
-    # _drain_to_memory scopes state partitions to the replay volume
-    # (measured on this join: 13 s → 4.6 s, identical result — see the
-    # state_partitions note there)
-    return _drain_to_memory(spark, joined, "ssjoin")
+    # _drain scopes state partitions to the replay volume (measured on
+    # this join: 13 s → 4.6 s, identical result — see _STATE_PARTITIONS)
+    return _drain(spark, joined, "ssjoin")
 
 
 def stream_events_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,19 +450,8 @@ def stream_events_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    sink = f"gdxps_sink_counts_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.groupBy("event_type")
-        .agg(F.count("*").alias("n_events"))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _replay_dir("ckpt_counts"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    counts = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
+    return _drain(spark, counts, "counts", output_mode="complete")
 
 
 # transformWithStateInPandas (the Spark 4 typed-state successor to
@@ -503,12 +481,6 @@ def stream_stateful_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    raw = _raw_events(spark, sf_dir)
-    half = raw.filter(F.col("event_id") % 2 == 0)
-    rest = raw.filter(F.col("event_id") % 2 == 1)
-    src = _replay_dir("typed")
-    _write_batch_files([half, rest], src)
-
     class RunningCount(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._count = handle.getValueState("count", "count BIGINT")
@@ -523,31 +495,15 @@ def stream_stateful_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    configure(spark)
-    stream = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    sink = f"gdxps_sink_typed_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.groupBy("user_id")
-        .transformWithStateInPandas(
+    return _running_counts(
+        spark, sf_dir, "typed",
+        lambda grouped: grouped.transformWithStateInPandas(
             RunningCount(),
             outputStructType="user_id BIGINT, running_count BIGINT",
             outputMode="Update",
             timeMode="None",
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _replay_dir("ckpt_typed"))
-        .start()
+        ),
     )
-    q.awaitTermination()
-    out = spark.table(sink)
-    return out.groupBy("user_id").agg(F.max("running_count").alias("running_count"))
 
 
 if _has_protobuf():  # pragma: no cover - env-gated (no protobuf here)
@@ -624,26 +580,9 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [raw.filter(F.col("event_id") % 3 == k) for k in range(3)]
 
     src = _cached_fixture("febatch", sf_dir, 3, build_dfs)
-    run = uuid.uuid4().hex[:8]
-    acc = _replay_dir(f"febatch_acc_{run}")
-    merge = _febatch_merge_fn(acc)
-
-    with _REPLAY_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                _read_stream(spark, src)
-                .writeStream.foreachBatch(merge)
-                .trigger(availableNow=True)
-                .option(
-                    "checkpointLocation", _replay_dir(f"ckpt_febatch_{run}")
-                )
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    acc = scratch_dir("febatch_acc")
+    _drain(spark, _read_stream(spark, src), "febatch",
+           foreach_batch=_febatch_merge_fn(acc))
     return (
         spark.read.parquet(acc)
         .drop("batch_id")
@@ -690,7 +629,7 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last data batch without running a no-data eviction batch — so
     the last flush file must arrive in a batch strictly after an
     earlier flush already advanced the watermark past the horizon
-    (with maxFilesPerTrigger=3 and 4+3 files: (f0,f1,f2),(f3,fl1,fl2),
+    (with 3 files per trigger and 4+3 files: (f0,f1,f2),(f3,fl1,fl2),
     (fl3) — the final batch evicts with fl2's watermark). The
     losslessness argument for the inner join (ts-ordered slices; see
     stream_stream_join) covers matched rows; the flush barrier covers
@@ -737,19 +676,12 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return slices + flushes
 
     src = _cached_fixture("souterjoin_v3", sf_dir, n_files + 3, build_dfs)
-    configure(spark)
-    ev = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        # 3 files/trigger over 4+3 files → (f0,f1,f2),(f3,fl1,fl2),(fl3):
-        # still a genuine multi-batch stateful replay (join state crosses
-        # two batch boundaries) and the last batch still evicts with a
-        # flush-advanced watermark, at 3 micro-batch checkpoints instead
-        # of 4 (per-batch state checkpointing is the replay's fixed cost)
-        .option("maxFilesPerTrigger", "3")
-        .parquet(src)
-        .withColumn("ts", _ts_col())
-        .withWatermark("ts", "2 hours")
-    )
+    # 3 files/trigger over 4+3 files → (f0,f1,f2),(f3,fl1,fl2),(fl3):
+    # still a genuine multi-batch stateful replay (join state crosses two
+    # batch boundaries) and the last batch still evicts with a
+    # flush-advanced watermark, at 3 micro-batch checkpoints instead of 4
+    # (per-batch state checkpointing is the replay's fixed cost)
+    ev = _read_stream(spark, src, 3).withWatermark("ts", "2 hours")
     p = ev.filter(F.col("event_type") == "purchase").alias("p")
     s = ev.filter(F.col("event_type") == "signup").alias("s")
     joined = p.join(
@@ -769,6 +701,6 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-silencing the sentinels it exists to tolerate. The sentinels
     # are join-inert for real rows by construction (10 days past the
     # horizon; they only match each other, eagerly, as inner pairs).
-    return _drain_to_memory(spark, joined, "souterjoin").filter(
+    return _drain(spark, joined, "souterjoin").filter(
         F.col("user_id") >= 0
     )

@@ -153,3 +153,30 @@ def test_every_artifact_publishes_through_build_once():
         calls.visit(ast.parse(path.read_text()))
     assert calls.publish == ["build_once"]
     assert len(calls.kinds) == len(set(calls.kinds)) >= 6, calls.kinds
+
+
+def test_scratch_root_is_removed_at_exit(tmp_path):
+    """Per-call scratch dirs live under one per-process root that is
+    removed when the interpreter exits: a child interpreter makes two
+    scratch dirs, writes a file, exits, and the root is gone."""
+    import subprocess
+    import sys
+
+    child = (
+        "import os\n"
+        "from gdxpy_spark.operators._util import scratch_dir\n"
+        "a, b = scratch_dir('csv'), scratch_dir('ckpt_x')\n"
+        "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
+        "open(os.path.join(a, 'part-0'), 'w').write('x')\n"
+        "print(os.path.dirname(a))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=path)
+    out = subprocess.run(
+        [sys.executable, "-c", child], env=env, cwd=repo,
+        capture_output=True, text=True, check=True, timeout=120,
+    )
+    root = out.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path), root
+    assert not os.path.exists(root)

@@ -12,9 +12,9 @@ from tests.conftest import SF_DIR, assert_frames_match
 
 ALL = registry.all_queries()
 ORACLE_NAMES = sorted(n for n, q in ALL.items() if q.oracle)
+# every registered stream replay query has an oracle, so it runs in
+# test_oracle_parity; test_streaming.py adds its semantic checks
 WEAK_NAMES = sorted(n for n, q in ALL.items() if q.oracle is None)
-# streaming replay queries are exercised in test_streaming.py (slow)
-WEAK_SMOKE = [n for n in WEAK_NAMES if not n.startswith("stream_")]
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
@@ -48,7 +48,7 @@ def test_oracle_no_promoted_types(duck):
     assert not bad, f"promotion-prone oracle column types: {bad}"
 
 
-@pytest.mark.parametrize("name", WEAK_SMOKE)
+@pytest.mark.parametrize("name", WEAK_NAMES)
 def test_weak_smoke(spark, name):
     q = ALL[name]
     df = q.fn(spark, SF_DIR)

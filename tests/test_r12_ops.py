@@ -423,8 +423,8 @@ def test_embedding_matrix_rejects_what_the_driver_cannot_fit():
 
 
 def test_kmeans_fit_logs_path(spark, monkeypatch, caplog):
-    """One DEBUG record per fit on the engine's logger with n, k and the
-    path taken."""
+    """One DEBUG record per fit on the engine's logger with n, k, the
+    path taken and whether the centroids came from the memo."""
     import logging
 
     from gdxpy_spark.operators import llm
@@ -440,12 +440,12 @@ def test_kmeans_fit_logs_path(spark, monkeypatch, caplog):
         ]
 
     llm._kmeans_fit(spark, SF_SMALL, k=4)
-    assert messages() == [f"kmeans_fit: {n} vectors, k=4, driver path"]
+    assert messages() == [f"kmeans_fit: {n} vectors, k=4, driver path, memo miss"]
     caplog.clear()
     monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", 8)
     monkeypatch.setattr(llm, "_lloyd_rounds", lambda spark, c, *a: c)
     llm._kmeans_fit(spark, SF_SMALL, k=4)
-    assert messages() == ["kmeans_fit: over 8 vectors, k=4, spark path"]
+    assert messages() == ["kmeans_fit: over 8 vectors, k=4, spark path, memo hit"]
 
 
 def test_super_quantizer_sql_mirror_property(duck):
@@ -610,6 +610,30 @@ def test_ivf_probe_cells_logs_super_memo(spark, monkeypatch, caplog):
     ] == [
         "super_quantize: k=16, g=4, memo miss",
         "super_quantize: k=16, g=4, memo hit",
+    ]
+
+
+def test_pq_and_bpe_memos_log_hit_and_miss(spark, monkeypatch, caplog):
+    """One DEBUG record per PQ codebook and BPE merge lookup on the
+    engine's logger, saying whether the memo served it."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.operators.llm")
+    monkeypatch.setattr(llm, "_PQ_MEMO", {})
+    monkeypatch.setattr(llm, "_BPE_MERGE_MEMO", {})
+    for _ in range(2):
+        llm._pq_codebooks(spark, SF_SMALL)
+        llm._bpe_train_merges(spark, SF_SMALL)
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == llm.log.name and r.getMessage().startswith(("pq_", "bpe_"))
+    ] == [
+        "pq_codebooks: m=4, k=16, memo miss",
+        "bpe_train_merges: memo miss",
+        "pq_codebooks: m=4, k=16, memo hit",
+        "bpe_train_merges: memo hit",
     ]
 
 

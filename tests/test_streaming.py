@@ -219,3 +219,63 @@ def test_foreach_batch_merge_is_idempotent_under_batch_retry(spark, tmp_path):
         .collect()
     }
     assert served == {"click": (3, 82), "view": (1, 4), "scroll": (1, 16)}
+
+
+def test_one_drain_and_one_source_reader():
+    """Every replay starts through one drain and reads its fixture
+    through one source reader: under gdxpy_spark/ there is exactly one
+    `.writeStream` and one `awaitTermination(` call, both in
+    replay._drain, and one maxFilesPerTrigger option, in
+    replay._read_stream. Spark-free (AST scan)."""
+    import ast
+    import pathlib
+
+    import gdxpy_spark
+
+    class Sites(ast.NodeVisitor):
+        def __init__(self):
+            self.stack, self.found = [], []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Attribute(self, node):
+            if node.attr in ("writeStream", "awaitTermination"):
+                self.found.append((node.attr, self.stack[-1] if self.stack else "<module>"))
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if node.value == "maxFilesPerTrigger":
+                self.found.append((node.value, self.stack[-1] if self.stack else "<module>"))
+
+    sites = Sites()
+    root = pathlib.Path(gdxpy_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        sites.visit(ast.parse(path.read_text()))
+    assert sorted(sites.found) == [
+        ("awaitTermination", "_drain"),
+        ("maxFilesPerTrigger", "_read_stream"),
+        ("writeStream", "_drain"),
+    ]
+
+
+def test_drain_leaves_no_checkpoint(spark, duck, tmp_path, monkeypatch):
+    """The drain removes its checkpoint once the replay has ended, and
+    the returned frames do not need it: with the temp dir (and so the
+    per-process scratch root) under tmp_path, a memory-sink replay and
+    a foreachBatch replay both still collect to their oracle rows and
+    no checkpoint dir is left."""
+    import tempfile
+
+    from gdxpy_spark.operators import _util
+    from tests.conftest import assert_frames_match
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(_util, "_scratch_root", None)
+    for name in ("stream_dedup", "stream_foreach_batch"):
+        q = ALL[name]
+        assert_frames_match(q.fn(spark, SF_DIR), duck.execute(q.oracle), name=name)
+    assert [p for p in tmp_path.rglob("ckpt_*")] == []
+    assert list(tmp_path.glob("gdxpy_spark_scratch_*/febatch_acc_*"))

@@ -1641,25 +1641,31 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     return build_once(_ivf_index_dir(sf_dir), write)
 
 
+def _row_norms(x):
+    """√Σv² of each row of ``x``, folded in coordinate order from 0.0
+    like _with_norm."""
+    import numpy as np
+
+    sq = np.zeros(len(x))
+    for p in range(x.shape[1]):
+        sq += x[:, p] * x[:, p]
+    return np.sqrt(sq)
+
+
 def _write_ivf_index_local(build: str, head, x, fit) -> None:
     """_ensure_ivf_index's driver-path write of the corpus ``head``
     (Arrow vec_id, embedding; ``x`` its float64 matrix) under ``fit``:
-    the layout Spark writes, with pyarrow. norm is √Σv² folded in
-    coordinate order like _with_norm; cells/ is hive-partitioned by
-    cell; each part gets a _SUCCESS marker."""
+    the layout Spark writes, with pyarrow. norm is _row_norms; cells/
+    is hive-partitioned by cell; each part gets a _SUCCESS marker."""
     import os
 
-    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     asg, cents = fit
     # the driver fit's assignment is a LocalTableScan: no Spark job
     cell_of = dict(asg.select("vec_id", "cell").collect())
-    sq = np.zeros(len(x))
-    for p in range(x.shape[1]):
-        sq += x[:, p] * x[:, p]
-    cells = head.append_column("norm", pa.array(np.sqrt(sq))).append_column(
+    cells = head.append_column("norm", pa.array(_row_norms(x))).append_column(
         "cell",
         pa.array([cell_of[v] for v in head.column("vec_id").to_pylist()],
                  pa.int32()),
@@ -1698,6 +1704,23 @@ def _centers_fingerprint(cells: list, cents: list) -> str:
         h.update(struct.pack("<q", int(c)))
         h.update(struct.pack(f"<{len(vec)}d", *vec))
     return h.hexdigest()
+
+
+def _super_groups(cell_ids: list, cents: list) -> tuple[list, list]:
+    """(grp_of, super-centers) of the coarse centroids ``cents`` (in
+    ``cell_ids`` order) through _SUPER_MEMO, _super_quantize on a miss;
+    logs k, g and the memo hit or miss. Both probes (_ivf_probe_cells,
+    _probe_local) get their groups here."""
+    sfp = _centers_fingerprint(cell_ids, cents)
+    memo_ok, memo_hit = _memo_get(_SUPER_MEMO, sfp)
+    if memo_ok:
+        grp_of, scents = memo_hit
+    else:
+        grp_of, scents = _super_quantize(cents, cell_ids=cell_ids)
+        _memo_put(_SUPER_MEMO, sfp, (grp_of, scents), _SUPER_MEMO_CAP)
+    log.debug("super_quantize: k=%d, g=%d, memo %s",
+              len(cents), len(scents), "hit" if memo_ok else "miss")
+    return grp_of, scents
 
 
 def _ivf_probe_cells(
@@ -1744,15 +1767,7 @@ def _ivf_probe_cells(
     k = len(crows)
     cents = [[float(x) for x in r["center"]] for r in crows]
     cell_ids = [int(r["cell"]) for r in crows]
-    sfp = _centers_fingerprint(cell_ids, cents)
-    memo_ok, memo_hit = _memo_get(_SUPER_MEMO, sfp)
-    if memo_ok:
-        grp_of, scents = memo_hit
-    else:
-        grp_of, scents = _super_quantize(cents, cell_ids=cell_ids)
-        _memo_put(_SUPER_MEMO, sfp, (grp_of, scents), _SUPER_MEMO_CAP)
-    log.debug("super_quantize: k=%d, g=%d, memo %s",
-              k, len(scents), "hit" if memo_ok else "miss")
+    grp_of, scents = _super_groups(cell_ids, cents)
     supers = spark.createDataFrame(
         [(j, sc) for j, sc in enumerate(scents)],
         "grp INT, scenter ARRAY<DOUBLE>",
@@ -1786,11 +1801,14 @@ def _ivf_probe_cells(
 
 
 def _ivf_candidates_top1(indexed: DataFrame, centers: DataFrame) -> DataFrame:
-    """The IVF query tail shared by llm_ann_ivf (freshly fitted index)
-    and llm_ann_ivf_served (persisted index): probe each vector's 2
-    nearest centroids, equi-join probed cells against the index side,
-    exact cosine, deterministic top-1 per query. `indexed` must carry
-    (vec_id, embedding, norm, cell).
+    """The IVF top-1 query tail's Spark plan, shared by llm_ann_ivf and
+    llm_ann_ivf_checked (freshly fitted index) and llm_ann_ivf_served
+    (persisted index) above _LLOYD_DRIVER_MAX_VECTORS; below it
+    _ivf_tail_local computes the same rows on the driver (_ivf_tail
+    dispatches). Probe each vector's 2 nearest centroids, equi-join
+    probed cells against the index side, exact cosine, deterministic
+    top-1 per query. `indexed` must carry (vec_id, embedding, norm,
+    cell).
 
     The QUERY-side projection is managed_cache'd (r13): the narrowed
     probe reads it three times (level-1 rank source + two embedding
@@ -1849,15 +1867,244 @@ def _ivf_index_frames(
     return indexed, centers
 
 
-def _ivf_fitted_top1(spark: SparkSession, sf_dir: str, fit) -> DataFrame:
+def _ivf_fitted_top1(
+    spark: SparkSession, sf_dir: str, fit, corpus
+) -> DataFrame:
     """The IVF query body over a quantizer fitted in this call —
     llm_ann_ivf (k=√n, sampled fit) and llm_ann_ivf_checked (k=16):
-    the cached index frame, then the probe/candidate/top-1 tail shared
-    with the served op (test_ivf_served_equals_rebuild_variant pins
-    served and rebuild EQUAL; a divergent copy would break that
-    silently)."""
-    indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
-    return _ivf_candidates_top1(managed_cache(indexed), centers)
+    the top-1 tail shared with the served op
+    (test_ivf_served_equals_rebuild_variant pins served and rebuild
+    EQUAL; a divergent copy would break that silently). ``corpus`` is
+    the _lloyd_corpus result the fit read: with its matrix the tail
+    runs on the driver (_ivf_tail_local, index cells = the fit's own
+    argmin), else over the cached index frame in Spark."""
+    local = corpus[1]
+    index = None
+    if local is not None:
+        head, x = local
+        cents = fit[1]
+        index = (head.column("vec_id"), x, _row_norms(x), None,
+                 list(range(len(cents))), cents)
+
+    def spark_tail():
+        indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
+        return _ivf_candidates_top1(managed_cache(indexed), centers)
+
+    n = None if local is None else len(local[1])
+    return _ivf_tail(spark, "top1", n, index, spark_tail)
+
+
+def _ivf_persisted_tail(
+    spark: SparkSession, sf_dir: str, reducer: str, spark_tail
+) -> DataFrame:
+    """The tail of the ops served from the persisted index
+    (_ensure_ivf_index; built here if missing, never refitted): the
+    index read with pyarrow for the driver path, else
+    ``spark_tail(cells, centers)`` over the two layouts read by
+    Spark."""
+    import os
+
+    idx = _ensure_ivf_index(spark, sf_dir)
+    n, index = _read_ivf_index_local(idx)
+
+    def read(part: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(idx, part))
+
+    return _ivf_tail(
+        spark, reducer, n, index, lambda: spark_tail(read("cells"), read("centers"))
+    )
+
+
+def _ivf_tail(spark: SparkSession, reducer: str, n, index, spark_tail):
+    """The one dispatch of the exact-cosine IVF query tail (probe →
+    within-cell candidates → exact cosine → ``reducer``: "top1",
+    "range" or "tau_cc"). ``index`` is _ivf_tail_local's input when the
+    index is at most _LLOYD_DRIVER_MAX_VECTORS vectors that form a
+    matrix, else None and ``spark_tail()`` builds the Spark plan. ``n``
+    is the vector count when known without a job."""
+    if index is None:
+        size = n if n is not None else f"over {_LLOYD_DRIVER_MAX_VECTORS}"
+        log.debug("ivf_tail: %s vectors, %s, spark path", size, reducer)
+        return spark_tail()
+    log.debug("ivf_tail: %d vectors, %s, driver path", len(index[1]), reducer)
+    return _ivf_tail_local(spark, reducer, *index)
+
+
+def _read_ivf_index_local(idx: str):
+    """(n, index) of the persisted index at ``idx``: n is the cells/
+    row count from parquet metadata; index is _ivf_tail_local's input
+    read with pyarrow when n is within _LLOYD_DRIVER_MAX_VECTORS and
+    the embeddings form a matrix, else None. No Spark job either
+    way."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    cells = ds.dataset(
+        os.path.join(idx, "cells"),
+        format="parquet",
+        partitioning=ds.partitioning(
+            pa.schema([("cell", pa.int32())]), flavor="hive"
+        ),
+    )
+    n = cells.count_rows()
+    if n > _LLOYD_DRIVER_MAX_VECTORS:
+        return n, None
+    t = cells.to_table(columns=["vec_id", "embedding", "norm", "cell"])
+    x = _embedding_matrix(t.column("embedding"))
+    if x is None:
+        return n, None
+    c = pq.read_table(os.path.join(idx, "centers")).sort_by("cell")
+    return n, (
+        t.column("vec_id"), x, t.column("norm").to_numpy(),
+        t.column("cell").to_numpy(), c.column("cell").to_pylist(),
+        c.column("center").to_pylist(),
+    )
+
+
+def _probe_local(x, cell_ids, cents, nprobe: int = 2, nprobe_super: int = 2):
+    """The driver twin of _ivf_probe_cells for the rows of ``x``
+    against the centroids ``cents`` (in ascending ``cell_ids`` order):
+    level 1 keeps each row's ``nprobe_super`` nearest super-groups by
+    (sd2, grp), level 2 its ``nprobe`` nearest member cells of those
+    groups by (d2, cell), both distances from _d2_blocks. Returns the
+    probes as (rows, cells), row-major, and each row's nearest cell
+    over all centroids (_nearest_local's argmin)."""
+    import numpy as np
+
+    grp_of, scents = _super_groups(cell_ids, cents)
+    grp_of = np.asarray(grp_of)
+    top_g = np.concatenate([
+        np.argsort(sd2, axis=1, kind="stable")[:, :nprobe_super]
+        for _lo, sd2 in _d2_blocks(x, scents)
+    ])
+    cell_ids = np.asarray(cell_ids, dtype=np.int32)
+    near = np.empty(len(x), dtype=np.int32)
+    rows, cells = [], []
+    for lo, d2 in _d2_blocks(x, cents):
+        m = len(d2)
+        near[lo:lo + m] = cell_ids[d2.argmin(axis=1)]
+        member = (grp_of == top_g[lo:lo + m, :, None]).any(axis=1)
+        pick = np.argsort(np.where(member, d2, np.inf), axis=1,
+                          kind="stable")[:, :nprobe]
+        ok = np.take_along_axis(member, pick, axis=1)
+        rows.append(np.broadcast_to(np.arange(lo, lo + m)[:, None], pick.shape)[ok])
+        cells.append(cell_ids[pick[ok]])
+    return np.concatenate(rows), np.concatenate(cells), near
+
+
+# Candidate pairs per _cell_pairs block: bounds the driver tail's
+# temporaries (a few 8 MiB arrays) at any corpus size below the cut.
+_TAIL_BLOCK_PAIRS = 1 << 20
+
+
+def _cell_pairs(q_rows, q_cells, cell, cap: int = None):
+    """lsh_candidate_pairs' bucket join on the driver, vectorised:
+    yields (qi, xi) row-index blocks in which each probe (q_rows[j],
+    q_cells[j]) meets every row whose top-1 ``cell`` it probes, itself
+    excluded. A block holds whole queries and about _TAIL_BLOCK_PAIRS
+    pairs. With
+    ``cap``, a cell of more than ``cap`` rows is represented by its
+    first row (the min id: rows are in id order), and a first block
+    carries that hub's back-edges to its members."""
+    import numpy as np
+
+    order = np.argsort(cell, kind="stable")
+    sc = cell[order]
+    if cap is not None:
+        _u, start, cnt = np.unique(sc, return_index=True, return_counts=True)
+        first = np.zeros(len(sc), dtype=bool)
+        first[start] = True
+        back = np.repeat(cnt > cap, cnt) & ~first
+        yield np.repeat(order[start], cnt)[back], order[back]
+        order, sc = order[~back], sc[~back]
+    ucell, start, cnt = np.unique(sc, return_index=True, return_counts=True)
+    pos = np.minimum(np.searchsorted(ucell, q_cells), len(ucell) - 1)
+    c = np.where(ucell[pos] == q_cells, cnt[pos], 0)
+    before = np.cumsum(c) - c
+    qstart = np.flatnonzero(np.r_[True, q_rows[1:] != q_rows[:-1]])
+    marks = np.arange(0, before[-1] + c[-1], _TAIL_BLOCK_PAIRS)
+    cuts = qstart[np.unique(
+        np.r_[0, np.searchsorted(before[qstart], marks, side="right") - 1]
+    )]
+    for a, b in zip(cuts, np.r_[cuts[1:], len(q_rows)]):
+        cb = c[a:b]
+        qi = np.repeat(q_rows[a:b], cb)
+        off = np.arange(len(qi)) - np.repeat(np.cumsum(cb) - cb, cb)
+        xi = order[np.repeat(start[pos[a:b]], cb) + off]
+        keep = qi != xi
+        yield qi[keep], xi[keep]
+
+
+def _ivf_tail_local(
+    spark: SparkSession, reducer: str, ids, x, norm, cell, cell_ids, cents
+) -> DataFrame:
+    """The exact-cosine IVF query tail on the driver, as one Arrow
+    table (a LocalTableScan, no Spark job). The index: Arrow ``ids``
+    with their float64 embedding matrix ``x``, ``norm``s and top-1
+    ``cell``s (None: the probe's nearest cell, which below the cut is
+    the fit's own assignment); the centroids ``cents`` in ascending
+    ``cell_ids`` order. Every index vector queries it:
+
+    - probe: _probe_local (the two-level probe of _ivf_probe_cells);
+    - candidates: _cell_pairs, with the cap-2048 representative
+      chaining of _semdedup_pairs for "tau_cc";
+    - cosine: _dot's left fold from 0.0 in coordinate order over the
+      exact float32 products, / (norm_a · norm_b);
+    - reducer: "top1" keeps each query's best by (cos desc, nn_id asc)
+      and "range" every pair at cos ≥ 0.4, both as (vec_id, nn_id,
+      cos_sim) rounded like F.round(·, 4) + 0.0; "tau_cc" keeps pairs
+      at cos ≥ 0.4 and returns (dup_id, kept_id) of their components
+      (_min_id_components), roots omitted.
+
+    Every step is the Spark tail's arithmetic in its order, so results
+    are bit-identical (pinned against the DuckDB oracles on both
+    paths)."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = ids.type
+    ids = ids.to_numpy()
+    o = np.argsort(ids, kind="stable")
+    ids, x, norm = ids[o], x[o], np.asarray(norm)[o]
+    q_rows, q_cells, near = _probe_local(x, cell_ids, cents)
+    cell = near if cell is None else np.asarray(cell)[o]
+    xt = x.T.copy()
+    out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    cap = 2048 if reducer == "tau_cc" else None
+    for qi, xi in _cell_pairs(q_rows, q_cells, cell, cap):
+        dot = np.zeros(len(qi))
+        for v in xt:
+            dot += v[qi] * v[xi]
+        cos = dot / (norm[qi] * norm[xi])
+        if reducer == "top1":
+            # Spark's descending order puts NaN first
+            rank = np.lexsort((xi, np.where(np.isnan(cos), -np.inf, -cos), qi))
+            first = np.ones(len(rank), dtype=bool)
+            first[1:] = qi[rank[1:]] != qi[rank[:-1]]
+            keep = rank[first]
+        else:
+            keep = np.flatnonzero(cos >= 0.4)
+        out.append((qi[keep], xi[keep], cos[keep]))
+    qi, xi, cos = (np.concatenate(part) for part in zip(*out))
+    if reducer == "tau_cc":
+        comp = _min_id_components(ids[qi].tolist(), ids[xi].tolist())
+        dup = [d for d, k in comp.items() if d != k]
+        table = pa.table({
+            "dup_id": pa.array(dup, t),
+            "kept_id": pa.array([comp[d] for d in dup], t),
+        })
+    else:
+        table = pa.table({
+            "vec_id": pa.array(ids[qi], t),
+            "nn_id": pa.array(ids[xi], t),
+            "cos_sim": pa.array(
+                [_spark_round(c, 4) + 0.0 for c in cos.tolist()], pa.float64()
+            ),
+        })
+    return spark.createDataFrame(table)
 
 
 # Distinct oriented edges up to which connected_components resolves the
@@ -1868,6 +2115,29 @@ def _ivf_fitted_top1(spark: SparkSession, sf_dir: str, fit) -> DataFrame:
 # is ~3 s and a few MB of Arrow. It also keeps llm_dedup_clusters
 # (2.16M edges at sf0.1) on the oracle-checked Spark path.
 _CC_DRIVER_MAX_EDGES = 1 << 18
+
+
+def _min_id_components(us, vs) -> dict:
+    """{node: the min node of its component} over the undirected edges
+    (us[i], vs[i]): path-halving union-find whose root is the smaller
+    id. The driver half of connected_components and of the τ+CC IVF
+    tail (_ivf_tail_local)."""
+    parent: dict = {}
+
+    def find(x):
+        # path halving: every visited node skips to its grandparent
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(us, vs):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
 
 
 def connected_components(
@@ -1905,27 +2175,14 @@ def connected_components(
     if head.num_rows > _CC_DRIVER_MAX_EDGES:
         return _star_contraction(spark, e, max_iters)
     log.debug("connected_components: %d edges, driver path", head.num_rows)
-    parent: dict = {}
-
-    def find(x):
-        # path halving: every visited node skips to its grandparent
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in zip(head.column("u").to_pylist(), head.column("v").to_pylist()):
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
-    ids = list(parent)
+    comp = _min_id_components(
+        head.column("u").to_pylist(), head.column("v").to_pylist()
+    )
     t = head.schema.field("u").type
     table = pa.table(
         {
-            "doc_id": pa.array(ids, type=t),
-            "component_id": pa.array([find(x) for x in ids], type=t),
+            "doc_id": pa.array(list(comp), type=t),
+            "component_id": pa.array(list(comp.values()), type=t),
         }
     )
     dt = e.schema["u"].dataType.simpleString()
@@ -4708,7 +4965,7 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical strategy (_kmeans_fit): a corpus of at most
     _LLOYD_DRIVER_MAX_VECTORS vectors is read once as Arrow and fitted
     and assigned on the driver in numpy (_lloyd_local, the same
-    coordinate-order Σ(v−c)², lowest-cell argmin and _round9 means),
+    coordinate-order Σ(v−c)², lowest-cell argmin and rounded means),
     because six Spark rounds cost a fixed job floor that dwarfs the
     data there; the assignment comes back as a LocalTableScan. Above
     the cut each Spark round's assignment is a k-way broadcast
@@ -4944,22 +5201,19 @@ def _md5_order(ids) -> list:
     return sorted(range(len(keys)), key=keys.__getitem__)
 
 
-def _nearest_local(x, cents):
-    """The driver twin of _kmeans_assign's join path: each row of ``x``
-    → (cell int32, d2 float64). d2 is Σ(v−c)² summed in coordinate
-    order, as the join's per-(vec_id, cell) sum sees the posexploded
-    rows, and the argmin takes the first, i.e. lowest, cell. Rows go in
-    blocks, coordinate-major, so the two (rows × k) temporaries stay
-    0.5 MiB (cache-resident) at any k. Also the final assignment of
-    the super-quantizer (_super_quantize), with centroids as rows."""
+def _d2_blocks(x, cents):
+    """The driver's one distance kernel: yields (lo, d2) with d2 the
+    (rows × k) Σ(v−c)² of rows lo.. of ``x`` against ``cents``, summed
+    in coordinate order from 0.0 as Spark's fold and the join's
+    per-(vec_id, cell) sum see it. Rows go in blocks, coordinate-major,
+    so the two (rows × k) temporaries stay 0.5 MiB (cache-resident) at
+    any k."""
     import numpy as np
 
     ct = np.asarray(cents, dtype=np.float64).T.copy()
-    n, k = len(x), ct.shape[1]
-    cell = np.empty(n, dtype=np.int32)
-    d2 = np.empty(n)
+    k = ct.shape[1]
     step = max(1, (1 << 16) // k)
-    for lo in range(0, n, step):
+    for lo in range(0, len(x), step):
         xt = x[lo:lo + step].T.copy()
         acc = np.zeros((xt.shape[1], k))
         diff = np.empty_like(acc)
@@ -4967,9 +5221,22 @@ def _nearest_local(x, cents):
             np.subtract.outer(xp, cp, out=diff)
             np.multiply(diff, diff, out=diff)
             acc += diff
+        yield lo, acc
+
+
+def _nearest_local(x, cents):
+    """The driver twin of _kmeans_assign's join path: each row of ``x``
+    → (cell int32, d2 float64), d2 from _d2_blocks and the argmin the
+    first, i.e. lowest, cell. Also the final assignment of the
+    super-quantizer (_super_quantize), with centroids as rows."""
+    import numpy as np
+
+    cell = np.empty(len(x), dtype=np.int32)
+    d2 = np.empty(len(x))
+    for lo, acc in _d2_blocks(x, cents):
         best = acc.argmin(axis=1)
-        cell[lo:lo + step] = best
-        d2[lo:lo + step] = acc[np.arange(len(acc)), best]
+        cell[lo:lo + len(acc)] = best
+        d2[lo:lo + len(acc)] = acc[np.arange(len(acc)), best]
     return cell, d2
 
 
@@ -4977,10 +5244,10 @@ def _lloyd_local(x, seeds, rounds) -> list:
     """The driver twin of _lloyd_rounds over the training matrix ``x``
     from the ``seeds`` centroids: ``rounds`` times, assign
     (_nearest_local) and replace each non-empty cell's centroid by its
-    member mean, sum/count per coordinate, then _round9 (Spark's
-    F.round). Returns the centroids as lists of floats. Callers:
-    _kmeans_fit below the cut, _pq_codebooks, and _super_quantize over
-    the coarse centroids."""
+    member mean, sum/count per coordinate, then _spark_round at 9
+    decimals (Spark's F.round). Returns the centroids as lists of
+    floats. Callers: _kmeans_fit below the cut, _pq_codebooks, and
+    _super_quantize over the coarse centroids."""
     import numpy as np
 
     c = np.array(seeds, dtype=np.float64)
@@ -4990,7 +5257,7 @@ def _lloyd_local(x, seeds, rounds) -> list:
         np.add.at(sums, cell, x)
         counts = np.bincount(cell, minlength=len(c))
         for j in np.flatnonzero(counts):
-            c[j] = [_round9(v) for v in (sums[j] / counts[j]).tolist()]
+            c[j] = [_spark_round(v, 9) for v in (sums[j] / counts[j]).tolist()]
     return c.tolist()
 
 
@@ -5120,13 +5387,16 @@ def _super_g(k: int) -> int:
     return max(2, math.ceil(math.sqrt(k)))
 
 
-def _round9(x: float) -> float:
-    """Spark F.round semantics on the driver: HALF_UP on the double's
-    shortest repr, 9 decimals (the established cross-engine centroid
-    quantization, cf. the Kneser-Ney micro-nat discipline)."""
+def _spark_round(x: float, scale: int) -> float:
+    """Spark F.round(x, scale) on the driver: HALF_UP on the double's
+    shortest repr. 9 decimals is the established cross-engine centroid
+    quantization (cf. the Kneser-Ney micro-nat discipline); 4 the
+    cosine outputs'."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    return float(Decimal(repr(x)).quantize(Decimal("1E-9"), ROUND_HALF_UP))
+    return float(
+        Decimal(repr(x)).quantize(Decimal(f"1E-{scale}"), ROUND_HALF_UP)
+    )
 
 
 def _super_quantize(cents: list, cell_ids: list = None) -> tuple[list, list]:
@@ -5140,10 +5410,10 @@ def _super_quantize(cents: list, cell_ids: list = None) -> tuple[list, list]:
     Every discipline mirrors _kmeans_rounds_sql, so the DuckDB twin
     (_super_rounds_sql) reproduces it CTE-for-CTE: coordinate-order
     d², argmin tie-break (d2, grp), means accumulated in ascending-cell
-    order and rounded HALF_UP to 9 decimals (_round9), an emptied group
-    keeps its previous center. Residual cross-engine float risk is the
-    accepted knife-edge class documented on _kmeans_rounds_sql. Fewer
-    than g centroids give one group each. Input is metadata (k×d
+    order and rounded HALF_UP to 9 decimals (_spark_round), an emptied
+    group keeps its previous center. Residual cross-engine float risk
+    is the accepted knife-edge class documented on _kmeans_rounds_sql.
+    Fewer than g centroids give one group each. Input is metadata (k×d
     doubles), no job: 4.5 ms at k = 20 and 0.18 s at k = 3,136
     (d = 64, one core of a 4-vCPU VM).
 
@@ -5299,7 +5569,9 @@ def llm_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking is n·k distances against a kilobyte broadcast, candidates
     are nprobe·n·(n/k) exact cosines in cell-equi-joined blocks; the
     quantizer itself is llm_kmeans_lloyd's 6 driver-paced rounds."""
-    return _ivf_fitted_top1(spark, sf_dir, _kmeans_fit(spark, sf_dir))
+    corpus = _lloyd_corpus(spark, sf_dir)
+    fit = _kmeans_fit(spark, sf_dir, corpus=corpus)
+    return _ivf_fitted_top1(spark, sf_dir, fit, corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -5462,7 +5734,9 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild-per-query costs one final-assignment job after the first
     call; llm_ann_ivf_served never fits at all. Cache lifetime: the
     indexed frame rides _util.managed_cache."""
-    return _ivf_fitted_top1(spark, sf_dir, _lloyd_ivf_fit(spark, sf_dir))
+    corpus = _lloyd_corpus(spark, sf_dir)
+    fit = _lloyd_ivf_fit(spark, sf_dir, corpus)
+    return _ivf_fitted_top1(spark, sf_dir, fit, corpus)
 
 
 @register("llm_ann_ivf_served", oracle=_ivf_lloyd_oracle(), category="K")
@@ -5490,12 +5764,7 @@ def llm_ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_r10_ops.py, recall floors ride the existing test_ann.py
     machinery, and the no-refit contract is pinned by poisoning the
     Lloyd fit after the first build."""
-    import os
-
-    idx = _ensure_ivf_index(spark, sf_dir)
-    centers = spark.read.parquet(os.path.join(idx, "centers"))
-    cells = spark.read.parquet(os.path.join(idx, "cells"))
-    return _ivf_candidates_top1(cells, centers)
+    return _ivf_persisted_tail(spark, sf_dir, "top1", _ivf_candidates_top1)
 
 
 _SEMDEDUP_CC_ROUNDS = 7  # same margin discipline as _GRAPH_CC_ROUNDS:
@@ -5675,12 +5944,19 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llm_semdedup's engine body, callable from composites
     (mm_e2e_dedup) without tripping the registered wrapper's
-    release_managed_caches — see the op docstring for the design."""
-    import os
+    release_managed_caches — see the op docstring for the design. At
+    most _LLOYD_DRIVER_MAX_VECTORS indexed vectors run the τ+CC tail
+    on the driver (_ivf_tail_local: the persisted index read with
+    pyarrow, union-find over the τ edges, one LocalTableScan, no Spark
+    job); larger indexes run _semdedup_pairs_spark. Both give the
+    same rows."""
+    return _ivf_persisted_tail(spark, sf_dir, "tau_cc", _semdedup_pairs_spark)
 
-    idx = _ensure_ivf_index(spark, sf_dir)
-    cells = managed_cache(spark.read.parquet(os.path.join(idx, "cells")))
-    centers = spark.read.parquet(os.path.join(idx, "centers"))
+
+def _semdedup_pairs_spark(cells: DataFrame, centers: DataFrame) -> DataFrame:
+    """_semdedup_pairs' Spark tail over the persisted index layouts."""
+    spark = cells.sparkSession
+    cells = managed_cache(cells)
     # query side probes each vector's 2 nearest cells so near-dup pairs
     # split by a cluster BOUNDARY still meet (the planted-recall test
     # failed 14/20 with top-1-only scoping); index side stays top-1
@@ -5766,12 +6042,18 @@ def llm_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     than top-k at any scale; no per-key sort state). Emits directed
     (vec_id, nn_id, cos_sim) — symmetric pairs appear once per
     direction exactly as a per-query retrieval would return them.
-    Fully hash-oracled (_range_search_oracle)."""
-    import os
+    Fully hash-oracled (_range_search_oracle).
 
-    idx = _ensure_ivf_index(spark, sf_dir)
-    centers = spark.read.parquet(os.path.join(idx, "centers"))
-    cells = spark.read.parquet(os.path.join(idx, "cells"))
+    Below _LLOYD_DRIVER_MAX_VECTORS indexed vectors the whole tail runs
+    on the driver over the index read with pyarrow (_ivf_tail_local,
+    one LocalTableScan, no Spark job); above it, _range_search_spark.
+    Both give the same rows."""
+    return _ivf_persisted_tail(spark, sf_dir, "range", _range_search_spark)
+
+
+def _range_search_spark(cells: DataFrame, centers: DataFrame) -> DataFrame:
+    """llm_ann_range_search's Spark tail over the persisted index
+    layouts."""
     probes = _ivf_probe_cells(
         cells.select("vec_id", "embedding", "norm"), centers, nprobe=2
     )

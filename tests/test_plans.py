@@ -447,14 +447,19 @@ def test_bpe_train_scans_prune_to_sampled_columns(spark):
     assert df.count() == 10
 
 
-def test_ivf_served_two_level_probe_shape(spark):
+def test_ivf_served_two_level_probe_shape(spark, monkeypatch):
     """r12 coarse-search pruning regression pin: the served ANN plan
     must carry the TWO-LEVEL probe — a broadcast equi-join on grp
     (super-group -> member centroids; the level-2 restriction that
     replaced the flat n×k centroid rank) and rank-filter windows that
     Spark has rewritten to WindowGroupLimit (top-k pushed below the
     shuffle). A flat probe has no grp join; its reappearance would
-    re-open the measured ×37.6 coarse cliff."""
+    re-open the measured ×37.6 coarse cliff. The Lloyd cut is patched
+    below zero: at the test scale the tail otherwise runs on the
+    driver and has no Spark plan."""
+    from gdxpy_spark.operators import llm
+
+    monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", -1)
     plan = formatted_plan(_df(spark, "llm_ann_ivf_served"))
     assert "WindowGroupLimit" in plan, plan
     # level-2: an equi-join whose key is the super-group id (the

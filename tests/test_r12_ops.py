@@ -228,36 +228,49 @@ def test_super_quantizer_sql_mirror(duck):
     assert len(set(asg)) > 1  # the grouping actually partitions
 
 
-def lloyd_on_both_paths(monkeypatch, tmp_path, fn):
+def lloyd_on_both_paths(monkeypatch, tmp_path, fn, tail=False):
     """{path: fn()} with every Lloyd fit on the Spark path (the cut
     patched below zero, which forces _lloyd_rounds) and on the driver
     path. Each path starts from empty fit memos and builds its own IVF
     index, so neither is served from the other's fit. Also pins the
     path each fit took: the driver fit's assignment is a
-    LocalTableScan, the Spark fit's is not. ``fn`` must materialize
-    its result."""
+    LocalTableScan, the Spark fit's is not. With ``tail`` the
+    exact-cosine IVF tail (_ivf_tail) must have run too, and its path
+    is pinned the same way; without it, it must not have run. The
+    Spark path also forces connected_components onto Spark, so a τ+CC
+    tail's Spark result is no LocalTableScan either. ``fn`` must
+    materialize its result."""
     from gdxpy_spark.operators import llm
     from tests.test_r11_ops import _is_local_scan
 
-    fit = llm._kmeans_fit
+    fit, ivf_tail = llm._kmeans_fit, llm._ivf_tail
+    cc_cut = llm._CC_DRIVER_MAX_EDGES
     out = {}
     for path, cut in (("spark", -1), ("driver", llm._LLOYD_DRIVER_MAX_VECTORS)):
-        local = []
+        local, tails = [], []
 
         def spy(*a, **kw):
             res = fit(*a, **kw)
             local.append(_is_local_scan(res[0]))
             return res
 
+        def tail_spy(*a, **kw):
+            res = ivf_tail(*a, **kw)
+            tails.append(_is_local_scan(res))
+            return res
+
         monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", cut)
+        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", min(cut, cc_cut))
         monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
         monkeypatch.setattr(llm, "_PQ_MEMO", {})
         monkeypatch.setattr(llm, "_kmeans_fit", spy)
+        monkeypatch.setattr(llm, "_ivf_tail", tail_spy)
         monkeypatch.setattr(
             llm, "_ivf_index_dir", lambda sf_dir, p=path: str(tmp_path / p / "ivf")
         )
         out[path] = fn()
         assert local and set(local) == {path == "driver"}, (path, local)
+        assert set(tails) == ({path == "driver"} if tail else set()), (path, tails)
     return out
 
 
@@ -330,6 +343,8 @@ def duck_small():
         "llm_ivf_cell_stats",
         "llm_ann_range_search",
         "llm_semdedup",
+        "llm_ann_ivf_served",
+        "mm_e2e_dedup",
     ],
 )
 def test_lloyd_callers_match_oracle_on_both_paths(
@@ -337,7 +352,9 @@ def test_lloyd_callers_match_oracle_on_both_paths(
 ):
     """Every query over the Lloyd fit matches its DuckDB oracle with the
     fit on the driver and with it forced onto the Spark loop (which no
-    registered query reaches at the oracle scales any more)."""
+    registered query reaches at the oracle scales any more). The
+    exact-cosine IVF tail follows the fit's path: the queries that run
+    it match on its driver twin and on its Spark plan."""
     from gdxpy_spark.registry import all_queries
     from tests.conftest import assert_frames_match
 
@@ -348,7 +365,8 @@ def test_lloyd_callers_match_oracle_on_both_paths(
             q.fn(spark, SF_SMALL), duck_small.execute(q.oracle), name=name
         )
 
-    lloyd_on_both_paths(monkeypatch, tmp_path, run)
+    tail = name not in ("llm_kmeans_lloyd", "llm_ivf_cell_stats")
+    lloyd_on_both_paths(monkeypatch, tmp_path, run, tail=tail)
 
 
 @pytest.mark.slow
@@ -376,7 +394,9 @@ def test_ivf_index_layout_equal_on_both_paths(spark, monkeypatch, tmp_path):
     """The pyarrow-written index (driver path) reads back in Spark
     exactly as the Spark-written one: centers/ and cells/ have equal
     schemas (cell the INT partition column) and equal rows, norm
-    included bit for bit, and both parts carry _SUCCESS."""
+    included bit for bit, and both parts carry _SUCCESS. The driver
+    tail's pyarrow read (_read_ivf_index_local) of both layouts is
+    equal too."""
     from gdxpy_spark.operators import llm
 
     def build():
@@ -387,9 +407,16 @@ def test_ivf_index_layout_equal_on_both_paths(spark, monkeypatch, tmp_path):
             df = spark.read.parquet(os.path.join(idx, part))
             rows = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
             out[part] = (df.schema, rows)
+        out["idx"] = idx
         return out
 
     got = lloyd_on_both_paths(monkeypatch, tmp_path, build)
+    for out in got.values():
+        # the driver tail's pyarrow read, at the default cut
+        idx = out.pop("idx")
+        n, (ids, x, norm, cell, cell_ids, cents) = llm._read_ivf_index_local(idx)
+        rows = zip(ids.to_pylist(), x.tolist(), norm.tolist(), cell.tolist())
+        out["local"] = (n, sorted(rows), cell_ids, cents)
     assert got["driver"] == got["spark"]
     assert got["driver"]["cells"][0]["cell"].dataType.simpleString() == "int"
 
@@ -541,14 +568,29 @@ def test_super_quantizer_sql_mirror_cell_ids(duck):
         assert len(set(grp_of)) > 1
 
 
+def _tied_probe_grid(ks=(1, 2, 4)):
+    """60 4-d vectors and, per k in ``ks``, k centroids (cell ids
+    sampled from 0..99, unsorted) on a coarse grid, so many d2 tie
+    exactly: (vecs, [(cells, cents), ...])."""
+    import random
+
+    rng = random.Random(3)
+    grid = [-1.0, -0.5, 0.0, 0.5, 1.0]
+    vecs = [[rng.choice(grid) for _ in range(4)] for _ in range(60)]
+    cases = []
+    for k in ks:
+        cells = rng.sample(range(100), k)
+        cents = [[rng.choice(grid) for _ in range(4)] for _ in range(k)]
+        cases.append((cells, cents))
+    return vecs, cases
+
+
 def test_super_quantizer_and_probe_at_small_k(spark, duck, monkeypatch):
     """Fewer centroids than super-groups (k = 1 < g = _super_g(1) = 2)
     give one group per centroid, as in the DuckDB twin, not an
     IndexError. At k ≤ 4 there are 2 super-groups and both are probed,
     so _ivf_probe_cells is exactly the flat rank: each vector's
     min(2, k) nearest cells by (d2, cell)."""
-    import random
-
     from gdxpy_spark.operators import llm
 
     assert llm._super_quantize([[0.5, 1.0]]) == ([0], [[0.5, 1.0]])
@@ -560,16 +602,13 @@ def test_super_quantizer_and_probe_at_small_k(spark, duck, monkeypatch):
         ), k
 
     monkeypatch.setattr(llm, "_SUPER_MEMO", {})
-    rng = random.Random(3)
-    grid = [-1.0, -0.5, 0.0, 0.5, 1.0]  # coarse: many exactly tied d2
-    vecs = [[rng.choice(grid) for _ in range(4)] for _ in range(60)]
+    vecs, cases = _tied_probe_grid()
     q = spark.createDataFrame(
         [(v, e, 1.0) for v, e in enumerate(vecs)],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>, norm DOUBLE",
     )
-    for k in (1, 2, 4):
-        cells = rng.sample(range(100), k)
-        cents = [[rng.choice(grid) for _ in range(4)] for _ in range(k)]
+    for cells, cents in cases:
+        k = len(cells)
         centers = spark.createDataFrame(
             list(zip(cells, cents)), "cell INT, center ARRAY<DOUBLE>"
         )
@@ -585,6 +624,113 @@ def test_super_quantizer_and_probe_at_small_k(spark, duck, monkeypatch):
             )[:2]
         )
         assert got == want, k
+
+
+def test_probe_local_equals_ivf_probe_cells(spark, monkeypatch):
+    """The driver probe (_probe_local) returns exactly _ivf_probe_cells'
+    (vec_id, cell) set: on the tied grid at k = 1, 2, 4, and at k = 25
+    (g = 5 super-groups), where level 1 prunes some vector's flat
+    top-2 cell."""
+    import numpy as np
+
+    from gdxpy_spark.operators import llm
+
+    monkeypatch.setattr(llm, "_SUPER_MEMO", {})
+    vecs, cases = _tied_probe_grid(ks=(1, 2, 4, 25))
+    q = spark.createDataFrame(
+        [(v, e, 1.0) for v, e in enumerate(vecs)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, norm DOUBLE",
+    )
+    x = np.asarray(vecs, dtype=np.float64)
+    for cells, cents in cases:
+        centers = spark.createDataFrame(
+            list(zip(cells, cents)), "cell INT, center ARRAY<DOUBLE>"
+        )
+        want = {
+            (r.vec_id, r.cell) for r in llm._ivf_probe_cells(q, centers).collect()
+        }
+        by_cell = sorted(zip(cells, cents))
+        rows, got_cells, _near = llm._probe_local(
+            x, [c for c, _ in by_cell], [ce for _, ce in by_cell]
+        )
+        assert set(zip(rows.tolist(), got_cells.tolist())) == want, len(cells)
+    flat = {
+        (v, c)
+        for v, e in enumerate(vecs)
+        for _d2, c in sorted(
+            (sum((a - b) * (a - b) for a, b in zip(e, ce)), c)
+            for c, ce in zip(cells, cents)
+        )[:2]
+    }
+    assert want != flat  # the k = 25 case exercises the pruning
+
+
+@pytest.mark.parametrize("cap", [None, 8])
+def test_cell_pairs_equals_lsh_candidate_pairs(spark, monkeypatch, cap):
+    """The driver candidates (_cell_pairs) are lsh_candidate_pairs'
+    directed pairs: uncapped, and with a cap that chains the larger
+    cells through their min-id rep (hub back-edges included). Blocks
+    of at most a few pairs force many blocks; each holds whole
+    queries, as the top-1 reducer needs."""
+    import random
+
+    import numpy as np
+
+    from gdxpy_spark.operators import llm
+
+    rng = random.Random(5)
+    n = 40
+    cell = np.array([rng.choice([0, 0, 0, 1, 1, 2, 7]) for _ in range(n)], np.int32)
+    probes = [(v, c) for v in range(n) for c in sorted(rng.sample([0, 1, 2, 5, 7], 2))]
+    q_rows = np.array([v for v, _ in probes])
+    q_cells = np.array([c for _, c in probes], np.int32)
+    monkeypatch.setattr(llm, "_TAIL_BLOCK_PAIRS", 4)
+    blocks = list(llm._cell_pairs(q_rows, q_cells, cell, cap))
+    got = {(int(a), int(b)) for qi, xi in blocks for a, b in zip(qi, xi)}
+    if cap is not None:
+        sizes = np.bincount(cell)
+        assert (sizes > cap).any() and ((sizes > 0) & (sizes <= cap)).any()
+        assert len(blocks[0][0])  # the hub back-edges come first
+        blocks = blocks[1:]
+    assert len(blocks) > 1
+    seen = [set(qi.tolist()) for qi, _xi in blocks]
+    assert sum(map(len, seen)) == len(set().union(*seen))
+    bucketed = spark.createDataFrame(
+        [(v, int(c)) for v, c in enumerate(cell)], "vec_id BIGINT, bucket BIGINT"
+    )
+    q = spark.createDataFrame(probes, "vec_id BIGINT, bucket BIGINT")
+    want = {
+        (r.vec_id, r.nn_id)
+        for r in llm.lsh_candidate_pairs(
+            bucketed, q_probes=q, max_bucket=cap or n
+        ).collect()
+    }
+    assert got == want
+
+
+def test_ivf_tail_logs_its_path(spark, monkeypatch, caplog):
+    """One DEBUG record per exact-cosine IVF tail on the engine's logger
+    with the vector count, the reducer and the path taken."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+    from gdxpy_spark.registry import all_queries
+
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.operators.llm")
+    ALL = all_queries()
+    n = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").count()
+    ALL["llm_ann_ivf_served"].fn(spark, SF_SMALL)
+    ALL["llm_ann_ivf_checked"].fn(spark, SF_SMALL)
+    monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", -1)
+    ALL["llm_ann_range_search"].fn(spark, SF_SMALL)
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == llm.log.name and r.getMessage().startswith("ivf_tail")
+    ] == [
+        f"ivf_tail: {n} vectors, top1, driver path",
+        f"ivf_tail: {n} vectors, top1, driver path",
+        f"ivf_tail: {n} vectors, range, spark path",
+    ]
 
 
 def test_ivf_probe_cells_logs_super_memo(spark, monkeypatch, caplog):

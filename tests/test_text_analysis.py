@@ -110,7 +110,10 @@ def test_connected_components_long_chain_converges_log_rounds(spark, monkeypatch
         [(i, i + 1) for i in range(n - 1)], "doc_a BIGINT, doc_b BIGINT"
     )
     with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any non-convergence warning fails
+        # the non-convergence warning is a RuntimeWarning; a blanket
+        # "error" would also raise pyspark's by-design GC-time
+        # ResourceWarning for collect()'s unclosed socket
+        warnings.simplefilter("error", RuntimeWarning)
         got = cc_on_both_paths(spark, monkeypatch, edges, max_iters=12)
     want = {i: 0 for i in range(n)}
     assert got == {"driver": want, "spark": want}

@@ -1723,8 +1723,14 @@ def _super_groups(cell_ids: list, cents: list) -> tuple[list, list]:
     return grp_of, scents
 
 
+# Cells each IVF query probes, and super-groups its level-1 rank keeps:
+# the fan-out of _ivf_probe_cells and its driver twin _probe_local.
+_NPROBE = 2
+
+
 def _ivf_probe_cells(
-    q: DataFrame, centers: DataFrame, nprobe: int = 2, nprobe_super: int = 2
+    q: DataFrame, centers: DataFrame, nprobe: int = _NPROBE,
+    nprobe_super: int = _NPROBE,
 ) -> DataFrame:
     """Replicate each query row (vec_id, embedding, norm) to its
     ``nprobe`` nearest persisted centroids: the IVF probe fan-out shared
@@ -1890,8 +1896,7 @@ def _ivf_fitted_top1(
         indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
         return _ivf_candidates_top1(managed_cache(indexed), centers)
 
-    n = None if local is None else len(local[1])
-    return _ivf_tail(spark, "top1", n, index, spark_tail)
+    return _ivf_tail(spark, "top1", corpus[2], index, spark_tail)
 
 
 def _ivf_persisted_tail(
@@ -1915,16 +1920,22 @@ def _ivf_persisted_tail(
     )
 
 
+def _corpus_size(n) -> str:
+    """A Spark-path log line's vector count: ``n``, or "over <cut>"
+    when a corpus over _LLOYD_DRIVER_MAX_VECTORS was not counted."""
+    return str(n) if n is not None else f"over {_LLOYD_DRIVER_MAX_VECTORS}"
+
+
 def _ivf_tail(spark: SparkSession, reducer: str, n, index, spark_tail):
     """The one dispatch of the exact-cosine IVF query tail (probe →
     within-cell candidates → exact cosine → ``reducer``: "top1",
     "range" or "tau_cc"). ``index`` is _ivf_tail_local's input when the
     index is at most _LLOYD_DRIVER_MAX_VECTORS vectors that form a
     matrix, else None and ``spark_tail()`` builds the Spark plan. ``n``
-    is the vector count when known without a job."""
+    is the vector count, None when a corpus over the cut was not
+    counted."""
     if index is None:
-        size = n if n is not None else f"over {_LLOYD_DRIVER_MAX_VECTORS}"
-        log.debug("ivf_tail: %s vectors, %s, spark path", size, reducer)
+        log.debug("ivf_tail: %s vectors, %s, spark path", _corpus_size(n), reducer)
         return spark_tail()
     log.debug("ivf_tail: %d vectors, %s, driver path", len(index[1]), reducer)
     return _ivf_tail_local(spark, reducer, *index)
@@ -1964,11 +1975,11 @@ def _read_ivf_index_local(idx: str):
     )
 
 
-def _probe_local(x, cell_ids, cents, nprobe: int = 2, nprobe_super: int = 2):
+def _probe_local(x, cell_ids, cents):
     """The driver twin of _ivf_probe_cells for the rows of ``x``
     against the centroids ``cents`` (in ascending ``cell_ids`` order):
-    level 1 keeps each row's ``nprobe_super`` nearest super-groups by
-    (sd2, grp), level 2 its ``nprobe`` nearest member cells of those
+    level 1 keeps each row's _NPROBE nearest super-groups by
+    (sd2, grp), level 2 its _NPROBE nearest member cells of those
     groups by (d2, cell), both distances from _d2_blocks. Returns the
     probes as (rows, cells), row-major, and each row's nearest cell
     over all centroids (_nearest_local's argmin)."""
@@ -1977,7 +1988,7 @@ def _probe_local(x, cell_ids, cents, nprobe: int = 2, nprobe_super: int = 2):
     grp_of, scents = _super_groups(cell_ids, cents)
     grp_of = np.asarray(grp_of)
     top_g = np.concatenate([
-        np.argsort(sd2, axis=1, kind="stable")[:, :nprobe_super]
+        np.argsort(sd2, axis=1, kind="stable")[:, :_NPROBE]
         for _lo, sd2 in _d2_blocks(x, scents)
     ])
     cell_ids = np.asarray(cell_ids, dtype=np.int32)
@@ -1988,7 +1999,7 @@ def _probe_local(x, cell_ids, cents, nprobe: int = 2, nprobe_super: int = 2):
         near[lo:lo + m] = cell_ids[d2.argmin(axis=1)]
         member = (grp_of == top_g[lo:lo + m, :, None]).any(axis=1)
         pick = np.argsort(np.where(member, d2, np.inf), axis=1,
-                          kind="stable")[:, :nprobe]
+                          kind="stable")[:, :_NPROBE]
         ok = np.take_along_axis(member, pick, axis=1)
         rows.append(np.broadcast_to(np.arange(lo, lo + m)[:, None], pick.shape)[ok])
         cells.append(cell_ids[pick[ok]])
@@ -2080,8 +2091,7 @@ def _ivf_tail_local(
             dot += v[qi] * v[xi]
         cos = dot / (norm[qi] * norm[xi])
         if reducer == "top1":
-            # Spark's descending order puts NaN first
-            rank = np.lexsort((xi, np.where(np.isnan(cos), -np.inf, -cos), qi))
+            rank = np.lexsort((xi, -cos, qi))
             first = np.ones(len(rank), dtype=bool)
             first[1:] = qi[rank[1:]] != qi[rank[:-1]]
             keep = rank[first]
@@ -5179,17 +5189,18 @@ def _embedding_matrix(col):
 
 
 def _lloyd_corpus(spark: SparkSession, sf_dir: str):
-    """(e, local): the (vec_id, embedding) frame of the embeddings and,
+    """(e, local, n): the (vec_id, embedding) frame of the embeddings;
     when the corpus has at most _LLOYD_DRIVER_MAX_VECTORS rows that
-    _embedding_matrix accepts, the whole corpus from one bounded read:
-    (Arrow table, float64 matrix). ``local`` is None on the Spark
-    path."""
+    _embedding_matrix accepts, the whole corpus from one bounded read
+    as ``local`` = (Arrow table, float64 matrix), else None (the Spark
+    path); and the row count ``n`` when the corpus is within the cut,
+    else None."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     head = e.limit(_LLOYD_DRIVER_MAX_VECTORS + 1).toArrow()
     if head.num_rows > _LLOYD_DRIVER_MAX_VECTORS:
-        return e, None
+        return e, None, None
     x = _embedding_matrix(head.column("embedding"))
-    return e, (None if x is None else (head, x))
+    return e, (None if x is None else (head, x)), head.num_rows
 
 
 def _md5_order(ids) -> list:
@@ -5303,7 +5314,7 @@ def _kmeans_fit(
 
     fp = files_fingerprint([os.path.join(sf_dir, "embeddings.parquet")])
     memo_key = (fp, k, sample_per_cell)
-    e, local = corpus or _lloyd_corpus(spark, sf_dir)
+    e, local, n = corpus or _lloyd_corpus(spark, sf_dir)
     memo_ok, memo_hit = _memo_get(_KMEANS_MEMO, memo_key)
     memo = "hit" if memo_ok else "miss"
     if local is not None:
@@ -5311,8 +5322,8 @@ def _kmeans_fit(
         log.debug("kmeans_fit: %d vectors, k=%d, driver path, memo %s",
                   len(x), k, memo)
     else:
-        log.debug("kmeans_fit: over %d vectors, k=%d, spark path, memo %s",
-                  _LLOYD_DRIVER_MAX_VECTORS, k, memo)
+        log.debug("kmeans_fit: %s vectors, k=%d, spark path, memo %s",
+                  _corpus_size(n), k, memo)
         # the posexploded frame feeds EVERY round's distance join and
         # the final assignment — cache it once (n×64 skinny rows)
         ve = managed_cache(_posexploded(e))
@@ -5359,8 +5370,8 @@ def _lloyd_ivf_fit(spark: SparkSession, sf_dir: str, corpus=None):
     n is the driver path's row count, else one count job; ``corpus`` is
     _lloyd_corpus's result when the caller already read it."""
     corpus = corpus or _lloyd_corpus(spark, sf_dir)
-    e, local = corpus
-    n = e.count() if local is None else len(local[1])
+    e, _local, n = corpus
+    n = e.count() if n is None else n
     k = _ivf_k(n, target_cell=_ivf_target_cell())
     return _kmeans_fit(
         spark, sf_dir, k=k, sample_per_cell=_IVF_SAMPLE_PER_CELL,

@@ -260,7 +260,9 @@ def lloyd_on_both_paths(monkeypatch, tmp_path, fn, tail=False):
             return res
 
         monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", cut)
-        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", min(cut, cc_cut))
+        monkeypatch.setattr(
+            llm, "_CC_DRIVER_MAX_EDGES", -1 if path == "spark" else cc_cut
+        )
         monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
         monkeypatch.setattr(llm, "_PQ_MEMO", {})
         monkeypatch.setattr(llm, "_kmeans_fit", spy)
@@ -428,11 +430,11 @@ def test_lloyd_dispatch_boundary(spark, monkeypatch):
 
     n = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").count()
     monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", n)
-    _e, local = llm._lloyd_corpus(spark, SF_SMALL)
+    _e, local, rows = llm._lloyd_corpus(spark, SF_SMALL)
     head, x = local
-    assert head.num_rows == n and x.shape == (n, 64)
+    assert rows == head.num_rows == n and x.shape == (n, 64)
     monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", n - 1)
-    assert llm._lloyd_corpus(spark, SF_SMALL)[1] is None
+    assert llm._lloyd_corpus(spark, SF_SMALL)[1:] == (None, None)
 
 
 def test_embedding_matrix_rejects_what_the_driver_cannot_fit():
@@ -710,7 +712,9 @@ def test_cell_pairs_equals_lsh_candidate_pairs(spark, monkeypatch, cap):
 
 def test_ivf_tail_logs_its_path(spark, monkeypatch, caplog):
     """One DEBUG record per exact-cosine IVF tail on the engine's logger
-    with the vector count, the reducer and the path taken."""
+    with the vector count, the reducer and the path taken. A corpus
+    within the cut that is no matrix takes the Spark path and still
+    logs its true count."""
     import logging
 
     from gdxpy_spark.operators import llm
@@ -721,6 +725,10 @@ def test_ivf_tail_logs_its_path(spark, monkeypatch, caplog):
     n = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").count()
     ALL["llm_ann_ivf_served"].fn(spark, SF_SMALL)
     ALL["llm_ann_ivf_checked"].fn(spark, SF_SMALL)
+    with monkeypatch.context() as m:
+        m.setattr(llm, "_KMEANS_MEMO", {})
+        m.setattr(llm, "_embedding_matrix", lambda col: None)
+        ALL["llm_ann_ivf_checked"].fn(spark, SF_SMALL)
     monkeypatch.setattr(llm, "_LLOYD_DRIVER_MAX_VECTORS", -1)
     ALL["llm_ann_range_search"].fn(spark, SF_SMALL)
     assert [
@@ -729,6 +737,7 @@ def test_ivf_tail_logs_its_path(spark, monkeypatch, caplog):
     ] == [
         f"ivf_tail: {n} vectors, top1, driver path",
         f"ivf_tail: {n} vectors, top1, driver path",
+        f"ivf_tail: {n} vectors, top1, spark path",
         f"ivf_tail: {n} vectors, range, spark path",
     ]
 

@@ -307,8 +307,11 @@ def fan_out(df: DataFrame, spark) -> DataFrame:
     the A/B table in OPTIMIZATION_r14.md lists the light ops where this
     measured as a net LOSS and is deliberately not applied."""
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    n = df.rdd.getNumPartitions()
+    if n >= target:
+        log.debug("fan_out: %d partitions, target %d, skipped", n, target)
         return df
+    log.debug("fan_out: %d partitions, target %d, taken", n, target)
     return df.repartition(target)
 
 

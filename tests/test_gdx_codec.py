@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import tempfile
 
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -40,9 +41,23 @@ VALUES = st.one_of(
 )
 
 
+# every _tmp path lives under one dir, made on first use and removed at
+# module teardown (the @given tests cannot take a function-scoped fixture)
+_TMP_ROOT = None
+
+
 def _tmp(name: str) -> str:
-    d = tempfile.mkdtemp(prefix="gdx_codec_")
-    return os.path.join(d, name)
+    global _TMP_ROOT
+    if _TMP_ROOT is None:
+        _TMP_ROOT = tempfile.mkdtemp(prefix="gdx_codec_")
+    return os.path.join(tempfile.mkdtemp(dir=_TMP_ROOT), name)
+
+
+def teardown_module():
+    global _TMP_ROOT
+    if _TMP_ROOT is not None:
+        shutil.rmtree(_TMP_ROOT, ignore_errors=True)
+        _TMP_ROOT = None
 
 
 def _eq_val(a: float, b: float) -> bool:

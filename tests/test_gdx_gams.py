@@ -403,6 +403,13 @@ def test_facade_uel_dictionary_gams_layout(spark, golden):
     ]
 
 
+def teardown_module():
+    # test_roundtrip_property_gams writes through test_gdx_codec's _tmp
+    from tests import test_gdx_codec
+
+    test_gdx_codec.teardown_module()
+
+
 def test_roundtrip_property_gams():
     """Same hypothesis property as the GDXPY7 codec, against the GAMS
     layout: random symbols (dim 0-5, specials, EPS masks, set text)

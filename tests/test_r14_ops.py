@@ -521,3 +521,23 @@ def test_fan_out_preserves_rows(spark):
     a = docs.agg(F.count("*"), fp).first()
     b = fan_out(docs, spark).agg(F.count("*"), fp).first()
     assert tuple(a) == tuple(b)
+
+
+def test_fan_out_logs_taken_or_skipped(spark, caplog):
+    """One DEBUG record per fan_out call on the engine's logger with the
+    input's partition count, the target and whether it repartitioned."""
+    import logging
+
+    from gdxpy_spark.operators import _util
+
+    caplog.set_level(logging.DEBUG, logger=_util.log.name)
+    tp = spark.sparkContext.defaultParallelism
+    _util.fan_out(spark.range(0, 100, 1, numPartitions=tp), spark)
+    _util.fan_out(spark.range(0, 100, 1, numPartitions=1), spark)
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == _util.log.name and r.getMessage().startswith("fan_out")
+    ] == [
+        f"fan_out: {tp} partitions, target {tp}, skipped",
+        f"fan_out: 1 partitions, target {tp}, taken",
+    ]

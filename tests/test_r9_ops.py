@@ -248,6 +248,8 @@ def test_every_driver_cut_has_a_forced_path_test():
             ("test_r11_ops.py", "test_connected_components_star_vs_union_find"),
         "_LLOYD_DRIVER_MAX_VECTORS":
             ("test_r12_ops.py", "test_lloyd_callers_match_oracle_on_both_paths"),
+        "_MINHASH_DRIVER_MAX_DOCS":
+            ("test_text_analysis.py", "test_minhash_dedup_matches_oracle_on_both_paths"),
     }
     cut = re.compile(r"_\w+_DRIVER_MAX_\w+")
     root = pathlib.Path(gdxpy_spark.__file__).parent

@@ -300,6 +300,19 @@ def test_dedup_clusters_on_corpus(spark):
     assert not (dups & keeps), "a kept doc may not also be a duplicate"
 
 
+def _spark_band_pairs(docs, **kw):
+    from gdxpy_spark.operators.llm import minhash_band_pairs
+
+    return {(r["doc_a"], r["doc_b"]) for r in minhash_band_pairs(docs, **kw).collect()}
+
+
+def _driver_band_pairs(docs, **kw):
+    from gdxpy_spark.operators.llm import _minhash_pairs_local
+
+    a, b = _minhash_pairs_local(docs.select("doc_id", "text").toArrow(), **kw)
+    return set(zip(a.to_pylist(), b.to_pylist()))
+
+
 def test_minhash_band_cap_boilerplate_subquadratic(spark):
     """Band-bucket skew cap: 600 identical-template docs collapse every
     band into ONE oversized bucket. Without the cap that is 600·599/2 ≈
@@ -307,8 +320,9 @@ def test_minhash_band_cap_boilerplate_subquadratic(spark):
     the candidate AND output pair count is linear (599 star edges), the
     template cluster still reassembles into a single component through
     the hub, and planted near-dups among the distinct docs keep full
-    recall."""
-    from gdxpy_spark.operators.llm import connected_components, minhash_band_pairs
+    recall. Holds for both pair generators: minhash_band_pairs and its
+    driver twin _minhash_pairs_local."""
+    from gdxpy_spark.operators.llm import connected_components
 
     template = " ".join(f"tmpl{k}" for k in range(30))
     rows = [(d, template) for d in range(600)]
@@ -319,26 +333,90 @@ def test_minhash_band_cap_boilerplate_subquadratic(spark):
             (20_000 + d, " ".join(f"u{d}_{k}" for k in range(19)) + " zzq")
         )
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    pairs = minhash_band_pairs(docs).collect()
-    pset = {(r["doc_a"], r["doc_b"]) for r in pairs}
+    for band_pairs in (_spark_band_pairs, _driver_band_pairs):
+        pset = band_pairs(docs)
 
-    # linear, not quadratic: star edges + planted pairs, nowhere near 180k
-    assert len(pset) < 3 * 655, f"cap failed: {len(pset)} pairs"
-    # every boilerplate doc is covered (hub 0 links to all 599 others)
-    assert {(0, d) for d in range(1, 600)} <= pset
-    # planted near-dups keep full recall (their buckets are small)
-    for d in range(5):
-        assert (10_000 + d, 20_000 + d) in pset, f"planted pair {d} missed"
+        # linear, not quadratic: star edges + planted pairs, nowhere near 180k
+        assert len(pset) < 3 * 655, f"cap failed: {len(pset)} pairs"
+        # every boilerplate doc is covered (hub 0 links to all 599 others)
+        assert {(0, d) for d in range(1, 600)} <= pset
+        # planted near-dups keep full recall (their buckets are small)
+        for d in range(5):
+            assert (10_000 + d, 20_000 + d) in pset, f"planted pair {d} missed"
 
-    # transitive reassembly: one component spanning all 600 templates
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in pset], "doc_a BIGINT, doc_b BIGINT"
-    )
-    cc = {
-        r["doc_id"]: r["component_id"]
-        for r in connected_components(spark, edges).collect()
-    }
-    assert len({cc[d] for d in range(600)}) == 1
+        # transitive reassembly: one component spanning all 600 templates
+        edges = spark.createDataFrame(
+            [(a, b) for a, b in pset], "doc_a BIGINT, doc_b BIGINT"
+        )
+        cc = {
+            r["doc_id"]: r["component_id"]
+            for r in connected_components(spark, edges).collect()
+        }
+        assert len({cc[d] for d in range(600)}) == 1
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.0])
+@pytest.mark.parametrize("corpus", ["neardup", "sf"])
+def test_minhash_pair_generators_agree(spark, neardup_dir, corpus, threshold):
+    """_minhash_pairs_local, the driver twin, gives minhash_band_pairs'
+    exact pair set: on the planted near-dup fixture and on the sf corpus
+    (whose 31-token vocabulary fills capped buckets), at the default
+    threshold and at 0.0, where every candidate survives the verify, so
+    the candidate sets are compared too."""
+    docs = table(spark, neardup_dir if corpus == "neardup" else SF_DIR, "documents")
+    want = _spark_band_pairs(docs, threshold=threshold)
+    assert want
+    assert _driver_band_pairs(docs, threshold=threshold) == want
+
+
+def test_minhash_dedup_matches_oracle_on_both_paths(spark, duck, monkeypatch):
+    """llm_minhash_dedup matches its DuckDB oracle with the corpus forced
+    onto the Spark plan (the cut patched below zero) and on the driver
+    path at the production cut. Only the driver result is a
+    LocalTableScan: the Spark leg also forces connected_components onto
+    Spark, whose driver union-find would otherwise end the plan in
+    one."""
+    from gdxpy_spark.operators import llm
+    from tests.conftest import assert_frames_match
+    from tests.test_r11_ops import _is_local_scan
+
+    q = ALL["llm_minhash_dedup"]
+    cuts = (llm._MINHASH_DRIVER_MAX_DOCS, llm._CC_DRIVER_MAX_EDGES)
+    for path, (docs_cut, cc_cut) in (("spark", (-1, -1)), ("driver", cuts)):
+        monkeypatch.setattr(llm, "_MINHASH_DRIVER_MAX_DOCS", docs_cut)
+        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cc_cut)
+        got = q.fn(spark, SF_DIR)
+        assert _is_local_scan(got) == (path == "driver"), path
+        assert_frames_match(got, duck.execute(q.oracle), name=f"{q.name} {path}")
+
+
+def test_minhash_dedup_logs_its_path(spark, monkeypatch, caplog, tmp_path):
+    """One DEBUG record per llm_minhash_dedup call on the engine's logger
+    with the doc count and the path taken: "over <cut>" when the corpus
+    exceeds the cut, and the true count when a corpus within the cut
+    repeats a doc id, which sends it to the Spark plan."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.DEBUG, logger=llm.log.name)
+    repeated = str(tmp_path)
+    spark.createDataFrame(
+        [(1, "a b c"), (1, "a b d"), (2, "a b c")], "doc_id BIGINT, text STRING"
+    ).write.parquet(f"{repeated}/documents.parquet")
+    n = table(spark, SF_DIR, "documents").count()
+    ALL["llm_minhash_dedup"].fn(spark, SF_DIR)
+    ALL["llm_minhash_dedup"].fn(spark, repeated)
+    monkeypatch.setattr(llm, "_MINHASH_DRIVER_MAX_DOCS", n - 1)
+    ALL["llm_minhash_dedup"].fn(spark, SF_DIR)
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == llm.log.name and r.getMessage().startswith("minhash_dedup")
+    ] == [
+        f"minhash_dedup: {n} docs, driver path",
+        "minhash_dedup: 3 docs, spark path",
+        f"minhash_dedup: over {n - 1} docs, spark path",
+    ]
 
 
 def test_bitmask_fallback_agrees_with_matmul_strategy(spark):

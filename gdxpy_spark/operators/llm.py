@@ -2575,12 +2575,20 @@ def _doc_token_sets(docs: DataFrame) -> DataFrame:
     ).filter(F.size("tokens") > 0)
 
 
+# The banding llm_minhash_dedup runs on both of its paths: 4 bands of 2
+# rows, buckets of at most 64 docs give all pairs. minhash_band_pairs'
+# defaults and its driver twin _minhash_pairs_local both read these.
+_MINHASH_BANDS = 4
+_MINHASH_ROWS_PER_BAND = 2
+_MINHASH_MAX_BUCKET = 64
+
+
 def minhash_band_pairs(
     docs: DataFrame,
-    n_bands: int = 4,
-    rows_per_band: int = 2,
+    n_bands: int = _MINHASH_BANDS,
+    rows_per_band: int = _MINHASH_ROWS_PER_BAND,
     threshold: float = 0.5,
-    max_bucket: int = 64,
+    max_bucket: int = _MINHASH_MAX_BUCKET,
 ) -> DataFrame:
     """Banded-LSH near-duplicate pairs: MinHash signatures → band-key
     blocking → exact Jaccard verify. Returns (doc_a, doc_b, jaccard)
@@ -2702,23 +2710,23 @@ def minhash_band_pairs(
 
 # Docs up to which llm_minhash_dedup runs on the driver
 # (_minhash_pairs_local → _min_id_components) instead of the Spark plan.
-# At the cut (2^16 docs of perfbench's documents_table, 152k verified
-# pairs; 4 vCPU, one fresh session per path, first call / second call):
-# driver 8.8 s / 3.7 s, peak RSS 485 MB Python + 866 MB JVM; Spark
-# 29.3 s / 13.0 s, 208 MB Python + 2.9 GB JVM. The cut bounds driver
-# memory, not speed.
+# At the cut (2^16 docs of perfbench's documents_table: 19 MB of text,
+# 306 B and 55 tokens a doc, 152k verified pairs; 4 vCPU, one fresh
+# session per path, first call / second call): driver 2.7 s / 1.9 s,
+# peak RSS 513 MB Python + 427 MB JVM; Spark 29.3 s / 13.0 s, 208 MB
+# Python + 2.9 GB JVM. The cut bounds driver memory, not speed, and
+# only through the doc count: the twin's memory grows with the text's
+# bytes and tokens (about 20x the text here), so a corpus of longer
+# docs needs more at the same count. Pairs beyond _CC_DRIVER_MAX_EDGES
+# go to connected_components; the worst case the 64-doc bucket cap
+# allows at the cut, 1,024 groups of 64 identical docs, gives 2.06M
+# pairs, 6.5 s and 572 MB Python peak in the twin.
 _MINHASH_DRIVER_MAX_DOCS = 1 << 16
 # (doc, token) lookups per block of _minhash_pairs_local's verify.
 _VERIFY_BLOCK_ROWS = 1 << 22
 
 
-def _minhash_pairs_local(
-    docs,
-    n_bands: int = 4,
-    rows_per_band: int = 2,
-    threshold: float = 0.5,
-    max_bucket: int = 64,
-):
+def _minhash_pairs_local(docs, threshold: float = 0.5):
     """minhash_band_pairs on the driver over the Arrow table ``docs``
     (doc_id, text) whose doc ids are distinct and non-null → Arrow
     (doc_a, doc_b) of the id type: one row per pair, doc_a < doc_b.
@@ -2728,7 +2736,7 @@ def _minhash_pairs_local(
     each distinct token is md5-hashed once into u60 and u32 (its top 32
     bits, the first 8 hex digits); signatures are min((u32·a + b) mod p)
     in exact int64; band keys use the same base-p packing; a bucket of
-    at most ``max_bucket`` docs gives all its pairs and a larger one
+    at most _MINHASH_MAX_BUCKET docs gives all its pairs and a larger one
     chains each doc to its min doc; a pair is kept when its Jaccard over
     the u60 sets, as an IEEE double, is at least ``threshold``. Docs are
     ranked by id, so rank order is id order and the pair logic runs on
@@ -2765,9 +2773,10 @@ def _minhash_pairs_local(
 
     # band candidates as codes a·n + b over ranks a < b
     codes = [np.empty(0, np.int64)]
-    for j in range(n_bands if n else 0):
+    r = _MINHASH_ROWS_PER_BAND
+    for j in range(_MINHASH_BANDS if n else 0):
         key = np.zeros(n, dtype=np.int64)
-        for a, b in _MINHASH_PERMS8[j * rows_per_band:(j + 1) * rows_per_band]:
+        for a, b in _MINHASH_PERMS8[j * r:(j + 1) * r]:
             sig = np.minimum.reduceat(((u32 * a + b) % _MINHASH_P)[flat], starts)
             key = key * _MINHASH_P + sig
         order = np.argsort(key, kind="stable")
@@ -2775,12 +2784,12 @@ def _minhash_pairs_local(
         first = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
         size = np.diff(np.r_[first, n])
         start = np.repeat(first, size)
-        capped = np.repeat(size > max_bucket, size)
+        capped = np.repeat(size > _MINHASH_MAX_BUCKET, size)
         hub = capped & (pos != start)
         codes.append(order[start[hub]] * n + order[hub])
         end = start + np.repeat(size, size)
         small = np.flatnonzero(~capped & (end - pos > 1))
-        for d in range(1, int(size[size <= max_bucket].max(initial=1))):
+        for d in range(1, int(size[size <= _MINHASH_MAX_BUCKET].max(initial=1))):
             i = small[small + d < end[small]]
             codes.append(order[i] * n + order[i + d])
     ra, rb = np.divmod(np.unique(np.concatenate(codes)), max(n, 1))
@@ -2884,32 +2893,47 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-count property remain pinned in
     tests/test_text_analysis.py.
 
-    Two paths, split at one Arrow read of at most
-    _MINHASH_DRIVER_MAX_DOCS + 1 (doc_id, text) rows. A corpus within
-    the cut whose ids are distinct and non-null runs
-    _minhash_pairs_local and _min_id_components on the driver and
-    returns one Arrow table (a LocalTableScan): at these sizes the
-    Spark plan's job floor, not the data, sets the wall. Any other
-    corpus runs minhash_band_pairs → connected_components."""
+    Two paths, split at the documents' row count, which pyarrow takes
+    from the parquet footers (no Spark job, no text read). A corpus of
+    at most _MINHASH_DRIVER_MAX_DOCS docs is read as Arrow (doc_id,
+    text); if its ids are distinct and non-null, _minhash_pairs_local
+    and _min_id_components run on the driver and the result is one
+    Arrow table (a LocalTableScan): at these sizes the Spark plan's job
+    floor, not the data, sets the wall. More than _CC_DRIVER_MAX_EDGES
+    verified pairs go to connected_components instead, so its edge cut
+    still bounds the driver union-find. Any other corpus runs
+    minhash_band_pairs → connected_components."""
+    import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.dataset as ds
 
-    docs = table(spark, sf_dir, "documents")
-    head = docs.select("doc_id", "text").limit(_MINHASH_DRIVER_MAX_DOCS + 1).toArrow()
-    n = head.num_rows
-    if n > _MINHASH_DRIVER_MAX_DOCS or pc.count_distinct(head["doc_id"]).as_py() < n:
+    src = ds.dataset(f"{sf_dir}/documents.parquet", format="parquet")
+    n = src.count_rows()
+    head = None
+    if n <= _MINHASH_DRIVER_MAX_DOCS:
+        head = src.to_table(columns=["doc_id", "text"])
+        if pc.count_distinct(head["doc_id"]).as_py() < n:
+            head = None
+    if head is None:
         size = n if n <= _MINHASH_DRIVER_MAX_DOCS else f"over {_MINHASH_DRIVER_MAX_DOCS}"
         log.debug("minhash_dedup: %s docs, spark path", size)
-        pairs = minhash_band_pairs(docs).select("doc_a", "doc_b")
-        cc = connected_components(spark, pairs)
-        return cc.filter(F.col("doc_id") != F.col("component_id")).select(
-            F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
-        )
+        docs = table(spark, sf_dir, "documents")
+        return _dedup_clusters(spark, minhash_band_pairs(docs).select("doc_a", "doc_b"))
     log.debug("minhash_dedup: %d docs, driver path", n)
     a, b = _minhash_pairs_local(head)
+    if len(a) > _CC_DRIVER_MAX_EDGES:
+        pairs = spark.createDataFrame(pa.table({"doc_a": a, "doc_b": b}))
+        return _dedup_clusters(spark, pairs)
     comp = _min_id_components(a.to_pylist(), b.to_pylist())
-    dt = docs.schema["doc_id"].dataType.simpleString()
-    return spark.createDataFrame(
-        _dup_kept_table(comp, a.type), f"dup_id {dt}, kept_id {dt}"
+    return spark.createDataFrame(_dup_kept_table(comp, a.type))
+
+
+def _dedup_clusters(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    """(dup_id, kept_id) of connected_components over ``pairs``
+    (doc_a, doc_b), singletons and roots omitted."""
+    cc = connected_components(spark, pairs)
+    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
+        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
     )
 
 

@@ -371,20 +371,25 @@ def test_minhash_pair_generators_agree(spark, neardup_dir, corpus, threshold):
 
 def test_minhash_dedup_matches_oracle_on_both_paths(spark, duck, monkeypatch):
     """llm_minhash_dedup matches its DuckDB oracle with the corpus forced
-    onto the Spark plan (the cut patched below zero) and on the driver
-    path at the production cut. Only the driver result is a
-    LocalTableScan: the Spark leg also forces connected_components onto
-    Spark, whose driver union-find would otherwise end the plan in
-    one."""
+    onto the Spark plan (the cut patched below zero), on the driver path
+    at the production cut, and with the driver's pairs sent on to
+    connected_components' Spark path (the edge cut patched below zero).
+    Only the driver result is a LocalTableScan: the other legs also
+    force connected_components onto Spark, whose driver union-find
+    would otherwise end the plan in one."""
     from gdxpy_spark.operators import llm
     from tests.conftest import assert_frames_match
     from tests.test_r11_ops import _is_local_scan
 
     q = ALL["llm_minhash_dedup"]
-    cuts = (llm._MINHASH_DRIVER_MAX_DOCS, llm._CC_DRIVER_MAX_EDGES)
-    for path, (docs_cut, cc_cut) in (("spark", (-1, -1)), ("driver", cuts)):
-        monkeypatch.setattr(llm, "_MINHASH_DRIVER_MAX_DOCS", docs_cut)
-        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cc_cut)
+    docs_cut, cc_cut = llm._MINHASH_DRIVER_MAX_DOCS, llm._CC_DRIVER_MAX_EDGES
+    for path, cuts in (
+        ("spark", (-1, -1)),
+        ("driver", (docs_cut, cc_cut)),
+        ("driver pairs, spark components", (docs_cut, -1)),
+    ):
+        monkeypatch.setattr(llm, "_MINHASH_DRIVER_MAX_DOCS", cuts[0])
+        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cuts[1])
         got = q.fn(spark, SF_DIR)
         assert _is_local_scan(got) == (path == "driver"), path
         assert_frames_match(got, duck.execute(q.oracle), name=f"{q.name} {path}")
@@ -417,6 +422,19 @@ def test_minhash_dedup_logs_its_path(spark, monkeypatch, caplog, tmp_path):
         "minhash_dedup: 3 docs, spark path",
         f"minhash_dedup: over {n - 1} docs, spark path",
     ]
+
+
+def test_minhash_dedup_driver_path_starts_no_job(spark):
+    """Within the cut llm_minhash_dedup counts the docs from the parquet
+    footers and reads (doc_id, text) with pyarrow, so building it starts
+    no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash_dedup_build", "llm_minhash_dedup build")
+    try:
+        ALL["llm_minhash_dedup"].fn(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("minhash_dedup_build")) == []
 
 
 def test_bitmask_fallback_agrees_with_matmul_strategy(spark):

@@ -28,13 +28,19 @@ the mount was empty, SURVEY §0):
     scenario diff           (R13)  .scenario_diff(symbol, a, b)
     label filter/slice      (R14)  plain DataFrame .filter/.isin
     reductions              (R15)  plain DataFrame .groupBy().agg()
-    GDX write               (R16)  .write_symbol(df, path, name, symtype)
+    GDX write               (R16)  .write_symbol(df, path, name, symtype),
+                                   .write_file({name: (df, symtype)}, path):
+                                   ≤ CHUNK rows sorted and encoded on the
+                                   driver after one Arrow probe; above
+                                   that the format("gdx") writer (resp. a
+                                   distributed sort + toLocalIterator)
 """
 
 from __future__ import annotations
 
 import fnmatch
 import logging
+import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -42,7 +48,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from gdxpy_spark.sources import gdx_datasource
-from gdxpy_spark.sources.gdx_codec import CHUNK
+from gdxpy_spark.sources.gdx_codec import CHUNK, GdxWriter, SymbolMeta
+from gdxpy_spark.sources.gdx_datasource import _TYPE_BY_NAME, codec_records, key_columns
 
 log = logging.getLogger(__name__)
 
@@ -251,28 +258,32 @@ class GdxEngine:
         compress: bool = False,
     ) -> None:
         """Write several symbols into ONE .gdx file (a GDX file is a
-        mini-catalog — the single-symbol DataSource writer covers the
-        common case; this covers full-file export). `symbols` maps name →
-        (DataFrame, symtype). Each frame is globally sorted by its key
-        columns (a distributed range-partition sort) and then *streamed*
-        to the codec's incremental encoder via toLocalIterator — the
-        driver holds one Arrow partition at a time, never a whole symbol,
-        so a symbol larger than driver memory still writes. UELs intern
-        across all symbols, like a real writer."""
-        from gdxpy_spark.sources.gdx_codec import GdxWriter, SymbolMeta
-        from gdxpy_spark.sources.gdx_datasource import _TYPE_BY_NAME, codec_records
+        mini-catalog; write_symbol covers the single-symbol case). `symbols`
+        maps name → (DataFrame, symtype). A frame of at most
+        gdx_codec.CHUNK rows is read in one Arrow probe and sorted on the
+        driver; a larger one is globally sorted by its key columns (a
+        distributed range-partition sort) and *streamed* to the codec's
+        incremental encoder via toLocalIterator — the driver holds one
+        Arrow partition at a time, never a whole symbol, so a symbol
+        larger than driver memory still writes. UELs intern across all
+        symbols, like a real writer. A symbol that fails to encode leaves
+        no spill files and no output file behind."""
 
-        w = GdxWriter(path, compress=compress)
-        for name, (df, symtype) in symbols.items():
-            t = _TYPE_BY_NAME[symtype]
-            keys = [c for c in df.columns if c.startswith("k")]
-            src = df.select(*keys, *[c for c in df.columns if c not in keys])
-            if keys:
-                src = src.sort(*keys)
-            rows = src.toLocalIterator(prefetchPartitions=True)
-            meta = SymbolMeta(name=name, dim=len(keys), type=t)
-            w.add_symbol_streaming(meta, codec_records(rows, t, src.columns, len(keys)))
-        w.close()
+        def encoded():
+            for name, (df, symtype) in symbols.items():
+                t = _TYPE_BY_NAME[symtype]
+                keys = key_columns(df.columns)
+                src = df.select(*keys, *[c for c in df.columns if c not in keys])
+                rows = _driver_rows(src, keys, name)
+                if rows is None:
+                    log.debug("write %s: over %d records, spark path", name, CHUNK)
+                    if keys:
+                        src = src.sort(*keys)
+                    rows = src.toLocalIterator(prefetchPartitions=True)
+                meta = SymbolMeta(name=name, dim=len(keys), type=t)
+                yield meta, codec_records(rows, t, src.columns, len(keys))
+
+        _encode(path, compress, encoded())
 
     def write_symbol(
         self,
@@ -283,12 +294,67 @@ class GdxEngine:
         expl_text: str = "",
         compress: bool = False,
     ) -> None:
-        (
-            df.write.format("gdx")
-            .option("symbol", name)
-            .option("symtype", symtype)
-            .option("expl_text", expl_text)
-            .option("compress", str(compress).lower())
-            .mode("overwrite")
-            .save(path)
-        )
+        """Write one symbol as a .gdx file. A frame of at most
+        gdx_codec.CHUNK rows is encoded on the driver after one Arrow
+        probe; a larger one goes through the format("gdx") DataSource
+        writer (per-task sorted runs merged at commit)."""
+        t = _TYPE_BY_NAME[symtype]
+        keys = key_columns(df.columns, lead=True)
+        rows = _driver_rows(df, keys, name)
+        if rows is None:
+            log.debug("write %s: over %d records, datasource path", name, CHUNK)
+            (
+                df.write.format("gdx")
+                .option("symbol", name)
+                .option("symtype", symtype)
+                .option("expl_text", expl_text)
+                .option("compress", str(compress).lower())
+                .mode("overwrite")
+                .save(path)
+            )
+            return
+        meta = SymbolMeta(name=name, dim=len(keys), type=t, expl_text=expl_text)
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        _encode(path, compress, [(meta, codec_records(rows, t, df.columns, len(keys)))])
+
+
+# GDX records have bounded width: at most 20 labels of at most 63 chars
+# plus at most 5 doubles and an eps mask: under 1.5 kB per record in Arrow,
+# offsets included, so the probe moves at most CHUNK + 1 records: under
+# 100 MB in the worst case, 2.4-3.9 MB at perfbench's widths (36-59 B a
+# record). A set's text column is the one field the codec does not bound.
+def _driver_rows(df: DataFrame, keys: list[str], name: str):
+    """One bounded read of `df` (`limit(CHUNK + 1).toArrow()`, one Spark
+    job). None above gdx_codec.CHUNK rows; else the rows as tuples,
+    sorted on `keys` in binary UTF-8 label order (Spark's string sort and
+    the DataSource writer's Python tuple sort), the stream codec_records
+    consumes. GDX keys cannot be null: a null label raises ValueError."""
+    t = df.limit(CHUNK + 1).toArrow()
+    if t.num_rows > CHUNK:
+        return None
+    for k in keys:
+        if t.column(k).null_count:
+            raise ValueError(f"gdx: {name}: null label in key column {k}")
+    if keys:
+        t = t.sort_by([(k, "ascending") for k in keys])
+    log.debug("write %s: %d records, driver path", name, t.num_rows)
+
+    def rows():
+        for b in t.to_batches(max_chunksize=8192):
+            yield from zip(*(c.to_pylist() for c in b.columns))
+
+    return rows()
+
+
+def _encode(path: str, compress: bool, symbols) -> None:
+    """Encode (SymbolMeta, codec records) pairs into one file at `path`.
+    If a symbol fails to encode, every spill already written is removed
+    before the output file is opened."""
+    w = GdxWriter(path, compress=compress)
+    try:
+        for meta, records in symbols:
+            w.add_symbol_streaming(meta, records)
+        w.close()
+    except BaseException:
+        w.abort()
+        raise

@@ -411,6 +411,14 @@ class GdxWriter:
         self._blocks.append((meta, tmp.name, enc_len, chunks, stats.finish()))
         return meta
 
+    def abort(self) -> None:
+        """Drop every finished symbol's spill file without writing the
+        output (a caller's cleanup when a later symbol fails)."""
+        for _m, spill, *_ in self._blocks:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(spill)
+        self._blocks.clear()
+
     def close(self) -> None:
         import shutil
 

@@ -52,6 +52,7 @@ import heapq
 import math
 import os
 import pickle
+import re
 import shutil
 import uuid
 
@@ -182,6 +183,27 @@ def record_batch(meta: SymbolMeta, data: SymbolData, scenario: str | None):
     if scenario is not None:
         cols["scenario"] = pa.array([scenario] * len(data.keys), type=pa.string())
     return pa.RecordBatch.from_pydict(cols)
+
+
+_KEY_COLUMN = re.compile(r"k\d+")
+
+
+def key_columns(field_names: list[str], lead: bool = False) -> list[str]:
+    """The key columns of a frame to write: the columns named k<digits>,
+    which must be exactly k1..kN in schema order (a gap, a repeat or k0
+    raises ValueError). A column such as `kind` is not a key. `lead`
+    also requires the keys to be the first N columns, as the DataSource
+    writer's run sort takes them by position."""
+    names = list(field_names)
+    keys = [n for n in names if _KEY_COLUMN.fullmatch(n)]
+    want = [f"k{i + 1}" for i in range(len(keys))]
+    if keys != want:
+        raise ValueError(f"gdx: key columns must be k1..kN, got {names}")
+    if lead and names[: len(keys)] != keys:
+        raise ValueError(
+            f"gdx: key columns k1..k{len(keys)} must lead the schema, got {names}"
+        )
+    return keys
 
 
 def codec_records(rows, symtype: int, field_names: list[str], dim: int):
@@ -338,8 +360,7 @@ class PushdownGdxSymbolReader(GdxSymbolReader):
                 and isinstance(flt, (EqualTo, In, GreaterThan,
                                      GreaterThanOrEqual, LessThan,
                                      LessThanOrEqual, StringStartsWith))
-                and (attr[0] == "scenario"
-                     or (attr[0].startswith("k") and attr[0][1:].isdigit()))
+                and (attr[0] == "scenario" or _KEY_COLUMN.fullmatch(attr[0]))
             ):
                 self.pruning.setdefault(attr[0], []).append(flt)
         # partition pruning only — Spark re-evaluates every filter on the
@@ -361,8 +382,8 @@ class GdxSymbolWriter(DataSourceWriter):
     never records. commit() k-way heap-merges the runs (each open run
     streams one SLICE of records at a time) into the codec's streaming
     encoder, so driver memory at commit is O(runs × slice), independent
-    of symbol size. The facade's write_file streams via toLocalIterator
-    for the multi-symbol case."""
+    of symbol size. The facade's write_symbol encodes a frame of at most
+    gdx_codec.CHUNK rows on the driver and comes here only above that."""
 
     SPILL_BATCH = 100_000  # records sorted per run frame on the executor
     SLICE = 8_192  # records per pickle slice inside a frame (merge memory)
@@ -378,10 +399,11 @@ class GdxSymbolWriter(DataSourceWriter):
         if self.layout not in ("gdxpy", "gams"):
             raise ValueError(f"gdx: unknown layout {self.layout!r}")
         self.schema = schema
+        self.dim = len(key_columns(schema.fieldNames(), lead=True))
 
     def write(self, rows):
         """Executor side: spill sorted runs, ship only their locations."""
-        dim = self._dim()
+        dim = self.dim
         os.makedirs(self.run_dir, exist_ok=True)
         run_path = os.path.join(self.run_dir, f"run-{uuid.uuid4().hex}.pkl")
         offsets: list[int] = []
@@ -414,9 +436,6 @@ class GdxSymbolWriter(DataSourceWriter):
             pickle.dumps({"run": run_path, "offsets": offsets, "count": total})
         )
 
-    def _dim(self) -> int:
-        return sum(1 for f in self.schema.fields if f.name.startswith("k"))
-
     @staticmethod
     def _frame_iter(path: str, offset: int):
         """Stream one sorted frame from a run file, SLICE records at a
@@ -430,14 +449,8 @@ class GdxSymbolWriter(DataSourceWriter):
                 yield from sl
 
     def commit(self, messages):
-        dim = self._dim()
+        dim = self.dim
         field_names = [f.name for f in self.schema.fields]
-        kcols = [f.name for f in self.schema.fields[:dim]]
-        if kcols != [f"k{i + 1}" for i in range(dim)]:
-            raise ValueError(
-                f"gdx: key columns k1..k{dim} must lead the schema, got "
-                f"{field_names}"
-            )
         frames = []
         for msg in messages:
             info = pickle.loads(msg.payload)

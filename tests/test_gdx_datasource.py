@@ -581,8 +581,166 @@ def test_write_paths_map_nulls_alike(engine, spark, tmp_path):
         return [repr(r) for r in zip(d.keys, d.values, d.eps_mask)]
 
     for df, symtype, null_row in ((par, "parameter", 1), (var, "variable", 0)):
-        a, b = str(tmp_path / f"file_{symtype}.gdx"), str(tmp_path / f"sym_{symtype}.gdx")
+        a, b, c = (str(tmp_path / f"{how}_{symtype}.gdx") for how in ("file", "sym", "ds"))
         engine.write_file({"x": (df, symtype)}, a)
         engine.write_symbol(df, b, "x", symtype)
-        assert decoded(a) == decoded(b)
+        _datasource_write(df, c, "x", symtype)
+        assert decoded(a) == decoded(b) == decoded(c)
         assert "nan" in decoded(a)[null_row]
+
+
+def _datasource_write(df, path, name, symtype):
+    (df.write.format("gdx").option("symbol", name).option("symtype", symtype)
+     .mode("overwrite").save(path))
+
+
+def _decoded(path, name):
+    """Every record of one symbol as a sorted list of reprs: equal lists
+    are equal multisets, NaN and -0.0 included."""
+    from gdxpy_spark.sources.gdx_codec import GdxFile
+
+    f = GdxFile(path)
+    d = f.read_records(f.find(name))
+    n = len(d.keys)
+    return sorted(repr(r) for r in zip(d.keys, d.values or [()] * n,
+                                       d.eps_mask or [0] * n, d.text or [""] * n))
+
+
+_WRITE_TYPES = {"s": "set", "p": "parameter", "v": "variable", "e": "equation",
+                "sc": "parameter", "empty": "parameter"}
+
+
+@pytest.mark.parametrize("name", list(_WRITE_TYPES))
+def test_facade_write_matches_datasource_writer(spark, parity_files, name, tmp_path, caplog):
+    """write_symbol and write_file encode a model-sized frame on the
+    driver; the decoded records equal the format("gdx") writer's, and,
+    the keys being distinct, so do the file bytes (same binary label
+    order, same UEL interning). Covers set texts, parameter specials
+    (NaN, ±inf, EPS), a variable, an equation's eps_mask, a scalar and
+    an empty frame."""
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.api")
+    symtype = _WRITE_TYPES[name]
+    eng = GdxEngine(spark)
+    df = eng.symbol(name, parity_files["gdxpy"]).repartition(3)
+    sym, file_, ds = (str(tmp_path / f"{how}.gdx") for how in ("sym", "file", "ds"))
+    eng.write_symbol(df, sym, name, symtype)
+    eng.write_file({name: (df, symtype)}, file_)
+    _datasource_write(df, ds, name, symtype)
+    want = _decoded(ds, name)
+    assert _decoded(sym, name) == want and _decoded(file_, name) == want
+    assert len(want) == df.count()
+    with open(ds, "rb") as f:
+        ds_bytes = f.read()
+    for p in (sym, file_):
+        with open(p, "rb") as f:
+            assert f.read() == ds_bytes, p
+    lines = [r.getMessage() for r in caplog.records if r.getMessage().startswith("write")]
+    assert lines == [f"write {name}: {len(want)} records, driver path"] * 2
+
+
+def test_write_symbol_keeps_expl_text_and_compress(engine, spark, parity_files, tmp_path):
+    """The driver path of write_symbol writes the explanatory text and
+    the compressed container, byte for byte as format("gdx") does."""
+    from gdxpy_spark.sources.gdx_codec import GdxFile
+
+    df = GdxEngine(spark).symbol("v", parity_files["gdxpy"])
+    sym, ds = str(tmp_path / "sym.gdx"), str(tmp_path / "ds.gdx")
+    engine.write_symbol(df, sym, "v", "variable", expl_text="flows", compress=True)
+    (df.write.format("gdx").option("symbol", "v").option("symtype", "variable")
+     .option("expl_text", "flows").option("compress", "true").mode("overwrite").save(ds))
+    f = GdxFile(sym)
+    assert f.compressed and f.symbols[f.find("v")].expl_text == "flows"
+    with open(sym, "rb") as a, open(ds, "rb") as b:
+        assert a.read() == b.read()
+
+
+def test_facade_write_above_chunk_takes_datasource(spark, tmp_path, caplog):
+    """One record past gdx_codec.CHUNK: write_symbol hands the frame to
+    the format("gdx") writer and write_file to its distributed sort,
+    with the same decoded contents."""
+    from gdxpy_spark.sources.gdx_codec import CHUNK
+
+    caplog.set_level(logging.DEBUG, logger="gdxpy_spark.api")
+    n = CHUNK + 1
+    df = spark.range(n).select(
+        F.format_string("r%06d", ((F.col("id") * 7919) % n)).alias("k1"),
+        (F.col("id") * 0.5).alias("value"),
+        (F.col("id") % 1000 == 0).alias("is_eps"),
+    )
+    sym, file_ = str(tmp_path / "sym.gdx"), str(tmp_path / "file.gdx")
+    eng = GdxEngine(spark)
+    eng.write_symbol(df, sym, "big")
+    assert caplog.records[-1].getMessage() == (
+        f"write big: over {CHUNK} records, datasource path"
+    )
+    eng.write_file({"big": (df, "parameter")}, file_)
+    assert caplog.records[-1].getMessage() == (
+        f"write big: over {CHUNK} records, spark path"
+    )
+    want = sorted(
+        repr(((f"r{i * 7919 % n:06d}",), (0.0,) if i % 1000 == 0 else (i * 0.5,),
+              int(i % 1000 == 0), ""))
+        for i in range(n)
+    )
+    assert _decoded(sym, "big") == want
+    assert _decoded(file_, "big") == want
+
+
+def test_facade_write_failure_leaves_no_spill(engine, spark, tmp_path, monkeypatch):
+    """A write_file whose second symbol fails (a variable frame without
+    `level`) removes the first symbol's finished spill file and writes no
+    output file."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    good = spark.createDataFrame([("a", 1.0, False)], "k1 STRING, value DOUBLE, is_eps BOOLEAN")
+    bad = spark.createDataFrame([("a", 0.0, 0.0, 1.0, 1.0)],
+                                "k1 STRING, marginal DOUBLE, lower DOUBLE, upper DOUBLE,"
+                                " scale DOUBLE")
+    out = tmp_path / "out.gdx"
+    with pytest.raises(KeyError, match="level"):
+        engine.write_file({"good": (good, "parameter"), "bad": (bad, "variable")}, str(out))
+    assert list(tmp.glob("*.spill")) == []
+    assert not out.exists()
+
+
+def test_facade_write_rejects_null_key_labels(engine, spark, tmp_path):
+    """GDX keys cannot be null: both facade writers raise on the driver
+    path and write no file."""
+    df = spark.createDataFrame([("a", 1.0), (None, 2.0)], "k1 STRING, value DOUBLE")
+    out = tmp_path / "null.gdx"
+    with pytest.raises(ValueError, match="null label in key column k1"):
+        engine.write_symbol(df, str(out), "x")
+    with pytest.raises(ValueError, match="null label in key column k1"):
+        engine.write_file({"x": (df, "parameter")}, str(out))
+    assert not out.exists()
+
+
+def test_write_key_columns_are_k_digits(engine, spark, tmp_path):
+    """Keys are the columns named k<digits>: `kind` is a value-side
+    column, so (k1, kind, value) writes a 1-dim parameter through both
+    facade writers, as through format("gdx"); keys that are not exactly
+    k1..kN raise ValueError."""
+    from gdxpy_spark.sources.gdx_codec import GdxFile
+
+    df = spark.createDataFrame([("a", "x", 1.0), ("b", "y", 2.0)],
+                               "k1 STRING, kind STRING, value DOUBLE")
+    paths = [str(tmp_path / f"{how}.gdx") for how in ("sym", "file", "ds")]
+    engine.write_symbol(df, paths[0], "x")
+    engine.write_file({"x": (df, "parameter")}, paths[1])
+    _datasource_write(df, paths[2], "x", "parameter")
+    for p in paths:
+        f = GdxFile(p)
+        assert f.symbols[f.find("x")].dim == 1
+        assert _decoded(p, "x") == _decoded(paths[2], "x")
+
+    gap = spark.createDataFrame([("a", "b", 1.0)], "k1 STRING, k3 STRING, value DOUBLE")
+    with pytest.raises(ValueError, match="must be k1..kN"):
+        engine.write_symbol(gap, str(tmp_path / "gap.gdx"), "x")
+    with pytest.raises(ValueError, match="must be k1..kN"):
+        engine.write_file({"x": (gap, "parameter")}, str(tmp_path / "gap.gdx"))
+    trailing = spark.createDataFrame([(1.0, "a")], "value DOUBLE, k1 STRING")
+    with pytest.raises(ValueError, match="must lead the schema"):
+        engine.write_symbol(trailing, str(tmp_path / "lead.gdx"), "x")

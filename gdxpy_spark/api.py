@@ -54,6 +54,13 @@ from gdxpy_spark.sources.gdx_datasource import _TYPE_BY_NAME, codec_records, key
 log = logging.getLogger(__name__)
 
 
+def _read_keys(columns: list[str]) -> list[str]:
+    """The key columns of a read frame: those named k<digits>, in order.
+    A column such as `kind` is not a key; unlike key_columns, the keys
+    need not be k1..kN (a squeeze can leave k2, k4)."""
+    return [c for c in columns if gdx_datasource._KEY_COLUMN.fullmatch(c)]
+
+
 class GdxEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -127,7 +134,7 @@ class GdxEngine:
         if field:
             if field not in df.columns:
                 raise ValueError(f"{name} has no value field {field!r}")
-            keys = [c for c in df.columns if c.startswith("k")]
+            keys = _read_keys(df.columns)
             df = df.select(*keys, field)
         if squeeze:
             df = self.squeeze(df)
@@ -183,7 +190,7 @@ class GdxEngine:
         model-sized symbols (the whole point of this engine is that the
         100 TB path never materializes on the driver)."""
         pdf = df.toPandas()
-        keys = [c for c in df.columns if c.startswith("k")]
+        keys = _read_keys(df.columns)
         return pdf.set_index(keys) if keys else pdf
 
     # -- R10: squeeze ---------------------------------------------------------
@@ -191,7 +198,7 @@ class GdxEngine:
         """Drop key columns that are constant across the frame (gdxpy drops
         singleton MultiIndex levels). One tiny aggregate probe, then a
         projection — the data itself is never collected."""
-        keys = [c for c in df.columns if c.startswith("k")]
+        keys = _read_keys(df.columns)
         if not keys:
             return df
         # min == max (or min null) ⇔ at most one distinct non-null label;
@@ -199,7 +206,7 @@ class GdxEngine:
         probe = df.agg(*[F.min(c) for c in keys], *[F.max(c) for c in keys]).first()
         lo, hi = probe[: len(keys)], probe[len(keys) :]
         varying = {c for c, a, b in zip(keys, lo, hi) if a is not None and a != b}
-        keep = [c for c in df.columns if not c.startswith("k") or c in varying]
+        keep = [c for c in df.columns if c not in keys or c in varying]
         return df.select(*keep)
 
     # -- R12: scenario concat -------------------------------------------------
@@ -223,7 +230,7 @@ class GdxEngine:
         b = self.symbol(name, path_b)
         if field not in a.columns:
             field = "level" if "level" in a.columns else a.columns[-1]
-        keys = [c for c in a.columns if c.startswith("k")]
+        keys = _read_keys(a.columns)
         af = a.select(*keys, F.col(field).alias("val_a"))
         bf = b.select(*keys, F.col(field).alias("val_b"))
         j = af.join(bf, on=keys, how="full")

@@ -1576,7 +1576,7 @@ def _ivf_k(n: int, target_cell: int = None) -> int:
     instead of √n-cells' O(n^1.5) (measured ×148 → ×33 dedup wall at
     the 100× probe). The coarse-search n·k term this re-inflates is
     absorbed by the two-level probe's n·√k, and the large-k FIT by
-    _kmeans_assign's BLAS path."""
+    _nearest_local's GEMM shortlist (_kmeans_assign above the cut)."""
     import math
 
     if target_cell:
@@ -5130,16 +5130,17 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED CTEs — the llm_bpe_train technique applied to an ML
     training loop.
 
-    Physical strategy (_kmeans_fit): a corpus of at most
-    _LLOYD_DRIVER_MAX_VECTORS vectors is read once as Arrow and fitted
-    and assigned on the driver in numpy (_lloyd_local, the same
-    coordinate-order Σ(v−c)², lowest-cell argmin and rounded means),
-    because six Spark rounds cost a fixed job floor that dwarfs the
-    data there; the assignment comes back as a LocalTableScan. Above
-    the cut each Spark round's assignment is a k-way broadcast
-    (centroids are KILOBYTES — k×64 doubles — at any corpus size)
-    against the vector table, argmin as a groupBy min-struct (no
-    window, no sort); the update is one partial-aggregable
+    Physical strategy (_kmeans_fit): one assignment kernel,
+    _nearest_local (a GEMM shortlist re-scored as the exact
+    coordinate-order Σ(v−c)², lowest-cell argmin), on both paths. A
+    corpus of at most _LLOYD_DRIVER_MAX_VECTORS vectors is read once
+    as Arrow and fitted and assigned on the driver in numpy
+    (_lloyd_local), because six Spark rounds cost a fixed job floor
+    that dwarfs the data there; the assignment comes back as a
+    LocalTableScan. Above the cut each Spark round's assignment runs
+    the same kernel per Arrow batch against a broadcast of the
+    centroids (KILOBYTES — k×64 doubles — at any corpus size), with
+    no shuffle (_kmeans_assign); the update is one partial-aggregable
     (cell, dim)-keyed average over a posexploded frame. At 100 TB: n·k
     distance work and one n-sized shuffle per round — the textbook
     distributed Lloyd cost, with k chosen by the caller (k≈√n for IVF,
@@ -5158,108 +5159,54 @@ _KMEANS_MEMO: dict = {}
 _KMEANS_MEMO_CAP = 4
 
 
-_KMEANS_JOIN_ASSIGN_MAX_K = 64  # strategy switch for _kmeans_assign
-
-
-# the one live large-k centroid broadcast (see _kmeans_assign): fits
-# are driver-side sequential, so a single slot suffices
+# the one live centroid broadcast (see _kmeans_assign): fits are
+# driver-side sequential, so a single slot suffices
 _KMEANS_ASSIGN_BC = None
 
 
-def _kmeans_assign(spark: SparkSession, cents, frame_ve, frame_rows):
-    """Nearest-centroid assignment → (vec_id, cell, d2). One semantic,
-    two physical strategies by k (the Catalyst-style cost cut made
-    explicit, r13):
-
-    - k ≤ {max_k}: distances as one codegen'd equi-join — (vec,pos,v)
-      × broadcast (cell,pos,c) on pos, partial-agg sum of squares,
-      argmin as a groupBy min-struct. No window, no interpreted HOFs
-      (a 16-fold zip_with variant measured 22.7 s at sf0.1 vs ~3 s for
-      this shape). The registered oracle scales fit below
-      _LLOYD_DRIVER_MAX_VECTORS, on the driver, whose _nearest_local
-      computes this path's Σ(v−c)² and argmin exactly; forced-path
-      tests keep both Spark strategies oracle-checked.
-    - k > {max_k}: the join shape explodes n·k·64 rows — the measured
-      fit wall at the 100× probe, and the blocker for the
-      k ∝ n/target_cell regime (r12 verdict #1). Large k switches to
-      the llm_knn_brute pattern: broadcast the k×64 centroid matrix
-      (metadata — 1.6 MB at k=3136) and argmin per Arrow batch with
-      one BLAS GEMM (n·k·d FLOPs, n rows — no row explosion, no
-      shuffle; output is the same narrow (vec_id, cell, d2) frame).
-      Tie-break matches the min-struct exactly: np.argmin returns the
-      FIRST minimal index = lowest cell. d2 is computed as
-      |v|²−2v·c+|c|² (clamped at 0), whose float association differs
-      from the join path's Σ(v−c)² in ulps — the accepted knife-edge
-      class documented on _kmeans_rounds_sql; assignment equivalence
-      at the boundary is pinned in tests/test_r13_ops.py."""
-    k = len(cents)
-    if k <= _KMEANS_JOIN_ASSIGN_MAX_K:
-        cent_rows = [
-            (j, p, x) for j, c in enumerate(cents) for p, x in enumerate(c)
-        ]
-        cdf = spark.createDataFrame(cent_rows, "cell INT, pos INT, c DOUBLE")
-        d2 = (
-            frame_ve.join(F.broadcast(cdf), "pos")
-            .groupBy("vec_id", "cell")
-            .agg(
-                F.sum(
-                    (F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))
-                ).alias("d2")
-            )
-        )
-        best = d2.groupBy("vec_id").agg(
-            F.min(F.struct("d2", "cell")).alias("b")
-        )
-        return best.select(
-            "vec_id", F.col("b.cell").alias("cell"), F.col("b.d2").alias("d2")
-        )
+def _kmeans_assign(spark: SparkSession, cents, frame_rows):
+    """Nearest-centroid assignment of ``frame_rows`` (vec_id, embedding)
+    → (vec_id, cell, d2): one mapInArrow over a broadcast of the k×d
+    centroids (1.6 MB at k = 3,136) that runs _nearest_local, the
+    driver's kernel, on each Arrow batch's _embedding_matrix, so cells
+    and d2 are bit-equal to the driver path's, with no shuffle and no
+    row explosion at any k. A batch with a null, an empty or a ragged
+    embedding raises ValueError. The workers import gdxpy_spark for
+    the kernel: on a cluster, ship the package to the executors."""
     import numpy as np
 
-    # single-slot broadcast reuse (r13 advice): each fit round used to
-    # leave its centroid-matrix broadcast cached on the executors until
-    # driver GC — at the 10⁹ posture (k≈31.6k → ~16 MB each, 7 rounds
-    # per fit) that is ~100 MB+ of dead broadcast blocks per fit.
-    # unpersist() only evicts the executor copies; if a plan holding
-    # the old handle re-executes, Spark re-ships the value from the
-    # driver, so evicting the PREVIOUS round's matrix once the new
-    # round is being assigned is always correct, never just usually.
+    # evict the previous round's matrix from the executors (~16 MB a
+    # round at k≈31.6k): unpersist() keeps the driver copy, so a plan
+    # still holding the old handle is re-shipped it if it re-executes
     global _KMEANS_ASSIGN_BC
     if _KMEANS_ASSIGN_BC is not None:
         _KMEANS_ASSIGN_BC.unpersist()
     bc = spark.sparkContext.broadcast(np.asarray(cents, dtype=np.float64))
     _KMEANS_ASSIGN_BC = bc
 
-    def part(it):
-        import numpy as np
-        import pandas as pd
+    def part(batches):
+        import pyarrow as pa
 
-        cm = bc.value
-        cn = (cm * cm).sum(axis=1)
-        for pdf in it:
-            if not len(pdf):
+        from gdxpy_spark.operators.llm import _embedding_matrix, _nearest_local
+
+        for b in batches:
+            if not b.num_rows:
                 continue
-            vm = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
-            )
-            d2 = (vm * vm).sum(1)[:, None] - 2.0 * (vm @ cm.T) + cn[None, :]
-            cell = d2.argmin(1)
-            best = d2[np.arange(len(vm)), cell]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": cell.astype("int32"),
-                    "d2": np.maximum(best, 0.0),
-                }
+            x = _embedding_matrix(pa.chunked_array([b.column("embedding")]))
+            if x is None:
+                raise ValueError(
+                    "k-means assignment needs non-null embeddings of one length"
+                )
+            cell, d2 = _nearest_local(x, bc.value)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("vec_id"), pa.array(cell), pa.array(d2)],
+                names=["vec_id", "cell", "d2"],
             )
 
-    return frame_rows.mapInPandas(
-        part, schema="vec_id BIGINT, cell INT, d2 DOUBLE"
+    vt = frame_rows.schema["vec_id"].dataType.simpleString()
+    return frame_rows.select("vec_id", "embedding").mapInArrow(
+        part, f"vec_id {vt}, cell INT, d2 DOUBLE"
     )
-
-
-_kmeans_assign.__doc__ = _kmeans_assign.__doc__.format(
-    max_k=_KMEANS_JOIN_ASSIGN_MAX_K
-)
 
 
 def _md5_head(df: DataFrame, n: int) -> DataFrame:
@@ -5280,8 +5227,8 @@ def _md5_seeds(e: DataFrame, k: int) -> list:
 
 def _posexploded(df: DataFrame) -> DataFrame:
     """(vec_id, pos, v DOUBLE) — one skinny row per embedding
-    coordinate: the frame every Lloyd distance join and update
-    aggregates over."""
+    coordinate: the frame the Spark Lloyd update and the PQ distance
+    tables aggregate over."""
     return df.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
     ).withColumn("v", F.col("v").cast("double"))
@@ -5291,15 +5238,15 @@ def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows):
     """The Spark Lloyd loop: _kmeans_fit's fit above
     _LLOYD_DRIVER_MAX_VECTORS (below it, and for the PQ codebooks,
     _lloyd_local runs the same rounds on the driver). _KMEANS_ROUNDS
-    times, assign (_kmeans_assign over ``fit_ve`` / ``fit_rows`` —
-    (vec_id, pos, v) and (vec_id, embedding) of the same training
-    vectors) and replace each cell's centroid by its member mean,
-    every coordinate quantized to 9 decimals (the cross-engine
-    discipline argued on _kmeans_rounds_sql). One collect per round:
-    the centroids are metadata. An empty cell keeps its previous
+    times, assign ``fit_rows`` (vec_id, embedding) with _kmeans_assign
+    and replace each cell's centroid by its member mean over
+    ``fit_ve``, the same vectors posexploded (vec_id, pos, v), every
+    coordinate quantized to 9 decimals (the cross-engine discipline
+    argued on _kmeans_rounds_sql). One collect per round: the
+    centroids are metadata. An empty cell keeps its previous
     centroid. Updates ``centroids`` in place and returns it."""
     for _r in range(_KMEANS_ROUNDS):
-        asg = _kmeans_assign(spark, centroids, fit_ve, fit_rows)
+        asg = _kmeans_assign(spark, centroids, fit_rows)
         upd = (
             asg.join(fit_ve, "vec_id")
             .groupBy("cell", "pos")
@@ -5320,7 +5267,7 @@ def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows):
 
 # Vectors up to which _kmeans_fit reads the corpus once as Arrow and
 # fits and assigns on the driver (_lloyd_local, _nearest_local) instead
-# of running Spark Lloyd rounds: a broadcast distance join, an update
+# of running Spark Lloyd rounds: a broadcast assignment, an update
 # aggregate and a collect each, whose job floor, not the data, sets the
 # wall on small corpora (sf0.1's 2,000 vectors at k = 45: 0.8 s on the
 # driver vs 12 s for the Spark fit and assignment on a 4-vCPU box).
@@ -5332,7 +5279,7 @@ _LLOYD_DRIVER_MAX_VECTORS = 1 << 16
 def _embedding_matrix(col):
     """An Arrow list column as a float64 (rows, d) matrix, or None when
     it is empty, holds a null or has embeddings of different lengths
-    (which only the Spark loop's pos-keyed join handles)."""
+    (on which _kmeans_assign, the Spark path, raises ValueError)."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -5371,12 +5318,12 @@ def _md5_order(ids) -> list:
 
 
 def _d2_blocks(x, cents):
-    """The driver's one distance kernel: yields (lo, d2) with d2 the
-    (rows × k) Σ(v−c)² of rows lo.. of ``x`` against ``cents``, summed
-    in coordinate order from 0.0 as Spark's fold and the join's
-    per-(vec_id, cell) sum see it. Rows go in blocks, coordinate-major,
-    so the two (rows × k) temporaries stay 0.5 MiB (cache-resident) at
-    any k."""
+    """The all-pairs distance kernel (_probe_local's, and the exact
+    reference _nearest_local re-scores with): yields (lo, d2) with d2
+    the (rows × k) Σ(v−c)² of rows lo.. of ``x`` against ``cents``,
+    summed in coordinate order from 0.0. Rows go in blocks,
+    coordinate-major, so the two (rows × k) temporaries stay 0.5 MiB
+    (cache-resident) at any k."""
     import numpy as np
 
     ct = np.asarray(cents, dtype=np.float64).T.copy()
@@ -5394,18 +5341,55 @@ def _d2_blocks(x, cents):
 
 
 def _nearest_local(x, cents):
-    """The driver twin of _kmeans_assign's join path: each row of ``x``
-    → (cell int32, d2 float64), d2 from _d2_blocks and the argmin the
-    first, i.e. lowest, cell. Also the final assignment of the
-    super-quantizer (_super_quantize), with centroids as rows."""
+    """The one nearest-centroid kernel (the driver fits, _super_quantize
+    and every _kmeans_assign batch): each row of ``x`` → (cell int32,
+    d2 float64), bit for bit the argmin of _d2_blocks' exact Σ(v−c)²,
+    ties to the lowest cell.
+
+    Shortlist, then verify (REPOSE, ICDE 2021): per row block one GEMM
+    gives g = |v|²−2v·c+|c|²; the cells with g ≤ min g +
+    1e-9·(|v|² + max|c|²) are re-scored with _d2_blocks' elementwise
+    ops in its order, and the row takes the lowest cell among their
+    exact minima. g and the exact sum each err by at most
+    ~(3d+8)·eps·(|v|²+|c|²), so the exact winner's g is within twice
+    that of min g: 3e-14 of the scale at d = 64, and under 1e-9 for
+    any d below ~10⁶ while values stay in the normal float range. A
+    row whose g holds a NaN (a NaN or infinite coordinate in it or in
+    a centroid) keeps every cell, so it too gets _d2_blocks' argmin:
+    cell 0 and d2 NaN for a NaN row."""
     import numpy as np
 
+    c = np.asarray(cents, dtype=np.float64)
+    ct = c.T.copy()
+    cn = (c * c).sum(axis=1)
+    cmax = cn.max()
     cell = np.empty(len(x), dtype=np.int32)
     d2 = np.empty(len(x))
-    for lo, acc in _d2_blocks(x, cents):
-        best = acc.argmin(axis=1)
-        cell[lo:lo + len(acc)] = best
-        d2[lo:lo + len(acc)] = acc[np.arange(len(acc)), best]
+    step = max(1, (1 << 18) // len(c))
+    for lo in range(0, len(x), step):
+        xb = x[lo:lo + step]
+        vn = (xb * xb).sum(axis=1)
+        g = xb @ ct
+        g *= -2.0
+        with np.errstate(invalid="ignore"):
+            g += vn[:, None]
+            g += cn
+        lim = g.min(axis=1) + 1e-9 * (vn + cmax)
+        keep = g <= lim[:, None]
+        keep[np.isnan(lim)] = True
+        r, j = np.divmod(np.flatnonzero(keep), len(c))
+        acc = np.zeros(len(r))
+        diff = np.empty_like(acc)
+        for xp, cp in zip(xb.T[:, r], ct[:, j]):
+            np.subtract(xp, cp, out=diff)
+            np.multiply(diff, diff, out=diff)
+            acc += diff
+        # r ascends and the sort is stable, so among equal d2 the lowest
+        # j wins; a NaN sorts first, as np.argmin takes the first NaN
+        o = np.lexsort((np.where(np.isnan(acc), -np.inf, acc), r))
+        o = o[np.r_[True, r[o][1:] != r[o][:-1]]]
+        cell[lo + r[o]] = j[o]
+        d2[lo + r[o]] = acc[o]
     return cell, d2
 
 
@@ -5449,9 +5433,10 @@ def _kmeans_fit(
     _LLOYD_DRIVER_MAX_VECTORS vectors is fitted (_lloyd_local) and
     assigned (_nearest_local) on the driver, and the assignment is one
     Arrow table (a LocalTableScan). Larger corpora run the Spark loop
-    (_lloyd_rounds) and _kmeans_assign. Both paths give the same
-    centroids, cells and d2 (pinned in tests on both, and against the
-    DuckDB twin); the centroid memo is shared.
+    (_lloyd_rounds) and the final _kmeans_assign, which runs the same
+    _nearest_local per Arrow batch. Both paths give the same
+    centroids, cells and d2 bit for bit (pinned in tests on both, and
+    against the DuckDB twin); the centroid memo is shared.
 
     ``sample_per_cell``: when set, the UPDATE rounds fit on only the
     k·sample_per_cell vectors with the smallest md5(vec_id) — the
@@ -5482,9 +5467,6 @@ def _kmeans_fit(
     else:
         log.debug("kmeans_fit: %s vectors, k=%d, spark path, memo %s",
                   _corpus_size(n), k, memo)
-        # the posexploded frame feeds EVERY round's distance join and
-        # the final assignment — cache it once (n×64 skinny rows)
-        ve = managed_cache(_posexploded(e))
     if memo_ok:
         centroids = memo_hit  # serve-only: one final assignment
     elif local is not None:
@@ -5494,7 +5476,7 @@ def _kmeans_fit(
         centroids = _lloyd_local(x[order], x[order[:k]], _KMEANS_ROUNDS)
     else:
         if sample_per_cell is None:
-            fit_ve, fit_rows = ve, e
+            fit_rows = e
         else:
             # repartition AFTER the sort-limit: GlobalLimit's single
             # partition would run every fit round's join/agg at
@@ -5503,12 +5485,14 @@ def _kmeans_fit(
             # the limit, so the reshuffle changes layout only.
             samp = _md5_head(e, k * sample_per_cell).repartition("vec_id")
             fit_rows = managed_cache(samp)
-            fit_ve = managed_cache(_posexploded(samp))
+        # the posexploded training vectors feed every round's update
+        # aggregate; cache them once (n×64 skinny rows)
+        fit_ve = managed_cache(_posexploded(fit_rows))
         centroids = _lloyd_rounds(spark, _md5_seeds(e, k), fit_ve, fit_rows)
     if not memo_ok:
         _memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)
     if local is None:
-        return _kmeans_assign(spark, centroids, ve, e), centroids
+        return _kmeans_assign(spark, centroids, e), centroids
     cell, d2 = _nearest_local(x, centroids)
     asg = pa.table({"vec_id": head.column("vec_id"), "cell": cell, "d2": d2})
     vt = e.schema["vec_id"].dataType.simpleString()

@@ -402,7 +402,8 @@ class GdxSymbolWriter(DataSourceWriter):
         self.dim = len(key_columns(schema.fieldNames(), lead=True))
 
     def write(self, rows):
-        """Executor side: spill sorted runs, ship only their locations."""
+        """Executor side: spill sorted runs, ship only their locations.
+        A null key label raises ValueError before its batch spills."""
         dim = self.dim
         os.makedirs(self.run_dir, exist_ok=True)
         run_path = os.path.join(self.run_dir, f"run-{uuid.uuid4().hex}.pkl")
@@ -424,7 +425,13 @@ class GdxSymbolWriter(DataSourceWriter):
                 batch.clear()
 
             for r in rows:
-                batch.append(tuple(r))
+                r = tuple(r)
+                if None in r[:dim]:
+                    raise ValueError(
+                        f"gdx: {self.symbol}: null label in key column "
+                        f"k{r.index(None) + 1}"
+                    )
+                batch.append(r)
                 total += 1
                 if len(batch) >= self.SPILL_BATCH:
                     flush()

@@ -718,6 +718,31 @@ def test_facade_write_rejects_null_key_labels(engine, spark, tmp_path):
     assert not out.exists()
 
 
+def test_datasource_write_rejects_null_key_labels(spark, tmp_path):
+    """The format("gdx") writer raises the facade's ValueError text on a
+    null key label before it spills, and leaves no output file and no
+    run directory."""
+    df = spark.createDataFrame([("a", 1.0), (None, 2.0)], "k1 STRING, value DOUBLE")
+    out = tmp_path / "null.gdx"
+    with pytest.raises(Exception, match="gdx: x: null label in key column k1"):
+        _datasource_write(df, str(out), "x", "parameter")
+    assert not out.exists()
+    assert not [p.name for p in tmp_path.iterdir() if "__gdx_runs__" in p.name]
+
+
+def test_read_keys_are_k_digits(engine, spark):
+    """On the read side too a key is a column named k<digits>: squeeze
+    keeps a constant `kind` column and to_pandas does not index on it."""
+    df = spark.createDataFrame(
+        [("a", "x", "c", 1.0), ("b", "x", "c", 2.0)],
+        "k1 STRING, k2 STRING, kind STRING, value DOUBLE",
+    )
+    assert engine.squeeze(df).columns == ["k1", "kind", "value"]
+    pdf = engine.to_pandas(df)
+    assert list(pdf.index.names) == ["k1", "k2"]
+    assert list(pdf.columns) == ["kind", "value"]
+
+
 def test_write_key_columns_are_k_digits(engine, spark, tmp_path):
     """Keys are the columns named k<digits>: `kind` is a value-side
     column, so (k1, kind, value) writes a 1-dim parameter through both

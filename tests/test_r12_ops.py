@@ -373,18 +373,17 @@ def test_lloyd_callers_match_oracle_on_both_paths(
 
 @pytest.mark.slow
 def test_kmeans_large_k_cells_equal_on_both_paths(spark, monkeypatch, tmp_path):
-    """Above _KMEANS_JOIN_ASSIGN_MAX_K the Spark path assigns with
-    _kmeans_assign's GEMM (|v|²−2v·c+|c|²) while the driver keeps the
-    Σ(v−c)² form: d2 may differ in ulps, but on the fixture every cell
-    of every round agrees, so the centroids and final cells are
-    equal."""
+    """At a large k (80 cells) both paths assign with the one kernel,
+    _nearest_local (on the driver, and per Arrow batch inside
+    _kmeans_assign on Spark), so the fitted centroids, the final cells
+    and the final d2 are equal bit for bit."""
     from gdxpy_spark.operators import llm
 
-    k = llm._KMEANS_JOIN_ASSIGN_MAX_K + 16
+    k = 80
 
     def fit():
         asg, cents = llm._kmeans_fit(spark, SF_SMALL, k=k)
-        return cents, dict(asg.select("vec_id", "cell").collect())
+        return cents, {r["vec_id"]: (r["cell"], r["d2"]) for r in asg.collect()}
 
     got = lloyd_on_both_paths(monkeypatch, tmp_path, fit)
     assert len(got["driver"][0]) == k

@@ -154,50 +154,110 @@ def test_phash_head_digest_blindspot_is_covered(spark, phash_planted_dir):
     )
 
 
-def test_kmeans_assign_blas_matches_join_path(spark):
-    """_kmeans_assign's two physical strategies (codegen'd equi-join at
-    k<=64, broadcast-BLAS mapInPandas above) must produce the SAME
-    assignment on the same centroids: run both shapes explicitly on
-    sf0.01 embeddings with k=80 centroids (past the switch) and with
-    k=20 (under it), comparing (vec_id, cell) exactly and d2 to 1e-9 —
-    the accepted float-association ulp class."""
-    from pyspark.sql import functions as F
+def _exact_nearest(x, cents):
+    """The reference assignment: the argmin of _d2_blocks' exact
+    Σ(v−c)² (the first, i.e. lowest, cell among ties) and its d2."""
+    import numpy as np
 
     from gdxpy_spark.operators import llm
 
+    cell, d2 = [], []
+    for _lo, acc in llm._d2_blocks(x, cents):
+        best = acc.argmin(axis=1)
+        cell.append(best)
+        d2.append(acc[range(len(acc)), best])
+    return np.concatenate(cell), np.concatenate(d2)
+
+
+def _assert_same_assignment(got, want, what):
+    """Equal cells and bit-equal d2 (NaN included)."""
+    import numpy as np
+
+    (cell, d2), (wcell, wd2) = got, want
+    assert np.asarray(cell).tolist() == np.asarray(wcell).tolist(), what
+    bits = np.asarray(d2, dtype=np.float64).view(np.int64)
+    assert bits.tolist() == np.asarray(wd2).view(np.int64).tolist(), what
+
+
+def test_kmeans_assign_matches_driver_kernel_bit_for_bit(spark):
+    """The Spark assignment (_kmeans_assign), the driver kernel
+    (_nearest_local) and the exact _d2_blocks argmin give every sf0.01
+    vector the same cell and the same d2 bit for bit, at k = 20 and at
+    k = 80, against the md5-seed centroids."""
+    from gdxpy_spark.operators import llm
+
     e = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    ve = e.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    seeds = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(80)
-        .select(F.transform("embedding", lambda v: v.cast("double")).alias("c"))
-        .collect()
-    )
-    cents = [list(r["c"]) for r in seeds]
+    t = e.toArrow()
+    ids = t.column("vec_id").to_pylist()
+    x = llm._embedding_matrix(t.column("embedding"))
+    cents = llm._md5_seeds(e, 80)
     for k in (20, 80):
         sub = cents[:k]
-        # force each physical path regardless of the k switch
-        saved = llm._KMEANS_JOIN_ASSIGN_MAX_K
-        try:
-            llm._KMEANS_JOIN_ASSIGN_MAX_K = 10 ** 9
-            join_res = {
-                r["vec_id"]: (r["cell"], r["d2"])
-                for r in llm._kmeans_assign(spark, sub, ve, e).collect()
-            }
-            llm._KMEANS_JOIN_ASSIGN_MAX_K = 0
-            blas_res = {
-                r["vec_id"]: (r["cell"], r["d2"])
-                for r in llm._kmeans_assign(spark, sub, ve, e).collect()
-            }
-        finally:
-            llm._KMEANS_JOIN_ASSIGN_MAX_K = saved
-        assert set(join_res) == set(blas_res)
-        for vid, (cell, d2) in join_res.items():
-            bcell, bd2 = blas_res[vid]
-            assert bcell == cell, f"k={k} vec {vid}: join {cell} vs blas {bcell}"
-            assert abs(bd2 - d2) <= 1e-9 * max(1.0, abs(d2)), (vid, d2, bd2)
+        want = _exact_nearest(x, sub)
+        _assert_same_assignment(llm._nearest_local(x, sub), want, ("driver", k))
+        got = {
+            r["vec_id"]: (r["cell"], r["d2"])
+            for r in llm._kmeans_assign(spark, sub, e).collect()
+        }
+        assert sorted(got) == sorted(ids)
+        spark_asg = ([got[i][0] for i in ids], [got[i][1] for i in ids])
+        _assert_same_assignment(spark_asg, want, ("spark", k))
+
+
+def test_nearest_local_equals_exact_argmin_on_edge_cases():
+    """The shortlist kernel gives the exact argmin's cells and d2 bit for
+    bit where a shortlist is fragile: duplicated centroids (ties go to
+    the lowest cell), rounded and duplicated rows (many exact ties),
+    NaN and infinite rows (a NaN row takes cell 0 with d2 NaN), NaN
+    and infinite centroids (every row takes the NaN one, as np.argmin
+    takes the first NaN), k = 1, and k above a block's row count with
+    300 NaN rows in one block."""
+    import numpy as np
+
+    from gdxpy_spark.operators import llm
+
+    rng = np.random.default_rng(7)
+    x = rng.standard_normal((2000, 64))
+    dup = x[:40].copy()
+    dup[20:] = dup[:20]
+    rounded = np.round(x, 1)
+    rounded[1000:] = rounded[:1000]
+    holes = x.copy()
+    holes[3, 5] = np.nan
+    holes[1500] = np.nan
+    holes[8, 0] = np.inf
+    wide = x[:1200].copy()
+    wide[100:400, 1] = np.nan
+    cases = {
+        "duplicated centroids": (x, dup),
+        "rounded duplicated rows": (rounded, np.round(x[:64], 1)),
+        "rounded duplicated centroids": (rounded, rounded[:32].repeat(2, axis=0)),
+        "nan and inf rows": (holes, x[:16]),
+        "nan centroid": (x, holes[:16]),
+        "k = 1": (x, x[:1]),
+        "k above block rows": (wide, rng.standard_normal((1000, 64))),
+    }
+    for what, (rows, cents) in cases.items():
+        got = llm._nearest_local(rows, cents)
+        _assert_same_assignment(got, _exact_nearest(rows, cents), what)
+    cell, d2 = llm._nearest_local(holes, x[:16])
+    assert cell[1500] == 0 and np.isnan(d2[1500])
+    # rows 0..19 sit on centroids i and 20 + i: the tie goes to i
+    assert llm._nearest_local(x[:20], dup)[0].tolist() == list(range(20))
+
+
+def test_kmeans_assign_rejects_ragged_embeddings(spark):
+    """The Spark assignment takes only non-null embeddings of one
+    positive length per batch: a ragged, a null or an empty embedding
+    raises ValueError."""
+    from gdxpy_spark.operators import llm
+
+    for bad in ([1.0], None, []):
+        df = spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, bad)], "vec_id BIGINT, embedding ARRAY<FLOAT>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match="needs non-null embeddings of one length"):
+            llm._kmeans_assign(spark, [[0.0, 0.0]], df).collect()
 
 
 def test_phash_clusters_oracle_cc_rounds_converged(duck):

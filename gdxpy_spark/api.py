@@ -273,8 +273,9 @@ class GdxEngine:
         incremental encoder via toLocalIterator — the driver holds one
         Arrow partition at a time, never a whole symbol, so a symbol
         larger than driver memory still writes. UELs intern across all
-        symbols, like a real writer. A symbol that fails to encode leaves
-        no spill files and no output file behind."""
+        symbols, like a real writer. A null key label raises ValueError
+        on either path. A symbol that fails to encode leaves no spill
+        files and no output file behind."""
 
         def encoded():
             for name, (df, symtype) in symbols.items():
@@ -287,6 +288,7 @@ class GdxEngine:
                     if keys:
                         src = src.sort(*keys)
                     rows = src.toLocalIterator(prefetchPartitions=True)
+                    rows = _reject_null_labels(rows, keys, name)
                 meta = SymbolMeta(name=name, dim=len(keys), type=t)
                 yield meta, codec_records(rows, t, src.columns, len(keys))
 
@@ -351,6 +353,19 @@ def _driver_rows(df: DataFrame, keys: list[str], name: str):
             yield from zip(*(c.to_pylist() for c in b.columns))
 
     return rows()
+
+
+def _reject_null_labels(rows, keys: list[str], name: str):
+    """``rows`` (tuples whose first fields are ``keys``) passed through,
+    raising _driver_rows' ValueError at the first null label, before
+    that record reaches the encoder. Sorted on ``keys`` (nulls first),
+    a frame with a null label fails on its first row."""
+    dim = len(keys)
+    for r in rows:
+        if None in r[:dim]:
+            k = keys[r[:dim].index(None)]
+            raise ValueError(f"gdx: {name}: null label in key column {k}")
+        yield r
 
 
 def _encode(path: str, compress: bool, symbols) -> None:

@@ -10,26 +10,105 @@ the driver tables so the DuckDB oracle can recompute it exactly.
 
 from __future__ import annotations
 
+import datetime
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gdxpy_spark.operators._util import managed_cache
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import table
 
+log = logging.getLogger(__name__)
+
+
+# lineitem rows up to which the co-purchase edges are derived on the
+# driver (_copurchase_pairs) instead of by a Spark self-join. The cut
+# bounds driver memory through the footer row count: sf0.1 has 600k
+# lines and gives 26,027 edges in about 0.2 s, so every oracle scale
+# stays on the driver.
+_COPURCHASE_DRIVER_MAX_LINES = 1 << 20
+# the analysis window (shipped in 1996) of every co-purchase query
+_WINDOW = (datetime.datetime(1996, 1, 1), datetime.datetime(1997, 1, 1))
+
+
+def _copurchase_pairs(sf_dir: str):
+    """The distinct co-purchase edges (pa < pb) derived on the driver as
+    Arrow arrays (pa, pb) sorted by (pa, pb), or None when the Spark
+    plan must derive them: lineitem's footer row count (no Spark job)
+    is over _COPURCHASE_DRIVER_MAX_LINES, or its key columns are not
+    signed integers or l_shipdate is not a zone-less µs timestamp
+    (Spark's timestamp_ntz; the types the window filter and the numpy
+    pairing assume).
+
+    Same steps as the Spark plan: the 1996 window as a dataset filter
+    on l_shipdate, null keys dropped, then every pair of distinct parts
+    within one order, smaller part first."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    src = ds.dataset(f"{sf_dir}/lineitem.parquet", format="parquet")
+    n = src.count_rows()
+    types = [src.schema.field(c).type for c in ("l_orderkey", "l_partkey", "l_shipdate")]
+    if (
+        n > _COPURCHASE_DRIVER_MAX_LINES
+        or not all(pa.types.is_signed_integer(t) for t in types[:2])
+        or types[2] != pa.timestamp("us")
+    ):
+        log.debug("copurchase_edges: %d lines, spark path", n)
+        return None
+    log.debug("copurchase_edges: %d lines, driver path", n)
+    ship = ds.field("l_shipdate")
+    li = src.to_table(
+        columns=["l_orderkey", "l_partkey"],
+        filter=(ship >= pa.scalar(_WINDOW[0], types[2]))
+        & (ship < pa.scalar(_WINDOW[1], types[2])),
+    ).drop_null()
+    # one row per (order, part), sorted: each order is a run of parts
+    # in ascending order
+    li = li.group_by(["l_orderkey", "l_partkey"]).aggregate([])
+    li = li.sort_by([("l_orderkey", "ascending"), ("l_partkey", "ascending")])
+    order = li.column("l_orderkey").to_numpy()
+    part = li.column("l_partkey").to_numpy()
+    # row i pairs with every later row of its order run
+    run_end = np.searchsorted(order, order, side="right")
+    later = run_end - np.arange(len(order)) - 1
+    left = np.repeat(np.arange(len(order)), later)
+    right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(later) - later, later)
+    pairs = pa.table({
+        "pa": pa.array(part[left], types[1]), "pb": pa.array(part[right], types[1]),
+    })
+    pairs = pairs.group_by(["pa", "pb"]).aggregate([])
+    pairs = pairs.sort_by([("pa", "ascending"), ("pb", "ascending")])
+    return pairs.column("pa").combine_chunks(), pairs.column("pb").combine_chunks()
+
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-purchase edges (pa < pb) for lines shipped
-    in 1996, one shuffle on orderkey for the pair fan-out + one
-    distinct. Pairs per order are bounded by lines-per-order (≤
-    C(13,2) here; TPC-H caps at 7 lines), so the fan-out is a small
-    constant factor of the fact table; the year filter is the analysis
-    window a real co-purchase job scopes to (and pushes to the scan)."""
+    in 1996. Within _COPURCHASE_DRIVER_MAX_LINES the driver derives
+    them (_copurchase_pairs) and they become one Arrow createDataFrame
+    (a LocalTableScan): no Spark job. Above it, _copurchase_edges_spark
+    derives them."""
+    import pyarrow as pa
+
+    pairs = _copurchase_pairs(sf_dir)
+    if pairs is None:
+        return _copurchase_edges_spark(spark, sf_dir)
+    return spark.createDataFrame(pa.table({"pa": pairs[0], "pb": pairs[1]}))
+
+
+def _copurchase_edges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_copurchase_edges' Spark plan: one shuffle on orderkey for the
+    pair fan-out + one distinct. Pairs per order are bounded by
+    lines-per-order (≤ C(13,2) here; TPC-H caps at 7 lines), so the
+    fan-out is a small constant factor of the fact table; the year
+    filter is the analysis window a real co-purchase job scopes to (and
+    pushes to the scan)."""
+    lo, hi = (F.lit(str(d)).cast("timestamp_ntz") for d in _WINDOW)
     li = (
         table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-        )
+        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
         .select("l_orderkey", "l_partkey")
     )
     a = li.alias("a")
@@ -222,11 +301,16 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     product-universe segmentation a recommender bootstraps from, and
     the same shape as web-crawl host-graph components at 100 TB.
 
-    Physical strategy: connected_components — a driver union-find for
-    graphs up to its edge cut (this one at every oracle scale), else
-    alternating large-star/small-star contraction (see its docstring
-    for the Kiveris 2014 invariants and the structural fixpoint check);
-    the edge derivation shares _copurchase_edges with graph_triangles.
+    Physical strategy: when _copurchase_pairs derives the edges on the
+    driver (every oracle scale) and there are at most
+    _CC_DRIVER_MAX_EDGES of them, they go straight to
+    connected_components' driver union-find (_min_id_components) and
+    the result is one LocalTableScan: no Spark job. Otherwise the edges
+    (driver-derived above the edge cut, as llm_minhash_dedup sends its
+    pairs, or _copurchase_edges' Spark plan) go through
+    connected_components, whose Spark path is alternating
+    large-star/small-star contraction (see its docstring for the
+    Kiveris 2014 invariants and the structural fixpoint check).
     The oracle resolves the identical components with star contraction
     unrolled as CTEs (_cc_star_rounds_sql, the sparse-graph-safe
     choice; NOT pointer-doubling label propagation, whose
@@ -237,12 +321,25 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges by the CC parity tests, which run both paths. Singleton
     parts (never co-purchased in-window) are not graph nodes and are
     excluded by both engines."""
-    from gdxpy_spark.operators.llm import connected_components
+    import pyarrow as pa
 
-    edges = _copurchase_edges(spark, sf_dir).select(
-        F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b")
+    from gdxpy_spark.operators import llm
+
+    pairs = _copurchase_pairs(sf_dir)
+    if pairs is None:
+        edges = _copurchase_edges_spark(spark, sf_dir)
+    elif len(pairs[0]) > llm._CC_DRIVER_MAX_EDGES:
+        edges = spark.createDataFrame(pa.table({"pa": pairs[0], "pb": pairs[1]}))
+    else:
+        comp = llm._min_id_components(pairs[0].to_pylist(), pairs[1].to_pylist())
+        t = pairs[0].type
+        return spark.createDataFrame(pa.table({
+            "node": pa.array(list(comp), t),
+            "component_id": pa.array(list(comp.values()), t),
+        }))
+    cc = llm.connected_components(
+        spark, edges.select(F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"))
     )
-    cc = connected_components(spark, edges)
     return cc.select(F.col("doc_id").alias("node"), "component_id")
 
 

@@ -2115,12 +2115,14 @@ def _ivf_tail_local(
 
 
 # Distinct oriented edges up to which connected_components resolves the
-# components on the driver (one Arrow read of the checkpointed edge set)
-# instead of running Spark star-contraction rounds, three jobs each.
-# The driver path still won at 1M edges on a 4-vCPU box (7.7 s vs
-# 15.2 s), so the cut bounds driver work and memory instead: 2^18 edges
-# is ~3 s and a few MB of Arrow. It also keeps llm_dedup_clusters
-# (2.16M edges at sf0.1) on the oracle-checked Spark path.
+# components on the driver (one Arrow read of the checkpointed edges,
+# deduplicated there) instead of running Spark star-contraction rounds,
+# three jobs each. The driver path still won at 1M edges on a 4-vCPU box
+# (7.7 s vs 15.2 s), so the cut bounds driver work and memory instead:
+# 2^18 edges is ~3 s and a few MB of Arrow. It also keeps
+# llm_dedup_clusters (2.16M edges at sf0.1) on the oracle-checked Spark
+# path. graph_components and llm_minhash_dedup apply it to the pairs
+# they derive on the driver before any Spark job.
 _CC_DRIVER_MAX_EDGES = 1 << 18
 
 
@@ -2166,33 +2168,42 @@ def connected_components(
     doc_b) → (doc_id, component_id = min doc_id in the component), both
     of the ids' type; self-loops and null ids add no node.
 
-    Two paths, split at the one materialization of the oriented, distinct
-    edge set. At most _CC_DRIVER_MAX_EDGES + 1 of its rows are read back
-    as Arrow; if the graph fits the cut, path-halving union-find (root =
-    the smaller id) labels it on the driver and the result is one Arrow
-    table (a LocalTableScan). Every Spark contraction round costs three
-    jobs whatever the graph's size, so on small graphs (the dedup
-    callers' usual case) that job floor, not the data, sets the wall.
-    Larger graphs run _star_contraction. Both paths are exact and give
-    identical labels (pinned in tests on both). `max_iters` and its
-    non-convergence warning bound only the Spark path."""
+    Two paths, split by at most two bounded probes, so a graph takes
+    the same path whatever its duplicates. The edges are oriented (big,
+    small), self-loops dropped, and this map-only result is
+    localCheckpointed once, so the upstream edge pipeline (for dedup
+    callers: the full blocked-Jaccard / MinHash candidate pass) never
+    re-executes. At most _CC_DRIVER_MAX_EDGES + 1 of its rows are read
+    back as Arrow. If they are all of them, they are deduplicated on
+    the driver and path-halving union-find (root = the smaller id)
+    labels the graph; the result is one Arrow table (a LocalTableScan).
+    Only a raw probe over the cut runs the Spark `distinct`, checkpoints
+    it and probes again: within the cut the distinct edges take the
+    driver path too, above it _star_contraction. Above the cut that
+    costs one persisted copy of the raw oriented edges besides the
+    distinct set. Every Spark contraction round costs three jobs
+    whatever the graph's size, so on small graphs (the dedup callers'
+    usual case) that job floor, not the data, sets the wall. Both paths
+    are exact and give identical labels (pinned in tests on both).
+    `max_iters` and its non-convergence warning bound only the Spark
+    path."""
     import pyarrow as pa
 
-    # orient every edge (big, small) and materialize ONCE: the upstream
-    # edge pipeline (for dedup callers: the full blocked-Jaccard /
-    # MinHash candidate pass) must not re-execute per round
     e = (
         edges.select(
             F.greatest("doc_a", "doc_b").alias("u"),
             F.least("doc_a", "doc_b").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint()
     )
     head = e.limit(_CC_DRIVER_MAX_EDGES + 1).toArrow()
     if head.num_rows > _CC_DRIVER_MAX_EDGES:
-        return _star_contraction(spark, e, max_iters)
+        e = e.distinct().localCheckpoint()
+        head = e.limit(_CC_DRIVER_MAX_EDGES + 1).toArrow()
+        if head.num_rows > _CC_DRIVER_MAX_EDGES:
+            return _star_contraction(spark, e, max_iters)
+    head = head.group_by(["u", "v"]).aggregate([])
     log.debug("connected_components: %d edges, driver path", head.num_rows)
     comp = _min_id_components(
         head.column("u").to_pylist(), head.column("v").to_pylist()

@@ -21,6 +21,7 @@ back per batch.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import pandas as pd
@@ -29,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from gdxpy_spark.operators._util import fan_out as _fan_out, managed_cache
 from gdxpy_spark.registry import register
 from gdxpy_spark.tables import table
+
+log = logging.getLogger(__name__)
 
 _MAGIC = b"GXMM"
 _FORMATS = ("png", "jpeg", "webp")
@@ -1049,8 +1052,9 @@ def mm_e2e_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark import inheritable_thread_target
 
-    overlap = spark.sparkContext.defaultParallelism >= _E2E_OVERLAP_MIN_SLOTS
-    n_workers = 3 if overlap else 1
+    slots = spark.sparkContext.defaultParallelism
+    n_workers = 3 if slots >= _E2E_OVERLAP_MIN_SLOTS else 1
+    log.debug("mm_e2e_dedup: %d slots, %d workers", slots, n_workers)
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     media = media_table(spark, sf_dir)

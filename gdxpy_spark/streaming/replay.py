@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gdxpy_spark.operators._util import artifact_dir, build_once, scratch_dir
 from gdxpy_spark.registry import register
-from gdxpy_spark.tables import configure, events_ts_encoding, table
+from gdxpy_spark.tables import configure, events_ts_encoding, read_parquet, table
 
 _RAW_SCHEMA = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING,"
@@ -164,7 +164,7 @@ def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables.table: ns LONG, because replay fixtures delta-shift raw
     nanos)."""
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet", "events")
     if events_ts_encoding(df) != "bigint":
         # TIMESTAMP(MICROS) file (zoned or NTZ): µs → ns (exact; session
         # pinned UTC so the NTZ→TIMESTAMP cast is wall-clock identity)
@@ -443,8 +443,9 @@ def stream_events_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file-stream sources need a directory; glob down to the events file.
     # The stream schema must match the file's surfaced types exactly
     # (BIGINT-nanos vs TIMESTAMP_NTZ drops differ), so derive it from a
-    # batch-side sniff of the same file instead of hardcoding _RAW_SCHEMA.
-    on_disk = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # batch-side sniff of the same file instead of hardcoding _RAW_SCHEMA
+    # (read_parquet: from the footer when it can, so no Spark job).
+    on_disk = read_parquet(spark, f"{sf_dir}/events.parquet", "events").schema
     stream = (
         spark.readStream.schema(on_disk)
         .option("pathGlobFilter", "events.parquet")

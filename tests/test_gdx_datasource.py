@@ -718,6 +718,30 @@ def test_facade_write_rejects_null_key_labels(engine, spark, tmp_path):
     assert not out.exists()
 
 
+def test_write_file_above_chunk_rejects_null_key_labels(engine, spark, tmp_path, monkeypatch):
+    """Above gdx_codec.CHUNK rows write_file streams the sorted frame; a
+    null key label raises the driver path's ValueError, naming the
+    column, and leaves no spill file and no output file."""
+    import tempfile
+
+    from gdxpy_spark.sources.gdx_codec import CHUNK
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    good = spark.createDataFrame([("a", 1.0)], "k1 STRING, value DOUBLE")
+    big = spark.range(CHUNK + 10).selectExpr(
+        "CAST(id AS STRING) AS k1",
+        "CASE WHEN id = 77 THEN NULL ELSE CAST(id % 3 AS STRING) END AS k2",
+        "CAST(id AS DOUBLE) AS value",
+    )
+    out = tmp_path / "null.gdx"
+    with pytest.raises(ValueError, match="^gdx: big: null label in key column k2$"):
+        engine.write_file({"good": (good, "parameter"), "big": (big, "parameter")}, str(out))
+    assert list(tmp.glob("*.spill")) == []
+    assert not out.exists()
+
+
 def test_datasource_write_rejects_null_key_labels(spark, tmp_path):
     """The format("gdx") writer raises the facade's ValueError text on a
     null key label before it spills, and leaves no output file and no

@@ -269,6 +269,48 @@ def test_connected_components_dispatch_boundary(spark, monkeypatch):
     assert dict(got.collect()) == _uf_components(chain + [(20, 21)])
 
 
+def test_connected_components_probes_raw_edges_before_distinct(
+    spark, monkeypatch, caplog
+):
+    """The raw oriented edges are probed first: a graph whose raw edges
+    fit the cut is deduplicated on the driver and runs no Spark
+    distinct. Duplicate and reversed edges whose raw count exceeds the
+    cut while the distinct count does not run one distinct and still
+    take the driver path, logging the distinct count."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+
+    caplog.set_level(logging.DEBUG, logger=llm.log.name)
+    distincts = []
+    frame = type(spark.range(1))
+    distinct = frame.distinct
+
+    def spy(self):
+        distincts.append(1)
+        return distinct(self)
+
+    monkeypatch.setattr(frame, "distinct", spy)
+    cut = 6
+    monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cut)
+    chain = [(i, i + 1) for i in range(cut)]
+    for edges, n_distinct in (
+        (chain[:3] + [(1, 0)], 0),
+        (chain + [(b, a) for a, b in chain] + chain + [(2, 2)], 1),
+    ):
+        distincts.clear()
+        caplog.clear()
+        df = spark.createDataFrame(edges, "doc_a BIGINT, doc_b BIGINT")
+        cc = llm.connected_components(spark, df)
+        assert _is_local_scan(cc)
+        assert dict(cc.collect()) == _uf_components(edges)
+        assert len(distincts) == n_distinct
+        assert [r.getMessage() for r in caplog.records if r.name == llm.log.name] == [
+            f"connected_components: {len({(max(e), min(e)) for e in edges if e[0] != e[1]})}"
+            " edges, driver path"
+        ]
+
+
 @pytest.mark.parametrize("id_type", ["INT", "BIGINT", "STRING"])
 def test_connected_components_schema_follows_id_type(spark, monkeypatch, id_type):
     """Both paths return (doc_id, component_id) of the input id type;

@@ -541,3 +541,72 @@ def test_fan_out_logs_taken_or_skipped(spark, caplog):
         f"fan_out: {tp} partitions, target {tp}, skipped",
         f"fan_out: 1 partitions, target {tp}, taken",
     ]
+
+
+GRAPH_QUERIES = [
+    "graph_components", "graph_triangles", "graph_degree_topk",
+    "graph_label_prop", "graph_kcore",
+]
+
+
+@pytest.mark.parametrize("name", GRAPH_QUERIES)
+def test_graph_queries_match_oracle_on_both_paths(spark, duck, monkeypatch, name):
+    """Every co-purchase graph query matches its DuckDB oracle with the
+    edges derived on the driver (_copurchase_pairs, at the production
+    cut) and with the lineitem cut patched below zero, which forces the
+    Spark self-join. The Spark leg also forces connected_components
+    onto Spark; graph_components gets a third leg, driver pairs sent to
+    Spark components. Only graph_components' driver leg ends in one
+    LocalTableScan."""
+    from gdxpy_spark.operators import graphs, llm
+    from tests.conftest import assert_frames_match
+    from tests.test_r11_ops import _is_local_scan
+
+    q = ALL[name]
+    lines_cut, cc_cut = graphs._COPURCHASE_DRIVER_MAX_LINES, llm._CC_DRIVER_MAX_EDGES
+    legs = [("spark", (-1, -1)), ("driver", (lines_cut, cc_cut))]
+    if name == "graph_components":
+        legs.append(("driver pairs, spark components", (lines_cut, -1)))
+    for path, cuts in legs:
+        monkeypatch.setattr(graphs, "_COPURCHASE_DRIVER_MAX_LINES", cuts[0])
+        monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cuts[1])
+        assert _is_local_scan(graphs._copurchase_edges(spark, SF_DIR)) == (path != "spark")
+        got = q.fn(spark, SF_DIR)
+        assert _is_local_scan(got) == (name == "graph_components" and path == "driver")
+        assert_frames_match(got, duck.execute(q.oracle), name=f"{name} {path}")
+
+
+def test_copurchase_edges_log_their_path(monkeypatch, caplog):
+    """One DEBUG record per co-purchase derivation on the graphs logger
+    with lineitem's footer row count and the path taken."""
+    import logging
+
+    import pyarrow.dataset as ds
+
+    from gdxpy_spark.operators import graphs
+
+    caplog.set_level(logging.DEBUG, logger=graphs.log.name)
+    n = ds.dataset(f"{SF_DIR}/lineitem.parquet").count_rows()
+    assert graphs._copurchase_pairs(SF_DIR) is not None
+    monkeypatch.setattr(graphs, "_COPURCHASE_DRIVER_MAX_LINES", n - 1)
+    assert graphs._copurchase_pairs(SF_DIR) is None
+    assert [r.getMessage() for r in caplog.records if r.name == graphs.log.name] == [
+        f"copurchase_edges: {n} lines, driver path",
+        f"copurchase_edges: {n} lines, spark path",
+    ]
+
+
+def test_mm_e2e_dedup_logs_its_workers(spark, caplog):
+    """mm_e2e_dedup logs the session's task slots and the worker threads
+    it runs its tiers on (3 from _E2E_OVERLAP_MIN_SLOTS slots, else 1)."""
+    import logging
+
+    import gdxpy_spark.operators.multimodal as mm
+
+    caplog.set_level(logging.DEBUG, logger=mm.log.name)
+    ALL["mm_e2e_dedup"].fn(spark, SF_DIR)
+    slots = spark.sparkContext.defaultParallelism
+    workers = 3 if slots >= mm._E2E_OVERLAP_MIN_SLOTS else 1
+    assert [r.getMessage() for r in caplog.records if r.name == mm.log.name] == [
+        f"mm_e2e_dedup: {slots} slots, {workers} workers"
+    ]

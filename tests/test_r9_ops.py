@@ -246,6 +246,8 @@ def test_every_driver_cut_has_a_forced_path_test():
     forced_path_tests = {
         "_CC_DRIVER_MAX_EDGES":
             ("test_r11_ops.py", "test_connected_components_star_vs_union_find"),
+        "_COPURCHASE_DRIVER_MAX_LINES":
+            ("test_r14_ops.py", "test_graph_queries_match_oracle_on_both_paths"),
         "_LLOYD_DRIVER_MAX_VECTORS":
             ("test_r12_ops.py", "test_lloyd_callers_match_oracle_on_both_paths"),
         "_MINHASH_DRIVER_MAX_DOCS":

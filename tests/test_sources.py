@@ -138,3 +138,169 @@ def test_gdx_pushdown_opt_in(spark):
         assert reader_for(version, pushdown="0") == "GdxSymbolReader"
         assert reader_for(version, pushdown="true") == "PushdownGdxSymbolReader"
         assert reader_for(version, pushdown="1") == "PushdownGdxSymbolReader"
+
+
+# ---- footer schemas (tables.footer_schema) -----------------------------------
+
+
+def _perfbench_tables(out_dir):
+    """perfbench's seeded generators, written as dedup_tpch writes them
+    (smoke sizes): the TPC-H tables, documents and embeddings."""
+    from perfbench import gen
+
+    gen.write_permuted(out_dir, {
+        "documents": gen.documents_table(1, 50),
+        "embeddings": gen.embeddings_table(1, 50),
+        **gen.tpch_tables(1, 0.001),
+    }, 1)
+
+
+def test_footer_schema_equals_inference_on_every_table(spark, tmp_path):
+    """The schema built from the parquet footer equals Spark's inference
+    for every table of the three test scales and of perfbench's
+    generators, and table() opens each of them with it."""
+    import glob
+
+    from gdxpy_spark.tables import configure, footer_schema
+
+    configure(spark)
+    _perfbench_tables(str(tmp_path))
+    paths = sorted(glob.glob("/root/testdata/sf*/*.parquet"))
+    paths += sorted(glob.glob(str(tmp_path / "*.parquet")))
+    assert len(paths) >= 30
+    for p in paths:
+        schema, reason = footer_schema(spark, p)
+        assert schema == spark.read.parquet(p).schema, (p, reason)
+
+
+def _write_types(d, columns):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for name, (arr, nullable) in columns.items():
+        t = pa.table({name: arr}, schema=pa.schema([pa.field(name, arr.type, nullable)]))
+        pq.write_table(t, str(d / f"{name}.parquet"))
+
+
+def test_footer_schema_supported_types_equal_inference(spark, tmp_path):
+    """One small file per supported column type: its footer schema is
+    taken and equals Spark's inference, nullability included (a
+    required column and a list of required elements come back
+    nullable, as Spark's file sources make them), also under the two
+    session confs that change the inferred type of a supported column."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    from gdxpy_spark.tables import configure, footer_schema
+
+    configure(spark)
+    ts = datetime.datetime(2020, 1, 2, 3, 4, 5, 6)
+    cols = {
+        "i8": pa.array([1, None], pa.int8()),
+        "i16": pa.array([1, None], pa.int16()),
+        "i32": pa.array([1, None], pa.int32()),
+        "i64": pa.array([1, None], pa.int64()),
+        "f32": pa.array([1.5, None], pa.float32()),
+        "f64": pa.array([1.5, None], pa.float64()),
+        "flag": pa.array([True, None]),
+        "s": pa.array(["a", None]),
+        "bin": pa.array([b"a", None]),
+        "d": pa.array([datetime.date(2020, 1, 2), None]),
+        "dec": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(10, 2)),
+        "dec38": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(38, 2)),
+        "ts_ntz": pa.array([ts, None], pa.timestamp("us")),
+        "ts_utc": pa.array([ts, None], pa.timestamp("us", "UTC")),
+        "ts_zone": pa.array([ts, None], pa.timestamp("us", "America/New_York")),
+        "floats": pa.array([[1.0], None], pa.list_(pa.float32())),
+        "nested": pa.array([[[1]], None], pa.list_(pa.list_(pa.int64()))),
+        "required": pa.array([1, 2], pa.int64()),
+        "required_elems": pa.array(
+            [[1], [2]], pa.list_(pa.field("element", pa.int32(), nullable=False))
+        ),
+    }
+    _write_types(tmp_path, {
+        k: (v, not k.startswith("required")) for k, v in cols.items()
+    })
+    confs = {
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.parquet.binaryAsString": "true",
+    }
+    for session_confs in ({}, confs):
+        try:
+            for key, value in session_confs.items():
+                spark.conf.set(key, value)
+            for k in cols:
+                p = str(tmp_path / f"{k}.parquet")
+                schema, reason = footer_schema(spark, p)
+                assert schema is not None, (k, reason)
+                assert schema == spark.read.parquet(p).schema, (k, session_confs)
+        finally:
+            for key in session_confs:
+                spark.conf.unset(key)
+
+
+def test_footer_schema_refuses_to_inference(spark, tmp_path, caplog):
+    """A TIMESTAMP(NANOS) column (a bigint under nanosAsLong), an
+    unsigned int, a dictionary column, a file whose footer does not
+    open and a directory table take Spark's inference, and table() logs
+    which path each open took."""
+    import datetime
+    import logging
+
+    import pyarrow as pa
+
+    from gdxpy_spark import tables
+
+    tables.configure(spark)
+    caplog.set_level(logging.DEBUG, logger=tables.log.name)
+    ts = datetime.datetime(2020, 1, 2)
+    refused = {
+        "ns": pa.array([ts, None], pa.timestamp("ns")),
+        "u32": pa.array([1, None], pa.uint32()),
+        "dict": pa.array(["a", "b"]).dictionary_encode(),
+    }
+    _write_types(tmp_path, {k: (v, True) for k, v in refused.items()})
+    want = {"ns": "bigint", "u32": "bigint", "dict": "string"}
+    for k, dtype in want.items():
+        schema, reason = tables.footer_schema(spark, str(tmp_path / f"{k}.parquet"))
+        assert schema is None and reason.startswith(f"column {k}: "), (k, reason)
+        assert dict(tables.table(spark, str(tmp_path), k).dtypes) == {k: dtype}
+    (tmp_path / "junk.parquet").write_bytes(b"not parquet")
+    schema, reason = tables.footer_schema(spark, str(tmp_path / "junk.parquet"))
+    assert schema is None and reason.startswith("footer: "), reason
+    spark.range(3).write.parquet(str(tmp_path / "dir.parquet"))
+    assert tables.footer_schema(spark, str(tmp_path / "dir.parquet")) == (
+        None, "not a single file"
+    )
+    assert tables.table(spark, str(tmp_path), "dir").count() == 3
+    tables.table(spark, SF_DIR, "nation")
+    assert [r.getMessage() for r in caplog.records if r.name == tables.log.name] == [
+        "table ns: inferred (column ns: timestamp[ns])",
+        "table u32: inferred (column u32: uint32)",
+        "table dict: inferred (column dict: dictionary<values=string, "
+        "indices=int32, ordered=0>)",
+        "table dir: inferred (not a single file)",
+        "table nation: footer schema",
+    ]
+
+
+def test_events_nanos_drop_still_normalizes(spark, tmp_path):
+    """An events drop stored as TIMESTAMP(NANOS) is refused by the
+    footer schema, so both events loaders still see the bigint nanos
+    encoding and normalize it to the same values as the µs drop."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gdxpy_spark.streaming.replay import _raw_events
+    from gdxpy_spark.tables import table as load_table
+
+    ev = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = ev.schema.get_field_index("ts")
+    ns = ev.set_column(i, "ts", ev.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(ns, str(tmp_path / "events.parquet"))
+    for load in (load_table, lambda s, d, *_: _raw_events(s, d)):
+        want, got = (load(spark, d, "events") for d in (SF_DIR, str(tmp_path)))
+        assert got.dtypes == want.dtypes
+        assert _rows(got) == _rows(want)

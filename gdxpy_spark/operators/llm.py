@@ -2169,19 +2169,21 @@ def connected_components(
     of the ids' type; self-loops and null ids add no node.
 
     Two paths, split by at most two bounded probes, so a graph takes
-    the same path whatever its duplicates. The edges are oriented (big,
-    small), self-loops dropped, and this map-only result is
-    localCheckpointed once, so the upstream edge pipeline (for dedup
-    callers: the full blocked-Jaccard / MinHash candidate pass) never
-    re-executes. At most _CC_DRIVER_MAX_EDGES + 1 of its rows are read
-    back as Arrow. If they are all of them, they are deduplicated on
-    the driver and path-halving union-find (root = the smaller id)
-    labels the graph; the result is one Arrow table (a LocalTableScan).
-    Only a raw probe over the cut runs the Spark `distinct`, checkpoints
-    it and probes again: within the cut the distinct edges take the
-    driver path too, above it _star_contraction. Above the cut that
-    costs one persisted copy of the raw oriented edges besides the
-    distinct set. Every Spark contraction round costs three jobs
+    the path its distinct edge count sets whatever its duplicates. The
+    edges are oriented (big, small), self-loops dropped, and this
+    map-only result is localCheckpointed once, so the upstream edge
+    pipeline (for dedup callers: the full blocked-Jaccard / MinHash
+    candidate pass) never re-executes. At most _CC_DRIVER_MAX_EDGES + 1
+    of its rows are read back as Arrow. If they are all of them, they
+    are deduplicated on the driver and path-halving union-find (root =
+    the smaller id) labels the graph; the result is one Arrow table (a
+    LocalTableScan). Only a raw probe over the cut runs a Spark
+    `distinct`, probed the same way: within the cut the distinct edges
+    take the driver path too, above it _star_contraction runs on the
+    checkpointed raw edges, whose first round deduplicates them. So the
+    one persisted copy is of the raw edges, where it used to be of the
+    distinct set, and above the cut the only added cost is the raw
+    probe's read. Every Spark contraction round costs three jobs
     whatever the graph's size, so on small graphs (the dedup callers'
     usual case) that job floor, not the data, sets the wall. Both paths
     are exact and give identical labels (pinned in tests on both).
@@ -2199,8 +2201,7 @@ def connected_components(
     )
     head = e.limit(_CC_DRIVER_MAX_EDGES + 1).toArrow()
     if head.num_rows > _CC_DRIVER_MAX_EDGES:
-        e = e.distinct().localCheckpoint()
-        head = e.limit(_CC_DRIVER_MAX_EDGES + 1).toArrow()
+        head = e.distinct().limit(_CC_DRIVER_MAX_EDGES + 1).toArrow()
         if head.num_rows > _CC_DRIVER_MAX_EDGES:
             return _star_contraction(spark, e, max_iters)
     head = head.group_by(["u", "v"]).aggregate([])
@@ -2223,8 +2224,10 @@ def _star_contraction(spark: SparkSession, e: DataFrame, max_iters: int) -> Data
     """connected_components' Spark path: the alternating large-star /
     small-star algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi &
     Vassilvitskii, "Connected Components in MapReduce and Beyond", SoCC
-    2014) over the checkpointed, oriented (u > v), distinct edge set `e`
-    → (doc_id, component_id).
+    2014) over the checkpointed, oriented (u > v) edge set `e` →
+    (doc_id, component_id). `e` may repeat an edge: every round's
+    large-star output is distinct, so only the first round's join sees
+    the repeats, and `max_iters` must be at least 1.
 
     Why this and not min-label propagation (the r1–r10 implementation):
     label propagation re-joins the FULL edge list every round — per-round

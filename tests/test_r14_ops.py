@@ -554,11 +554,12 @@ def test_graph_queries_match_oracle_on_both_paths(spark, duck, monkeypatch, name
     """Every co-purchase graph query matches its DuckDB oracle with the
     edges derived on the driver (_copurchase_pairs, at the production
     cut) and with the lineitem cut patched below zero, which forces the
-    Spark self-join. The Spark leg also forces connected_components
-    onto Spark; graph_components gets a third leg, driver pairs sent to
-    Spark components. Only graph_components' driver leg ends in one
-    LocalTableScan."""
+    Spark self-join (the only leg whose edges scan lineitem). The Spark
+    leg also forces connected_components onto Spark; graph_components
+    gets a third leg, driver pairs sent to Spark components. Only
+    graph_components' driver leg ends in one LocalTableScan."""
     from gdxpy_spark.operators import graphs, llm
+    from gdxpy_spark.plans.inspect import formatted_plan
     from tests.conftest import assert_frames_match
     from tests.test_r11_ops import _is_local_scan
 
@@ -570,7 +571,8 @@ def test_graph_queries_match_oracle_on_both_paths(spark, duck, monkeypatch, name
     for path, cuts in legs:
         monkeypatch.setattr(graphs, "_COPURCHASE_DRIVER_MAX_LINES", cuts[0])
         monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", cuts[1])
-        assert _is_local_scan(graphs._copurchase_edges(spark, SF_DIR)) == (path != "spark")
+        edges_plan = formatted_plan(graphs._copurchase_edges(spark, SF_DIR))
+        assert ("lineitem.parquet" in edges_plan) == (path == "spark")
         got = q.fn(spark, SF_DIR)
         assert _is_local_scan(got) == (name == "graph_components" and path == "driver")
         assert_frames_match(got, duck.execute(q.oracle), name=f"{name} {path}")

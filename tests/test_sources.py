@@ -156,9 +156,9 @@ def _perfbench_tables(out_dir):
 
 
 def test_footer_schema_equals_inference_on_every_table(spark, tmp_path):
-    """The schema built from the parquet footer equals Spark's inference
-    for every table of the three test scales and of perfbench's
-    generators, and table() opens each of them with it."""
+    """The schema built from the parquet footer is taken for, and equals
+    Spark's inference on, every table of the three test scales and of
+    perfbench's generators."""
     import glob
 
     from gdxpy_spark.tables import configure, footer_schema
@@ -170,7 +170,8 @@ def test_footer_schema_equals_inference_on_every_table(spark, tmp_path):
     assert len(paths) >= 30
     for p in paths:
         schema, reason = footer_schema(spark, p)
-        assert schema == spark.read.parquet(p).schema, (p, reason)
+        assert schema is not None, (p, reason)
+        assert schema == spark.read.parquet(p).schema, p
 
 
 def _write_types(d, columns):

@@ -32,15 +32,18 @@ the mount was empty, SURVEY §0):
                                    .write_file({name: (df, symtype)}, path):
                                    ≤ CHUNK rows sorted and encoded on the
                                    driver after one Arrow probe; above
-                                   that the format("gdx") writer (resp. a
-                                   distributed sort + toLocalIterator)
+                                   that per-task sorted runs
+                                   (GdxSymbolWriter.write) merged on the
+                                   driver (GdxSymbolWriter.merged)
 """
 
 from __future__ import annotations
 
 import fnmatch
+import functools
 import logging
 import os
+import shutil
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -266,33 +269,15 @@ class GdxEngine:
     ) -> None:
         """Write several symbols into ONE .gdx file (a GDX file is a
         mini-catalog; write_symbol covers the single-symbol case). `symbols`
-        maps name → (DataFrame, symtype). A frame of at most
-        gdx_codec.CHUNK rows is read in one Arrow probe and sorted on the
-        driver; a larger one is globally sorted by its key columns (a
-        distributed range-partition sort) and *streamed* to the codec's
-        incremental encoder via toLocalIterator — the driver holds one
-        Arrow partition at a time, never a whole symbol, so a symbol
-        larger than driver memory still writes. UELs intern across all
+        maps name → (DataFrame, symtype). Each symbol is written as by
+        write_symbol: at most gdx_codec.CHUNK rows in one Arrow probe,
+        sorted and encoded on the driver; a larger frame as sorted runs
+        spilled by its tasks and merged on the driver, which holds one
+        slice per run, never a whole symbol. UELs intern across all
         symbols, like a real writer. A null key label raises ValueError
         on either path. A symbol that fails to encode leaves no spill
         files and no output file behind."""
-
-        def encoded():
-            for name, (df, symtype) in symbols.items():
-                t = _TYPE_BY_NAME[symtype]
-                keys = key_columns(df.columns)
-                src = df.select(*keys, *[c for c in df.columns if c not in keys])
-                rows = _driver_rows(src, keys, name)
-                if rows is None:
-                    log.debug("write %s: over %d records, spark path", name, CHUNK)
-                    if keys:
-                        src = src.sort(*keys)
-                    rows = src.toLocalIterator(prefetchPartitions=True)
-                    rows = _reject_null_labels(rows, keys, name)
-                meta = SymbolMeta(name=name, dim=len(keys), type=t)
-                yield meta, codec_records(rows, t, src.columns, len(keys))
-
-        _encode(path, compress, encoded())
+        _write(path, compress, [(n, df, t, "") for n, (df, t) in symbols.items()])
 
     def write_symbol(
         self,
@@ -303,28 +288,13 @@ class GdxEngine:
         expl_text: str = "",
         compress: bool = False,
     ) -> None:
-        """Write one symbol as a .gdx file. A frame of at most
-        gdx_codec.CHUNK rows is encoded on the driver after one Arrow
-        probe; a larger one goes through the format("gdx") DataSource
-        writer (per-task sorted runs merged at commit)."""
-        t = _TYPE_BY_NAME[symtype]
-        keys = key_columns(df.columns, lead=True)
-        rows = _driver_rows(df, keys, name)
-        if rows is None:
-            log.debug("write %s: over %d records, datasource path", name, CHUNK)
-            (
-                df.write.format("gdx")
-                .option("symbol", name)
-                .option("symtype", symtype)
-                .option("expl_text", expl_text)
-                .option("compress", str(compress).lower())
-                .mode("overwrite")
-                .save(path)
-            )
-            return
-        meta = SymbolMeta(name=name, dim=len(keys), type=t, expl_text=expl_text)
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        _encode(path, compress, [(meta, codec_records(rows, t, df.columns, len(keys)))])
+        """Write one symbol as a .gdx file, byte for byte as the
+        format("gdx") writer does. A frame of at most gdx_codec.CHUNK rows
+        is encoded on the driver after one Arrow probe; a larger one is
+        spilled as per-task sorted runs (GdxSymbolWriter.write, in one
+        mapInArrow job) and merged on the driver (GdxSymbolWriter.merged)."""
+        key_columns(df.columns, lead=True)
+        _write(path, compress, [(name, df, symtype, expl_text)])
 
 
 # GDX records have bounded width: at most 20 labels of at most 63 chars
@@ -335,9 +305,9 @@ class GdxEngine:
 def _driver_rows(df: DataFrame, keys: list[str], name: str):
     """One bounded read of `df` (`limit(CHUNK + 1).toArrow()`, one Spark
     job). None above gdx_codec.CHUNK rows; else the rows as tuples,
-    sorted on `keys` in binary UTF-8 label order (Spark's string sort and
-    the DataSource writer's Python tuple sort), the stream codec_records
-    consumes. GDX keys cannot be null: a null label raises ValueError."""
+    sorted on `keys` in binary UTF-8 label order (the DataSource
+    writer's Python tuple sort), the stream codec_records consumes. GDX
+    keys cannot be null: a null label raises ValueError."""
     t = df.limit(CHUNK + 1).toArrow()
     if t.num_rows > CHUNK:
         return None
@@ -347,35 +317,51 @@ def _driver_rows(df: DataFrame, keys: list[str], name: str):
     if keys:
         t = t.sort_by([(k, "ascending") for k in keys])
     log.debug("write %s: %d records, driver path", name, t.num_rows)
-
-    def rows():
-        for b in t.to_batches(max_chunksize=8192):
-            yield from zip(*(c.to_pylist() for c in b.columns))
-
-    return rows()
+    return _batch_rows(t.to_batches(max_chunksize=8192))
 
 
-def _reject_null_labels(rows, keys: list[str], name: str):
-    """``rows`` (tuples whose first fields are ``keys``) passed through,
-    raising _driver_rows' ValueError at the first null label, before
-    that record reaches the encoder. Sorted on ``keys`` (nulls first),
-    a frame with a null label fails on its first row."""
-    dim = len(keys)
-    for r in rows:
-        if None in r[:dim]:
-            k = keys[r[:dim].index(None)]
-            raise ValueError(f"gdx: {name}: null label in key column {k}")
-        yield r
+def _batch_rows(batches):
+    """Arrow record batches → row tuples."""
+    for b in batches:
+        yield from zip(*(c.to_pylist() for c in b.columns))
 
 
-def _encode(path: str, compress: bool, symbols) -> None:
-    """Encode (SymbolMeta, codec records) pairs into one file at `path`.
-    If a symbol fails to encode, every spill already written is removed
-    before the output file is opened."""
+def _spill_runs(runs: gdx_datasource.GdxSymbolWriter, batches):
+    """mapInArrow body: one task's rows spilled by `runs`; one row out,
+    the commit message's payload."""
+    msg = runs.write(_batch_rows(batches))
+    yield pa.RecordBatch.from_pydict({"payload": [msg.payload]})
+
+
+def _write(path: str, compress: bool, symbols) -> None:
+    """Encode (name, DataFrame, symtype, expl_text) symbols, keys first,
+    into one file at `path`: at most CHUNK rows from the driver probe,
+    more as per-task sorted runs merged on the driver. If a symbol
+    fails, every spill already written is removed and no output file is
+    opened."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     w = GdxWriter(path, compress=compress)
     try:
-        for meta, records in symbols:
-            w.add_symbol_streaming(meta, records)
+        for name, df, symtype, expl_text in symbols:
+            t = _TYPE_BY_NAME[symtype]
+            keys = key_columns(df.columns)
+            src = df.select(*keys, *[c for c in df.columns if c not in keys])
+            meta = SymbolMeta(name=name, dim=len(keys), type=t, expl_text=expl_text)
+            rows = _driver_rows(src, keys, name)
+            if rows is not None:
+                records = codec_records(rows, t, src.columns, len(keys))
+                w.add_symbol_streaming(meta, records)
+                continue
+            log.debug("write %s: over %d records, datasource path", name, CHUNK)
+            opts = {"symbol": name, "symtype": symtype}
+            runs = gdx_datasource.GdxSymbolWriter(path, opts, src.schema)
+            try:
+                spill = functools.partial(_spill_runs, runs)
+                out = src.mapInArrow(spill, "payload BINARY").toArrow()
+                msgs = map(gdx_datasource.GdxCommitMessage, out.column(0).to_pylist())
+                w.add_symbol_streaming(meta, runs.merged(msgs))
+            finally:
+                shutil.rmtree(runs.run_dir, ignore_errors=True)
         w.close()
     except BaseException:
         w.abort()

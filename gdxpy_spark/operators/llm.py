@@ -1689,8 +1689,7 @@ _SUPER_MEMO: dict = {}  # centers-fingerprint -> (grp_of, scents): the
 # on one core of a 4-vCPU VM, and k ≈ 31.6k at the 10^9-vector
 # posture — so it is not recomputed on every _ivf_probe_cells call
 # (r12 advice).
-# Content-addressed like _KMEANS_MEMO; true-LRU capped.
-_SUPER_MEMO_CAP = 4
+# Content-addressed like _KMEANS_MEMO; true-LRU capped at _MEMO_CAP.
 
 
 def _centers_fingerprint(cells: list, cents: list) -> str:
@@ -1717,7 +1716,7 @@ def _super_groups(cell_ids: list, cents: list) -> tuple[list, list]:
         grp_of, scents = memo_hit
     else:
         grp_of, scents = _super_quantize(cents, cell_ids=cell_ids)
-        _memo_put(_SUPER_MEMO, sfp, (grp_of, scents), _SUPER_MEMO_CAP)
+        _memo_put(_SUPER_MEMO, sfp, (grp_of, scents))
     log.debug("super_quantize: k=%d, g=%d, memo %s",
               len(cents), len(scents), "hit" if memo_ok else "miss")
     return grp_of, scents
@@ -4550,10 +4549,14 @@ def _bpe_merge_fold(l: str, r: str):
 # runs between every registered query, which would force a retrain
 # between bpe_train and bpe_apply and defeat the memo. Instead the dict
 # is true-LRU capped (_memo_get refreshes recency on hit, _memo_put
-# evicts the least-recently-used beyond the cap) so many datasets in one
-# driver process can never grow it past a handful of 10-tuple entries.
+# evicts the least-recently-used beyond _MEMO_CAP) so many datasets in
+# one driver process can never grow it past a handful of 10-tuple
+# entries.
 _BPE_MERGE_MEMO: dict = {}
-_BPE_MERGE_MEMO_CAP = 4
+
+# the one entry cap of every driver-side metadata memo (_BPE_MERGE_MEMO,
+# _KMEANS_MEMO, _PQ_MEMO, _SUPER_MEMO), read by _memo_put
+_MEMO_CAP = 4
 
 
 def _memo_get(memo: dict, key):
@@ -4572,12 +4575,12 @@ def _memo_get(memo: dict, key):
     return False, None
 
 
-def _memo_put(memo: dict, key, value, cap: int) -> None:
-    """Insert + evict-oldest down to ``cap`` — the shared producer-side
+def _memo_put(memo: dict, key, value) -> None:
+    """Insert + evict-oldest down to _MEMO_CAP — the shared producer-side
     idiom (content-addressed keys are never stale, the cap bounds
     process-lifetime retention to a handful of KB-sized entries)."""
     memo[key] = value
-    while len(memo) > cap:
+    while len(memo) > _MEMO_CAP:
         memo.pop(next(iter(memo)))
 # training-sample cap (docs): above this, _bpe_train_merges trains on a
 # deterministic md5-range sample of ~this many docs (see its body)
@@ -4671,7 +4674,7 @@ def _bpe_train_merges(spark: SparkSession, sf_dir: str) -> list:
                 _bpe_merge_fold(l, r),
             ),
         ).localCheckpoint(eager=False)
-    _memo_put(_BPE_MERGE_MEMO, memo_key, merges, _BPE_MERGE_MEMO_CAP)
+    _memo_put(_BPE_MERGE_MEMO, memo_key, merges)
     return merges
 
 
@@ -5170,7 +5173,6 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # content-addressed — never stale) so llm_kmeans_lloyd +
 # llm_ann_ivf_checked in one session fit once and serve after
 _KMEANS_MEMO: dict = {}
-_KMEANS_MEMO_CAP = 4
 
 
 # the one live centroid broadcast (see _kmeans_assign): fits are
@@ -5504,7 +5506,7 @@ def _kmeans_fit(
         fit_ve = managed_cache(_posexploded(fit_rows))
         centroids = _lloyd_rounds(spark, _md5_seeds(e, k), fit_ve, fit_rows)
     if not memo_ok:
-        _memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)
+        _memo_put(_KMEANS_MEMO, memo_key, centroids)
     if local is None:
         return _kmeans_assign(spark, centroids, e), centroids
     cell, d2 = _nearest_local(x, centroids)
@@ -6308,8 +6310,6 @@ _PQ_SAMPLE = 1024   # codebook training sample (md5-smallest vec_ids)
 
 _PQ_MEMO: dict = {}  # fp -> list[4] of 16x16 codebooks (metadata KBs;
 # same LRU/content-addressing discipline as _KMEANS_MEMO)
-_PQ_MEMO_CAP = 4  # r13: its own cap (r12 borrowed _BPE_MERGE_MEMO_CAP,
-# whose name lied about its scope)
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
@@ -6343,7 +6343,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     for m in range(_PQ_M):
         sub = x[:, m * _PQ_SUBDIM:(m + 1) * _PQ_SUBDIM]
         books.append(_lloyd_local(sub, sub[:_PQ_K], _PQ_ROUNDS))
-    _memo_put(_PQ_MEMO, fp, books, _PQ_MEMO_CAP)
+    _memo_put(_PQ_MEMO, fp, books)
     return books
 
 

@@ -1087,10 +1087,12 @@ def mm_e2e_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dup_id").alias("doc_id")
         )
 
+    # given the session, tier threads also inherit the caller's job tags
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=n_workers) as pool:
-        f_exact = pool.submit(inheritable_thread_target(_tier_exact))
-        f_phash = pool.submit(inheritable_thread_target(_tier_phash))
-        f_sem = pool.submit(inheritable_thread_target(_tier_sem))
+        f_exact = pool.submit(inherit(_tier_exact))
+        f_phash = pool.submit(inherit(_tier_phash))
+        f_sem = pool.submit(inherit(_tier_sem))
         f_exact.result()
         pdup = f_phash.result()
         sdup = f_sem.result()

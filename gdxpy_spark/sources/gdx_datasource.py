@@ -378,12 +378,14 @@ class GdxSymbolWriter(DataSourceWriter):
     as sorted runs of ≤SPILL_BATCH records to a run file in a temp dir
     next to the output (on a cluster that path is shared storage, the
     same place the .gdx itself lands — the FileOutputCommitter pattern);
-    the commit message carries only the run-file path and frame offsets,
-    never records. commit() k-way heap-merges the runs (each open run
-    streams one SLICE of records at a time) into the codec's streaming
-    encoder, so driver memory at commit is O(runs × slice), independent
-    of symbol size. The facade's write_symbol encodes a frame of at most
-    gdx_codec.CHUNK rows on the driver and comes here only above that."""
+    the commit message carries only the run-file path and frame offsets
+    (or, from a task that met a null key label, that column's name),
+    never records. merged() raises ValueError for a null label, then
+    k-way heap-merges the runs (each open run streams one SLICE of
+    records at a time); commit() feeds it to the codec's streaming
+    encoder, so driver memory at commit is O(runs × slice). Above
+    gdx_codec.CHUNK rows the facade's writers run write() in one
+    mapInArrow job and encode merged() into their own file."""
 
     SPILL_BATCH = 100_000  # records sorted per run frame on the executor
     SLICE = 8_192  # records per pickle slice inside a frame (merge memory)
@@ -403,12 +405,14 @@ class GdxSymbolWriter(DataSourceWriter):
 
     def write(self, rows):
         """Executor side: spill sorted runs, ship only their locations.
-        A null key label raises ValueError before its batch spills."""
+        At a null key label it stops reading, drops its run file and
+        ships the column's name instead."""
         dim = self.dim
         os.makedirs(self.run_dir, exist_ok=True)
         run_path = os.path.join(self.run_dir, f"run-{uuid.uuid4().hex}.pkl")
         offsets: list[int] = []
         total = 0
+        null = None
         with open(run_path, "wb") as f:
             batch: list[tuple] = []
 
@@ -427,21 +431,20 @@ class GdxSymbolWriter(DataSourceWriter):
             for r in rows:
                 r = tuple(r)
                 if None in r[:dim]:
-                    raise ValueError(
-                        f"gdx: {self.symbol}: null label in key column "
-                        f"k{r.index(None) + 1}"
-                    )
+                    null = f"k{r.index(None) + 1}"
+                    break
                 batch.append(r)
                 total += 1
                 if len(batch) >= self.SPILL_BATCH:
                     flush()
-            flush()
-        if not total:
+            else:
+                flush()
+        if null or not total:
             os.unlink(run_path)
             run_path = None
-        return GdxCommitMessage(
-            pickle.dumps({"run": run_path, "offsets": offsets, "count": total})
-        )
+        return GdxCommitMessage(pickle.dumps(
+            {"run": run_path, "offsets": offsets, "count": total, "null": null}
+        ))
 
     @staticmethod
     def _frame_iter(path: str, offset: int):
@@ -455,24 +458,29 @@ class GdxSymbolWriter(DataSourceWriter):
                     return
                 yield from sl
 
-    def commit(self, messages):
+    def merged(self, messages):
+        """The codec records of every task's runs, heap-merged on the
+        keys. Raises ValueError for the first message that names a null
+        key label, before any run is read."""
         dim = self.dim
-        field_names = [f.name for f in self.schema.fields]
-        frames = []
-        for msg in messages:
-            info = pickle.loads(msg.payload)
-            if info["run"]:
-                frames.extend((info["run"], off) for off in info["offsets"])
+        infos = [pickle.loads(msg.payload) for msg in messages]
+        null = next((i["null"] for i in infos if i["null"]), None)
+        if null:
+            raise ValueError(f"gdx: {self.symbol}: null label in key column {null}")
+        frames = [(i["run"], off) for i in infos if i["run"] for off in i["offsets"]]
         merged = heapq.merge(
             *(self._frame_iter(p, off) for p, off in frames),
             key=lambda r: r[:dim],
         )
+        return codec_records(merged, self.symtype, self.schema.fieldNames(), dim)
+
+    def commit(self, messages):
         meta = SymbolMeta(
-            name=self.symbol, dim=dim, type=self.symtype, expl_text=self.expl
+            name=self.symbol, dim=self.dim, type=self.symtype, expl_text=self.expl
         )
-        records = codec_records(merged, self.symtype, field_names, dim)
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         try:
+            records = self.merged(messages)
+            os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
             if self.layout == "gams":
                 # the native layout targets interop with model-sized files,
                 # not fact-table scale — materialize (its writer needs the

@@ -655,9 +655,8 @@ def test_write_symbol_keeps_expl_text_and_compress(engine, spark, parity_files, 
 
 
 def test_facade_write_above_chunk_takes_datasource(spark, tmp_path, caplog):
-    """One record past gdx_codec.CHUNK: write_symbol hands the frame to
-    the format("gdx") writer and write_file to its distributed sort,
-    with the same decoded contents."""
+    """One record past gdx_codec.CHUNK: write_symbol and write_file take
+    the sorted-run path, with the same decoded contents."""
     from gdxpy_spark.sources.gdx_codec import CHUNK
 
     caplog.set_level(logging.DEBUG, logger="gdxpy_spark.api")
@@ -675,7 +674,7 @@ def test_facade_write_above_chunk_takes_datasource(spark, tmp_path, caplog):
     )
     eng.write_file({"big": (df, "parameter")}, file_)
     assert caplog.records[-1].getMessage() == (
-        f"write big: over {CHUNK} records, spark path"
+        f"write big: over {CHUNK} records, datasource path"
     )
     want = sorted(
         repr(((f"r{i * 7919 % n:06d}",), (0.0,) if i % 1000 == 0 else (i * 0.5,),
@@ -750,6 +749,92 @@ def test_datasource_write_rejects_null_key_labels(spark, tmp_path):
     out = tmp_path / "null.gdx"
     with pytest.raises(Exception, match="gdx: x: null label in key column k1"):
         _datasource_write(df, str(out), "x", "parameter")
+    assert not out.exists()
+    assert not [p.name for p in tmp_path.iterdir() if "__gdx_runs__" in p.name]
+
+
+def _above_chunk_frame(spark, n):
+    """A 2-dim parameter of n rows, keys unsorted across 3 partitions."""
+    return spark.range(n).select(
+        F.format_string("g%02d", F.col("id") % 37).alias("k1"),
+        F.format_string("r%06d", (F.col("id") * 7919) % n).alias("k2"),
+        (F.col("id") * 0.25).alias("value"),
+        (F.col("id") % 997 == 0).alias("is_eps"),
+    ).repartition(3)
+
+
+def test_above_chunk_writers_are_byte_identical(engine, spark, tmp_path):
+    """Above gdx_codec.CHUNK rows write_symbol, write_file and
+    format("gdx") write one frame to byte-identical files."""
+    from gdxpy_spark.sources.gdx_codec import CHUNK
+
+    df = _above_chunk_frame(spark, CHUNK + 1)
+    sym, file_, ds = (str(tmp_path / f"{how}.gdx") for how in ("sym", "file", "ds"))
+    engine.write_symbol(df, sym, "big")
+    engine.write_file({"big": (df, "parameter")}, file_)
+    _datasource_write(df, ds, "big", "parameter")
+    with open(ds, "rb") as f:
+        want = f.read()
+    for p in (sym, file_):
+        with open(p, "rb") as f:
+            assert f.read() == want, p
+    assert len(_decoded(ds, "big")) == CHUNK + 1
+
+
+def test_write_file_mixes_paths_with_shared_labels(engine, spark, tmp_path):
+    """One write_file with a symbol above gdx_codec.CHUNK (sorted runs)
+    and one below (driver path) that share labels round-trips both
+    exactly, each label interned once."""
+    from gdxpy_spark.sources.gdx_codec import CHUNK, GdxFile
+
+    n = CHUNK + 5
+    big = _above_chunk_frame(spark, n)
+    small = spark.createDataFrame(
+        [(f"g{i:02d}", f"r{i * 11:06d}", f"t{i}") for i in range(40)],
+        "k1 STRING, k2 STRING, text STRING",
+    )
+    out = str(tmp_path / "mixed.gdx")
+    engine.write_file({"big": (big, "parameter"), "small": (small, "set")}, out)
+    want_big = sorted(
+        repr(((f"g{i % 37:02d}", f"r{i * 7919 % n:06d}"),
+              (0.0,) if i % 997 == 0 else (i * 0.25,), int(i % 997 == 0), ""))
+        for i in range(n)
+    )
+    want_small = sorted(
+        repr(((f"g{i:02d}", f"r{i * 11:06d}"), (0.0,), 0, f"t{i}")) for i in range(40)
+    )
+    assert _decoded(out, "big") == want_big
+    assert _decoded(out, "small") == want_small
+    labels = [f"g{i:02d}" for i in range(40)] + [f"r{i:06d}" for i in range(n)]
+    assert sorted(GdxFile(out).uels) == labels
+
+
+@pytest.mark.parametrize("how", ["write_symbol", "write_file"])
+def test_above_chunk_null_key_raises_on_driver(engine, spark, tmp_path, monkeypatch, how):
+    """Above gdx_codec.CHUNK rows a null key label raises the plain
+    driver ValueError from both facade writers (not a wrapped task
+    error), and leaves no output file, no spill file and no run dir."""
+    import tempfile
+
+    from gdxpy_spark.sources.gdx_codec import CHUNK
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    big = spark.range(CHUNK + 10).selectExpr(
+        "CAST(id AS STRING) AS k1",
+        "CASE WHEN id = 77 THEN NULL ELSE CAST(id % 3 AS STRING) END AS k2",
+        "CAST(id AS DOUBLE) AS value",
+    ).repartition(2)
+    out = tmp_path / "null.gdx"
+    with pytest.raises(ValueError, match="^gdx: big: null label in key column k2$"):
+        if how == "write_symbol":
+            engine.write_symbol(big, str(out), "big")
+        else:
+            good = spark.createDataFrame([("a", 1.0)], "k1 STRING, value DOUBLE")
+            engine.write_file({"good": (good, "parameter"), "big": (big, "parameter")},
+                              str(out))
+    assert list(tmp.glob("*.spill")) == []
     assert not out.exists()
     assert not [p.name for p in tmp_path.iterdir() if "__gdx_runs__" in p.name]
 

@@ -20,24 +20,19 @@ from tests.test_ann import planted_dir  # noqa: F401  (fixture reuse)
 
 def test_metadata_memos_are_lru_capped():
     """All four driver-side metadata memos share the _memo_get/_memo_put
-    helpers: capped at their own constant, and TRUE LRU — a hit
+    helpers: capped at the one _MEMO_CAP, and TRUE LRU — a hit
     refreshes recency, so a hot fingerprint survives cap+1 colder
     inserts (the r12 FIFO would have evicted it)."""
     from gdxpy_spark.operators import llm
 
-    for memo_name, cap_name in (
-        ("_BPE_MERGE_MEMO", "_BPE_MERGE_MEMO_CAP"),
-        ("_KMEANS_MEMO", "_KMEANS_MEMO_CAP"),
-        ("_PQ_MEMO", "_PQ_MEMO_CAP"),
-        ("_SUPER_MEMO", "_SUPER_MEMO_CAP"),
-    ):
+    cap = llm._MEMO_CAP
+    for memo_name in ("_BPE_MERGE_MEMO", "_KMEANS_MEMO", "_PQ_MEMO", "_SUPER_MEMO"):
         memo = getattr(llm, memo_name)
-        cap = getattr(llm, cap_name)
         saved = dict(memo)
         try:
             memo.clear()
             for i in range(cap + 3):
-                llm._memo_put(memo, f"fp{i}", [i], cap)
+                llm._memo_put(memo, f"fp{i}", [i])
             assert len(memo) == cap, memo_name
             # oldest evicted first, newest retained
             assert f"fp{cap + 2}" in memo, memo_name
@@ -47,14 +42,14 @@ def test_metadata_memos_are_lru_capped():
             oldest = next(iter(memo))
             second = list(memo)[1]
             assert llm._memo_get(memo, oldest) == (True, memo[oldest])
-            llm._memo_put(memo, "fp_new", [99], cap)
+            llm._memo_put(memo, "fp_new", [99])
             assert oldest in memo, memo_name
             assert second not in memo, memo_name
             # miss path is (False, None) without mutating — and a
             # STORED None reads as a hit, not a miss (r13 advice: the
             # value-or-None return conflated the two)
             assert llm._memo_get(memo, "absent") == (False, None)
-            llm._memo_put(memo, "fp_none", None, cap)
+            llm._memo_put(memo, "fp_none", None)
             assert llm._memo_get(memo, "fp_none") == (True, None)
         finally:
             memo.clear()
@@ -833,4 +828,4 @@ def test_kmeans_producer_evicts_at_cap():
     import inspect
 
     src = inspect.getsource(llm._kmeans_fit)
-    assert "_memo_put(_KMEANS_MEMO, memo_key, centroids, _KMEANS_MEMO_CAP)" in src
+    assert "_memo_put(_KMEANS_MEMO, memo_key, centroids)" in src

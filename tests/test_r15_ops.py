@@ -31,3 +31,36 @@ def test_mm_e2e_adaptive_overlap_sequential_path_matches(spark, monkeypatch):
     assert seq == thr
     assert set(seq) == {"raw", "exact", "perceptual", "semantic"}
     assert seq["raw"] >= seq["exact"] >= seq["perceptual"] >= seq["semantic"]
+
+
+def test_mm_e2e_tier_threads_inherit_session_tags(spark, duck, monkeypatch):
+    """With the tiers on worker threads (_E2E_OVERLAP_MIN_SLOTS patched
+    to 1), mm_e2e_dedup hands the session to inheritable_thread_target:
+    no "Tags will not be inherited" warning is raised, a job tag the
+    caller added is set in the tier threads, and the funnel still
+    matches its oracle."""
+    import warnings
+
+    import gdxpy_spark.operators.multimodal as mm
+    from tests.conftest import assert_frames_match
+
+    monkeypatch.setattr(mm, "_E2E_OVERLAP_MIN_SLOTS", 1)
+    seen = []
+    phash = mm._phash_dups
+
+    def tagged_phash(*args):
+        seen.append(spark.getTags())
+        return phash(*args)
+
+    monkeypatch.setattr(mm, "_phash_dups", tagged_phash)
+    q = ALL["mm_e2e_dedup"]
+    spark.addTag("mm_e2e_tier_probe")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            sdf = q.fn(spark, SF_DIR)
+    finally:
+        spark.removeTag("mm_e2e_tier_probe")
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+    assert seen and all("mm_e2e_tier_probe" in tags for tags in seen)
+    assert_frames_match(sdf, duck.execute(q.oracle), name="mm_e2e_dedup")

@@ -307,12 +307,11 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shape as web-crawl host-graph components at 100 TB.
 
     Physical strategy: when _copurchase_pairs derives the edges on the
-    driver (every oracle scale) and there are at most
-    _CC_DRIVER_MAX_EDGES of them, they go straight to
-    connected_components' driver union-find (_min_id_components) and
-    the result is one LocalTableScan: no Spark job. Otherwise the edges
-    (driver-derived above the edge cut, as llm_minhash_dedup sends its
-    pairs, or _copurchase_edges' Spark plan) go through
+    driver (every oracle scale) they go to _components_of_pairs, the
+    driver front door of connected components: within its edge cut
+    the hook-and-shortcut kernel labels them and the result is one
+    LocalTableScan, no Spark job. Otherwise the edges (driver-derived
+    above that cut, or _copurchase_edges' Spark plan) go through
     connected_components, whose Spark path is alternating
     large-star/small-star contraction (see its docstring for the
     Kiveris 2014 invariants and the structural fixpoint check).
@@ -326,25 +325,16 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges by the CC parity tests, which run both paths. Singleton
     parts (never co-purchased in-window) are not graph nodes and are
     excluded by both engines."""
-    import pyarrow as pa
-
     from gdxpy_spark.operators import llm
 
     pairs = _copurchase_pairs(sf_dir)
     if pairs is None:
-        edges = _copurchase_edges_spark(spark, sf_dir)
-    elif len(pairs[0]) > llm._CC_DRIVER_MAX_EDGES:
-        edges = spark.createDataFrame(pa.table({"pa": pairs[0], "pb": pairs[1]}))
+        edges = _copurchase_edges_spark(spark, sf_dir).select(
+            F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b")
+        )
+        cc = llm.connected_components(spark, edges)
     else:
-        comp = llm._min_id_components(pairs[0].to_pylist(), pairs[1].to_pylist())
-        t = pairs[0].type
-        return spark.createDataFrame(pa.table({
-            "node": pa.array(list(comp), t),
-            "component_id": pa.array(list(comp.values()), t),
-        }))
-    cc = llm.connected_components(
-        spark, edges.select(F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"))
-    )
+        cc = llm._components_of_pairs(spark, *pairs)
     return cc.select(F.col("doc_id").alias("node"), "component_id")
 
 

@@ -2067,7 +2067,7 @@ def _ivf_tail_local(
       and "range" every pair at cos ≥ 0.4, both as (vec_id, nn_id,
       cos_sim) rounded like F.round(·, 4) + 0.0; "tau_cc" keeps pairs
       at cos ≥ 0.4 and returns (dup_id, kept_id) of their components
-      (_min_id_components), roots omitted.
+      (_components_of_pairs, then _dup_kept).
 
     Every step is the Spark tail's arithmetic in its order, so results
     are bit-identical (pinned against the DuckDB oracles on both
@@ -2099,65 +2099,99 @@ def _ivf_tail_local(
         out.append((qi[keep], xi[keep], cos[keep]))
     qi, xi, cos = (np.concatenate(part) for part in zip(*out))
     if reducer == "tau_cc":
-        table = _dup_kept_table(
-            _min_id_components(ids[qi].tolist(), ids[xi].tolist()), t
+        return _dup_kept(
+            _components_of_pairs(spark, pa.array(ids[qi], t), pa.array(ids[xi], t))
         )
-    else:
-        table = pa.table({
-            "vec_id": pa.array(ids[qi], t),
-            "nn_id": pa.array(ids[xi], t),
-            "cos_sim": pa.array(
-                [_spark_round(c, 4) + 0.0 for c in cos.tolist()], pa.float64()
-            ),
-        })
-    return spark.createDataFrame(table)
+    return spark.createDataFrame(pa.table({
+        "vec_id": pa.array(ids[qi], t),
+        "nn_id": pa.array(ids[xi], t),
+        "cos_sim": pa.array(
+            [_spark_round(c, 4) + 0.0 for c in cos.tolist()], pa.float64()
+        ),
+    }))
 
 
-# Distinct oriented edges up to which connected_components resolves the
-# components on the driver (one Arrow read of the checkpointed edges,
-# deduplicated there) instead of running Spark star-contraction rounds,
-# three jobs each. The driver path still won at 1M edges on a 4-vCPU box
-# (7.7 s vs 15.2 s), so the cut bounds driver work and memory instead:
-# 2^18 edges is ~3 s and a few MB of Arrow. It also keeps
+# Edges up to which connected components are labelled on the driver
+# (_min_id_components) instead of by Spark star-contraction rounds,
+# three jobs each. The kernel labels 2^18 random edges in about 0.09 s
+# on a 4-vCPU box, so the cut is not about speed. It bounds driver
+# memory (a few MB of Arrow and rank arrays at the cut), and it keeps
 # llm_dedup_clusters (2.16M edges at sf0.1) on the oracle-checked Spark
-# path. graph_components and llm_minhash_dedup apply it to the pairs
-# they derive on the driver before any Spark job.
+# path. connected_components applies it to the distinct oriented edges
+# it probes; every caller that holds its pairs on the driver goes
+# through _components_of_pairs.
 _CC_DRIVER_MAX_EDGES = 1 << 18
 
 
-def _min_id_components(us, vs) -> dict:
-    """{node: the min node of its component} over the undirected edges
-    (us[i], vs[i]): path-halving union-find whose root is the smaller
-    id. The driver half of connected_components and of the τ+CC IVF
-    tail (_ivf_tail_local)."""
-    parent: dict = {}
+def _min_id_components(a, b):
+    """Arrow (node, root) arrays of the ids' type: every node of the
+    undirected edges (a[i], b[i]) with the min node of its component,
+    nodes in ascending order. Null ids and self-loops add no node.
 
-    def find(x):
-        # path halving: every visited node skips to its grandparent
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+    Vectorised hook-and-shortcut (Shiloach & Vishkin 1982) over the
+    ids' ranks, so the smaller rank is the smaller id: each round every
+    root hooks onto its smallest neighbouring root (np.minimum.at),
+    pointer jumping (p = p[p]) flattens the trees to stars, and edges
+    inside one tree are dropped. A tree's root is its min node, and the
+    number of trees that still have an edge at least halves per round.
+    The driver half of connected components, behind
+    _components_of_pairs."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    for u, v in zip(us, vs):
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
-    return {x: find(x) for x in parent}
+    a, b = (
+        x.combine_chunks() if isinstance(x, pa.ChunkedArray) else x for x in (a, b)
+    )
+    keep = pc.not_equal(a, b)
+    a, b = a.filter(keep), b.filter(keep)
+    ids = pc.unique(pa.concat_arrays([a, b]))
+    ids = ids.take(pc.sort_indices(ids))
+    u = pc.index_in(a, value_set=ids).to_numpy()
+    v = pc.index_in(b, value_set=ids).to_numpy()
+    p = np.arange(len(ids))
+    while len(u):
+        np.minimum.at(p, u, v)
+        np.minimum.at(p, v, u)
+        q = p[p]
+        while (q != p).any():
+            p, q = q, q[q]
+        u, v = p[u], p[v]
+        keep = u != v
+        u, v = u[keep], v[keep]
+    return ids, ids.take(p)
 
 
-def _dup_kept_table(comp: dict, t):
-    """Arrow (dup_id, kept_id) of type ``t`` from _min_id_components'
-    map, roots omitted."""
+def _components_of_pairs(spark: SparkSession, a, b) -> DataFrame:
+    """(doc_id, component_id) of connected_components over the pairs
+    (a[i], b[i]) held on the driver as Arrow arrays of one id type: the
+    one front door of the driver half. Within _CC_DRIVER_MAX_EDGES
+    pairs _min_id_components labels them and the result is one Arrow
+    table (a LocalTableScan, no Spark job); more go to
+    connected_components as one Arrow createDataFrame."""
     import pyarrow as pa
 
-    dup = [d for d, k in comp.items() if d != k]
-    return pa.table({
-        "dup_id": pa.array(dup, t),
-        "kept_id": pa.array([comp[d] for d in dup], t),
-    })
+    if len(a) > _CC_DRIVER_MAX_EDGES:
+        pairs = spark.createDataFrame(pa.table({"doc_a": a, "doc_b": b}))
+        return connected_components(spark, pairs)
+    log.debug("connected_components: %d edges, driver path", len(a))
+    node, root = _min_id_components(a, b)
+    return spark.createDataFrame(pa.table({"doc_id": node, "component_id": root}))
+
+
+def _dup_kept(cc: DataFrame) -> DataFrame:
+    """(dup_id, kept_id) of connected components (doc_id,
+    component_id), roots omitted: the projection every dedup op ends
+    in. Over a driver result it stays one LocalTableScan."""
+    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
+        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
+    )
+
+
+def _dedup_clusters(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    """(dup_id, kept_id) of connected_components over ``pairs``
+    (doc_a, doc_b), singletons and roots omitted."""
+    return _dup_kept(connected_components(spark, pairs))
 
 
 def connected_components(
@@ -2174,22 +2208,21 @@ def connected_components(
     pipeline (for dedup callers: the full blocked-Jaccard / MinHash
     candidate pass) never re-executes. At most _CC_DRIVER_MAX_EDGES + 1
     of its rows are read back as Arrow. If they are all of them, they
-    are deduplicated on the driver and path-halving union-find (root =
-    the smaller id) labels the graph; the result is one Arrow table (a
-    LocalTableScan). Only a raw probe over the cut runs a Spark
-    `distinct`, probed the same way: within the cut the distinct edges
-    take the driver path too, above it _star_contraction runs on the
-    checkpointed raw edges, whose first round deduplicates them. So the
-    one persisted copy is of the raw edges, where it used to be of the
-    distinct set, and above the cut the only added cost is the raw
-    probe's read. Every Spark contraction round costs three jobs
-    whatever the graph's size, so on small graphs (the dedup callers'
-    usual case) that job floor, not the data, sets the wall. Both paths
+    are deduplicated on the driver and _components_of_pairs labels the
+    graph with the hook-and-shortcut kernel (_min_id_components); the
+    result is one Arrow table (a LocalTableScan). Only a raw probe over
+    the cut runs a Spark `distinct`, probed the same way: within the
+    cut the distinct edges take the driver path too, above it
+    _star_contraction runs on the checkpointed raw edges, whose first
+    round deduplicates them. So the one persisted copy is of the raw
+    edges, where it used to be of the distinct set, and above the cut
+    the only added cost is the raw probe's read. Every Spark
+    contraction round costs three jobs whatever the graph's size, so on
+    small graphs (the dedup callers' usual case) that job floor, not
+    the data, sets the wall. Both paths
     are exact and give identical labels (pinned in tests on both).
     `max_iters` and its non-convergence warning bound only the Spark
     path."""
-    import pyarrow as pa
-
     e = (
         edges.select(
             F.greatest("doc_a", "doc_b").alias("u"),
@@ -2204,19 +2237,7 @@ def connected_components(
         if head.num_rows > _CC_DRIVER_MAX_EDGES:
             return _star_contraction(spark, e, max_iters)
     head = head.group_by(["u", "v"]).aggregate([])
-    log.debug("connected_components: %d edges, driver path", head.num_rows)
-    comp = _min_id_components(
-        head.column("u").to_pylist(), head.column("v").to_pylist()
-    )
-    t = head.schema.field("u").type
-    table = pa.table(
-        {
-            "doc_id": pa.array(list(comp), type=t),
-            "component_id": pa.array(list(comp.values()), type=t),
-        }
-    )
-    dt = e.schema["u"].dataType.simpleString()
-    return spark.createDataFrame(table, f"doc_id {dt}, component_id {dt}")
+    return _components_of_pairs(spark, head.column("u"), head.column("v"))
 
 
 def _star_contraction(spark: SparkSession, e: DataFrame, max_iters: int) -> DataFrame:
@@ -2470,10 +2491,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     pairs = blocked_jaccard_auto(spark, tok, 0.8).select("doc_a", "doc_b")
-    cc = connected_components(spark, pairs)
-    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
-        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
-    )
+    return _dedup_clusters(spark, pairs)
 
 
 _CHUNK_ORACLE = """
@@ -2722,7 +2740,7 @@ def minhash_band_pairs(
 
 
 # Docs up to which llm_minhash_dedup runs on the driver
-# (_minhash_pairs_local → _min_id_components) instead of the Spark plan.
+# (_minhash_pairs_local → _components_of_pairs) instead of the Spark plan.
 # At the cut (2^16 docs of perfbench's documents_table: 19 MB of text,
 # 306 B and 55 tokens a doc, 152k verified pairs; 4 vCPU, one fresh
 # session per path, first call / second call): driver 2.7 s / 1.9 s,
@@ -2730,10 +2748,10 @@ def minhash_band_pairs(
 # Python + 2.9 GB JVM. The cut bounds driver memory, not speed, and
 # only through the doc count: the twin's memory grows with the text's
 # bytes and tokens (about 20x the text here), so a corpus of longer
-# docs needs more at the same count. Pairs beyond _CC_DRIVER_MAX_EDGES
-# go to connected_components; the worst case the 64-doc bucket cap
-# allows at the cut, 1,024 groups of 64 identical docs, gives 2.06M
-# pairs, 6.5 s and 572 MB Python peak in the twin.
+# docs needs more at the same count. _components_of_pairs sends pairs
+# over its edge cut to connected_components; the worst case the 64-doc
+# bucket cap allows at the cut, 1,024 groups of 64 identical docs,
+# gives 2.06M pairs, 6.5 s and 572 MB Python peak in the twin.
 _MINHASH_DRIVER_MAX_DOCS = 1 << 16
 # (doc, token) lookups per block of _minhash_pairs_local's verify.
 _VERIFY_BLOCK_ROWS = 1 << 22
@@ -2910,13 +2928,11 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the parquet footers (no Spark job, no text read). A corpus of
     at most _MINHASH_DRIVER_MAX_DOCS docs is read as Arrow (doc_id,
     text); if its ids are distinct and non-null, _minhash_pairs_local
-    and _min_id_components run on the driver and the result is one
-    Arrow table (a LocalTableScan): at these sizes the Spark plan's job
-    floor, not the data, sets the wall. More than _CC_DRIVER_MAX_EDGES
-    verified pairs go to connected_components instead, so its edge cut
-    still bounds the driver union-find. Any other corpus runs
-    minhash_band_pairs → connected_components."""
-    import pyarrow as pa
+    runs on the driver and its pairs go to _components_of_pairs, so
+    within the edge cut the hook-and-shortcut kernel labels them and
+    the result is one Arrow table (a LocalTableScan): at these sizes
+    the Spark plan's job floor, not the data, sets the wall. Any other
+    corpus runs minhash_band_pairs → connected_components."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
@@ -2933,21 +2949,7 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = table(spark, sf_dir, "documents")
         return _dedup_clusters(spark, minhash_band_pairs(docs).select("doc_a", "doc_b"))
     log.debug("minhash_dedup: %d docs, driver path", n)
-    a, b = _minhash_pairs_local(head)
-    if len(a) > _CC_DRIVER_MAX_EDGES:
-        pairs = spark.createDataFrame(pa.table({"doc_a": a, "doc_b": b}))
-        return _dedup_clusters(spark, pairs)
-    comp = _min_id_components(a.to_pylist(), b.to_pylist())
-    return spark.createDataFrame(_dup_kept_table(comp, a.type))
-
-
-def _dedup_clusters(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """(dup_id, kept_id) of connected_components over ``pairs``
-    (doc_a, doc_b), singletons and roots omitted."""
-    cc = connected_components(spark, pairs)
-    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
-        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
-    )
+    return _dup_kept(_components_of_pairs(spark, *_minhash_pairs_local(head)))
 
 
 _DECONTAM_ORACLE = """
@@ -5287,8 +5289,8 @@ def _lloyd_rounds(spark: SparkSession, centroids, fit_ve, fit_rows):
 # aggregate and a collect each, whose job floor, not the data, sets the
 # wall on small corpora (sf0.1's 2,000 vectors at k = 45: 0.8 s on the
 # driver vs 12 s for the Spark fit and assignment on a 4-vCPU box).
-# Like _CC_DRIVER_MAX_EDGES the cut bounds driver memory, not the local
-# winner: n·d·8 bytes is 32 MiB at d = 64.
+# Like the connected-components edge cut it bounds driver memory, not
+# the local winner: n·d·8 bytes is 32 MiB at d = 64.
 _LLOYD_DRIVER_MAX_VECTORS = 1 << 16
 
 
@@ -6116,9 +6118,9 @@ def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     release_managed_caches — see the op docstring for the design. At
     most _LLOYD_DRIVER_MAX_VECTORS indexed vectors run the τ+CC tail
     on the driver (_ivf_tail_local: the persisted index read with
-    pyarrow, union-find over the τ edges, one LocalTableScan, no Spark
-    job); larger indexes run _semdedup_pairs_spark. Both give the
-    same rows."""
+    pyarrow, hook-and-shortcut components over the τ edges, one
+    LocalTableScan, no Spark job); larger indexes run
+    _semdedup_pairs_spark. Both give the same rows."""
     return _ivf_persisted_tail(spark, sf_dir, "tau_cc", _semdedup_pairs_spark)
 
 
@@ -6169,10 +6171,7 @@ def _semdedup_pairs_spark(cells: DataFrame, centers: DataFrame) -> DataFrame:
         )
         .select(F.col("vec_id").alias("doc_a"), F.col("nn_id").alias("doc_b"))
     )
-    cc = connected_components(spark, edges)
-    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
-        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
-    )
+    return _dedup_clusters(spark, edges)
 
 
 
@@ -6783,7 +6782,4 @@ def llm_semdedup_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("vec_id").alias("doc_a"), F.col("nn_id").alias("doc_b"))
     )
-    cc = connected_components(spark, edges)
-    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
-        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
-    )
+    return _dedup_clusters(spark, edges)

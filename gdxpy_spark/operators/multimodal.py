@@ -926,10 +926,10 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, banded join) over the SHARED cached signature frame
     (r14: _phash_pairs, not a from-scratch rebuild of the registered
     op — the wrapper would release the managed caches mid-build); CC
-    runs over the dup-graph edge set, orders of magnitude below n: one
-    driver union-find up to connected_components' edge cut, else 3-4
-    contraction rounds of two shuffles each over the SHRINKING pair
-    set."""
+    runs over the dup-graph edge set, orders of magnitude below n: the
+    driver hook-and-shortcut kernel up to connected_components' edge
+    cut, else 3-4 contraction rounds of two shuffles each over the
+    SHRINKING pair set."""
     return _phash_dups(spark, sf_dir)
 
 
@@ -937,13 +937,9 @@ def _phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(dup_id, kept_id): mm_phash_clusters' engine body, callable from
     composites (mm_e2e_dedup) without the registered wrapper's
     release_managed_caches tripping mid-build."""
-    pairs = _phash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    from gdxpy_spark.operators.llm import connected_components
+    from gdxpy_spark.operators.llm import _dedup_clusters
 
-    cc = connected_components(spark, pairs)
-    return cc.filter(F.col("doc_id") != F.col("component_id")).select(
-        F.col("doc_id").alias("dup_id"), F.col("component_id").alias("kept_id")
-    )
+    return _dedup_clusters(spark, _phash_pairs(spark, sf_dir).select("doc_a", "doc_b"))
 
 
 def _mm_e2e_oracle() -> str:

@@ -170,6 +170,44 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
+@pytest.mark.parametrize("id_type", ["INT", "BIGINT", "STRING"])
+def test_min_id_components_kernel_matches_union_find(id_type):
+    """The driver kernel called directly, no Spark: its hook-and-shortcut
+    labels equal the union-find oracle on 200 pseudo-random graphs and
+    on a shuffled 10^5-node chain (hook-and-shortcut's worst case), and
+    keep the id type. Empty input, and input of only self-loops or null
+    ids, gives no node."""
+    import random
+
+    import pyarrow as pa
+
+    from gdxpy_spark.operators import llm
+
+    t = {"INT": pa.int32(), "BIGINT": pa.int64(), "STRING": pa.string()}[id_type]
+    cast = str if id_type == "STRING" else int
+
+    def labels(a, b):
+        node, root = llm._min_id_components(pa.array(a, t), pa.array(b, t))
+        assert node.type == t and root.type == t
+        return dict(zip(node.to_pylist(), root.to_pylist()))
+
+    rng = random.Random(7)
+    for _ in range(200):
+        n = rng.randint(1, 60)
+        edges = [
+            (cast(rng.randrange(n)), cast(rng.randrange(n)))
+            for _ in range(rng.randint(1, 80))
+        ]
+        want = _uf_components([(a, b) for a, b in edges if a != b])
+        assert labels(*zip(*edges)) == want
+    chain = [cast(i) for i in range(100_000)]
+    rng.shuffle(chain)
+    assert labels(chain[:-1], chain[1:]) == _uf_components(zip(chain, chain[1:]))
+    assert labels([], []) == {}
+    assert labels([cast(5), cast(6)], [cast(5), cast(6)]) == {}
+    assert labels([None, cast(1), None], [cast(2), None, None]) == {}
+
+
 def cc_on_both_paths(spark, monkeypatch, edges, **kw):
     """{path: {doc_id: component_id}} from connected_components as
     dispatched (every test graph is below the cut: driver union-find) and

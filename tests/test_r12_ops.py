@@ -366,6 +366,34 @@ def test_lloyd_callers_match_oracle_on_both_paths(
     lloyd_on_both_paths(monkeypatch, tmp_path, run, tail=tail)
 
 
+def test_semdedup_tau_cc_tail_honours_the_edge_cut(
+    spark, duck_small, monkeypatch, tmp_path, caplog
+):
+    """The third leg of the τ+CC tail: with the Lloyd fit and the tail
+    on the driver (production cut) and connected_components' edge cut
+    patched below zero, the tail's τ pairs go to the Spark contraction
+    path. llm_semdedup still matches its oracle, and the result is no
+    LocalTableScan."""
+    import logging
+
+    from gdxpy_spark.operators import llm
+    from gdxpy_spark.registry import all_queries
+    from tests.conftest import assert_frames_match
+    from tests.test_r11_ops import _is_local_scan
+
+    caplog.set_level(logging.DEBUG, logger=llm.log.name)
+    monkeypatch.setattr(llm, "_CC_DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(llm, "_KMEANS_MEMO", {})
+    monkeypatch.setattr(llm, "_ivf_index_dir", lambda sf_dir: str(tmp_path / "ivf"))
+    q = all_queries()["llm_semdedup"]
+    got = q.fn(spark, SF_SMALL)
+    assert not _is_local_scan(got)
+    assert_frames_match(got, duck_small.execute(q.oracle), name=q.name)
+    msgs = [r.getMessage() for r in caplog.records if r.name == llm.log.name]
+    assert any(m.endswith("tau_cc, driver path") for m in msgs), msgs
+    assert any(m.startswith("connected_components: spark path") for m in msgs), msgs
+
+
 @pytest.mark.slow
 def test_kmeans_large_k_cells_equal_on_both_paths(spark, monkeypatch, tmp_path):
     """At a large k (80 cells) both paths assign with the one kernel,

@@ -1262,7 +1262,7 @@ def _auto_n_bits(n: int, target_bucket: int = 32, lo: int = 6, hi: int = 24) -> 
 def lsh_candidate_pairs(
     bucketed: DataFrame,
     n_probe_bits: int = 0,
-    max_bucket: int = 64,
+    max_bucket: int | None = 64,
     q_probes: DataFrame | None = None,
 ) -> DataFrame:
     """ANN candidate id pairs (vec_id, nn_id) from (vec_id, bucket) rows
@@ -1278,6 +1278,7 @@ def lsh_candidate_pairs(
     candidates). A b-sized bucket costs O(b) candidates instead of b²,
     every vector still gets ≥1 candidate, and the residual recall loss
     is the approximate-by-design contract the weak check declares.
+    ``max_bucket=None`` never chains: every bucket pairs all-to-all.
 
     ``n_probe_bits`` > 0 adds query-side multiprobe: each vector also
     probes the Hamming-1 flips of its own bucket key (index side stays
@@ -1286,17 +1287,19 @@ def lsh_candidate_pairs(
     explicit (vec_id, bucket) probe frame replaces the query side —
     e.g. each vector's 2 nearest centroids — while the index side stays
     the top-1 assignment."""
-    bsz = bucketed.groupBy("bucket").agg(
-        F.count("*").alias("bsize"), F.min("vec_id").alias("rep")
-    )
-    bd = bucketed.join(bsz, "bucket")
-    idx_small = bd.filter(F.col("bsize") <= max_bucket).select("bucket", "vec_id")
-    idx_rep = (
-        bd.filter(F.col("bsize") > max_bucket)
-        .select("bucket", F.col("rep").alias("vec_id"))
-        .distinct()
-    )
-    index_ids = idx_small.unionByName(idx_rep)
+    index_ids = bucketed.select("bucket", "vec_id")
+    if max_bucket is not None:
+        bsz = bucketed.groupBy("bucket").agg(
+            F.count("*").alias("bsize"), F.min("vec_id").alias("rep")
+        )
+        bd = bucketed.join(bsz, "bucket")
+        idx_small = bd.filter(F.col("bsize") <= max_bucket).select("bucket", "vec_id")
+        idx_rep = (
+            bd.filter(F.col("bsize") > max_bucket)
+            .select("bucket", F.col("rep").alias("vec_id"))
+            .distinct()
+        )
+        index_ids = idx_small.unionByName(idx_rep)
     if q_probes is not None:
         q_ids = q_probes.select("vec_id", "bucket")
     elif n_probe_bits > 0:
@@ -1314,25 +1317,26 @@ def lsh_candidate_pairs(
     cand = q.join(x, F.col("q.bucket") == F.col("x.bucket")).filter(
         F.col("q.vec_id") != F.col("x.vec_id")
     ).select(F.col("q.vec_id").alias("vec_id"), F.col("x.vec_id").alias("nn_id"))
-    # hub → members back-edges for capped buckets (members already get
-    # hub as a candidate via the join; this gives the hub its side)
-    star_back = bd.filter(
-        (F.col("bsize") > max_bucket) & (F.col("vec_id") != F.col("rep"))
-    ).select(F.col("rep").alias("vec_id"), F.col("vec_id").alias("nn_id"))
-    return cand.unionByName(star_back).distinct()
+    if max_bucket is not None:
+        # hub → members back-edges for capped buckets (members already
+        # get hub as a candidate via the join; this gives the hub its side)
+        cand = cand.unionByName(bd.filter(
+            (F.col("bsize") > max_bucket) & (F.col("vec_id") != F.col("rep"))
+        ).select(F.col("rep").alias("vec_id"), F.col("vec_id").alias("nn_id")))
+    return cand.distinct()
 
 
-def _cosine_top1(e: DataFrame, cand: DataFrame) -> DataFrame:
-    """Join candidate id pairs back to their embeddings, exact cosine,
-    keep each vector's best neighbor (window partitioned by vec_id —
-    never a global window)."""
+def _cosine_scored(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate id pairs (vec_id, nn_id) joined back to their rows of
+    ``e`` (vec_id, embedding, norm): (vec_id, nn_id, cos_sim), the
+    exact cosine _dot(a, b) / (norm_a · norm_b), unrounded."""
     ea = e.select("vec_id", F.col("embedding").alias("emb_a"), F.col("norm").alias("norm_a"))
     eb = e.select(
         F.col("vec_id").alias("nn_id"),
         F.col("embedding").alias("emb_b"),
         F.col("norm").alias("norm_b"),
     )
-    scored = (
+    return (
         cand.join(ea, "vec_id")
         .join(eb, "nn_id")
         .select(
@@ -1343,9 +1347,16 @@ def _cosine_top1(e: DataFrame, cand: DataFrame) -> DataFrame:
             ),
         )
     )
+
+
+def _cosine_top1(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact cosine over candidate id pairs (_cosine_scored), keeping
+    each vector's best neighbor (window partitioned by vec_id — never a
+    global window)."""
     w = W.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("nn_id").asc())
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        _cosine_scored(e, cand)
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             "vec_id",
@@ -1727,23 +1738,19 @@ def _super_groups(cell_ids: list, cents: list) -> tuple[list, list]:
 _NPROBE = 2
 
 
-def _ivf_probe_cells(
-    q: DataFrame, centers: DataFrame, nprobe: int = _NPROBE,
-    nprobe_super: int = _NPROBE,
-) -> DataFrame:
+def _ivf_probe_cells(q: DataFrame, centers: DataFrame) -> DataFrame:
     """Replicate each query row (vec_id, embedding, norm) to its
-    ``nprobe`` nearest persisted centroids: the IVF probe fan-out shared
-    by the serving path and SemDeDup's boundary-safe candidate
-    generation.
+    _NPROBE nearest persisted centroids: the probe of the IVF candidate
+    stage (_ivf_candidates).
 
     TWO-LEVEL since r12 (the measured ×37.6 coarse-search cliff at the
     100× posture probe): the k = √n centroids are themselves grouped
     into g = √k super-groups by a deterministic driver-side Lloyd over
     centroid METADATA (_super_quantize — kilobytes, no job); each query
     ranks the g broadcast super-centroids (n·g ≈ n·n^0.25 rows), keeps
-    its ``nprobe_super`` nearest groups, then ranks only THOSE groups'
-    member centroids (≈ nprobe_super·n·√k rows) for the final
-    ``nprobe`` cells. Total coarse cost O(n·n^0.25) instead of the flat
+    its _NPROBE nearest groups, then ranks only THOSE groups'
+    member centroids (≈ _NPROBE·n·√k rows) for the final
+    _NPROBE cells. Total coarse cost O(n·n^0.25) instead of the flat
     rank's O(n·n^0.5); both rank windows shuffle narrow (id, d2) rows
     partitioned by vec_id — r13 made that claim TRUE in the plan: the
     distance frames project the embedding away BEFORE each window (the
@@ -1752,7 +1759,7 @@ def _ivf_probe_cells(
     equi-joined back exactly twice (once for the level-2 distances,
     once for the final output) — O(n) embedding rows per pass instead
     of O(n·g) through the rank. Approximation surface: a true nearest
-    cell whose super-group is outside the query's top-``nprobe_super``
+    cell whose super-group is outside the query's top-_NPROBE
     groups is not probed — recall floors pinned in tests/test_ann.py."""
     spark = q.sparkSession
 
@@ -1788,7 +1795,7 @@ def _ivf_probe_cells(
         .withColumn("sd2", d2_against(F.col("scenter")))
         .select("vec_id", "grp", "sd2")
         .withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= nprobe_super)
+        .filter(F.col("srn") <= _NPROBE)
         .select("vec_id", "grp")
     )
     picked = (
@@ -1797,7 +1804,7 @@ def _ivf_probe_cells(
         .withColumn("d2", d2_against(F.col("center")))
         .select("vec_id", "cell", "d2")
         .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
+        .filter(F.col("rn") <= _NPROBE)
         .select("vec_id", "cell")
     )
     return picked.join(q, "vec_id").select(
@@ -1805,50 +1812,76 @@ def _ivf_probe_cells(
     )
 
 
-def _ivf_candidates_top1(indexed: DataFrame, centers: DataFrame) -> DataFrame:
-    """The IVF top-1 query tail's Spark plan, shared by llm_ann_ivf and
-    llm_ann_ivf_checked (freshly fitted index) and llm_ann_ivf_served
-    (persisted index) above _LLOYD_DRIVER_MAX_VECTORS; below it
-    _ivf_tail_local computes the same rows on the driver (_ivf_tail
-    dispatches). Probe each vector's 2 nearest centroids, equi-join
-    probed cells against the index side, exact cosine, deterministic
-    top-1 per query. `indexed` must carry (vec_id, embedding, norm,
-    cell).
+def _ivf_candidates(
+    cells: DataFrame, centers: DataFrame, cap: int = None
+) -> DataFrame:
+    """The IVF candidate stage on Spark, the twin of _probe_local +
+    _cell_pairs: directed distinct (vec_id, nn_id) id pairs in which
+    every vector of ``cells`` (vec_id, embedding, norm, cell) meets
+    every other vector whose top-1 cell it probes (_ivf_probe_cells).
+    ``cap`` is lsh_candidate_pairs' max_bucket; None never chains.
 
-    The QUERY-side projection is managed_cache'd (r13): the narrowed
-    probe reads it three times (level-1 rank source + two embedding
-    join-backs), and uncached each read re-listed the ~k-partition
-    cells layout — measured +51% serving wall at the k=3136 probe. The
-    INDEX side stays an uncached scan on purpose: that is the side the
-    partitionBy(cell) layout prunes for selective query batches."""
-    probes = _ivf_probe_cells(
-        managed_cache(indexed.select("vec_id", "embedding", "norm")),
-        centers,
-        nprobe=2,
+    The query side probes each vector's 2 nearest cells so near-dup
+    pairs split by a cluster BOUNDARY still meet (the planted-recall
+    test failed 14/20 with top-1-only scoping); the index side stays
+    top-1."""
+    probes = _ivf_probe_cells(cells.select("vec_id", "embedding", "norm"), centers)
+    return lsh_candidate_pairs(
+        cells.select("vec_id", F.col("cell").alias("bucket")),
+        q_probes=probes.withColumnRenamed("cell", "bucket"),
+        max_bucket=cap,
     )
-    qa = probes.alias("q")
-    xa = indexed.alias("x")
-    cand = qa.join(
-        xa,
-        (F.col("q.cell") == F.col("x.cell"))
-        & (F.col("q.vec_id") != F.col("x.vec_id")),
-    ).select(
-        F.col("q.vec_id").alias("vec_id"),
-        F.col("x.vec_id").alias("nn_id"),
-        (
-            _dot(F.col("q.embedding"), F.col("x.embedding"))
-            / (F.col("q.norm") * F.col("x.norm"))
-        ).alias("cos_sim"),
+
+
+def _tau_components(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """(dup_id, kept_id) of the components of candidate pairs ``cand``
+    (vec_id, nn_id) whose exact cosine over ``e`` (_cosine_scored) is
+    at least τ = 0.4 (_dedup_clusters). The pairs are made undirected
+    and distinct first: multiprobe candidates are asymmetric (B may
+    probe into A's cell without A probing into B's), so a vec_id <
+    nn_id filter would drop one-way pairs."""
+    pairs = cand.select(
+        F.least("vec_id", "nn_id").alias("vec_id"),
+        F.greatest("vec_id", "nn_id").alias("nn_id"),
+    ).distinct()
+    edges = _cosine_scored(e, pairs).filter(F.col("cos_sim") >= 0.4)
+    return _dedup_clusters(
+        e.sparkSession,
+        edges.select(F.col("vec_id").alias("doc_a"), F.col("nn_id").alias("doc_b")),
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("nn_id").asc())
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "nn_id",
-            (F.round("cos_sim", 4) + F.lit(0.0)).alias("cos_sim"),
-        )
+
+
+def _ivf_tail_spark(
+    cells: DataFrame, centers: DataFrame, reducer: str
+) -> DataFrame:
+    """The exact-cosine IVF query tail as a Spark plan over the index
+    ``cells`` (vec_id, embedding, norm, cell) and ``centers`` (cell,
+    center), stage for stage _ivf_tail_local's: _ivf_candidates,
+    _cosine_scored, then ``reducer`` — "top1" (_cosine_top1), "range"
+    (every pair at cos ≥ 0.4, rounded like top1) or "tau_cc"
+    (_tau_components, over candidates capped at 2048).
+
+    The "tau_cc" cap is CELL-sized (≥ the ~√n-vector _ivf_k cells), not
+    ANN's 64: representative chaining is the wrong degradation for a
+    τ-verified dedup — hub edges fail the τ filter on non-dup hubs and
+    sever the group (measured: 6/20 planted pairs lost through chained
+    cells at the ANN cap). Within-cell all-pairs at ≤ 2048 stays
+    O(target_cell) per vector; only a pathological mega-cell
+    (boilerplate embeddings) still degrades to chaining.
+
+    ``cells`` is managed_cache'd: the probe reads it three times
+    (level-1 rank source + two embedding join-backs), the candidate
+    stage and the cosine join-backs three more, and uncached each read
+    re-lists the ~k-partition cells layout — measured +51 % serving
+    wall at the k = 3136 probe."""
+    cells = managed_cache(cells)
+    if reducer == "tau_cc":
+        return _tau_components(cells, _ivf_candidates(cells, centers, 2048))
+    cand = _ivf_candidates(cells, centers)
+    if reducer == "top1":
+        return _cosine_top1(cells, cand)
+    return _cosine_scored(cells, cand).filter(F.col("cos_sim") >= 0.4).select(
+        "vec_id", "nn_id", (F.round("cos_sim", 4) + F.lit(0.0)).alias("cos_sim")
     )
 
 
@@ -1882,7 +1915,7 @@ def _ivf_fitted_top1(
     EQUAL; a divergent copy would break that silently). ``corpus`` is
     the _lloyd_corpus result the fit read: with its matrix the tail
     runs on the driver (_ivf_tail_local, index cells = the fit's own
-    argmin), else over the cached index frame in Spark."""
+    argmin), else over the index frames in Spark (_ivf_tail_spark)."""
     local = corpus[1]
     index = None
     if local is not None:
@@ -1890,33 +1923,26 @@ def _ivf_fitted_top1(
         cents = fit[1]
         index = (head.column("vec_id"), x, _row_norms(x), None,
                  list(range(len(cents))), cents)
-
-    def spark_tail():
-        indexed, centers = _ivf_index_frames(spark, sf_dir, fit)
-        return _ivf_candidates_top1(managed_cache(indexed), centers)
-
-    return _ivf_tail(spark, "top1", corpus[2], index, spark_tail)
+    return _ivf_tail(spark, "top1", corpus[2], index,
+                     lambda: _ivf_index_frames(spark, sf_dir, fit))
 
 
-def _ivf_persisted_tail(
-    spark: SparkSession, sf_dir: str, reducer: str, spark_tail
-) -> DataFrame:
-    """The tail of the ops served from the persisted index
-    (_ensure_ivf_index; built here if missing, never refitted): the
-    index read with pyarrow for the driver path, else
-    ``spark_tail(cells, centers)`` over the two layouts read by
+def _ivf_index_spark(spark: SparkSession, idx: str) -> tuple[DataFrame, DataFrame]:
+    """(cells, centers) of the persisted index at ``idx``, read by
     Spark."""
     import os
 
+    return tuple(spark.read.parquet(os.path.join(idx, p)) for p in ("cells", "centers"))
+
+
+def _ivf_persisted_tail(spark: SparkSession, sf_dir: str, reducer: str) -> DataFrame:
+    """The ``reducer`` tail of the ops served from the persisted index
+    (_ensure_ivf_index; built here if missing, never refitted): the
+    index read with pyarrow for the driver path, else its two layouts
+    read by Spark."""
     idx = _ensure_ivf_index(spark, sf_dir)
     n, index = _read_ivf_index_local(idx)
-
-    def read(part: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(idx, part))
-
-    return _ivf_tail(
-        spark, reducer, n, index, lambda: spark_tail(read("cells"), read("centers"))
-    )
+    return _ivf_tail(spark, reducer, n, index, lambda: _ivf_index_spark(spark, idx))
 
 
 def _corpus_size(n) -> str:
@@ -1925,17 +1951,17 @@ def _corpus_size(n) -> str:
     return str(n) if n is not None else f"over {_LLOYD_DRIVER_MAX_VECTORS}"
 
 
-def _ivf_tail(spark: SparkSession, reducer: str, n, index, spark_tail):
+def _ivf_tail(spark: SparkSession, reducer: str, n, index, frames):
     """The one dispatch of the exact-cosine IVF query tail (probe →
     within-cell candidates → exact cosine → ``reducer``: "top1",
     "range" or "tau_cc"). ``index`` is _ivf_tail_local's input when the
     index is at most _LLOYD_DRIVER_MAX_VECTORS vectors that form a
-    matrix, else None and ``spark_tail()`` builds the Spark plan. ``n``
-    is the vector count, None when a corpus over the cut was not
-    counted."""
+    matrix, else None and _ivf_tail_spark runs over the (cells,
+    centers) frames that ``frames()`` returns. ``n`` is the vector
+    count, None when a corpus over the cut was not counted."""
     if index is None:
         log.debug("ivf_tail: %s vectors, %s, spark path", _corpus_size(n), reducer)
-        return spark_tail()
+        return _ivf_tail_spark(*frames(), reducer)
     log.debug("ivf_tail: %d vectors, %s, driver path", len(index[1]), reducer)
     return _ivf_tail_local(spark, reducer, *index)
 
@@ -2056,11 +2082,12 @@ def _ivf_tail_local(
     with their float64 embedding matrix ``x``, ``norm``s and top-1
     ``cell``s (None: the probe's nearest cell, which below the cut is
     the fit's own assignment); the centroids ``cents`` in ascending
-    ``cell_ids`` order. Every index vector queries it:
+    ``cell_ids`` order. Every index vector queries it; each stage
+    twins one of _ivf_tail_spark's:
 
     - probe: _probe_local (the two-level probe of _ivf_probe_cells);
-    - candidates: _cell_pairs, with the cap-2048 representative
-      chaining of _semdedup_pairs for "tau_cc";
+    - candidates: _cell_pairs (_ivf_candidates), with the cap-2048
+      representative chaining for "tau_cc";
     - cosine: _dot's left fold from 0.0 in coordinate order over the
       exact float32 products, / (norm_a · norm_b);
     - reducer: "top1" keeps each query's best by (cos desc, nn_id asc)
@@ -2069,9 +2096,9 @@ def _ivf_tail_local(
       at cos ≥ 0.4 and returns (dup_id, kept_id) of their components
       (_components_of_pairs, then _dup_kept).
 
-    Every step is the Spark tail's arithmetic in its order, so results
+    Every step is _ivf_tail_spark's arithmetic in its order, so results
     are bit-identical (pinned against the DuckDB oracles on both
-    paths)."""
+    paths, and against _ivf_tail_spark on one index)."""
     import numpy as np
     import pyarrow as pa
 
@@ -5550,7 +5577,7 @@ _SUPER_ROUNDS = 2
 def _super_g(k: int) -> int:
     """Super-group count over k centroids: g ≈ √k, floor 2. With
     k = √n cells (_ivf_k) this makes the coarse search
-    n·g + nprobe_super·n·(k/g) ≈ n·n^0.25 instead of n·√n — the level
+    n·g + _NPROBE·n·(k/g) ≈ n·n^0.25 instead of n·√n — the level
     count FAISS/ScaNN pick for exactly this reason (a two-level
     inverted file); a third level only pays past ~10¹² vectors."""
     import math
@@ -5935,7 +5962,7 @@ def llm_ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_r10_ops.py, recall floors ride the existing test_ann.py
     machinery, and the no-refit contract is pinned by poisoning the
     Lloyd fit after the first build."""
-    return _ivf_persisted_tail(spark, sf_dir, "top1", _ivf_candidates_top1)
+    return _ivf_persisted_tail(spark, sf_dir, "top1")
 
 
 _SEMDEDUP_CC_ROUNDS = 7  # same margin discipline as _GRAPH_CC_ROUNDS:
@@ -6119,61 +6146,9 @@ def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     most _LLOYD_DRIVER_MAX_VECTORS indexed vectors run the τ+CC tail
     on the driver (_ivf_tail_local: the persisted index read with
     pyarrow, hook-and-shortcut components over the τ edges, one
-    LocalTableScan, no Spark job); larger indexes run
-    _semdedup_pairs_spark. Both give the same rows."""
-    return _ivf_persisted_tail(spark, sf_dir, "tau_cc", _semdedup_pairs_spark)
-
-
-def _semdedup_pairs_spark(cells: DataFrame, centers: DataFrame) -> DataFrame:
-    """_semdedup_pairs' Spark tail over the persisted index layouts."""
-    spark = cells.sparkSession
-    cells = managed_cache(cells)
-    # query side probes each vector's 2 nearest cells so near-dup pairs
-    # split by a cluster BOUNDARY still meet (the planted-recall test
-    # failed 14/20 with top-1-only scoping); index side stays top-1
-    probes = _ivf_probe_cells(
-        cells.select("vec_id", "embedding", "norm"), centers, nprobe=2
-    ).select("vec_id", F.col("cell").cast("bigint").alias("bucket"))
-    # normalize direction THEN dedup: multiprobe candidates are
-    # asymmetric (B may probe into A's cell without A probing into
-    # B's), so a vec_id < nn_id filter would drop one-way pairs
-    # max_bucket is CELL-sized (≥ the ~√n-vector _ivf_k cells), not
-    # ANN's 64: representative chaining is the wrong degradation for a
-    # τ-verified dedup — hub edges fail the τ filter on non-dup hubs
-    # and sever the group (measured: 6/20 planted pairs lost through
-    # chained cells at the ANN cap). Within-cell all-pairs at ≤2048
-    # stays O(target_cell) per vector; only a pathological mega-cell
-    # (boilerplate embeddings) still degrades to chaining.
-    cand = (
-        lsh_candidate_pairs(
-            cells.select("vec_id", F.col("cell").cast("bigint").alias("bucket")),
-            q_probes=probes,
-            max_bucket=2048,
-        )
-        .select(
-            F.least("vec_id", "nn_id").alias("vec_id"),
-            F.greatest("vec_id", "nn_id").alias("nn_id"),
-        )
-        .distinct()
-    )
-    ea = cells.select("vec_id", F.col("embedding").alias("emb_a"),
-                      F.col("norm").alias("norm_a"))
-    eb = cells.select(F.col("vec_id").alias("nn_id"),
-                      F.col("embedding").alias("emb_b"),
-                      F.col("norm").alias("norm_b"))
-    edges = (
-        cand.join(ea, "vec_id")
-        .join(eb, "nn_id")
-        .filter(
-            _dot(F.col("emb_a"), F.col("emb_b"))
-            / (F.col("norm_a") * F.col("norm_b"))
-            >= 0.4
-        )
-        .select(F.col("vec_id").alias("doc_a"), F.col("nn_id").alias("doc_b"))
-    )
-    return _dedup_clusters(spark, edges)
-
-
+    LocalTableScan, no Spark job); larger indexes run _ivf_tail_spark.
+    Both give the same rows."""
+    return _ivf_persisted_tail(spark, sf_dir, "tau_cc")
 
 
 def _range_search_oracle(tau: float = 0.4) -> str:
@@ -6214,40 +6189,9 @@ def llm_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Below _LLOYD_DRIVER_MAX_VECTORS indexed vectors the whole tail runs
     on the driver over the index read with pyarrow (_ivf_tail_local,
-    one LocalTableScan, no Spark job); above it, _range_search_spark.
+    one LocalTableScan, no Spark job); above it, _ivf_tail_spark.
     Both give the same rows."""
-    return _ivf_persisted_tail(spark, sf_dir, "range", _range_search_spark)
-
-
-def _range_search_spark(cells: DataFrame, centers: DataFrame) -> DataFrame:
-    """llm_ann_range_search's Spark tail over the persisted index
-    layouts."""
-    probes = _ivf_probe_cells(
-        cells.select("vec_id", "embedding", "norm"), centers, nprobe=2
-    )
-    qa = probes.alias("q")
-    xa = cells.alias("x")
-    return (
-        qa.join(
-            xa,
-            (F.col("q.cell") == F.col("x.cell"))
-            & (F.col("q.vec_id") != F.col("x.vec_id")),
-        )
-        .select(
-            F.col("q.vec_id").alias("vec_id"),
-            F.col("x.vec_id").alias("nn_id"),
-            (
-                _dot(F.col("q.embedding"), F.col("x.embedding"))
-                / (F.col("q.norm") * F.col("x.norm"))
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.4)
-        .select(
-            "vec_id",
-            "nn_id",
-            (F.round("cos_sim", 4) + F.lit(0.0)).alias("cos_sim"),
-        )
-    )
+    return _ivf_persisted_tail(spark, sf_dir, "range")
 
 
 def _cell_stats_oracle() -> str:
@@ -6555,23 +6499,9 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind llm_ann_ivf_pq and llm_ann_ivf_pq_rerank: persisted-index
     candidates scored by product-quantized table lookups. Mirrors the
     oracle CTE body _ivf_pq_body stage for stage."""
-    import os
-
-    idx = _ensure_ivf_index(spark, sf_dir)
-    centers = spark.read.parquet(os.path.join(idx, "centers"))
-    cells = managed_cache(spark.read.parquet(os.path.join(idx, "cells")))
+    cells, centers = _ivf_index_spark(spark, _ensure_ivf_index(spark, sf_dir))
     qtab, codes = _pq_tables(spark, sf_dir)
-    probes = _ivf_probe_cells(
-        cells.select("vec_id", "embedding", "norm"), centers, nprobe=2
-    ).select("vec_id", "cell")
-    cand = (
-        probes.alias("q")
-        .join(cells.select("vec_id", "cell").alias("x"), "cell")
-        .filter(F.col("q.vec_id") != F.col("x.vec_id"))
-        .select(F.col("q.vec_id").alias("vec_id"), F.col("x.vec_id").alias("nn_id"))
-        .distinct()
-    )
-    return _pq_adc(cand, qtab, codes)
+    return _pq_adc(_ivf_candidates(managed_cache(cells), centers), qtab, codes)
 
 
 @register("llm_ann_ivf_pq", oracle=_ivf_pq_oracle(), category="K")
@@ -6738,48 +6668,19 @@ def llm_semdedup_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully hash-oracled: _semdedup_pq_oracle replays quantizer, probe,
     candidates, PQ fits, ADC rank, τ verify and star-CC in DuckDB."""
-    import os
-
-    idx = _ensure_ivf_index(spark, sf_dir)
-    cells = managed_cache(spark.read.parquet(os.path.join(idx, "cells")))
-    centers = spark.read.parquet(os.path.join(idx, "centers"))
-    probes = _ivf_probe_cells(
-        cells.select("vec_id", "embedding", "norm"), centers, nprobe=2
-    ).select("vec_id", F.col("cell").cast("bigint").alias("bucket"))
-    # DIRECTED distinct candidates (normalization happens AFTER the
-    # per-query ADC rank — the shortlist is a per-QUERY budget)
-    cand = lsh_candidate_pairs(
-        cells.select("vec_id", F.col("cell").cast("bigint").alias("bucket")),
-        q_probes=probes,
-        max_bucket=2048,
-    )
+    cells, centers = _ivf_index_spark(spark, _ensure_ivf_index(spark, sf_dir))
+    cells = managed_cache(cells)
+    # the candidates stay DIRECTED through the ADC rank (the shortlist
+    # is a per-QUERY budget); _tau_components makes them undirected
+    cand = _ivf_candidates(cells, centers, 2048)
     qtab, codes = _pq_tables(spark, sf_dir)
-    scored = _pq_adc(cand, qtab, codes)
     ws = W.partitionBy("vec_id").orderBy(
         F.col("adc_d2").asc(), F.col("nn_id").asc()
     )
     short = (
-        scored.withColumn("rn", F.row_number().over(ws))
+        _pq_adc(cand, qtab, codes)
+        .withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") <= _SEMDEDUP_PQ_R)
-        .select(
-            F.least("vec_id", "nn_id").alias("vec_id"),
-            F.greatest("vec_id", "nn_id").alias("nn_id"),
-        )
-        .distinct()
+        .select("vec_id", "nn_id")
     )
-    ea = cells.select("vec_id", F.col("embedding").alias("emb_a"),
-                      F.col("norm").alias("norm_a"))
-    eb = cells.select(F.col("vec_id").alias("nn_id"),
-                      F.col("embedding").alias("emb_b"),
-                      F.col("norm").alias("norm_b"))
-    edges = (
-        short.join(ea, "vec_id")
-        .join(eb, "nn_id")
-        .filter(
-            _dot(F.col("emb_a"), F.col("emb_b"))
-            / (F.col("norm_a") * F.col("norm_b"))
-            >= 0.4
-        )
-        .select(F.col("vec_id").alias("doc_a"), F.col("nn_id").alias("doc_b"))
-    )
-    return _dedup_clusters(spark, edges)
+    return _tau_components(cells, short)

@@ -34,8 +34,10 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     it; exists for parity with arbitrary user lambdas. Anything hot at
     100 TB uses the built-in CASE (the oracle) or a pandas UDF instead."""
 
+    # no type hints: pyspark 4.1 would try to infer an eval type from
+    # them and warn "Cannot infer the eval type" on every build
     @F.udf(T.StringType())
-    def band(d: float) -> str:
+    def band(d):
         if d < 0.03:
             return "low"
         if d < 0.07:

@@ -506,25 +506,15 @@ def test_semdedup_pq_candidate_scoring_is_code_sized(spark):
 
     from gdxpy_spark.operators.llm import (
         _ensure_ivf_index,
-        _ivf_probe_cells,
+        _ivf_candidates,
         _pq_adc,
         _pq_tables,
     )
-    from pyspark.sql import functions as F
 
     idx = _ensure_ivf_index(spark, SF_DIR)
     cells = spark.read.parquet(os.path.join(idx, "cells"))
     centers = spark.read.parquet(os.path.join(idx, "centers"))
-    probes = _ivf_probe_cells(
-        cells.select("vec_id", "embedding", "norm"), centers, nprobe=2
-    ).select("vec_id", F.col("cell").cast("bigint").alias("bucket"))
-    from gdxpy_spark.operators.llm import lsh_candidate_pairs
-
-    cand = lsh_candidate_pairs(
-        cells.select("vec_id", F.col("cell").cast("bigint").alias("bucket")),
-        q_probes=probes,
-        max_bucket=2048,
-    )
+    cand = _ivf_candidates(cells, centers, 2048)
     qtab, codes = _pq_tables(spark, SF_DIR)
     plan = formatted_plan(_pq_adc(cand, qtab, codes))
     for sec in _exchange_inputs(plan):

@@ -764,6 +764,25 @@ def test_ivf_tail_logs_its_path(spark, monkeypatch, caplog):
     ]
 
 
+@pytest.mark.parametrize("reducer", ["top1", "range", "tau_cc"])
+def test_ivf_tail_spark_equals_driver_tail(spark, reducer):
+    """The two executors of the exact-cosine IVF tail give equal rows on
+    one persisted index: _ivf_tail_spark over Spark's read of it and
+    _ivf_tail_local over its pyarrow read (_read_ivf_index_local). The
+    index is built at the default cut, so no Lloyd fit runs on Spark."""
+    from gdxpy_spark.operators import llm
+
+    idx = llm._ensure_ivf_index(spark, SF_SMALL)
+    _n, index = llm._read_ivf_index_local(idx)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    cells, centers = llm._ivf_index_spark(spark, idx)
+    got = rows(llm._ivf_tail_spark(cells, centers, reducer))
+    assert got and got == rows(llm._ivf_tail_local(spark, reducer, *index))
+
+
 def test_ivf_probe_cells_logs_super_memo(spark, monkeypatch, caplog):
     """One DEBUG record per probe on the engine's logger with k, g and
     whether the super-quantizer came from its memo."""
@@ -836,7 +855,7 @@ def test_two_level_probe_matches_flat_when_groups_agree(spark):
     centers = spark.read.parquet(os.path.join(idx, "centers"))
     cells = spark.read.parquet(os.path.join(idx, "cells"))
     q = cells.select("vec_id", "embedding", "norm")
-    probes = _ivf_probe_cells(q, centers, nprobe=2).collect()
+    probes = _ivf_probe_cells(q, centers).collect()
     per_vec: dict = {}
     for r in probes:
         per_vec.setdefault(r["vec_id"], []).append(r["cell"])

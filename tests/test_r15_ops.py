@@ -64,3 +64,15 @@ def test_mm_e2e_tier_threads_inherit_session_tags(spark, duck, monkeypatch):
     assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
     assert seen and all("mm_e2e_tier_probe" in tags for tags in seen)
     assert_frames_match(sdf, duck.execute(q.oracle), name="mm_e2e_dedup")
+
+
+def test_udf_python_scalar_builds_without_warning(spark):
+    """udf_python_scalar's row-at-a-time UDF carries no type hints, so
+    building the query raises no UserWarning (pyspark 4.1 warns "Cannot
+    infer the eval type from type hints." for a hinted @F.udf with an
+    explicit return type)."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        ALL["udf_python_scalar"].fn(spark, SF_DIR)

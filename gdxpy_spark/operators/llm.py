@@ -1739,9 +1739,9 @@ _NPROBE = 2
 
 
 def _ivf_probe_cells(q: DataFrame, centers: DataFrame) -> DataFrame:
-    """Replicate each query row (vec_id, embedding, norm) to its
-    _NPROBE nearest persisted centroids: the probe of the IVF candidate
-    stage (_ivf_candidates).
+    """(vec_id, cell) for each query row (vec_id, embedding, …) and
+    each of its _NPROBE nearest persisted centroids: the probe of the
+    IVF candidate stage (_ivf_candidates).
 
     TWO-LEVEL since r12 (the measured ×37.6 coarse-search cliff at the
     100× posture probe): the k = √n centroids are themselves grouped
@@ -1756,11 +1756,12 @@ def _ivf_probe_cells(q: DataFrame, centers: DataFrame) -> DataFrame:
     distance frames project the embedding away BEFORE each window (the
     new test_plans.py Exchange audit caught n·g rank rows carrying the
     512-byte embedding through the shuffle), and the vectors are
-    equi-joined back exactly twice (once for the level-2 distances,
-    once for the final output) — O(n) embedding rows per pass instead
-    of O(n·g) through the rank. Approximation surface: a true nearest
-    cell whose super-group is outside the query's top-_NPROBE
-    groups is not probed — recall floors pinned in tests/test_ann.py."""
+    equi-joined back once, for the level-2 distances — O(n) embedding
+    rows per pass instead of O(n·g) through the rank. The result
+    carries ids only: the scorer joins the vectors to the candidate
+    pairs itself. Approximation surface: a true nearest cell whose
+    super-group is outside the query's top-_NPROBE groups is not
+    probed — recall floors pinned in tests/test_ann.py."""
     spark = q.sparkSession
 
     def d2_against(center_col):
@@ -1798,7 +1799,7 @@ def _ivf_probe_cells(q: DataFrame, centers: DataFrame) -> DataFrame:
         .filter(F.col("srn") <= _NPROBE)
         .select("vec_id", "grp")
     )
-    picked = (
+    return (
         l1.join(q.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(memb), "grp")
         .withColumn("d2", d2_against(F.col("center")))
@@ -1807,13 +1808,10 @@ def _ivf_probe_cells(q: DataFrame, centers: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= _NPROBE)
         .select("vec_id", "cell")
     )
-    return picked.join(q, "vec_id").select(
-        "vec_id", "embedding", "norm", "cell"
-    )
 
 
 def _ivf_candidates(
-    cells: DataFrame, centers: DataFrame, cap: int = None
+    cells: DataFrame, centers: DataFrame, cap: int | None = None
 ) -> DataFrame:
     """The IVF candidate stage on Spark, the twin of _probe_local +
     _cell_pairs: directed distinct (vec_id, nn_id) id pairs in which
@@ -1825,10 +1823,9 @@ def _ivf_candidates(
     pairs split by a cluster BOUNDARY still meet (the planted-recall
     test failed 14/20 with top-1-only scoping); the index side stays
     top-1."""
-    probes = _ivf_probe_cells(cells.select("vec_id", "embedding", "norm"), centers)
     return lsh_candidate_pairs(
         cells.select("vec_id", F.col("cell").alias("bucket")),
-        q_probes=probes.withColumnRenamed("cell", "bucket"),
+        q_probes=_ivf_probe_cells(cells, centers).withColumnRenamed("cell", "bucket"),
         max_bucket=cap,
     )
 
@@ -1869,9 +1866,9 @@ def _ivf_tail_spark(
     O(target_cell) per vector; only a pathological mega-cell
     (boilerplate embeddings) still degrades to chaining.
 
-    ``cells`` is managed_cache'd: the probe reads it three times
-    (level-1 rank source + two embedding join-backs), the candidate
-    stage and the cosine join-backs three more, and uncached each read
+    ``cells`` is managed_cache'd: the probe reads it twice (level-1
+    rank source + the level-2 embedding join-back), the candidate stage
+    and the cosine join-backs three more times, and uncached each read
     re-lists the ~k-partition cells layout — measured +51 % serving
     wall at the k = 3136 probe."""
     cells = managed_cache(cells)
